@@ -172,7 +172,12 @@ object GeoKernels {
 
   /** Level-aware reference-cell dedup for the merged multi-resolution
     * exchange: keep the pair only in the cell (at the tile's own level)
-    * owning the MBR intersection's min corner. One static call replacing a
+    * owning the MBR intersection's min corner — the one rule for both
+    * physical joins (the hash join's MergedRefDedup and the plane sweep's
+    * GeoEngine.sweepTile). Bit-identical for finite non-null inputs to the
+    * Column chain `greatest` + clampIdx (on a NaN corner Spark's `greatest`
+    * returns NaN, the scalar max here the other operand; both joins test
+    * MBR overlap first, which drops such rows). One static call replacing a
     * ~1.2 KB inline chain of 4 clampIdx expressions + a CASE — the merged
     * join's doConsume method was 8.5 KB of bytecode, just past the JVM's
     * 8000-byte JIT ceiling (DontCompileHugeMethods), so the hottest join
@@ -533,9 +538,10 @@ case class KnnTiles(x: Expression, y: Expression, k: Int,
 }
 
 /** Merged-exchange reference-cell dedup as ONE compact codegen call.
-  * Semantics identical to the inline Column chain it replaces
-  * (`when(tile >= LvlOffset, coarseRefCell === tile).otherwise(fineRefCell
-  * === tile)` over clampIdx chains); the point is BYTECODE SIZE: the inline
+  * Bit-identical for finite non-null inputs to the inline Column chain it
+  * replaces (`when(tile >= LvlOffset, coarseRefCell === tile)
+  * .otherwise(fineRefCell === tile)` over clampIdx chains); the point is
+  * BYTECODE SIZE: the inline
   * form pushed the merged join's generated doConsume past the JVM's
   * 8000-byte JIT ceiling, de-optimizing the whole stage to interpreted
   * bytecode (guide §4 — keep the hot path in compiled codegen). */

@@ -10,9 +10,10 @@ import graft.web.Pages
 /**
  * The compact codegen kernels that replaced the merged-exchange join
  * condition's inline Column chains (round 6: the chains pushed the generated
- * doConsume past the JVM's 8000-byte JIT ceiling) must be BIT-IDENTICAL to
- * those chains: merged_ref_dedup vs the when(isCoarse,...) clampIdx formula,
- * fine_cover_cnt vs the 4-clampIdx product. Randomized MBR pairs plus the
+ * doConsume past the JVM's 8000-byte JIT ceiling) must be BIT-IDENTICAL for
+ * finite non-null inputs to those chains: merged_ref_dedup vs the
+ * when(isCoarse,...) clampIdx formula, fine_cover_cnt vs the 4-clampIdx
+ * product. Randomized MBR pairs plus the
  * exact level-encoded tiles both formulas route on, including off-grid MBRs
  * (clamping) and degenerate point MBRs.
  */

@@ -6,9 +6,10 @@ import graft.core._
 
 /**
  * Multi-resolution tiling: wide objects (fine cover > maxFineCover) are
- * assigned at the coarse grid, narrow ones at the fine grid, and the three
- * level-pair sub-joins must reproduce the single-level result exactly —
- * same pairs, exactly once — for every predicate and for find-relation.
+ * assigned at the coarse grid, narrow ones at the fine grid, and the
+ * level-tagged exchange — through either physical join, hash or plane sweep —
+ * must reproduce the single-level result exactly: same pairs, exactly once,
+ * for every predicate and for find-relation.
  */
 class MultiResSpec extends AnyFunSuite {
 
@@ -170,15 +171,37 @@ class MultiResSpec extends AnyFunSuite {
         Array(cx, cy, cx + 0.002, cy, cx + 0.002, cy + 0.002, cx, cy + 0.002, cx, cy),
         cx, cy, cx + 0.002, cy + 0.002)
     }
-    val r = boxes(31, 400).union(dense(1).toDS())
-    val s = boxes(32, 400).union(dense(5).toDS())
+    // one row per side with a NaN xmin inside the dense tile: the sweep
+    // shares the hash path's dedup kernel, and both paths must drop the row
+    def nanRow(id: Long) = GeoRow(id, GeomType.BOX,
+      Array(10.02, 20.01, 10.03, 20.01, 10.03, 20.03, 10.02, 20.03, 10.02, 20.01),
+      Double.NaN, 20.01, 10.03, 20.03)
+    val nanIds = Set(90001L, 90002L)
+    val r = boxes(31, 400).union(dense(1).toDS()).union(Seq(nanRow(90001L)).toDS())
+    val s = boxes(32, 400).union(dense(5).toDS()).union(Seq(nanRow(90002L)).toDS())
     for (pred <- Seq(Predicates.INTERSECTS, Predicates.MEET, Predicates.INSIDE)) {
       val viaSweep = pairs(GeoEngine.spatialJoin(r, s, pred, grid,
         maxFineCover = 16, sweep = Some(true)))
       val viaHash = pairs(GeoEngine.spatialJoin(r, s, pred, grid,
         maxFineCover = 16, sweep = Some(false)))
       assert(viaSweep == viaHash, s"pred=$pred sweep=${viaSweep.size} hash=${viaHash.size}")
+      // INSIDE takes the home-cell containment plan, which neither physical
+      // join of the level-tagged exchange serves: its NaN handling is not
+      // pinned here
+      if (pred != Predicates.INSIDE)
+        for ((name, got) <- Seq("sweep" -> viaSweep, "hash" -> viaHash))
+          assert(!got.exists { case (a, b) => nanIds(a) || nanIds(b) },
+            s"pred=$pred: $name path kept a NaN-xmin row")
     }
+    // plan shape: narrow and wide rows on both sides still plan ONE
+    // level-tagged cogroup — no per-level sub-joins unioned together
+    val (rMixed, sMixed) = (boxes(31, 400), boxes(32, 400))
+    for (m <- Seq(GeoEngine.sideMeta(rMixed, grid), GeoEngine.sideMeta(sMixed, grid)))
+      assert(m.hasNarrow && m.hasWide, s"fixture broken: $m")
+    val sweepPlan = GeoEngine.spatialJoin(rMixed, sMixed, Predicates.INTERSECTS,
+      grid, maxFineCover = 16, sweep = Some(true)).queryExecution.executedPlan.toString
+    assert("CoGroup".r.findAllIn(sweepPlan).length == 1, sweepPlan)
+    assert(!sweepPlan.contains("Union"), sweepPlan)
     // polygons through the sweep (non-rect refinement downstream unchanged)
     val rp = stars(33, 150)
     val sp = stars(34, 150)
@@ -315,6 +338,14 @@ class MultiResSpec extends AnyFunSuite {
     assert(rels(auto) == rels(GeoEngine.findRelationJoin(r, s, grid,
       sweep = Some(false))))
     assert(rels(auto).nonEmpty)
+    // coarse level: wide objects piled into one coarse cell, mixed with
+    // narrow boxes on both sides — find-relation through a coarse-cell sweep
+    val rw = boxes(41, 300).union(wideHotCell(1, 250))
+    val sw = boxes(42, 300).union(wideHotCell(7, 250))
+    val viaSweep = rels(GeoEngine.findRelationJoin(rw, sw, grid, sweep = Some(true)))
+    val viaHash = rels(GeoEngine.findRelationJoin(rw, sw, grid, sweep = Some(false)))
+    assert(viaSweep == viaHash, s"sweep=${viaSweep.size} hash=${viaHash.size}")
+    assert(viaSweep.nonEmpty)
   }
 
   test("non-nested custom grid: density prepass degrades gracefully") {
