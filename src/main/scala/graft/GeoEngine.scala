@@ -564,13 +564,6 @@ object GeoEngine {
       pairCond = Some(innerInOuter))
   }
 
-  /**
-   * APRIL index build: adds `april_all` / `april_full` interval-list columns,
-   * rasterizing each object exactly once (the reference's buildAPRIL,
-   * src/containers.cpp:300-334, as lazy columns instead of sidecar files).
-   * Persist the result to make the index durable, exactly like the
-   * reference's `persist=true` APRIL files.
-   */
   /** Widen a narrow batch input to the session's parallelism. The engine's
     * heavy per-row kernels (rasterize, polygon synthesis, cover explode)
     * run as PROJECTIONS, which inherit the scan's partitioning — a compact
@@ -579,7 +572,11 @@ object GeoEngine {
     * over 200k polygons at sf1). Spark cannot know a projection is
     * expensive; the engine can. No-op on wide (real-scale) or streaming
     * inputs; on narrow ones the row shuffle it costs is trivial next to
-    * the kernels it parallelizes. */
+    * the kernels it parallelizes. Stored (pre-indexed) inputs widen too:
+    * a path-snapshot index's compact files combine into few scan splits,
+    * and skipping widen there serialized the candidate + kernel chain on
+    * ~one task (measured 1.87 s vs 0.71 s on q_find_relation_april at
+    * sf0.1). */
   private[graft] def widen(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
@@ -601,27 +598,13 @@ object GeoEngine {
     }
   }
 
-  /** widen, except for BUCKETED pre-indexed inputs: a bucketed catalog
-    * scan's partitioning must survive to the slim-mode id re-join — a
-    * round-robin repartition would silently reintroduce the Exchange the
-    * bucket layout exists to remove whenever defaultParallelism exceeds
-    * nBuckets (ADVICE r5). A PATH-SNAPSHOT index has no layout to protect
-    * and its compact files combine into few scan splits, so skipping widen
-    * there serializes the whole candidate+kernel chain on ~one task when
-    * the join plans as a broadcast (measured 1.87 s vs 0.71 s on
-    * q_find_relation_april at sf0.1) — it widens like any other input. */
-  private def widenUnlessBucketed(df: DataFrame): DataFrame = {
-    val bucketed = df.queryExecution.optimizedPlan.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.bucketSpec.isDefined
-          case _ => false
-        }
-    }.exists(identity)
-    if (bucketed) df else widen(df)
-  }
-
+  /**
+   * APRIL index build: adds `april_all` / `april_full` interval-list columns,
+   * rasterizing each object exactly once (the reference's buildAPRIL,
+   * src/containers.cpp:300-334, as lazy columns instead of sidecar files).
+   * Persist the result to make the index durable, exactly like the
+   * reference's `persist=true` APRIL files.
+   */
   def aprilIndex(df: DataFrame, grid: GridConfig, order: Int = AprilOrder): DataFrame = {
     val in = widen(df)
     // native codegen expression: raw ArrayData in, InternalRow of two long
@@ -792,10 +775,9 @@ object GeoEngine {
       return out.select(col("rid"), col("sid"))
     }
     // widen-before-explode: the cover explode + MBR/tile math run as
-    // projections on the scan partitioning (see widen's scaladoc); skipped
-    // for pre-indexed inputs (see widenUnlessBucketed)
-    val rIx = ix(widenUnlessBucketed(r.toDF()))
-    val sIx = if (broadcastS) ix(s.toDF()) else ix(widenUnlessBucketed(s.toDF()))
+    // projections on the scan partitioning (see widen's scaladoc)
+    val rIx = ix(widen(r.toDF()))
+    val sIx = if (broadcastS) ix(s.toDF()) else ix(widen(s.toDF()))
     // In broadcast mode the build side ships whole (one pass, no shuffle), so
     // payload columns ride along. In shuffle mode only (tile, id, gtype, mbr)
     // go through the exchange; geometry/APRIL columns re-join by id afterwards
@@ -932,8 +914,8 @@ object GeoEngine {
     // APRIL interval lists are NOT shipped through the tile explode/shuffle
     // (they dwarf the ring coords); candidates re-join them by id from
     // compact per-object side tables after candidate generation.
-    val rRaw = widenUnlessBucketed(r.toDF())
-    val sRaw = widenUnlessBucketed(s.toDF())
+    val rRaw = widen(r.toDF())
+    val sRaw = widen(s.toDF())
     // find-relation always shuffles (never broadcast), so the density
     // histogram is consulted exactly like spatialJoin's slim path — a hot
     // tile pays the same O(k²) hash filter here

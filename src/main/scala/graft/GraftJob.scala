@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.store.Snapshots
+import graft.store.{Snapshots, SpatialIndex}
 import graft.web.Pages
 
 /**
@@ -14,19 +14,18 @@ import graft.web.Pages
  *
  * Stages (each a committed snapshot; a restarted run resumes from the last
  * committed stage without recomputation):
- *   1. pages      — ingest (here: deterministic synthesis; swap for an
- *                   Iceberg/parquet read of a real crawl)
- *   2. geotagged  — deterministic url/text geotag
- *   3. tiles      — Dataset[TileAssignment] on the world grid + hex cells
- *   4. index      — persisted APRIL index over the polygon table, stored
- *                   as a catalog table BUCKETED BY id (the join's id
- *                   re-join reads it with no Exchange; SpatialIndex
- *                   .ensureBucketed: rebuild only on param mismatch — the
- *                   reference's buildIndex/persist=true lifecycle,
- *                   API/Hecatoncheir.cpp:509-564)
- *   5. joined     — spatial join page-points × stored polygon index
- *                   (reads the index snapshot + its SideMeta; no
- *                   re-rasterization, no metadata re-scan)
+ *   1. pages        — ingest (here: deterministic synthesis; swap for an
+ *                     Iceberg/parquet read of a real crawl)
+ *   2. geotagged    — deterministic url/text geotag
+ *   3. tiles        — Dataset[TileAssignment] on the world grid + hex cells
+ *   4. polygons_idx — persisted APRIL index over the polygon table, a path
+ *                     snapshot under the same root (SpatialIndex.ensure:
+ *                     rebuild only on param mismatch — the reference's
+ *                     buildIndex/persist=true lifecycle,
+ *                     API/Hecatoncheir.cpp:509-564)
+ *   5. joined       — spatial join page-points × stored polygon index
+ *                     (reads the index snapshot + its SideMeta; no
+ *                     re-rasterization, no metadata re-scan)
  *
  * Every manifest records lineage (stage inputs + parameters + app version)
  * and per-partition row counts alongside the snapshot.
@@ -41,14 +40,6 @@ object GraftJob {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // persistent catalog under the snapshot root: the bucketed index
-      // stage's table (and its TBLPROPERTIES lineage) must survive a JVM
-      // restart for resume to skip the rebuild — an in-memory catalog
-      // would forget the table and rebuild every run
-      .config("spark.sql.warehouse.dir", s"$root/warehouse")
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$root/metastore_db;create=true")
-      .enableHiveSupport()
     // spark-submit provides the master; local runs fall back to local[N]
     val spark = (if (sys.props.contains("spark.master")) builder
                  else builder.master(s"local[$cpus]")).getOrCreate()
@@ -90,18 +81,14 @@ object GraftJob {
     }
 
     // stage 4: the reference's buildIndex lifecycle — rasterize + metadata
-    // prepass once, commit as a BUCKETED catalog table (bucketBy(id)): the
-    // spatial join's slim-mode id re-join then reads the index side
-    // pre-partitioned, with no Exchange. A restarted run (same params)
-    // loads instead of rebuilding, a param change forces a rebuild.
-    // SpatialIndex.ensureBucketed IS the stage's resume logic (it validates
-    // grid / order / maxFineCover / nBuckets against TBLPROPERTIES), so no
-    // runStage wrapper. Cross-restart durability needs a persistent catalog
-    // — main() enables Hive support with the metastore under the snapshot
-    // root for exactly this.
+    // prepass once, commit as a path snapshot. A restarted run (same
+    // params) loads instead of rebuilding, a param change forces a rebuild.
+    // SpatialIndex.ensure IS the stage's resume logic (it validates grid /
+    // order / maxFineCover against the manifest lineage), so no runStage
+    // wrapper.
     val aprilOrder = 10
-    val index = graft.store.SpatialIndex.ensureBucketed(
-      spark, "polygons_idx_b", grid, aprilOrder, nBuckets = 32) {
+    val index = SpatialIndex.ensure(spark, root, "polygons_idx", grid,
+      aprilOrder) {
       // deterministic diamond polygons (non-rectangular, so the APRIL
       // interval filter genuinely resolves pairs instead of being pruned
       // by the all-box fast plan)
@@ -137,8 +124,7 @@ object GraftJob {
     s"""{"job":"graft-pipeline","pages":${pages.count()},""" +
       s""""tiles":${tiles.count()},"indexed":${index.df.count()},""" +
       s""""joined":${joined.count()},""" +
-      s""""index_table":"polygons_idx_b",""" +
-      s""""snapshots":"${Seq("pages", "geotagged", "tiles", "joined")
+      s""""snapshots":"${Seq("pages", "geotagged", "tiles", "polygons_idx", "joined")
         .map(t => s"$t=snap-${Snapshots.latestId(root, t).getOrElse(0L)}")
         .mkString(",")}"}"""
   }

@@ -357,44 +357,14 @@ object SparkEntry {
     s"/tmp/graft_idx/${new java.io.File(dir).getName}_${f.length}"
   }
 
-  /** Catalog table name for the bucketed diamond index, content-keyed per
-    * sf dir the same way idxRoot is (a regenerated dir gets a fresh
-    * table). */
-  private def idxTable(dir: String): String = {
-    val f = new java.io.File(s"$dir/part.parquet")
-    val tag = new java.io.File(dir).getName.replace('.', '_').replace('-', '_')
-    s"diamonds_o10_b_${tag}_${f.length}"
-  }
-
-  /** The diamond table's persisted APRIL index (order 10), size-dispatched
-    * (round 6, VERDICT r5 "what's wrong #1"): below
-    * `spark.graft.index.bucketedMinBytes` (default 256 MB of source parquet)
-    * the index serves from the PATH SNAPSHOT — at every tested scale the
-    * exchange the bucket layout eliminates is small, while the fixed bucket
-    * count pins the re-join's parallelism and the catalog adds per-query
-    * overhead (measured 1.46-1.59× on all three stored-index queries at
-    * sf0.1). Above the threshold — the 10¹²-row regime where the id re-join's
-    * exchange carries the APRIL arrays — it serves from the BUCKETED catalog
-    * table, with nBuckets sized to the session's parallelism instead of a
-    * constant (BucketedServingSpec keeps the exchange-elimination plan
-    * assertion for this regime). Same philosophy as chooseBroadcast: measured
-    * cost at small scale, structural win at large, dispatched by size. */
-  private[graft] def diamondIndex(s: SparkSession, dir: String): graft.store.SpatialIndex.Loaded = {
-    val srcBytes = new java.io.File(s"$dir/part.parquet").length
-    val minBytes = s.conf.get("spark.graft.index.bucketedMinBytes",
-      (256L << 20).toString).toLong
-    if (srcBytes >= minBytes) {
-      val nBuckets = s.sparkContext.defaultParallelism
-      graft.store.SpatialIndex.ensureBucketed(s, s"${idxTable(dir)}_$nBuckets",
-        grid, order = 10, nBuckets = nBuckets) {
-        diamonds(s, dir)(s).toDF()
-      }
-    } else
-      graft.store.SpatialIndex.ensure(s, idxRoot(dir), "diamonds_o10_serve",
-        grid, order = 10) {
-        diamonds(s, dir)(s).toDF()
-      }
-  }
+  /** The diamond table's persisted APRIL index (order 10), served from the
+    * path snapshot under `idxRoot(dir)`: built once, loaded by every later
+    * query with matching parameters. */
+  private[graft] def diamondIndex(s: SparkSession, dir: String): graft.store.SpatialIndex.Loaded =
+    graft.store.SpatialIndex.ensure(s, idxRoot(dir), "diamonds_o10_serve",
+      grid, order = 10) {
+      diamonds(s, dir)(s).toDF()
+    }
 
   // ---- flagship -----------------------------------------------------------
 

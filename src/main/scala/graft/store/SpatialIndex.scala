@@ -20,6 +20,11 @@ import graft.core.GridConfig
  * coarse distribution cell of their MBR min corner — the snapshot analogue
  * of the reference's per-node partition files; a reader scans
  * locality-clustered row groups and parquet min/max prunes on it.
+ *
+ * The path snapshot is the only stored form: a catalog table bucketed by id
+ * (which drops the index-side exchange of the slim join's id re-join)
+ * measured slower at sf0.1 and sf1 (OPTIMIZATION_r06.md §2) and needs a
+ * Hive metastore for resume.
  */
 object SpatialIndex {
 
@@ -34,10 +39,9 @@ object SpatialIndex {
     val cached = df.cache()
     val meta = GeoEngine.sideMeta(cached, grid, maxFineCover)
     val homeCoarse =
-      least(greatest(floor((col("xmin") - lit(grid.xMin)) / lit(grid.coarseExtX))
-        .cast("long"), lit(0L)), lit(grid.coarsePpd - 1L)) +
-      least(greatest(floor((col("ymin") - lit(grid.yMin)) / lit(grid.coarseExtY))
-        .cast("long"), lit(0L)), lit(grid.coarsePpd - 1L)) * lit(grid.coarsePpd.toLong)
+      GeoEngine.clampIdx(col("xmin"), grid.coarseExtX, grid.xMin, grid.coarsePpd) +
+      GeoEngine.clampIdx(col("ymin"), grid.coarseExtY, grid.yMin, grid.coarsePpd) *
+        lit(grid.coarsePpd.toLong)
     // repartition BEFORE rasterizing (round 6, guide §2.3): the coarse-cell
     // clustering shuffle then carries only ids + coords, not the APRIL
     // interval arrays it used to (which dominate the indexed row), and the
@@ -80,84 +84,6 @@ object SpatialIndex {
       .filter(_ => paramsMatch(root, table, grid, order, maxFineCover))
       .getOrElse(build(compute, grid, order, root, table, maxFineCover))
 
-  // ------------------------------------------------- bucketed variant
-  //
-  // The slim-mode join ships only (tile, id, gtype, mbr) through the tile
-  // exchange and re-joins geometry + APRIL arrays BY ID afterwards — at
-  // scale those arrays are the dominant shuffle bytes of the re-join. A
-  // catalog table bucketed by id makes the index side of that re-join
-  // pre-partitioned: Spark's planner drops the index-side Exchange
-  // entirely (only the slim candidate side shuffles, into the bucket
-  // layout). The tile join itself cannot be bucket-colocated — its keys
-  // come from the multi-res cover explode — which is exactly why the
-  // engine re-joins by id in the first place.
-  //
-  // Storage contract: session-catalog parquet table (warehouse) with
-  // grid/order/SideMeta in TBLPROPERTIES; `ensureBucketed` mirrors
-  // `ensure`'s param-match-or-rebuild resume semantics.
-
-  /** Build the APRIL index and save it BUCKETED BY id; returns the loaded
-    * (catalog-backed) form whose scans carry the bucket spec.
-    *
-    * Single-writer contract: the table data and its TBLPROPERTIES are two
-    * catalog operations, not one atomic commit — a reader racing the window
-    * between them sees a property-less table, treats it as absent, and
-    * rebuilds over it. `ensureBucketed` (the intended entry point) handles
-    * that by rebuilding; concurrent WRITERS are not supported (same as the
-    * reference's single-process buildIndex). */
-  def buildBucketed(df: DataFrame, grid: GridConfig, order: Int,
-                    table: String, nBuckets: Int,
-                    maxFineCover: Int = 16): Loaded = {
-    val spark = df.sparkSession
-    // a previous JVM may have left the managed location on disk while THIS
-    // JVM's catalog (in-memory unless Hive-backed) has no such table —
-    // saveAsTable(overwrite) cannot resolve that and fails with
-    // LOCATION_ALREADY_EXISTS, so clear the stale managed location first.
-    // (Simple default-database names only, which is all the engine uses.)
-    if (!spark.catalog.tableExists(table) && !table.contains('.')) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    // the input feeds two actions (sideMeta scan + index write): cache so
-    // an expensive compute closure evaluates once, not twice
-    val cached = df.cache()
-    val meta = GeoEngine.sideMeta(cached, grid, maxFineCover)
-    GeoEngine.aprilIndex(cached, grid, order)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "id").sortBy("id")
-      .saveAsTable(table) // managed (warehouse) table
-    cached.unpersist()
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      s"'graft.april_order' = '$order', 'graft.grid' = '${gridStr(grid)}', " +
-      s"'graft.max_fine_cover' = '$maxFineCover', " +
-      s"'graft.n_buckets' = '$nBuckets', " +
-      s"'graft.side_meta' = '${metaStr(meta)}')")
-    Loaded(spark.table(table), meta)
-  }
-
-  /** Load the bucketed index if present with MATCHING parameters, else
-    * build + save — `ensure` semantics for the catalog-backed variant. */
-  def ensureBucketed(spark: SparkSession, table: String, grid: GridConfig,
-                     order: Int, nBuckets: Int, maxFineCover: Int = 16)
-                    (compute: => DataFrame): Loaded = {
-    val props: Map[String, String] =
-      if (!spark.catalog.tableExists(table)) Map.empty
-      else spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-    val ok = props.get("graft.april_order").contains(order.toString) &&
-      props.get("graft.grid").contains(gridStr(grid)) &&
-      props.get("graft.max_fine_cover").contains(maxFineCover.toString) &&
-      props.get("graft.n_buckets").contains(nBuckets.toString)
-    val meta = props.get("graft.side_meta").flatMap(parseMetaStr)
-    (if (ok) meta else None) match {
-      case Some(m) => Loaded(spark.table(table), m)
-      case None => buildBucketed(compute, grid, order, table, nBuckets,
-        maxFineCover)
-    }
-  }
-
   private def gridStr(grid: GridConfig): String =
     s"${grid.xMin},${grid.yMin},${grid.xMax},${grid.yMax}," +
       s"${grid.coarsePpd},${grid.globalPpd}"
@@ -178,16 +104,12 @@ object SpatialIndex {
     s"${m.hasWide},${m.hasNarrow},${m.hasNonRect},${m.hasNonBox}," +
       s"${m.hasRect},${m.hasBox},${m.maxHomeTileCnt},${m.maxCoarseCellCnt}"
 
-  private val MetaRe = """"side_meta": "([^"]*)"""".r
-
   private def parseMeta(manifestJson: String): Option[GeoEngine.SideMeta] =
-    MetaRe.findFirstMatchIn(manifestJson).flatMap(mm => parseMetaStr(mm.group(1)))
-
-  private def parseMetaStr(s: String): Option[GeoEngine.SideMeta] = {
-    val p = s.split(',')
-    if (p.length != 8) None // stale format (e.g. pre-coarse-stat) → rebuild
-    else scala.util.Try(GeoEngine.SideMeta(p(0).toBoolean, p(1).toBoolean,
-      p(2).toBoolean, p(3).toBoolean, p(4).toBoolean, p(5).toBoolean,
-      p(6).toLong, p(7).toLong)).toOption
-  }
+    lineageVal(manifestJson, "side_meta").flatMap { v =>
+      val p = v.split(',')
+      if (p.length != 8) None // stale format (e.g. pre-coarse-stat) → rebuild
+      else scala.util.Try(GeoEngine.SideMeta(p(0).toBoolean, p(1).toBoolean,
+        p(2).toBoolean, p(3).toBoolean, p(4).toBoolean, p(5).toBoolean,
+        p(6).toLong, p(7).toLong)).toOption
+    }
 }

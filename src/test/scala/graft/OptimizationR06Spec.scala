@@ -11,8 +11,6 @@ import graft.web.Pages
  *    metadata on the real bench inputs (a wrong static flag would silently
  *    drop a candidate sub-join);
  *  - the column-only page synthesis is byte-identical to the typed path;
- *  - the stored-index serving path size-dispatches (path snapshot small,
- *    bucketed catalog large);
  *  - the widen guard no-ops when the input is already near target
  *    parallelism, and still widens clearly-narrow inputs.
  */
@@ -53,27 +51,6 @@ class OptimizationR06Spec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(cols == typed)
     assert(cols.size == 500)
-  }
-
-  test("stored-index serving size-dispatches: snapshot small, bucketed large") {
-    // default threshold (256 MB) >> sf0.001 source: path snapshot
-    val nParts = spark.read.parquet(s"$sfDir/part.parquet").count()
-    val small = SparkEntry.diamondIndex(spark, sfDir)
-    val smallPlan = small.df.queryExecution.analyzed.toString
-    assert(!smallPlan.contains("diamonds_o10_b_"),
-      "small index must not serve from the bucketed catalog table")
-    assert(small.df.count() == nParts)
-    // threshold 1 byte: bucketed catalog table, nBuckets = parallelism
-    spark.conf.set("spark.graft.index.bucketedMinBytes", "1")
-    try {
-      val large = SparkEntry.diamondIndex(spark, sfDir)
-      val largePlan = large.df.queryExecution.analyzed.toString
-      assert(largePlan.contains("diamonds_o10_b_"),
-        s"large index must serve from the bucketed catalog table: $largePlan")
-      assert(large.df.count() == nParts)
-      // both serving forms carry the same dispatch metadata
-      assert(large.meta == small.meta)
-    } finally spark.conf.unset("spark.graft.index.bucketedMinBytes")
   }
 
   test("widen guard: no-op near target parallelism, widens narrow inputs") {
