@@ -149,11 +149,11 @@ object GeoEngine {
   }
 
   /** Fine-grid cell count of the row's MBR cover (pre-explode). */
-  private def fineCoverCnt(grid: GridConfig): Column = {
-    val iMin = clampIdx(col("xmin"), grid.fineExtX, grid.xMin, grid.globalPpd)
-    val iMax = clampIdx(col("xmax"), grid.fineExtX, grid.xMin, grid.globalPpd)
-    val jMin = clampIdx(col("ymin"), grid.fineExtY, grid.yMin, grid.globalPpd)
-    val jMax = clampIdx(col("ymax"), grid.fineExtY, grid.yMin, grid.globalPpd)
+  private def fineCoverCnt(grid: GridConfig, rc: RectCols): Column = {
+    val iMin = clampIdx(rc.xmin, grid.fineExtX, grid.xMin, grid.globalPpd)
+    val iMax = clampIdx(rc.xmax, grid.fineExtX, grid.xMin, grid.globalPpd)
+    val jMin = clampIdx(rc.ymin, grid.fineExtY, grid.yMin, grid.globalPpd)
+    val jMax = clampIdx(rc.ymax, grid.fineExtY, grid.yMin, grid.globalPpd)
     (iMax - iMin + lit(1L)) * (jMax - jMin + lit(1L))
   }
 
@@ -183,7 +183,7 @@ object GeoEngine {
     * and pass to spatialJoin/findRelationJoin for repeated queries over the
     * same data. */
   def sideMeta(ds: Dataset[_], grid: GridConfig,
-               maxFineCover: Int = 16): SideMeta =
+               maxFineCover: Int = MaxFineCover): SideMeta =
     sideStats(ds.toDF(), grid, maxFineCover, withDensity = true)
 
   /** `withDensity = false` skips the per-home-tile partial (one flat agg, no
@@ -192,7 +192,7 @@ object GeoEngine {
     * time always computes the full statistics. */
   private def sideStats(df: DataFrame, grid: GridConfig, maxFineCover: Int,
                         withDensity: Boolean): SideMeta = {
-    val wide = fineCoverCnt(grid) > maxFineCover
+    val wide = fineCoverCnt(grid, rowRect) > maxFineCover
     val nonRect = col("gtype") === GeomType.LINESTRING ||
       col("gtype") === GeomType.POLYGON
     val nonBox = col("gtype") =!= GeomType.BOX
@@ -387,8 +387,7 @@ object GeoEngine {
           sweepTile(grid, maxFineCover, tile, rs, ss)
         }.toDF()
     } else
-      mergedJoin(rt, st, grid, broadcastS, saltFactor, maxFineCover,
-        levelFilter = true)
+      mergedJoin(rt, st, grid, broadcastS, saltFactor, maxFineCover)
   }
 
   /** Level tag offset for the merged multi-resolution exchange: fine tile
@@ -396,31 +395,45 @@ object GeoEngine {
     * long key encodes (level, cell) with no struct boxing. */
   private val LvlOffset = 1L << 40
 
+  /** Default wide/narrow threshold: an object whose MBR covers more fine
+    * tiles than this joins at the coarse grid. */
+  val MaxFineCover = 16
+
+  /** The engine's own gtype + MBR columns. */
+  private def rowRect: RectCols =
+    RectCols(col("gtype"), col("xmin"), col("ymin"), col("xmax"), col("ymax"))
+
+  /** A NaN in any MBR field: the cell formula floors NaN to cell 0, so such
+    * a row would tile (and, for containment, MBR-test) as if it spanned from
+    * the grid edge — it gets no tiles instead and joins nothing. */
+  private def nanMbr(rc: RectCols): Column =
+    isnan(rc.xmin) || isnan(rc.ymin) || isnan(rc.xmax) || isnan(rc.ymax)
+
   /** Level-encoded cover array at one grid level (points: single cell). */
-  private def lvlCoverArr(grid: GridConfig, fine: Boolean): Column = {
+  private def lvlCoverArr(grid: GridConfig, fine: Boolean, rc: RectCols): Column = {
     val (extX, extY, ppd, off) =
       if (fine) (grid.fineExtX, grid.fineExtY, grid.globalPpd, 0L)
       else (grid.coarseExtX, grid.coarseExtY, grid.coarsePpd, LvlOffset)
-    val iMin = clampIdx(col("xmin"), extX, grid.xMin, ppd)
-    val iMax = clampIdx(col("xmax"), extX, grid.xMin, ppd)
-    val jMin = clampIdx(col("ymin"), extY, grid.yMin, ppd)
-    val jMax = clampIdx(col("ymax"), extY, grid.yMin, ppd)
+    val iMin = clampIdx(rc.xmin, extX, grid.xMin, ppd)
+    val iMax = clampIdx(rc.xmax, extX, grid.xMin, ppd)
+    val jMin = clampIdx(rc.ymin, extY, grid.yMin, ppd)
+    val jMax = clampIdx(rc.ymax, extY, grid.yMin, ppd)
     val pl = lit(ppd.toLong)
     val o = lit(off)
     val cover = flatten(transform(sequence(jMin, jMax),
       j => transform(sequence(iMin, iMax), i => i + j * pl + o)))
     val single = array(iMin + jMin * pl + o)
-    when(col("gtype") === GeomType.POINT, single).otherwise(cover)
+    when(rc.g === GeomType.POINT, single).otherwise(cover)
   }
 
   /** A row's level-tagged tile array: its fine cover if it is narrow and
     * `emitF`; its coarse cover if it is narrow and `emitCNarrow`, or wide
-    * and `emitCWide`. No emission at all (degenerate empty-side metadata)
-    * is an empty array — it explodes to zero rows, the schema still
-    * materializes and the join is empty. */
-  private def lvlTiles(grid: GridConfig, maxFineCover: Int, emitF: Boolean,
-      emitCNarrow: Boolean, emitCWide: Boolean): Column = {
-    val wide = fineCoverCnt(grid) > maxFineCover
+    * and `emitCWide`. No emission at all (degenerate empty-side metadata,
+    * or a NaN MBR field) is an empty array — it explodes to zero rows, the
+    * schema still materializes and the row joins nothing. */
+  private[graft] def lvlTiles(grid: GridConfig, maxFineCover: Int, emitF: Boolean,
+      emitCNarrow: Boolean, emitCWide: Boolean, rc: RectCols): Column = {
+    val wide = fineCoverCnt(grid, rc) > maxFineCover
     val emptyA = typedlit(Array.empty[Long])
     val cCond = (emitCNarrow, emitCWide) match {
       case (true, true)  => Some(lit(true))
@@ -429,10 +442,11 @@ object GeoEngine {
       case _             => None
     }
     Seq(
-      if (emitF) Some(when(!wide, lvlCoverArr(grid, fine = true)).otherwise(emptyA))
+      if (emitF) Some(when(!wide, lvlCoverArr(grid, fine = true, rc)).otherwise(emptyA))
       else None,
-      cCond.map(c => when(c, lvlCoverArr(grid, fine = false)).otherwise(emptyA))
-    ).flatten.reduceOption(concat(_, _)).getOrElse(emptyA)
+      cCond.map(c => when(c, lvlCoverArr(grid, fine = false, rc)).otherwise(emptyA))
+    ).flatten.reduceOption(concat(_, _))
+      .map(t => when(nanMbr(rc), emptyA).otherwise(t)).getOrElse(emptyA)
   }
 
   /** One side's join columns: tile, id, gtype and MBR under the side's
@@ -451,17 +465,41 @@ object GeoEngine {
       grid: GridConfig, maxFineCover: Int, slim: Boolean,
       payload: String => Seq[Column]): DataFrame =
     sideCols(df.withColumn("tile", explode(
-      lvlTiles(grid, maxFineCover, emitF, emitCNarrow, emitCWide))),
+      lvlTiles(grid, maxFineCover, emitF, emitCNarrow, emitCWide, rowRect))),
       p, idName, slim, payload)
 
-  /** The merged join over level-encoded tiles: MBR overlap + per-level
-    * reference-point dedup (+ the both-narrow level filter when
-    * `levelFilter`; containment candidates need neither dedup nor filter —
-    * they pass `levelFilter = false` and apply their own containment
-    * predicate). */
+  /** The merged exchange's pair filter within one level-tagged key group:
+    * closed MBR overlap, the reference-point dedup at the tile's level, and
+    * the level filter dropping coarse-level both-narrow pairs (they joined
+    * at fine). Shared by mergedJoin and the SQL rewrite
+    * (plans.SpatialJoinRewrite). */
+  private[graft] def mergedPairCond(tile: Column, r: RectCols, s: RectCols,
+      grid: GridConfig, maxFineCover: Int): Column = {
+    val isCoarse = tile >= lit(LvlOffset)
+    val mbrOverlap =
+      r.xmax >= s.xmin && r.xmin <= s.xmax &&
+      r.ymax >= s.ymin && r.ymin <= s.ymax
+    // dedup + level filter as compact codegen kernel calls (round 6): the
+    // inline clampIdx/CASE chains (12 least/greatest/FLOOR chains) pushed
+    // this join's generated doConsume method to ~8.5 KB bytecode — past the
+    // JVM's 8000-byte JIT ceiling (DontCompileHugeMethods), which silently
+    // de-optimized the hottest stage of every merged-exchange join to
+    // INTERPRETED bytecode (2.5× on q_find_relation_april at sf0.1).
+    // MergedKernelParitySpec pins bit-equality with the Column chains.
+    val dedup = GeoExprs.mergedRefDedup(tile, r.xmin, r.ymin, s.xmin, s.ymin,
+      grid, LvlOffset)
+    def coverCnt(c: RectCols): Column =
+      GeoExprs.fineCoverCount(c.xmin, c.ymin, c.xmax, c.ymax, grid)
+    val lvlOk = !isCoarse || coverCnt(r) > maxFineCover ||
+      coverCnt(s) > maxFineCover
+    mbrOverlap && dedup && lvlOk
+  }
+
+  /** The merged join over level-encoded tiles, filtered by mergedPairCond —
+    * or by `pairCond` instead: containment candidates need neither dedup
+    * nor level filter and apply their own containment predicate. */
   private def mergedJoin(rt0: DataFrame, st0: DataFrame, grid: GridConfig,
       broadcastS: Boolean, saltFactor: Int, maxFineCover: Int,
-      levelFilter: Boolean,
       saltIdCol: String = "rid",
       pairCond: Option[Column] = None): DataFrame = {
     // the side carrying `saltIdCol` is the probe (stable pmod salt from its
@@ -477,30 +515,13 @@ object GeoEngine {
     val st1 = if (!salted) st0 else if (rtHasId) explodeSalt(st0) else pmodSalt(st0)
     val st = if (broadcastS) broadcast(st1) else st1
     val keys = if (salted) Seq("tile", "salt") else Seq("tile")
-    val isCoarse = col("tile") >= lit(LvlOffset)
-    val mbrOverlap =
-      col("rxmax") >= col("sxmin") && col("rxmin") <= col("sxmax") &&
-      col("rymax") >= col("symin") && col("rymin") <= col("symax")
-    // dedup + level filter as compact codegen kernel calls (round 6): the
-    // inline clampIdx/CASE chains (12 least/greatest/FLOOR chains) pushed
-    // this join's generated doConsume method to ~8.5 KB bytecode — past the
-    // JVM's 8000-byte JIT ceiling (DontCompileHugeMethods), which silently
-    // de-optimized the hottest stage of every merged-exchange join to
-    // INTERPRETED bytecode (2.5× on q_find_relation_april at sf0.1).
-    // MergedKernelParitySpec pins bit-equality with the Column chains.
-    val dedup = GeoExprs.mergedRefDedup(col("tile"),
-      col("rxmin"), col("rymin"), col("sxmin"), col("symin"), grid, LvlOffset)
-    def coverCnt(p: String): Column = GeoExprs.fineCoverCount(
-      col(p + "xmin"), col(p + "ymin"), col(p + "xmax"), col(p + "ymax"), grid)
-    val lvlOk =
-      if (!levelFilter) lit(true)
-      else !isCoarse || coverCnt("r") > maxFineCover ||
-        coverCnt("s") > maxFineCover
     // no static join-strategy hint: merge/shuffle_hash/broadcast hints on
     // this join were all measured equal-or-worse than Catalyst+AQE's own
     // choice at sf0.1 (OPTIMIZATION_r06.md "measured but rejected")
-    val cond = pairCond.getOrElse(mbrOverlap && dedup)
-    rt.join(st, keys).where(cond && lvlOk).drop("tile", "salt")
+    val cond = pairCond.getOrElse(
+      mergedPairCond(col("tile"), RectCols.prefixed("r"), RectCols.prefixed("s"),
+        grid, maxFineCover))
+    rt.join(st, keys).where(cond).drop("tile", "salt")
   }
 
   /**
@@ -521,7 +542,11 @@ object GeoEngine {
       payload: String => Seq[Column], innerIsR: Boolean): DataFrame = {
     val slim = !broadcastS
 
-    val (inner, innerP, innerId) = if (innerIsR) (rIx, "r", "rid") else (sIx, "s", "sid")
+    val (inner0, innerP, innerId) = if (innerIsR) (rIx, "r", "rid") else (sIx, "s", "sid")
+    // the emission's NaN guard on the home-cell side: a row with a NaN MBR
+    // field joins nothing (Spark orders NaN above every number, so it would
+    // otherwise pass innerInOuter)
+    val inner = inner0.where(!nanMbr(rowRect))
     val (outer, outerP, outerId) = if (innerIsR) (sIx, "s", "sid") else (rIx, "r", "rid")
 
     val innerInOuter =
@@ -560,7 +585,7 @@ object GeoEngine {
       payload)
     val (rt, st) = if (innerIsR) (it, ot) else (ot, it)
     mergedJoin(rt, st, grid, broadcastS, saltFactor, maxFineCover,
-      levelFilter = false, saltIdCol = innerId,
+      saltIdCol = innerId,
       pairCond = Some(innerInOuter))
   }
 
@@ -637,10 +662,17 @@ object GeoEngine {
     ).as[TileAssignment]
   }
 
-  /** Column bundle for one side's gtype + MBR — shared between spatialJoin
-    * and the SQL spatial-join rewrite (plans.SpatialJoinRewrite). */
+  /** Column bundle for one side's gtype + MBR — what the tile emission, the
+    * merged pair filter and the rectangular fast path read, shared between
+    * the engine and the SQL spatial-join rewrite (plans.SpatialJoinRewrite). */
   private[graft] final case class RectCols(g: Column, xmin: Column,
       ymin: Column, xmax: Column, ymax: Column)
+
+  private[graft] object RectCols {
+    /** A side's columns under prefix `p`: p+"g", p+"xmin", … (sideCols). */
+    def prefixed(p: String): RectCols = RectCols(col(p + "g"),
+      col(p + "xmin"), col(p + "ymin"), col(p + "xmax"), col(p + "ymax"))
+  }
 
   /** Both sides rectangular (POINT/BOX)? */
   private[graft] def rectangularCond(r: RectCols, s: RectCols): Column =
@@ -733,7 +765,7 @@ object GeoEngine {
                   broadcastS: Boolean = false,
                   saltFactor: Int = 1,
                   aprilOrder: Int = AprilOrder,
-                  maxFineCover: Int = 16,
+                  maxFineCover: Int = MaxFineCover,
                   rMeta: Option[SideMeta] = None,
                   sMeta: Option[SideMeta] = None,
                   sweep: Option[Boolean] = None,
@@ -831,10 +863,8 @@ object GeoEngine {
     // coordinate comparison (DE-9IM on axis-aligned closed rectangles) — no
     // UDF, stays in whole-stage codegen. Exact arithmetic (no tolerance);
     // non-degenerate boxes assumed (zero-area rings are rejected at parse).
-    val rRC = RectCols(col("rg"), col("rxmin"), col("rymin"),
-      col("rxmax"), col("rymax"))
-    val sRC = RectCols(col("sg"), col("sxmin"), col("symin"),
-      col("sxmax"), col("symax"))
+    val rRC = RectCols.prefixed("r")
+    val sRC = RectCols.prefixed("s")
     val rectangular = rectangularCond(rRC, sRC)
     val rectExact = rectExactExpr(pred, rRC, sRC)
     // Plan by type presence (never execute the candidate join twice):
@@ -906,7 +936,7 @@ object GeoEngine {
                        grid: GridConfig, useApril: Boolean = false,
                        aprilOrder: Int = AprilOrder,
                        saltFactor: Int = 1,
-                       maxFineCover: Int = 16,
+                       maxFineCover: Int = MaxFineCover,
                        rMeta: Option[SideMeta] = None,
                        sMeta: Option[SideMeta] = None,
                        sweep: Option[Boolean] = None,
@@ -1063,7 +1093,7 @@ object GeoEngine {
                       grid: GridConfig, useApril: Boolean = false,
                       saltFactor: Int = 1,
                       aprilOrder: Int = AprilOrder,
-                      maxFineCover: Int = 16,
+                      maxFineCover: Int = MaxFineCover,
                       rMeta: Option[SideMeta] = None,
                       sMeta: Option[SideMeta] = None): DataFrame =
     spatialJoin(r, s, pred, grid, useApril,
@@ -1085,7 +1115,7 @@ object GeoEngine {
   def rangeBatch(data: Dataset[GeoRow], queries: Seq[(Long, Geom)],
                  grid: GridConfig, useApril: Boolean = false,
                  aprilOrder: Int = AprilOrder,
-                 maxFineCover: Int = 16,
+                 maxFineCover: Int = MaxFineCover,
                  dataMeta: Option[SideMeta] = None): DataFrame = {
     val spark = data.sparkSession
     import spark.implicits._
@@ -1168,7 +1198,7 @@ object GeoEngine {
     val dt = dIx.withColumn("tile", explode(lvlTiles(grid, maxFineCover,
       emitF = dm.hasNarrow && narrowQ.nonEmpty,
       emitCNarrow = dm.hasNarrow && wideQ.nonEmpty,
-      emitCWide = dm.hasWide)))
+      emitCWide = dm.hasWide, rowRect)))
     val isCoarse = col("tile") >= lit(LvlOffset)
     // compact codegen kernels instead of inline clampIdx/CASE chains — same
     // JIT-bytecode-ceiling rationale as mergedJoin (see there)
@@ -1342,7 +1372,7 @@ object GeoEngine {
     * the explode at O(coarse cells) for a few extra cheap distance checks.
     * Pure column expressions throughout (no UDF in the cover or the test). */
   def distanceJoin(r: Dataset[GeoRow], s: Dataset[GeoRow], d: Double,
-                   grid: GridConfig, maxFineCover: Int = 16): DataFrame = {
+                   grid: GridConfig, maxFineCover: Int = MaxFineCover): DataFrame = {
     val fineBoxCover =
       (math.floor(2 * d / grid.fineExtX).toLong + 2) *
       (math.floor(2 * d / grid.fineExtY).toLong + 2)

@@ -110,9 +110,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     })
 
     // a bare `JOIN ... ON st_<pred>(...)` would execute as a cartesian
-    // product; this rule rewrites it into the multi-resolution tile-exchange
-    // plan (see graft.plans.SpatialJoinRewrite; kill switch
-    // spark.graft.join.rewrite=false)
+    // product; this rule rewrites it into the engine's merged
+    // multi-resolution tile exchange (see graft.plans.SpatialJoinRewrite;
+    // spark.sql.optimizer.excludedRules=graft.plans.SpatialJoinRewrite
+    // switches it off)
     ext.injectOptimizerRule(session => graft.plans.SpatialJoinRewrite(session))
   }
 

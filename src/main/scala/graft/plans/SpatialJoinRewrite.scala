@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import graft.GeoEngine
-import graft.core.{GridConfig, Predicates}
+import graft.GeoEngine.RectCols
+import graft.core.Predicates
 import graft.functions.STRefine
 
 /**
@@ -19,12 +20,17 @@ import graft.functions.STRefine
  *
  * — analyzes to an inner join with no equi-keys, which Spark executes as a
  * cartesian/nested-loop product. This rule rewrites it into the engine's
- * multi-resolution tile-exchange plan: each side explodes by its cell cover
- * at the level its width dictates (fine ≤ maxFineCover cells, else coarse),
- * equi-joins on the cell, reference-point dedup keeps each pair exactly
- * once, the rectangular column fast path decides POINT/BOX pairs, and only
- * non-rectangular pairs evaluate the exact kernel — the plan
- * GeoEngine.spatialJoin builds, reached from plain SQL text.
+ * merged multi-resolution exchange on the world grid (Pages.WorldGrid):
+ * each side derives its MBR from the predicate's own coords and explodes
+ * ONCE into level-tagged tiles (GeoEngine.lvlTiles — a narrow row emits its
+ * fine and coarse cover, a wide row its coarse cover), the two sides meet
+ * in ONE equi-join on the tile key, GeoEngine.mergedPairCond keeps each
+ * MBR-overlapping pair exactly once, the rectangular column fast path
+ * decides POINT/BOX pairs, and only non-rectangular pairs evaluate the
+ * exact kernel. One explode and one exchange per side, as
+ * GeoEngine.spatialJoin plans for sides holding both narrow and wide rows —
+ * the rewrite is purely lazy (no jobs at optimization time), so no side
+ * statistics exist to prune a level.
  *
  * Scope guards (anything else is left untouched):
  *  - the join must be INNER and its condition EXACTLY one st_* predicate
@@ -32,33 +38,27 @@ import graft.functions.STRefine
  *  - st_disjoint is NOT rewritten: the engine's documented tile-local
  *    DISJOINT semantics differ from the cartesian SQL meaning, and silently
  *    changing SQL results is worse than a slow plan;
- *  - kill switch: spark.graft.join.rewrite=false.
+ *  - to switch the rule off, exclude it like any optimizer rule:
+ *    spark.sql.optimizer.excludedRules=graft.plans.SpatialJoinRewrite.
  *
- * The tiling grid defaults to the world grid; override with
- * spark.graft.join.grid = "xmin,ymin,xmax,ymax,coarsePpd,globalPpd".
  * Out-of-grid coordinates clamp into edge cells — still correct, just less
- * pruned. The rewrite is purely lazy (no jobs at optimization time): side
- * statistics are unknown, so all three level-pair sub-joins stay in the
- * plan and wideness is a per-row column.
+ * pruned.
  */
 case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     with PredicateHelper {
 
   private val P = "__graft_"
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString("spark.graft.join.rewrite", "true") != "true") return plan
-    plan.transformUp {
-      // exactly one st_* conjunct drives the candidate structure; remaining
-      // deterministic conjuncts (cross-side residuals — single-side ones
-      // were already pushed below the join) apply as a post-filter
-      case j @ Join(left, right, Inner, Some(cond), _) =>
-        extract(cond, left, right) match {
-          case Some((st, rest, aOnLeft)) =>
-            rewrite(j, left, right, st, aOnLeft, rest)
-          case None => j
-        }
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    // exactly one st_* conjunct drives the candidate structure; remaining
+    // deterministic conjuncts (cross-side residuals — single-side ones
+    // were already pushed below the join) apply as a post-filter
+    case j @ Join(left, right, Inner, Some(cond), _) =>
+      extract(cond, left, right) match {
+        case Some((st, rest, aOnLeft)) =>
+          rewrite(j, left, right, st, aOnLeft, rest)
+        case None => j
+      }
   }
 
   private def extract(cond: Expression, left: LogicalPlan, right: LogicalPlan)
@@ -99,110 +99,49 @@ case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     else None
   }
 
-  private def gridFromConf: GridConfig = {
-    val s = conf.getConfString("spark.graft.join.grid", "")
-    if (s.isEmpty) graft.web.Pages.WorldGrid
-    else {
-      val p = s.split(',')
-      GridConfig(p(0).toDouble, p(1).toDouble, p(2).toDouble, p(3).toDouble,
-        p(4).toInt, p(5).toInt)
-    }
-  }
-
   private def rewrite(j: Join, left: LogicalPlan, right: LogicalPlan,
                       st: STRefine, aOnLeft: Boolean,
                       rest: Seq[Expression]): LogicalPlan = {
-    val grid = gridFromConf
-    val maxFineCover = 16
+    val grid = graft.web.Pages.WorldGrid
     def C(e: Expression): Column = GraftColumnBridge.column(e)
 
-    // shared tile math with the engine (GeoEngine.clampIdx is the single
-    // source of the floor-clamp cell formula)
-    def clampIdxL(c: Column, ext: Double, lo: Double, ppd: Int): Column =
-      GeoEngine.clampIdx(c, ext, lo, ppd)
-
-    // derive gtype + MBR + wideness from the predicate's own argument
-    // expressions (coords packed [x0,y0,x1,y1,...]); rows with degenerate
-    // coords (< 1 vertex) are dropped — sequence(1, 0) would count DOWN in
-    // Spark and element_at would fail under ANSI on the empty array
+    // derive gtype + MBR from the predicate's own argument expressions
+    // (coords packed [x0,y0,x1,y1,...]) under a reserved prefix, so user
+    // columns of any name pass through; rows with degenerate coords
+    // (< 1 vertex) are dropped — sequence(1, 0) would count DOWN in Spark
+    // and element_at would fail under ANSI on the empty array. Then the
+    // engine's level-tagged emission with every level on.
     def prep(child: LogicalPlan, p: String, g: Expression, c: Expression): DataFrame = {
-      val df = GraftColumnBridge.ofRows(spark, child).where(size(C(c)) >= 2)
       val cc = C(c)
       val idx = sequence(lit(1), (size(cc) / 2).cast("int"))
       val xs = transform(idx, i => element_at(cc, i * 2 - 1))
       val ys = transform(idx, i => element_at(cc, i * 2))
-      val out = df.withColumn(p + "g", C(g))
-        .withColumn(p + "xmin", array_min(xs))
-        .withColumn(p + "ymin", array_min(ys))
-        .withColumn(p + "xmax", array_max(xs))
-        .withColumn(p + "ymax", array_max(ys))
-      val iMin = clampIdxL(col(p + "xmin"), grid.fineExtX, grid.xMin, grid.globalPpd)
-      val iMax = clampIdxL(col(p + "xmax"), grid.fineExtX, grid.xMin, grid.globalPpd)
-      val jMin = clampIdxL(col(p + "ymin"), grid.fineExtY, grid.yMin, grid.globalPpd)
-      val jMax = clampIdxL(col(p + "ymax"), grid.fineExtY, grid.yMin, grid.globalPpd)
-      out.withColumn(p + "wide",
-        (iMax - iMin + lit(1L)) * (jMax - jMin + lit(1L)) > maxFineCover)
+      GraftColumnBridge.ofRows(spark, child).where(size(cc) >= 2)
+        .select(col("*"), C(g).as(p + "g"),
+          array_min(xs).as(p + "xmin"), array_min(ys).as(p + "ymin"),
+          array_max(xs).as(p + "xmax"), array_max(ys).as(p + "ymax"))
+        .withColumn(p + "tile", explode(GeoEngine.lvlTiles(grid,
+          GeoEngine.MaxFineCover, emitF = true, emitCNarrow = true,
+          emitCWide = true, RectCols.prefixed(p))))
     }
 
-    val (lg, lc, rg, rc) =
+    val (lg, lCoords, rg, rCoords) =
       if (aOnLeft) (st.rg, st.rc, st.sg, st.sc) else (st.sg, st.sc, st.rg, st.rc)
-    val L = prep(left, P + "l", lg, lc)
-    val R = prep(right, P + "r", rg, rc)
-
-    def cover(p: String, extX: Double, extY: Double, ppd: Int): Column = {
-      val iMin = clampIdxL(col(p + "xmin"), extX, grid.xMin, ppd)
-      val iMax = clampIdxL(col(p + "xmax"), extX, grid.xMin, ppd)
-      val jMin = clampIdxL(col(p + "ymin"), extY, grid.yMin, ppd)
-      val jMax = clampIdxL(col(p + "ymax"), extY, grid.yMin, ppd)
-      val pl = lit(ppd.toLong)
-      flatten(transform(sequence(jMin, jMax),
-        jj => transform(sequence(iMin, iMax), ii => ii + jj * pl)))
-    }
-
-    val mbrOverlap =
-      col(P + "lxmax") >= col(P + "rxmin") && col(P + "lxmin") <= col(P + "rxmax") &&
-      col(P + "lymax") >= col(P + "rymin") && col(P + "lymin") <= col(P + "rymax")
-
-    def side(df: DataFrame, p: String, sel: Int, extX: Double, extY: Double,
-             ppd: Int): DataFrame = {
-      val f = sel match {
-        case -1 => df.where(!col(p + "wide"))
-        case 1  => df.where(col(p + "wide"))
-        case _  => df
-      }
-      f.withColumn(p + "tile", explode(cover(p, extX, extY, ppd)))
-    }
-
-    // three disjoint level-pair sub-joins (mrCandidates' structure, kept
-    // fully lazy — per-row wideness instead of a dispatch prepass)
-    def sub(lSel: Int, rSel: Int, fine: Boolean): DataFrame = {
-      val (extX, extY, ppd) =
-        if (fine) (grid.fineExtX, grid.fineExtY, grid.globalPpd)
-        else (grid.coarseExtX, grid.coarseExtY, grid.coarsePpd)
-      val refI = clampIdxL(greatest(col(P + "lxmin"), col(P + "rxmin")),
-        extX, grid.xMin, ppd)
-      val refJ = clampIdxL(greatest(col(P + "lymin"), col(P + "rymin")),
-        extY, grid.yMin, ppd)
-      val dedup = (refI + refJ * lit(ppd.toLong)) === col(P + "ltile")
-      side(L, P + "l", lSel, extX, extY, ppd)
-        .join(side(R, P + "r", rSel, extX, extY, ppd),
-          col(P + "ltile") === col(P + "rtile"))
-        .where(mbrOverlap && dedup)
-    }
-    // positional union: the three sub-joins share one column layout, and the
-    // two join sides may carry identical user column names (ByName would
-    // reject the duplicates)
-    val cands = Seq(sub(-1, -1, fine = true), sub(0, 1, fine = false),
-      sub(1, -1, fine = false)).reduce(_ union _)
+    // one equi-join on the tile key; its EqualTo is a cross-side equality,
+    // so extract() leaves the rewritten join alone on later passes
+    val cands = prep(left, P + "l", lg, lCoords)
+      .join(prep(right, P + "r", rg, rCoords), col(P + "ltile") === col(P + "rtile"))
+      .where(GeoEngine.mergedPairCond(col(P + "ltile"),
+        RectCols.prefixed(P + "l"), RectCols.prefixed(P + "r"),
+        grid, GeoEngine.MaxFineCover))
 
     // rectangular pairs decide on the shipped columns; everything else
     // evaluates the ORIGINAL kernel expression (references resolve against
     // the carried-through child outputs)
     val (ap, bp) = if (aOnLeft) (P + "l", P + "r") else (P + "r", P + "l")
-    def rcOf(p: String) = GeoEngine.RectCols(col(p + "g"),
-      col(p + "xmin"), col(p + "ymin"), col(p + "xmax"), col(p + "ymax"))
-    val rect = GeoEngine.rectangularCond(rcOf(ap), rcOf(bp))
-    val rectEx = GeoEngine.rectExactExpr(st.predId, rcOf(ap), rcOf(bp))
+    val (ar, br) = (RectCols.prefixed(ap), RectCols.prefixed(bp))
+    val rect = GeoEngine.rectangularCond(ar, br)
+    val rectEx = GeoEngine.rectExactExpr(st.predId, ar, br)
     val spatial = when(rect, rectEx).otherwise(C(st))
     val fullCond = rest.map(C).foldLeft(spatial)(_ && _)
     val filtered = cands.where(fullCond)

@@ -33,7 +33,7 @@ object SpatialIndex {
   /** Build and commit the index snapshot; returns the loaded (committed)
     * form, exactly what a later `load` would see. */
   def build(df: DataFrame, grid: GridConfig, order: Int, root: String,
-            table: String, maxFineCover: Int = 16): Loaded = {
+            table: String, maxFineCover: Int = GeoEngine.MaxFineCover): Loaded = {
     // two actions read the input (sideMeta scan + snapshot write): cache so
     // an expensive compute closure evaluates once
     val cached = df.cache()
@@ -78,7 +78,7 @@ object SpatialIndex {
     * would compare interval lists across incomparable cell spaces and
     * silently drop true hits, so a parameter mismatch means REBUILD. */
   def ensure(spark: SparkSession, root: String, table: String,
-             grid: GridConfig, order: Int, maxFineCover: Int = 16)
+             grid: GridConfig, order: Int, maxFineCover: Int = GeoEngine.MaxFineCover)
             (compute: => DataFrame): Loaded =
     load(spark, root, table)
       .filter(_ => paramsMatch(root, table, grid, order, maxFineCover))

@@ -167,35 +167,79 @@ class ExtensionsSpec extends AnyFunSuite {
       }.toDF("id", "gtype", "coords")
     table(1, 600).createOrReplaceTempView("ta")
     table(7, 600).createOrReplaceTempView("tb")
-    val df = spark.sql(
-      """SELECT a.id AS rid, b.id AS sid FROM ta a JOIN tb b
-        |ON st_intersects(a.gtype, a.coords, b.gtype, b.coords)""".stripMargin)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      s"spatial join still a product:\n${plan.take(800)}")
-    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def isProduct(df: org.apache.spark.sql.DataFrame): Boolean = {
+      val p = df.queryExecution.executedPlan.toString
+      p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")
+    }
     // oracle: the exact kernel over all pairs
     val as = table(1, 600).collect().map(r =>
       (r.getLong(0), Geom(r.getInt(1), r.getSeq[Double](2).toArray)))
     val bs = table(7, 600).collect().map(r =>
       (r.getLong(0), Geom(r.getInt(1), r.getSeq[Double](2).toArray)))
-    val want = (for {
+    def brute(pred: Int, bFirst: Boolean): Set[(Long, Long)] = (for {
       (ai, ag) <- as; (bi, bg) <- bs
-      if Topology.evalPredicate(Predicates.INTERSECTS, ag, bg)
+      if (if (bFirst) Topology.evalPredicate(pred, bg, ag)
+          else Topology.evalPredicate(pred, ag, bg))
     } yield (ai, bi)).toSet
-    assert(got == want, s"got ${got.size} want ${want.size}")
-    // asymmetric predicate with arguments drawn from the RIGHT side first
-    val ins = spark.sql(
+    val want = brute(Predicates.INTERSECTS, bFirst = false)
+
+    // plan shape: one explode per side into one tile equi-join — two
+    // Generates, no union of per-level sub-joins
+    val df = spark.sql(
       """SELECT a.id AS rid, b.id AS sid FROM ta a JOIN tb b
-        |ON st_inside(b.gtype, b.coords, a.gtype, a.coords)""".stripMargin)
-    assert(!ins.queryExecution.executedPlan.toString.contains("CartesianProduct"))
-    val gotIns = ins.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val wantIns = (for {
-      (ai, ag) <- as; (bi, bg) <- bs
-      if Topology.evalPredicate(Predicates.INSIDE, bg, ag)
-    } yield (ai, bi)).toSet
-    assert(gotIns == wantIns, s"inside: got ${gotIns.size} want ${wantIns.size}")
+        |ON st_intersects(a.gtype, a.coords, b.gtype, b.coords)""".stripMargin)
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    assert(!isProduct(df), s"spatial join still a product:\n${plan.toString.take(800)}")
+    assert(plan.collect { case g: org.apache.spark.sql.execution.GenerateExec => g }
+      .size == 2, plan.toString)
+    assert(plan.collect { case u: org.apache.spark.sql.execution.UnionExec => u }
+      .isEmpty, plan.toString)
+    val got = pairsOf(df)
+    assert(got == want, s"got ${got.size} want ${want.size}")
+
+    // every rewritten predicate equals the brute force; st_inside draws its
+    // arguments from the RIGHT side first
+    for ((fn, pred, bFirst) <- Seq(("st_meets", Predicates.MEET, false),
+        ("st_covers", Predicates.COVERS, false), ("st_equals", Predicates.EQUAL, false),
+        ("st_inside", Predicates.INSIDE, true))) {
+      val args = if (bFirst) "b.gtype, b.coords, a.gtype, a.coords"
+        else "a.gtype, a.coords, b.gtype, b.coords"
+      val q = spark.sql(
+        s"SELECT a.id AS rid, b.id AS sid FROM ta a JOIN tb b ON $fn($args)")
+      assert(!isProduct(q), s"$fn not rewritten")
+      val got = pairsOf(q)
+      val exp = brute(pred, bFirst)
+      assert(got == exp, s"$fn: got ${got.size} want ${exp.size}")
+    }
+
+    // user columns named like the engine's join columns pass through intact
+    table(1, 600).select(col("*"), (col("id") * 2).as("tile"),
+      (col("id") + 1000).as("rid"), (col("id") * 3).as("salt"),
+      (col("id") / 2.0).as("rxmin")).createOrReplaceTempView("ta_c")
+    table(7, 600).select(col("*"), (col("id") * 5).as("tile"),
+      (col("id") + 7000).as("rid"), (col("id") * 7).as("salt"),
+      (-col("id") / 4.0).as("rxmin")).createOrReplaceTempView("tb_c")
+    val coll = spark.sql(
+      """SELECT a.id, b.id, a.tile, a.rid, a.salt, a.rxmin,
+        |  b.tile, b.rid, b.salt, b.rxmin FROM ta_c a JOIN tb_c b
+        |ON st_intersects(a.gtype, a.coords, b.gtype, b.coords)""".stripMargin)
+    assert(!isProduct(coll))
+    val collRows = coll.collect()
+    assert(collRows.map(r => (r.getLong(0), r.getLong(1))).toSet == want)
+    collRows.foreach { r =>
+      val (ai, bi) = (r.getLong(0), r.getLong(1))
+      assert((r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)) ==
+        ((ai * 2, ai + 1000, ai * 3, ai / 2.0)), r.toString)
+      assert((r.getLong(6), r.getLong(7), r.getLong(8), r.getDouble(9)) ==
+        ((bi * 5, bi + 7000, bi * 7, -bi / 4.0)), r.toString)
+    }
+
     // WHERE-form with an extra cross-side conjunct: the pushed-down filter
     // becomes the join condition; the st_* conjunct drives the rewrite and
     // the residual applies on top
@@ -204,16 +248,21 @@ class ExtensionsSpec extends AnyFunSuite {
         |WHERE st_intersects(a.gtype, a.coords, b.gtype, b.coords)
         |  AND a.id % 2 = b.id % 3""".stripMargin)
     assert(!mixed.queryExecution.executedPlan.toString.contains("CartesianProduct"))
-    val gotMixed = mixed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val gotMixed = pairsOf(mixed)
     assert(gotMixed == want.filter { case (ai, bi) => ai % 2 == bi % 3 },
       s"mixed conjunct: got ${gotMixed.size}")
     // st_disjoint keeps SQL semantics — NOT rewritten (stays a product)
     val dis = spark.sql(
       """SELECT a.id FROM ta a JOIN tb b
         |ON st_disjoint(a.gtype, a.coords, b.gtype, b.coords)""".stripMargin)
-    val disPlan = dis.queryExecution.executedPlan.toString
-    assert(disPlan.contains("CartesianProduct") ||
-      disPlan.contains("BroadcastNestedLoopJoin"))
+    assert(isProduct(dis))
+    // Spark's own optimizer-rule exclusion switches the rewrite off
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      "graft.plans.SpatialJoinRewrite")
+    try assert(isProduct(spark.sql(
+      """SELECT a.id FROM ta a JOIN tb b
+        |ON st_intersects(a.gtype, a.coords, b.gtype, b.coords)""".stripMargin)))
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("s2-like cells: codegen HilbertCell ≡ HexGrid.s2LikeCell scalar API") {

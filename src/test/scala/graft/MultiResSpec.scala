@@ -171,27 +171,31 @@ class MultiResSpec extends AnyFunSuite {
         Array(cx, cy, cx + 0.002, cy, cx + 0.002, cy + 0.002, cx, cy + 0.002, cx, cy),
         cx, cy, cx + 0.002, cy + 0.002)
     }
-    // one row per side with a NaN xmin inside the dense tile: the sweep
-    // shares the hash path's dedup kernel, and both paths must drop the row
-    def nanRow(id: Long) = GeoRow(id, GeomType.BOX,
-      Array(10.02, 20.01, 10.03, 20.01, 10.03, 20.03, 10.02, 20.03, 10.02, 20.01),
-      Double.NaN, 20.01, 10.03, 20.03)
-    val nanIds = Set(90001L, 90002L)
-    val r = boxes(31, 400).union(dense(1).toDS()).union(Seq(nanRow(90001L)).toDS())
-    val s = boxes(32, 400).union(dense(5).toDS()).union(Seq(nanRow(90002L)).toDS())
+    // one row per side and per MBR field with that field NaN, inside the
+    // dense tile: every path (sweep, hash, and INSIDE's home-cell
+    // containment plan) must drop them all
+    def nanRow(id: Long, field: Int) = {
+      val m = Array(10.02, 20.01, 10.03, 20.03)
+      m(field) = Double.NaN
+      GeoRow(id, GeomType.BOX,
+        Array(10.02, 20.01, 10.03, 20.01, 10.03, 20.03, 10.02, 20.03, 10.02, 20.01),
+        m(0), m(1), m(2), m(3))
+    }
+    val rNan = (0 until 4).map(f => nanRow(90001L + f, f))
+    val sNan = (0 until 4).map(f => nanRow(90011L + f, f))
+    val nanIds = (rNan ++ sNan).map(_.id).toSet
+    val r = boxes(31, 400).union(dense(1).toDS()).union(rNan.toDS())
+    val s = boxes(32, 400).union(dense(5).toDS()).union(sNan.toDS())
     for (pred <- Seq(Predicates.INTERSECTS, Predicates.MEET, Predicates.INSIDE)) {
       val viaSweep = pairs(GeoEngine.spatialJoin(r, s, pred, grid,
         maxFineCover = 16, sweep = Some(true)))
       val viaHash = pairs(GeoEngine.spatialJoin(r, s, pred, grid,
         maxFineCover = 16, sweep = Some(false)))
       assert(viaSweep == viaHash, s"pred=$pred sweep=${viaSweep.size} hash=${viaHash.size}")
-      // INSIDE takes the home-cell containment plan, which neither physical
-      // join of the level-tagged exchange serves: its NaN handling is not
-      // pinned here
-      if (pred != Predicates.INSIDE)
-        for ((name, got) <- Seq("sweep" -> viaSweep, "hash" -> viaHash))
-          assert(!got.exists { case (a, b) => nanIds(a) || nanIds(b) },
-            s"pred=$pred: $name path kept a NaN-xmin row")
+      for ((name, got) <- Seq("sweep" -> viaSweep, "hash" -> viaHash))
+        assert(!got.exists { case (a, b) => nanIds(a) || nanIds(b) },
+          s"pred=$pred: $name path kept NaN-MBR rows " +
+            got.filter { case (a, b) => nanIds(a) || nanIds(b) })
     }
     // plan shape: narrow and wide rows on both sides still plan ONE
     // level-tagged cogroup — no per-level sub-joins unioned together
