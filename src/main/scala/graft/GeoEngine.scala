@@ -125,28 +125,11 @@ object GeoEngine {
     * Pure Catalyst expressions (sequence/transform/flatten) — no UDF, the
     * cover generation stays inside whole-stage codegen. */
   def withTiles2(df: DataFrame, grid: GridConfig): DataFrame =
-    explodeCover(df, grid.fineExtX, grid.fineExtY, grid.xMin, grid.yMin,
-      grid.globalPpd)
+    df.withColumn("tile", explode(lvlCoverArr(grid, fine = true, rowRect)))
 
   private[graft] def clampIdx(c: Column, ext: Double, lo: Double, ppd: Int): Column =
     least(greatest(floor((c - lit(lo)) / lit(ext)).cast("long"), lit(0L)),
       lit(ppd - 1L))
-
-  /** Explode by the MBR's cell cover at an arbitrary granularity (fine or
-    * coarse grid); points take the single-cell fast path. */
-  private def explodeCover(df: DataFrame, extX: Double, extY: Double,
-                           lox: Double, loy: Double, ppd: Int): DataFrame = {
-    val iMin = clampIdx(col("xmin"), extX, lox, ppd)
-    val iMax = clampIdx(col("xmax"), extX, lox, ppd)
-    val jMin = clampIdx(col("ymin"), extY, loy, ppd)
-    val jMax = clampIdx(col("ymax"), extY, loy, ppd)
-    val p = lit(ppd.toLong)
-    val cover = flatten(transform(sequence(jMin, jMax),
-      j => transform(sequence(iMin, iMax), i => i + j * p)))
-    val single = array(iMin + jMin * p)
-    df.withColumn("tile",
-      explode(when(col("gtype") === GeomType.POINT, single).otherwise(cover)))
-  }
 
   /** Fine-grid cell count of the row's MBR cover (pre-explode). */
   private def fineCoverCnt(grid: GridConfig, rc: RectCols): Column = {
@@ -170,12 +153,6 @@ object GeoEngine {
                             hasRect: Boolean, hasBox: Boolean,
                             maxHomeTileCnt: Long = 0L,
                             maxCoarseCellCnt: Long = 0L)
-
-  /** Home fine tile of the MBR min corner (pure column tile math). */
-  private def homeTileCol(grid: GridConfig): Column =
-    clampIdx(col("xmin"), grid.fineExtX, grid.xMin, grid.globalPpd) +
-      clampIdx(col("ymin"), grid.fineExtY, grid.yMin, grid.globalPpd) *
-        lit(grid.globalPpd.toLong)
 
   /** One column-pruned pass computing SideMeta (two-stage aggregation: the
     * per-home-tile partial bounds the shuffle at ≤ ppd² rows). Compute once
@@ -206,7 +183,8 @@ object GeoEngine {
         row.getInt(3) == 1, row.getInt(4) == 1, row.getInt(5) == 1, 0L)
     } else {
       def flag(c: Column) = max(when(c, 1).otherwise(0))
-      val grouped = df.groupBy(homeTileCol(grid).as("t")).agg(
+      val home = cellCol(grid, fine = true, col("xmin"), col("ymin"))
+      val grouped = df.groupBy(home.as("t")).agg(
         count(lit(1)).as("c"), flag(wide).as("w"), flag(!wide).as("na"),
         flag(nonRect).as("nr"), flag(nonBox).as("nb"), flag(rect).as("re"),
         flag(box).as("bx"))
@@ -409,21 +387,35 @@ object GeoEngine {
   private def nanMbr(rc: RectCols): Column =
     isnan(rc.xmin) || isnan(rc.ymin) || isnan(rc.xmax) || isnan(rc.ymax)
 
+  /** One grid level's cell extents and cells per dimension. */
+  private def levelDims(grid: GridConfig, fine: Boolean): (Double, Double, Int) =
+    if (fine) (grid.fineExtX, grid.fineExtY, grid.globalPpd)
+    else (grid.coarseExtX, grid.coarseExtY, grid.coarsePpd)
+
+  /** Level tag of a cell id: fine ids as-is, coarse ids offset by
+    * LvlOffset. */
+  private def lvlTag(fine: Boolean, cell: Column): Column =
+    if (fine) cell else cell + lit(LvlOffset)
+
+  /** The level-encoded cell holding (x, y). */
+  private def cellCol(grid: GridConfig, fine: Boolean, x: Column, y: Column): Column = {
+    val (extX, extY, ppd) = levelDims(grid, fine)
+    lvlTag(fine, clampIdx(x, extX, grid.xMin, ppd) +
+      clampIdx(y, extY, grid.yMin, ppd) * lit(ppd.toLong))
+  }
+
   /** Level-encoded cover array at one grid level (points: single cell). */
   private def lvlCoverArr(grid: GridConfig, fine: Boolean, rc: RectCols): Column = {
-    val (extX, extY, ppd, off) =
-      if (fine) (grid.fineExtX, grid.fineExtY, grid.globalPpd, 0L)
-      else (grid.coarseExtX, grid.coarseExtY, grid.coarsePpd, LvlOffset)
+    val (extX, extY, ppd) = levelDims(grid, fine)
     val iMin = clampIdx(rc.xmin, extX, grid.xMin, ppd)
     val iMax = clampIdx(rc.xmax, extX, grid.xMin, ppd)
     val jMin = clampIdx(rc.ymin, extY, grid.yMin, ppd)
     val jMax = clampIdx(rc.ymax, extY, grid.yMin, ppd)
     val pl = lit(ppd.toLong)
-    val o = lit(off)
     val cover = flatten(transform(sequence(jMin, jMax),
-      j => transform(sequence(iMin, iMax), i => i + j * pl + o)))
-    val single = array(iMin + jMin * pl + o)
-    when(rc.g === GeomType.POINT, single).otherwise(cover)
+      j => transform(sequence(iMin, iMax), i => lvlTag(fine, i + j * pl))))
+    when(rc.g === GeomType.POINT, array(cellCol(grid, fine, rc.xmin, rc.ymin)))
+      .otherwise(cover)
   }
 
   /** A row's level-tagged tile array: its fine cover if it is narrow and
@@ -449,11 +441,11 @@ object GeoEngine {
       .map(t => when(nanMbr(rc), emptyA).otherwise(t)).getOrElse(emptyA)
   }
 
-  /** One side's join columns: tile, id, gtype and MBR under the side's
-    * prefix (+ payload columns when not slim). */
-  private def sideCols(df: DataFrame, p: String, idName: String, slim: Boolean,
-      payload: String => Seq[Column]): DataFrame = {
-    val base = Seq(col("tile"), col("id").as(idName), col("gtype").as(p + "g"),
+  /** One side's join columns in one projection: `tile`, id, gtype and MBR
+    * under the side's prefix (+ payload columns when not slim). */
+  private def sideCols(df: DataFrame, tile: Column, p: String, idName: String,
+      slim: Boolean, payload: String => Seq[Column]): DataFrame = {
+    val base = Seq(tile.as("tile"), col("id").as(idName), col("gtype").as(p + "g"),
       col("xmin").as(p + "xmin"), col("ymin").as(p + "ymin"),
       col("xmax").as(p + "xmax"), col("ymax").as(p + "ymax"))
     df.select((if (slim) base else base ++ payload(p)): _*)
@@ -464,8 +456,8 @@ object GeoEngine {
       emitF: Boolean, emitCNarrow: Boolean, emitCWide: Boolean,
       grid: GridConfig, maxFineCover: Int, slim: Boolean,
       payload: String => Seq[Column]): DataFrame =
-    sideCols(df.withColumn("tile", explode(
-      lvlTiles(grid, maxFineCover, emitF, emitCNarrow, emitCWide, rowRect))),
+    sideCols(df, explode(
+      lvlTiles(grid, maxFineCover, emitF, emitCNarrow, emitCWide, rowRect)),
       p, idName, slim, payload)
 
   /** The merged exchange's pair filter within one level-tagged key group:
@@ -562,24 +554,18 @@ object GeoEngine {
     // level tag guarantees a containment pair joins exactly once, at the
     // outer object's own level — no post-join level filter and no
     // reference-point dedup needed.
-    def homeCell(fine: Boolean): Column = {
-      val (extX, extY, ppd, off) =
-        if (fine) (grid.fineExtX, grid.fineExtY, grid.globalPpd, 0L)
-        else (grid.coarseExtX, grid.coarseExtY, grid.coarsePpd, LvlOffset)
-      clampIdx(col("xmin"), extX, grid.xMin, ppd) +
-        clampIdx(col("ymin"), extY, grid.yMin, ppd) * lit(ppd.toLong) + lit(off)
-    }
+    def homeCell(fine: Boolean): Column = cellCol(grid, fine, col("xmin"), col("ymin"))
     // the single-level case (one outer population) keeps the inner side
     // explode-free: one row per object, plain column tile — the plan's only
     // Generate is the outer cover (MultiResSpec pins this)
-    val innerTiled = (outerHasNarrow, outerHasWide) match {
-      case (true, false) => inner.withColumn("tile", homeCell(fine = true))
-      case (false, true) => inner.withColumn("tile", homeCell(fine = false))
-      case (true, true) => inner.withColumn("tile",
-        explode(array(homeCell(fine = true), homeCell(fine = false))))
-      case _ => inner.withColumn("tile", homeCell(fine = true)) // degenerate
+    val innerTile = (outerHasNarrow, outerHasWide) match {
+      case (true, false) => homeCell(fine = true)
+      case (false, true) => homeCell(fine = false)
+      case (true, true) =>
+        explode(array(homeCell(fine = true), homeCell(fine = false)))
+      case _ => homeCell(fine = true) // degenerate
     }
-    val it = sideCols(innerTiled, innerP, innerId, slim, payload)
+    val it = sideCols(inner, innerTile, innerP, innerId, slim, payload)
     val ot = mrEmission(outer, outerP, outerId, emitF = outerHasNarrow,
       emitCNarrow = false, emitCWide = outerHasWide, grid, maxFineCover, slim,
       payload)
@@ -810,6 +796,33 @@ object GeoEngine {
     // projections on the scan partitioning (see widen's scaladoc)
     val rIx = ix(widen(r.toDF()))
     val sIx = if (broadcastS) ix(s.toDF()) else ix(widen(s.toDF()))
+    // the density histogram only matters when the sweep decision is open
+    // AND the join shuffles AND the predicate takes the tile-exchange plan —
+    // broadcast joins, explicit sweep flags, and containment predicates
+    // (home-cell candidates, no sweep path) get the cheap flat prepass
+    val containmentPred = pred == Predicates.INSIDE ||
+      pred == Predicates.COVERED_BY || pred == Predicates.CONTAINS ||
+      pred == Predicates.COVERS
+    val needDensity = !broadcastS && sweep.isEmpty && !containmentPred
+    val rm = rMeta.getOrElse(sideStats(rIx, grid, maxFineCover, needDensity))
+    val sm = sMeta.getOrElse(sideStats(sIx, grid, maxFineCover, needDensity))
+    // explicit Some(flag) overrides the density rule; the sweep needs the
+    // slim (shuffle) exchange
+    val sweepOn = !broadcastS && sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold))
+    joinCascade(rIx, sIx, pred, grid, useApril, aprilOrder, broadcastS,
+      saltFactor, maxFineCover, rm, sm, sweepOn)
+  }
+
+  /**
+   * The join cascade shared by spatialJoin and rangeBatch, from prepared
+   * sides on: candidate pairs (containment home cells or mrCandidates), the
+   * rectangular column fast path, the optional APRIL verdict and the exact
+   * refinement for inconclusive pairs only. Returns (rid, sid).
+   */
+  private def joinCascade(rIx: DataFrame, sIx: DataFrame, pred: Int,
+      grid: GridConfig, useApril: Boolean, aprilOrder: Int,
+      broadcastS: Boolean, saltFactor: Int, maxFineCover: Int,
+      rm: SideMeta, sm: SideMeta, sweepOn: Boolean): DataFrame = {
     // In broadcast mode the build side ships whole (one pass, no shuffle), so
     // payload columns ride along. In shuffle mode only (tile, id, gtype, mbr)
     // go through the exchange; geometry/APRIL columns re-join by id afterwards
@@ -826,25 +839,11 @@ object GeoEngine {
     def geomTable(df: DataFrame, p: String, idName: String): DataFrame =
       df.select((col("id").as(idName) +: payloadCols(p)): _*)
 
-    // the density histogram only matters when the sweep decision is open
-    // AND the join shuffles AND the predicate takes the tile-exchange plan —
-    // broadcast joins, explicit sweep flags, and containment predicates
-    // (home-cell candidates, no sweep path) get the cheap flat prepass
-    val containmentPred = pred == Predicates.INSIDE ||
-      pred == Predicates.COVERED_BY || pred == Predicates.CONTAINS ||
-      pred == Predicates.COVERS
-    val needDensity = slim && sweep.isEmpty && !containmentPred
-    val rm = rMeta.getOrElse(sideStats(rIx, grid, maxFineCover, needDensity))
-    val sm = sMeta.getOrElse(sideStats(sIx, grid, maxFineCover, needDensity))
-    val anyNonRect = rm.hasNonRect || sm.hasNonRect
-    // explicit Some(flag) overrides the density rule; the sweep needs the
-    // slim (shuffle) exchange
-    val sweepOn = slim && sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold))
-
     // containment predicates take the home-cell candidate plan (probe side
     // ships one row per object; no dedup); everything else multi-res tiles
     val contRinS = pred == Predicates.INSIDE || pred == Predicates.COVERED_BY
     val contSinR = pred == Predicates.CONTAINS || pred == Predicates.COVERS
+    val anyNonRect = rm.hasNonRect || sm.hasNonRect
     val cands =
       if (contRinS || contSinR)
         containmentCandidates(rIx, sIx, grid, broadcastS, saltFactor,
@@ -1103,15 +1102,19 @@ object GeoEngine {
   // ---------------------------------------------------------- range queries
 
   /** Batch range query: (queryId, id) for every data object intersecting the
-    * query window. Query windows are broadcast (SURVEY §2.8); tile pruning
-    * comes from the equi-join on the windows' exploded tile cover.
+    * query window. The reference broadcasts the query table and joins it
+    * with the data (SURVEY §2.8); here that is a spatial join of the data
+    * (r) against a broadcast window table (s), through the same
+    * mrCandidates exchange and refine cascade as spatialJoin: windows and
+    * data objects wider than `maxFineCover` fine cells join at the coarse
+    * grid, so a continent-sized window ships O(coarse cells) rows.
     *
     * `useApril`: the reference's on-the-fly window APRIL
-    * (src/APRIL/filter.cpp:236-246) — each (polygon) window is rasterized
-    * ONCE on the driver and broadcast with its tile rows; the interval
-    * verdict then short-circuits most candidates before exact refinement.
-    * Intended for APRIL-pre-indexed data (`april_all` columns present);
-    * un-indexed data is rasterized lazily. */
+    * (src/APRIL/filter.cpp:236-246) — each window is rasterized ONCE on the
+    * driver and broadcast with its row; the interval verdict then
+    * short-circuits most candidates before exact refinement. Intended for
+    * APRIL-pre-indexed data (`april_all` columns present); un-indexed data
+    * is rasterized lazily. */
   def rangeBatch(data: Dataset[GeoRow], queries: Seq[(Long, Geom)],
                  grid: GridConfig, useApril: Boolean = false,
                  aprilOrder: Int = AprilOrder,
@@ -1124,110 +1127,31 @@ object GeoEngine {
     // repartition cost at sf0.1 with no offsetting win); its expensive
     // kernel, rasterization, goes through aprilIndex, which widens itself
     val dIx =
-      if (!useApril) data.toDF()
-      else if (data.toDF().columns.contains("april_all")) data.toDF()
+      if (!useApril || data.toDF().columns.contains("april_all")) data.toDF()
       else aprilIndex(data.toDF(), grid, aprilOrder)
-    // Multi-resolution covers on BOTH sides: a window (or data object)
-    // whose fine cover exceeds maxFineCover cells joins at the COARSE grid
-    // instead — a continent-sized window ships O(coarse cells) broadcast
-    // rows (not up to globalPpd² driver-built fine tiles), and a wide data
-    // polygon ships O(coarse cells) shuffle copies. Level pairing mirrors
-    // mrCandidates: (narrow, narrow) joins fine; any pair with a wide
-    // member joins coarse — one level-tagged join, each pair deduped by the
-    // reference point at its own level.
-    // each window rasterizes ONCE even when it ships at both levels (a wide
-    // data side re-broadcasts ALL windows at the coarse level)
-    val qApprox: Map[Long, (Array[Long], Array[Long])] =
-      if (!useApril) Map.empty
-      else queries.map { case (qid, g) =>
-        val a = April.rasterize(g, grid.xMin, grid.yMin,
-          grid.xExtent, grid.yExtent, aprilOrder)
-        qid -> (a.all, a.full)
-      }.toMap
-    val (wideQ, narrowQ) = queries.partition { case (_, g) =>
+    val windows = queries.map { case (qid, g) =>
       val m = g.mbr
-      (grid.fineX(m.xmax).min(grid.globalPpd - 1).max(0) -
-        grid.fineX(m.xmin).min(grid.globalPpd - 1).max(0) + 1).toLong *
-      (grid.fineY(m.ymax).min(grid.globalPpd - 1).max(0) -
-        grid.fineY(m.ymin).min(grid.globalPpd - 1).max(0) + 1).toLong > maxFineCover
-    }
+      val a = if (useApril) April.rasterize(g, grid.xMin, grid.yMin,
+        grid.xExtent, grid.yExtent, aprilOrder)
+        else April.Approx(Array.emptyLongArray, Array.emptyLongArray)
+      (qid, g.gtype, g.coords, m.xmin, m.ymin, m.xmax, m.ymax, a.all, a.full)
+    }.toDF("id", "gtype", "coords", "xmin", "ymin", "xmax", "ymax",
+      "april_all", "april_full")
+    // the windows' dispatch metadata from the driver-side Geoms (no job)
+    def any(p: Geom => Boolean) = queries.exists { case (_, g) => p(g) }
+    def wide(g: Geom) = GeoKernels.fineCoverCnt(g.mbr.xmin, g.mbr.ymin,
+      g.mbr.xmax, g.mbr.ymax, grid.xMin, grid.yMin, grid.fineExtX,
+      grid.fineExtY, grid.globalPpd) > maxFineCover
+    def rect(g: Geom) = g.gtype == GeomType.POINT || g.gtype == GeomType.BOX
+    val wm = SideMeta(hasWide = any(wide), hasNarrow = any(!wide(_)),
+      hasNonRect = any(!rect(_)), hasNonBox = any(_.gtype != GeomType.BOX),
+      hasRect = any(rect), hasBox = any(_.gtype == GeomType.BOX))
     val dm = dataMeta.getOrElse(sideStats(dIx, grid, maxFineCover,
       withDensity = false))
-    // merged level-encoded broadcast join (round 6, guide §2.4 — the same
-    // key scheme as mrCandidates): ONE scan + explode of the data and ONE
-    // broadcast carry all three level pairings. Window rows are driver-built
-    // at their level(s): narrow windows at fine (+ coarse when wide data
-    // exists), wide windows at coarse; narrow data emits its fine cover
-    // (iff narrow windows exist) and coarse cover (iff wide windows exist),
-    // wide data its coarse cover. The level filter drops coarse-level
-    // narrow×narrow pairs (already joined at fine); the reference-point
-    // dedup runs at the pair's own level. Each window still rasterizes once.
-    def qRows(sel: Seq[(Long, Geom)], fine: Boolean, isWide: Boolean) =
-      sel.flatMap { case (qid, g) =>
-        val m = g.mbr
-        val (qall, qfull) = qApprox.getOrElse(qid,
-          (Array.emptyLongArray, Array.emptyLongArray))
-        val cells: Seq[Long] =
-          if (fine) grid.fineTiles(m).toSeq
-          else {
-            val ci0 = math.min(math.max(grid.coarseX(m.xmin), 0), grid.coarsePpd - 1)
-            val ci1 = math.min(math.max(grid.coarseX(m.xmax), 0), grid.coarsePpd - 1)
-            val cj0 = math.min(math.max(grid.coarseY(m.ymin), 0), grid.coarsePpd - 1)
-            val cj1 = math.min(math.max(grid.coarseY(m.ymax), 0), grid.coarsePpd - 1)
-            (for { j <- cj0 to cj1; i <- ci0 to ci1 }
-              yield grid.coarseId(i, j) + LvlOffset).toSeq
-          }
-        cells.map(t =>
-          (qid, t, isWide, g.gtype, g.coords, m.xmin, m.ymin, m.xmax, m.ymax,
-            qall, qfull))
-      }
-    val qdf = (
-      qRows(narrowQ, fine = true, isWide = false) ++
-      (if (dm.hasWide) qRows(narrowQ, fine = false, isWide = false) else Nil) ++
-      qRows(wideQ, fine = false, isWide = true)
-    ).toDF("qid", "tile", "qwide", "qg", "qc", "qxmin", "qymin",
-      "qxmax", "qymax", "qall", "qfull")
-
-    val mbrOverlap =
-      col("xmax") >= col("qxmin") && col("xmin") <= col("qxmax") &&
-      col("ymax") >= col("qymin") && col("ymin") <= col("qymax")
-    if (queries.isEmpty || (!dm.hasNarrow && !dm.hasWide))
-      return spark.emptyDataFrame
-        .select(lit(0L).as("qid"), lit(0L).as("id")).limit(0)
-    // coarse emission: narrow data pairs wide windows; wide data pairs all
-    val dt = dIx.withColumn("tile", explode(lvlTiles(grid, maxFineCover,
-      emitF = dm.hasNarrow && narrowQ.nonEmpty,
-      emitCNarrow = dm.hasNarrow && wideQ.nonEmpty,
-      emitCWide = dm.hasWide, rowRect)))
-    val isCoarse = col("tile") >= lit(LvlOffset)
-    // compact codegen kernels instead of inline clampIdx/CASE chains — same
-    // JIT-bytecode-ceiling rationale as mergedJoin (see there)
-    val dedup = GeoExprs.mergedRefDedup(col("tile"),
-      col("xmin"), col("ymin"), col("qxmin"), col("qymin"), grid, LvlOffset)
-    val lvlOk = !isCoarse || col("qwide") ||
-      GeoExprs.fineCoverCount(col("xmin"), col("ymin"),
-        col("xmax"), col("ymax"), grid) > maxFineCover
-    val joined = dt.join(broadcast(qdf), Seq("tile"))
-      .where(mbrOverlap && dedup && lvlOk)
-
-    def intersectsExpr: Column = GeoExprs.stRefine(Predicates.INTERSECTS,
-      col("qg"), col("qc"), col("gtype"), col("coords"))
-    // rectangular fast path: for BOX windows over POINT/BOX data the MBR
-    // overlap (already applied) IS the exact predicate — the reference's
-    // interior-tile shortcut generalized to the whole rectangular case
-    val rectangular =
-      col("qg") === GeomType.BOX &&
-      (col("gtype") === GeomType.POINT || col("gtype") === GeomType.BOX)
-    val nonRectPredicate =
-      if (useApril) {
-        val verdict = GeoExprs.aprilVerdict(Predicates.INTERSECTS,
-          col("april_all"), col("april_full"), col("qall"), col("qfull"))
-        verdict === April.TRUE_HIT ||
-          (verdict === April.INCONCLUSIVE && intersectsExpr)
-      } else intersectsExpr
-    joined
-      .where(when(rectangular, lit(true)).otherwise(nonRectPredicate))
-      .select(col("qid"), col("id"))
+    joinCascade(dIx, windows, Predicates.INTERSECTS, grid, useApril,
+      aprilOrder, broadcastS = true, saltFactor = 1, maxFineCover, dm, wm,
+      sweepOn = false)
+      .select(col("sid").as("qid"), col("rid").as("id"))
   }
 
   // ------------------------------------------------------------------- kNN
@@ -1265,7 +1189,7 @@ object GeoEngine {
     // Home tile is the pure-column tile math (codegen) — identical to
     // grid.fineTileOfPoint (floor-then-clamp commutes with clamp-then-floor
     // on the clamped range).
-    val homeTile = homeTileCol(grid)
+    val homeTile = cellCol(grid, fine = true, col("xmin"), col("ymin"))
     val tileCounts: Map[Long, Long] = points
       .select(homeTile.as("tile"))
       .groupBy("tile").count().collect()

@@ -350,11 +350,12 @@ object SparkEntry {
   // ---- persisted APRIL index (reference lifecycle: buildIndex once, query
   //      the stored index; API/Hecatoncheir.cpp:509-564) ---------------------
 
-  /** Per-SF index root, content-keyed (table file size) so a regenerated
-    * testdata dir invalidates the cache instead of serving a stale index. */
+  /** Per-SF index root, content-keyed (table file size and modification
+    * time) so a regenerated testdata dir invalidates the cache instead of
+    * serving a stale index. */
   private def idxRoot(dir: String): String = {
     val f = new java.io.File(s"$dir/part.parquet")
-    s"/tmp/graft_idx/${new java.io.File(dir).getName}_${f.length}"
+    s"/tmp/graft_idx/${new java.io.File(dir).getName}_${f.length}_${f.lastModified}"
   }
 
   /** The diamond table's persisted APRIL index (order 10), served from the

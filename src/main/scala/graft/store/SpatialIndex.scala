@@ -10,8 +10,8 @@ import graft.core.GridConfig
  * query-against-the-stored-index lifecycle (API/Hecatoncheir.cpp:509-564;
  * APRIL sidecar files src/APRIL/storage.cpp:7-53), re-expressed as ONE
  * tile-partitioned snapshot carrying geometry + APRIL interval-list columns,
- * with the grid, APRIL order, and SideMeta dispatch statistics recorded in
- * the manifest lineage.
+ * with the grid, APRIL order, SideMeta dispatch statistics and a CRC of the
+ * index code recorded in the manifest lineage.
  *
  * `build` pays rasterization + the metadata prepass once at ingest;
  * `load`/`ensure` hand repeated queries the pre-indexed table plus its
@@ -56,7 +56,8 @@ object SpatialIndex {
       "april_order" -> order.toString,
       "grid" -> gridStr(grid),
       "max_fine_cover" -> maxFineCover.toString,
-      "side_meta" -> metaStr(meta)))
+      "side_meta" -> metaStr(meta),
+      "code" -> codeCrc))
     cached.unpersist()
     load(df.sparkSession, root, table)
       .getOrElse(sys.error(s"index commit for $table did not become visible"))
@@ -72,11 +73,13 @@ object SpatialIndex {
     } yield Loaded(df, meta)
 
   /** Load the committed index if present AND built with the SAME grid /
-    * APRIL order / maxFineCover, else build + commit a fresh snapshot — the
-    * resume semantics of Snapshots.runStage for index snapshots. Serving a
-    * snapshot rasterized at a different order (or over a different grid)
-    * would compare interval lists across incomparable cell spaces and
-    * silently drop true hits, so a parameter mismatch means REBUILD. */
+    * APRIL order / maxFineCover by the same index code, else build + commit
+    * a fresh snapshot — the resume semantics of Snapshots.runStage for index
+    * snapshots. Serving a snapshot rasterized at a different order (or over
+    * a different grid) would compare interval lists across incomparable cell
+    * spaces and silently drop true hits, so a parameter mismatch means
+    * REBUILD; so does a snapshot written by a different build of the
+    * rasterizer or of this object (`code` lineage). */
   def ensure(spark: SparkSession, root: String, table: String,
              grid: GridConfig, order: Int, maxFineCover: Int = GeoEngine.MaxFineCover)
             (compute: => DataFrame): Loaded =
@@ -97,8 +100,23 @@ object SpatialIndex {
     Snapshots.latestManifest(root, table).exists { m =>
       lineageVal(m, "april_order").contains(order.toString) &&
       lineageVal(m, "grid").contains(gridStr(grid)) &&
-      lineageVal(m, "max_fine_cover").contains(maxFineCover.toString)
+      lineageVal(m, "max_fine_cover").contains(maxFineCover.toString) &&
+      lineageVal(m, "code").contains(codeCrc)
     }
+
+  /** CRC32 of the class files that decide the stored bytes: the rasterizer
+    * (April, its Hilbert curve and the AprilRasterize expression) and this
+    * object (clustering, lineage). Read once per JVM from the classpath. */
+  private lazy val codeCrc: String = {
+    val crc = new java.util.zip.CRC32()
+    for (c <- Seq(graft.core.April.getClass, graft.core.Hilbert.getClass,
+                  classOf[graft.functions.AprilRasterize], getClass)) {
+      val in = c.getResourceAsStream("/" + c.getName.replace('.', '/') + ".class")
+      require(in != null, s"SpatialIndex: class file of ${c.getName} not found")
+      try crc.update(in.readAllBytes()) finally in.close()
+    }
+    java.lang.Long.toHexString(crc.getValue)
+  }
 
   private def metaStr(m: GeoEngine.SideMeta): String =
     s"${m.hasWide},${m.hasNarrow},${m.hasNonRect},${m.hasNonBox}," +

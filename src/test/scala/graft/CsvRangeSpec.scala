@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
+import graft.functions.GeoKernels
 
 /** CSV load semantics + on-the-fly window APRIL + distributed kNN parity. */
 class CsvRangeSpec extends AnyFunSuite {
@@ -91,32 +92,77 @@ class CsvRangeSpec extends AnyFunSuite {
           cx - hw, cy + hh, cx - hw, cy - hh),
         cx - hw, cy - hh, cx + hw, cy + hh)
     }.toDS())
+    // one row per MBR field with that field NaN, inside the half-world
+    // window: no path may return them
+    val nanRows = (0 until 4).map { f =>
+      val m = Array(-100.2, 10.1, -100.1, 10.2)
+      m(f) = Double.NaN
+      GeoRow(90001L + f, GeomType.BOX,
+        Array(-100.2, 10.1, -100.1, 10.1, -100.1, 10.2, -100.2, 10.2, -100.2, 10.1),
+        m(0), m(1), m(2), m(3))
+    }
+    val data = pts.union(nanRows.toDS())
     // a continent-sized window (half the world), a hemisphere-tall strip,
-    // and a handful of narrow windows — mixed levels in one batch
+    // a wide diamond polygon, a handful of 1° boxes (5 × 4 fine cells, just
+    // over maxFineCover), and a narrow diamond and a point window that join
+    // at the fine level — mixed levels and types in one batch
+    def diamond(cx: Double, cy: Double, hw: Double, hh: Double) =
+      Geom(GeomType.POLYGON,
+        Array(cx - hw, cy, cx, cy - hh, cx + hw, cy, cx, cy + hh, cx - hw, cy))
+    val p7 = pts.collect().find(_.id == 7L).get
     val wide = Seq(
       (100L, Geom.box(-180.0, -85.0, 0.0, 85.0)),
-      (101L, Geom.box(10.0, -80.0, 30.0, 80.0)))
-    val narrow = (0 until 6).map { q =>
+      (101L, Geom.box(10.0, -80.0, 30.0, 80.0)),
+      (102L, diamond(40.0, 20.0, 6.0, 5.0)))
+    val boxes = (0 until 6).map { q =>
       val cx = (q * 29 % 2800) / 8.0 - 175.0
       val cy = (q * 31 % 1280) / 8.0 - 80.0
       (q.toLong, Geom.box(cx - 0.5, cy - 0.5, cx + 0.5, cy + 0.5))
     }
-    val got = GeoEngine.rangeBatch(pts, wide ++ narrow, grid)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // brute-force oracle: closed-MBR intersection (exact for box windows
-    // over points and boxes)
+    val narrow = Seq(
+      (200L, diamond(p7.xmin, p7.ymin, 0.3, 0.2)),
+      (201L, Geom.point(p7.xmin, p7.ymin)))
+    val wins = wide ++ boxes ++ narrow
+    def isWide(g: Geom) = GeoKernels.fineCoverCnt(g.mbr.xmin, g.mbr.ymin,
+      g.mbr.xmax, g.mbr.ymax, grid.xMin, grid.yMin, grid.fineExtX,
+      grid.fineExtY, grid.globalPpd) > GeoEngine.MaxFineCover
+    assert(wide.forall(w => isWide(w._2)) && narrow.forall(w => !isWide(w._2)))
+    // brute-force oracle: the exact predicate over every (window, object)
     val raw = pts.collect()
-    val want = (wide ++ narrow).flatMap { case (qid, g) =>
-      val m = g.mbr
-      raw.filter(p => p.xmax >= m.xmin && p.xmin <= m.xmax &&
-        p.ymax >= m.ymin && p.ymin <= m.ymax).map(p => (qid, p.id))
+    val want = wins.flatMap { case (qid, g) =>
+      raw.filter(p => Topology.intersects(g, Geom(p.gtype, p.coords)))
+        .map(p => (qid, p.id))
     }.toSet
-    assert(got == want, s"got ${got.size} want ${want.size}")
-    // the half-world window's fine cover is ~436*872 ≈ 380k tiles; its
-    // coarse cover is ≤ 55*109 ≈ 6k cells — the broadcast query table must
-    // stay O(coarse cells), not O(fine tiles)
-    val halfWorldFine = grid.fineTiles(Geom.box(-180.0, -85.0, 0.0, 85.0).mbr).length
-    assert(halfWorldFine > 300000) // the explosion the coarse path avoids
+    assert(want.exists(_._1 == 200L) && want.exists(_._1 == 201L) &&
+      want.exists(_._1 == 102L))
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    for (useApril <- Seq(false, true)) {
+      val df = GeoEngine.rangeBatch(data, wins, grid, useApril = useApril,
+        aprilOrder = 10)
+      val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(!got.exists(p => p._2 >= 90001L && p._2 <= 90004L),
+        s"useApril=$useApril kept NaN-MBR rows")
+      assert(got == want, s"useApril=$useApril got ${got.size} want ${want.size}")
+      // plan shape: one explode per side (data, and the window table under
+      // the broadcast); the half-world window's fine cover is ~380k tiles,
+      // yet the broadcast window table stays below coarsePpd² rows
+      val plan = df.queryExecution.executedPlan
+      val gens = Aqe.collect(plan) {
+        case g: org.apache.spark.sql.execution.GenerateExec => g }
+      assert(gens.size == 2, plan.toString)
+      val winGens = Aqe.collect(plan) {
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
+      }.flatMap(b => Aqe.collect(b) {
+        case g: org.apache.spark.sql.execution.GenerateExec => g })
+      assert(winGens.size == 1, plan.toString)
+      val winRows = winGens.head.metrics("numOutputRows").value
+      assert(winRows > 0 && winRows < grid.coarsePpd.toLong * grid.coarsePpd,
+        s"window rows $winRows")
+    }
+    // an empty batch: no rows, the (qid, id) schema
+    val none = GeoEngine.rangeBatch(pts, Seq.empty, grid)
+    assert(none.columns.toSeq == Seq("qid", "id"))
+    assert(none.count() == 0L)
   }
 
   test("distance join: coarse-level plan ≡ fine-level plan") {

@@ -106,6 +106,15 @@ class SnapshotSpec extends AnyFunSuite {
     // the order-12 one) — parameters always win over what happens to be stored
     ensure()
     assert(builds == 3)
+    // a snapshot with the same parameters but written by a different build
+    // of the index code (its `code` lineage differs) must not be served
+    val stored = Snapshots.latestManifest(root, "diamonds").get
+    val params = Seq("stage", "april_order", "grid", "max_fine_cover", "side_meta")
+      .map(k => k -> ("\"" + k + "\": \"([^\"]*)\"").r
+        .findFirstMatchIn(stored).get.group(1)).toMap
+    Snapshots.commit(again.df, root, "diamonds", params + ("code" -> "stale"))
+    ensure()
+    assert(builds == 4, "an index written by other code must be rebuilt")
     // persisted SideMeta round-trips (incl. the density statistic)
     val fresh = GeoEngine.sideMeta(diamonds(300), grid)
     assert(again.meta == fresh)
