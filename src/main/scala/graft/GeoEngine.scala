@@ -116,20 +116,28 @@ object GeoEngine {
 
   // ----------------------------------------------------------------- tiling
 
-  /** Explode a dataset by its fine-tile cover: adds `tile` (and keeps every
-    * original column). Points take the single-tile fast path. */
-  def withTiles(ds: Dataset[GeoRow], grid: GridConfig): DataFrame =
-    withTiles2(ds.toDF(), grid)
-
-  /** Tile explode for any DataFrame carrying (gtype, xmin, ymin, xmax, ymax).
-    * Pure Catalyst expressions (sequence/transform/flatten) — no UDF, the
-    * cover generation stays inside whole-stage codegen. */
+  /** Tile explode for any DataFrame carrying (gtype, xmin, ymin, xmax, ymax):
+    * adds `tile` (and keeps every original column). Pure Catalyst
+    * expressions (sequence/transform/flatten) — no UDF, the cover generation
+    * stays inside whole-stage codegen. */
   def withTiles2(df: DataFrame, grid: GridConfig): DataFrame =
     df.withColumn("tile", explode(lvlCoverArr(grid, fine = true, rowRect)))
 
   private[graft] def clampIdx(c: Column, ext: Double, lo: Double, ppd: Int): Column =
     least(greatest(floor((c - lit(lo)) / lit(ext)).cast("long"), lit(0L)),
       lit(ppd - 1L))
+
+  /** The point (x, y)'s clamped (fine tile, coarse tile) ids — the tile
+    * columns of tileAssignments and the streaming surface
+    * (StreamOps.withTileColumns). Pure column expressions (codegen, no UDF):
+    * a point sits in exactly one tile per level. */
+  private[graft] def pointTiles(grid: GridConfig, x: Column, y: Column): (Column, Column) = {
+    val fi = clampIdx(x, grid.fineExtX, grid.xMin, grid.globalPpd)
+    val fj = clampIdx(y, grid.fineExtY, grid.yMin, grid.globalPpd)
+    val fpc = grid.finePerCoarse.toDouble
+    (fi + fj * grid.globalPpd,
+      floor(fi / lit(fpc)).cast("long") + floor(fj / lit(fpc)).cast("long") * grid.coarsePpd)
+  }
 
   /** Fine-grid cell count of the row's MBR cover (pre-explode). */
   private def fineCoverCnt(grid: GridConfig, rc: RectCols): Column = {
@@ -632,17 +640,11 @@ object GeoEngine {
   def tileAssignments(points: DataFrame, grid: GridConfig, hexRes: Int): Dataset[TileAssignment] = {
     val spark = points.sparkSession
     import spark.implicits._
-    // pure column expressions (codegen, no UDF): points sit in exactly one tile
-    val fi = floor((col("x") - lit(grid.xMin)) / lit(grid.fineExtX)).cast("long")
-    val fj = floor((col("y") - lit(grid.yMin)) / lit(grid.fineExtY)).cast("long")
-    val fic = least(greatest(fi, lit(0L)), lit(grid.globalPpd - 1L))
-    val fjc = least(greatest(fj, lit(0L)), lit(grid.globalPpd - 1L))
-    val fpc = grid.finePerCoarse.toDouble
+    val (tile, coarseTile) = pointTiles(grid, col("x"), col("y"))
     points.select(
       col("id"),
-      (fic + fjc * grid.globalPpd).as("tile"),
-      (floor(fic / lit(fpc)).cast("long") +
-        floor(fjc / lit(fpc)).cast("long") * grid.coarsePpd).as("coarseTile"),
+      tile.as("tile"),
+      coarseTile.as("coarseTile"),
       lit(TwoLayerClass.A).as("clazz"),
       GeoExprs.hexCellOf(col("x"), col("y"), hexRes).as("hexCell")
     ).as[TileAssignment]
@@ -665,27 +667,32 @@ object GeoEngine {
     (r.g === GeomType.POINT || r.g === GeomType.BOX) &&
     (s.g === GeomType.POINT || s.g === GeomType.BOX)
 
+  /** Bit-identical MBRs. */
+  private def mbrEqual(a: RectCols, b: RectCols): Column =
+    a.xmin === b.xmin && a.ymin === b.ymin && a.xmax === b.xmax && a.ymax === b.ymax
+
+  /** `a`'s MBR within `b`'s, boundary included. */
+  private def mbrIn(a: RectCols, b: RectCols): Column =
+    a.xmin >= b.xmin && a.xmax <= b.xmax && a.ymin >= b.ymin && a.ymax <= b.ymax
+
+  /** An edge of `r`'s MBR on the facing edge of `s`'s: for closed-overlapping
+    * boxes, boundary-only contact. */
+  private def mbrFacingEdge(r: RectCols, s: RectCols): Column =
+    r.xmin === s.xmax || r.xmax === s.xmin || r.ymin === s.ymax || r.ymax === s.ymin
+
   /** Exact predicate over rectangular pairs that ALREADY passed the closed
     * MBR-overlap test — pure coordinate comparisons, stays in codegen. */
   private[graft] def rectExactExpr(pred: Int, r: RectCols, s: RectCols): Column = {
     val rPoint = r.g === GeomType.POINT
     val sPoint = s.g === GeomType.POINT
-    val coordsEqual =
-      r.xmin === s.xmin && r.ymin === s.ymin &&
-      r.xmax === s.xmax && r.ymax === s.ymax
-    val rInSClosed =
-      r.xmin >= s.xmin && r.xmax <= s.xmax &&
-      r.ymin >= s.ymin && r.ymax <= s.ymax
-    val sInRClosed =
-      s.xmin >= r.xmin && s.xmax <= r.xmax &&
-      s.ymin >= r.ymin && s.ymax <= r.ymax
+    val coordsEqual = mbrEqual(r, s)
+    val rInSClosed = mbrIn(r, s)
+    val sInRClosed = mbrIn(s, r)
     val rPtStrictInS =
       r.xmin > s.xmin && r.xmin < s.xmax && r.ymin > s.ymin && r.ymin < s.ymax
     val sPtStrictInR =
       s.xmin > r.xmin && s.xmin < r.xmax && s.ymin > r.ymin && s.ymin < r.ymax
-    val facingEdge =
-      r.xmin === s.xmax || r.xmax === s.xmin ||
-      r.ymin === s.ymax || r.ymax === s.ymin
+    val facingEdge = mbrFacingEdge(r, s)
     pred match {
       case Predicates.INTERSECTS => lit(true)
       case Predicates.DISJOINT => lit(false) // tile-local candidates overlap
@@ -734,6 +741,53 @@ object GeoEngine {
       (rm.hasWide || sm.hasWide) &&
         math.max(rm.maxCoarseCellCnt, sm.maxCoarseCellCnt) > hotTileThreshold
 
+  /** Only points on this side (no BOX, LINESTRING or POLYGON)? */
+  private def allPoints(m: SideMeta): Boolean =
+    m.hasRect && !m.hasBox && !m.hasNonRect
+
+  /** One side's APRIL-indexed form: `df` itself when APRIL is off, when the
+    * caller `skip`s the side (an all-point side whose A-list `attach`
+    * synthesizes on the candidate row) or when it is pre-indexed (buildIndex);
+    * otherwise `aprilIndex`. */
+  private def ix(df: DataFrame, grid: GridConfig, useApril: Boolean,
+      aprilOrder: Int, skip: Boolean): DataFrame =
+    if (!useApril || skip || df.columns.contains("april_all")) df
+    else aprilIndex(df, grid, aprilOrder)
+
+  /** One side's payload under prefix `p`: ring coords (p+"c") and, with
+    * APRIL, the interval lists (p+"_april_all", p+"_april_full"). Broadcast
+    * mode carries it through the tile explode; slim mode `attach`es it. */
+  private def payloadCols(p: String, withApril: Boolean): Seq[Column] = {
+    val geom = Seq(col("coords").as(p + "c"))
+    val april =
+      if (withApril) Seq(col("april_all").as(p + "_april_all"),
+        col("april_full").as(p + "_april_full"))
+      else Nil
+    geom ++ april
+  }
+
+  /** Attach one side's payloadCols to slim (id, gtype, MBR) candidate rows:
+    * ONE id re-join per side, the coords and the APRIL interval lists in the
+    * same join (no broadcast hint: interval arrays scale with geometry size;
+    * AQE converts a genuinely small side at runtime). An all-point side never
+    * re-joins: a point's coords ARE its MBR corner, already on the row, and
+    * its A-list is one Hilbert cell, synthesized inline and bit-identical to
+    * the rasterized form — so `ix` may skip the side's rasterization. */
+  private def attach(c: DataFrame, p: String, idName: String, df: DataFrame,
+      allPoints: Boolean, withApril: Boolean, grid: GridConfig,
+      aprilOrder: Int): DataFrame =
+    if (allPoints) {
+      val c1 = c.withColumn(p + "c", array(col(p + "xmin"), col(p + "ymin")))
+      if (!withApril) c1
+      else {
+        val cell = GeoExprs.hilbertCell(col(p + "xmin"), col(p + "ymin"),
+          grid.xMin, grid.yMin, grid.xExtent, grid.yExtent, aprilOrder)
+        c1.withColumn(p + "_april_all", array(cell, cell + lit(1L)))
+          .withColumn(p + "_april_full", typedlit(Array.empty[Long]))
+      }
+    } else c.join(df.select((col("id").as(idName) +: payloadCols(p, withApril)): _*),
+      Seq(idName))
+
   /**
    * Predicate spatial join: returns (rid, sid) pairs satisfying `pred`.
    *
@@ -756,10 +810,6 @@ object GeoEngine {
                   sMeta: Option[SideMeta] = None,
                   sweep: Option[Boolean] = None,
                   hotTileThreshold: Long = 8192L): DataFrame = {
-    def ix(df: DataFrame): DataFrame =
-      if (!useApril) df
-      else if (df.columns.contains("april_all")) df // pre-indexed (buildIndex)
-      else aprilIndex(df, grid, aprilOrder)
     // EQUAL fast plan: point-set-equal geometries have bit-identical MBRs
     // (same coordinate multiset → same min/max extremes), so the candidate
     // set IS the equi-join on the four MBR doubles — no tile explode, no
@@ -783,19 +833,16 @@ object GeoEngine {
       val joined = side0(r.toDF(), "r", "rid").join(side0(s.toDF(), "s", "sid"),
         col("rk1") === col("sk1") && col("rk2") === col("sk2") &&
         col("rk3") === col("sk3") && col("rk4") === col("sk4"))
-      val rect0 =
-        (col("rg") === GeomType.POINT || col("rg") === GeomType.BOX) &&
-        (col("sg") === GeomType.POINT || col("sg") === GeomType.BOX)
       val out =
         if (!anyNonRect0) joined
-        else joined.where(rect0 ||
+        else joined.where(rectangularCond(RectCols.prefixed("r"), RectCols.prefixed("s")) ||
           GeoExprs.stRefine(pred, col("rg"), col("rc"), col("sg"), col("sc")))
       return out.select(col("rid"), col("sid"))
     }
     // widen-before-explode: the cover explode + MBR/tile math run as
     // projections on the scan partitioning (see widen's scaladoc)
-    val rIx = ix(widen(r.toDF()))
-    val sIx = if (broadcastS) ix(s.toDF()) else ix(widen(s.toDF()))
+    val rW = widen(r.toDF())
+    val sW = if (broadcastS) s.toDF() else widen(s.toDF())
     // the density histogram only matters when the sweep decision is open
     // AND the join shuffles AND the predicate takes the tile-exchange plan —
     // broadcast joins, explicit sweep flags, and containment predicates
@@ -804,20 +851,25 @@ object GeoEngine {
       pred == Predicates.COVERED_BY || pred == Predicates.CONTAINS ||
       pred == Predicates.COVERS
     val needDensity = !broadcastS && sweep.isEmpty && !containmentPred
-    val rm = rMeta.getOrElse(sideStats(rIx, grid, maxFineCover, needDensity))
-    val sm = sMeta.getOrElse(sideStats(sIx, grid, maxFineCover, needDensity))
+    val rm = rMeta.getOrElse(sideStats(rW, grid, maxFineCover, needDensity))
+    val sm = sMeta.getOrElse(sideStats(sW, grid, maxFineCover, needDensity))
     // explicit Some(flag) overrides the density rule; the sweep needs the
     // slim (shuffle) exchange
     val sweepOn = !broadcastS && sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold))
+    // slim mode attaches an all-point side's A-list inline: never rasterized;
+    // broadcast mode carries both sides' payload through the exchange
+    val rIx = ix(rW, grid, useApril, aprilOrder, skip = !broadcastS && allPoints(rm))
+    val sIx = ix(sW, grid, useApril, aprilOrder, skip = !broadcastS && allPoints(sm))
     joinCascade(rIx, sIx, pred, grid, useApril, aprilOrder, broadcastS,
       saltFactor, maxFineCover, rm, sm, sweepOn)
   }
 
   /**
    * The join cascade shared by spatialJoin and rangeBatch, from prepared
-   * sides on: candidate pairs (containment home cells or mrCandidates), the
-   * rectangular column fast path, the optional APRIL verdict and the exact
-   * refinement for inconclusive pairs only. Returns (rid, sid).
+   * (`ix`-indexed) sides on: candidate pairs (containment home cells or
+   * mrCandidates), the rectangular column fast path, the payload `attach`
+   * in slim mode, the optional APRIL verdict and the exact refinement for
+   * inconclusive pairs only. Returns (rid, sid).
    */
   private def joinCascade(rIx: DataFrame, sIx: DataFrame, pred: Int,
       grid: GridConfig, useApril: Boolean, aprilOrder: Int,
@@ -828,16 +880,8 @@ object GeoEngine {
     // go through the exchange; geometry/APRIL columns re-join by id afterwards
     // (carrying arrays through a many-tiles explode multiplies shuffle bytes).
     val slim = !broadcastS
-    def payloadCols(p: String): Seq[Column] = {
-      val geom = Seq(col("coords").as(p + "c"))
-      val april =
-        if (useApril) Seq(col("april_all").as(p + "_april_all"),
-          col("april_full").as(p + "_april_full"))
-        else Nil
-      geom ++ april
-    }
-    def geomTable(df: DataFrame, p: String, idName: String): DataFrame =
-      df.select((col("id").as(idName) +: payloadCols(p)): _*)
+    val payload: String => Seq[Column] =
+      if (slim) _ => Nil else payloadCols(_, useApril)
 
     // containment predicates take the home-cell candidate plan (probe side
     // ships one row per object; no dedup); everything else multi-res tiles
@@ -850,11 +894,9 @@ object GeoEngine {
           maxFineCover,
           outerHasWide = if (contRinS) sm.hasWide else rm.hasWide,
           outerHasNarrow = if (contRinS) sm.hasNarrow else rm.hasNarrow,
-          payload = if (slim) _ => Nil else payloadCols,
-          innerIsR = contRinS)
+          payload, innerIsR = contRinS)
       else mrCandidates(rIx, sIx, grid, broadcastS, saltFactor,
-        maxFineCover, rm, sm,
-        if (slim) _ => Nil else payloadCols, sweep = sweepOn)
+        maxFineCover, rm, sm, payload, sweep = sweepOn)
 
     def refineExpr: Column =
       GeoExprs.stRefine(pred, col("rg"), col("rc"), col("sg"), col("sc"))
@@ -876,29 +918,11 @@ object GeoEngine {
     if (!anyNonRect) {
       cands.where(rectangular && rectExact).select(col("rid"), col("sid"))
     } else {
-      // All-point sides never pay the payload re-join: a point's coords ARE
-      // its MBR corner (already on the candidate row), and its APRIL A-list
-      // is one Hilbert cell — synthesized inline, bit-identical to the
-      // rasterized form. The whole side's rasterization then prunes out of
-      // the plan. Points-vs-regions workloads keep exactly one payload join.
-      def attach(c: DataFrame, p: String, idName: String, df: DataFrame,
-                 allPoints: Boolean): DataFrame =
-        if (!slim) c
-        else if (allPoints) {
-          val c1 = c.withColumn(p + "c",
-            array(col(p + "xmin"), col(p + "ymin")))
-          if (!useApril) c1
-          else {
-            val cell = GeoExprs.hilbertCell(col(p + "xmin"), col(p + "ymin"),
-              grid.xMin, grid.yMin, grid.xExtent, grid.yExtent, aprilOrder)
-            c1.withColumn(p + "_april_all", array(cell, cell + lit(1L)))
-              .withColumn(p + "_april_full", typedlit(Array.empty[Long]))
-          }
-        } else c.join(geomTable(df, p, idName), Seq(idName))
-      val rAllPoints = rm.hasRect && !rm.hasBox && !rm.hasNonRect
-      val sAllPoints = sm.hasRect && !sm.hasBox && !sm.hasNonRect
-      val all = attach(attach(cands, "r", "rid", rIx, rAllPoints),
-        "s", "sid", sIx, sAllPoints)
+      val all =
+        if (!slim) cands
+        else attach(attach(cands, "r", "rid", rIx, allPoints(rm), useApril,
+          grid, aprilOrder), "s", "sid", sIx, allPoints(sm), useApril, grid,
+          aprilOrder)
       val exactPred = when(rectangular, rectExact).otherwise(refineExpr)
       val refined = if (useApril) {
         all
@@ -924,13 +948,15 @@ object GeoEngine {
   val AprilOrder = 16
 
   /** Find-relation join: (rid, sid, relation) with the reference's TR codes.
-    * With `useApril`, the APRIL topology intermediate filter resolves
+    * The same filter-and-refine cascade as spatialJoin's slim path: both
+    * sides widened and `ix`-indexed, mrCandidates, one payload `attach` per
+    * side. With `useApril`, the APRIL topology intermediate filter resolves
     * DISJOINT / CONTAINS / INSIDE / true-hit-INTERSECT pairs from interval
     * algebra alone (the reference's MBR-case-specialized filter,
     * src/APRIL/filter.cpp:189-223); only unresolved pairs reach the exact
-    * DE-9IM refinement. On an all-rectangular (POINT/BOX) workload the
-    * request is ignored: the column fast path is exact, so the APRIL
-    * sub-plan would be pure overhead (SideMeta proves it, plan prunes it). */
+    * DE-9IM refinement. On an all-box workload the request is ignored: the
+    * column fast path is exact, so the APRIL sub-plan would be pure overhead
+    * (SideMeta proves it, plan prunes it). */
   def findRelationJoin(r: Dataset[GeoRow], s: Dataset[GeoRow],
                        grid: GridConfig, useApril: Boolean = false,
                        aprilOrder: Int = AprilOrder,
@@ -940,86 +966,62 @@ object GeoEngine {
                        sMeta: Option[SideMeta] = None,
                        sweep: Option[Boolean] = None,
                        hotTileThreshold: Long = 8192L): DataFrame = {
-    // APRIL interval lists are NOT shipped through the tile explode/shuffle
-    // (they dwarf the ring coords); candidates re-join them by id from
-    // compact per-object side tables after candidate generation.
-    val rRaw = widen(r.toDF())
-    val sRaw = widen(s.toDF())
+    val rW = widen(r.toDF())
+    val sW = widen(s.toDF())
     // find-relation always shuffles (never broadcast), so the density
     // histogram is consulted exactly like spatialJoin's slim path — a hot
     // tile pays the same O(k²) hash filter here
     val needDensity = sweep.isEmpty
-    val rm = rMeta.getOrElse(sideStats(rRaw, grid, maxFineCover, needDensity))
-    val sm = sMeta.getOrElse(sideStats(sRaw, grid, maxFineCover, needDensity))
+    val rm = rMeta.getOrElse(sideStats(rW, grid, maxFineCover, needDensity))
+    val sm = sMeta.getOrElse(sideStats(sW, grid, maxFineCover, needDensity))
     val anyNonBox = rm.hasNonBox || sm.hasNonBox
-    val rAllPoints = rm.hasRect && !rm.hasBox && !rm.hasNonRect
-    val sAllPoints = sm.hasRect && !sm.hasBox && !sm.hasNonRect
     // All-box workloads: the pure-column boxRel IS exact, so the whole APRIL
-    // sub-plan (rasterize + two interval re-joins) is provably dead weight —
-    // prune it from the plan. All-point sides never rasterize either: their
-    // single-cell A-list is synthesized inline on the candidate row.
+    // sub-plan (rasterize + interval re-joins) is provably dead weight —
+    // prune it from the plan.
     val useAprilEff = useApril && anyNonBox
-    def ix(df: DataFrame, allPoints: Boolean): DataFrame =
-      if (!useAprilEff || allPoints) df
-      else if (df.columns.contains("april_all")) df // pre-indexed (buildIndex)
-      else aprilIndex(df, grid, aprilOrder)
-    val rIxDf = ix(rRaw, rAllPoints)
-    val sIxDf = ix(sRaw, sAllPoints)
-    val cands = mrCandidates(rIxDf, sIxDf, grid, broadcastS = false,
+    val rIx = ix(rW, grid, useAprilEff, aprilOrder, skip = allPoints(rm))
+    val sIx = ix(sW, grid, useAprilEff, aprilOrder, skip = allPoints(sm))
+    val cands = mrCandidates(rIx, sIx, grid, broadcastS = false,
       saltFactor, maxFineCover, rm, sm, _ => Nil,
       sweep = sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold)))
-    // geometry attach: an all-point side's coords ARE its MBR corner, already
-    // on the candidate row — no re-join
-    def attachGeom(c: DataFrame, df: DataFrame, p: String, idName: String,
-                   allPoints: Boolean): DataFrame =
-      if (allPoints) c.withColumn(p + "c", array(col(p + "xmin"), col(p + "ymin")))
-      else c.join(df.select(col("id").as(idName), col("coords").as(p + "c")), Seq(idName))
-    def relExpr: Column =
-      GeoExprs.stFindRelation(col("rg"), col("rc"), col("sg"), col("sc"))
 
     // Box×box fast path: the reference's MBR-case routing + per-case refine
     // priority (Topology.findRelation) collapses to pure column arithmetic
     // when geometry == MBR — no coords join, no UDF, stays in codegen.
+    val rRC = RectCols.prefixed("r")
+    val sRC = RectCols.prefixed("s")
     val eps = 1e-8
-    val dxmin = col("rxmin") - col("sxmin"); val dymin = col("rymin") - col("symin")
-    val dxmax = col("rxmax") - col("sxmax"); val dymax = col("rymax") - col("symax")
-    val coordsEqual =
-      col("rxmin") === col("sxmin") && col("rymin") === col("symin") &&
-      col("rxmax") === col("sxmax") && col("rymax") === col("symax")
+    val dxmin = rRC.xmin - sRC.xmin; val dymin = rRC.ymin - sRC.ymin
+    val dxmax = rRC.xmax - sRC.xmax; val dymax = rRC.ymax - sRC.ymax
+    // the MBR routing cases of relateMBRs
     val mbrEqualEps =
       abs(dxmin) < eps && abs(dxmax) < eps && abs(dymin) < eps && abs(dymax) < eps
-    val sInR =
-      col("sxmin") >= col("rxmin") && col("sxmax") <= col("rxmax") &&
-      col("symin") >= col("rymin") && col("symax") <= col("rymax")
-    val rInS =
-      col("rxmin") >= col("sxmin") && col("rxmax") <= col("sxmax") &&
-      col("rymin") >= col("symin") && col("rymax") <= col("symax")
-    val facingEdge =
-      col("rxmin") === col("sxmax") || col("rxmax") === col("sxmin") ||
-      col("rymin") === col("symax") || col("rymax") === col("symin")
+    val sInRRoute = dxmin <= 0 && dxmax >= 0 && dymin <= 0 && dymax >= 0
+    val rInSRoute = dxmin >= 0 && dxmax <= 0 && dymin >= 0 && dymax <= 0
     val boxRel =
-      when(coordsEqual, Topology.TR_EQUAL)
+      when(mbrEqual(rRC, sRC), Topology.TR_EQUAL)
         // MBR_EQUAL routing checks covers/covered_by without a meet branch
-        .when(mbrEqualEps, when(sInR, Topology.TR_CONTAINS)
-          .when(rInS, Topology.TR_INSIDE)
+        .when(mbrEqualEps, when(mbrIn(sRC, rRC), Topology.TR_CONTAINS)
+          .when(mbrIn(rRC, sRC), Topology.TR_INSIDE)
           .otherwise(Topology.TR_INTERSECT))
         // containment routings: for non-degenerate boxes covers ⇒ contains
-        .when(dxmin <= 0 && dxmax >= 0 && dymin <= 0 && dymax >= 0, Topology.TR_CONTAINS)
-        .when(dxmin >= 0 && dxmax <= 0 && dymin >= 0 && dymax <= 0, Topology.TR_INSIDE)
+        .when(sInRRoute, Topology.TR_CONTAINS)
+        .when(rInSRoute, Topology.TR_INSIDE)
         // MBR_INTERSECT routing: boundary-only contact ⇔ a facing edge
-        .when(facingEdge, Topology.TR_MEET)
+        .when(mbrFacingEdge(rRC, sRC), Topology.TR_MEET)
         .otherwise(Topology.TR_INTERSECT)
-    val bothBox = col("rg") === GeomType.BOX && col("sg") === GeomType.BOX
+    if (!anyNonBox)
+      return cands.select(col("rid"), col("sid"), boxRel.as("relation"))
 
-    if (!useAprilEff) {
-      if (!anyNonBox)
-        cands.select(col("rid"), col("sid"), boxRel.as("relation"))
-      else
-        attachGeom(attachGeom(cands, rIxDf, "r", "rid", rAllPoints),
-            sIxDf, "s", "sid", sAllPoints)
-          .select(col("rid"), col("sid"),
-            when(bothBox, boxRel).otherwise(relExpr).as("relation"))
-    } else {
+    val all = attach(attach(cands, "r", "rid", rIx, allPoints(rm), useAprilEff,
+      grid, aprilOrder), "s", "sid", sIx, allPoints(sm), useAprilEff, grid,
+      aprilOrder)
+    val bothBox = rRC.g === GeomType.BOX && sRC.g === GeomType.BOX
+    val exactRel = when(bothBox, boxRel).otherwise(
+      GeoExprs.stFindRelation(col("rg"), col("rc"), col("sg"), col("sc")))
+    if (!useAprilEff)
+      all.select(col("rid"), col("sid"), exactRel.as("relation"))
+    else {
       // APRIL topology filter: -1 = unresolved (refine). Sound resolutions:
       //   no ALL overlap            → DISJOINT (candidates can't touch)
       //   ALL_S ⊆ FULL_R            → S strictly inside R's interior → CONTAINS
@@ -1028,47 +1030,21 @@ object GeoEngine {
       // MBR routing case as a pure column (0=EQUAL, 1=S_IN_R, 2=R_IN_S,
       // 3=INTERSECT) — mirrors relateMBRs' live branches
       val mbrCase =
-        when(abs(dxmin) < eps && abs(dxmax) < eps && abs(dymin) < eps && abs(dymax) < eps, 0)
-          .when(dxmin <= 0 && dxmax >= 0 && dymin <= 0 && dymax >= 0, 1)
-          .when(dxmin >= 0 && dxmax <= 0 && dymin >= 0 && dymax <= 0, 2)
-          .otherwise(3)
+        when(mbrEqualEps, 0).when(sInRRoute, 1).when(rInSRoute, 2).otherwise(3)
       // mc==0 (EPS-equal MBRs) never yields DISJOINT in the reference's
       // routing (refineEqual... has no disjoint check) — defer to refine;
       // MBR_INTERSECT routing can only yield DISJOINT/MEET/INTERSECT, so
       // provably-meeting interiors resolve to INTERSECT.
-      // (kernel: graft.functions.GeoKernels.aprilTopoRel, codegen Expression)
-      // No broadcast hints: APRIL interval arrays scale with geometry size,
-      // so forcing either side driver-resident dies at scale (8 GB broadcast
-      // cap). These are shuffled equi-joins on id; AQE converts a genuinely
-      // small side to a broadcast at runtime. An all-point side skips the
-      // re-join: its A-list is one Hilbert cell, synthesized inline and
-      // bit-identical to the rasterized form (GeoKernels.pointCell).
-      // ONE payload re-join per side (round 6): the APRIL interval arrays
-      // and the ring coords are attached in the SAME id join — the former
-      // two-step attach (april first, geometry later) planned two
-      // broadcasts/exchanges of the same index table per side with no
-      // intermediate filter between them to justify the split.
-      def attachAll(c: DataFrame, df: DataFrame, p: String, idName: String,
-                    allPoints: Boolean): DataFrame =
-        if (allPoints) {
-          val cell = GeoExprs.hilbertCell(col(p + "xmin"), col(p + "ymin"),
-            grid.xMin, grid.yMin, grid.xExtent, grid.yExtent, aprilOrder)
-          c.withColumn(p + "a", array(cell, cell + lit(1L)))
-            .withColumn(p + "f", typedlit(Array.empty[Long]))
-            .withColumn(p + "c", array(col(p + "xmin"), col(p + "ymin")))
-        } else c.join(df.select(col("id").as(idName),
-          col("april_all").as(p + "a"), col("april_full").as(p + "f"),
-          col("coords").as(p + "c")), Seq(idName))
-      attachAll(attachAll(cands, rIxDf, "r", "rid", rAllPoints),
-          sIxDf, "s", "sid", sAllPoints)
-        .withColumn("april_rel",
-          GeoExprs.aprilTopoRel(col("ra"), col("rf"), col("sa"), col("sf"), mbrCase))
+      // (kernel: graft.functions.GeoKernels.aprilTopoRel, codegen Expression;
+      // one projection, so the kernel is evaluated once per pair)
+      all
+        .withColumn("april_rel", GeoExprs.aprilTopoRel(
+          col("r_april_all"), col("r_april_full"),
+          col("s_april_all"), col("s_april_full"), mbrCase))
         // unresolved box pairs fall back to the column fast path; only
         // unresolved non-box pairs pay the geometry kernel
-        // (useAprilEff implies anyNonBox — the all-box case was pruned above).
         .select(col("rid"), col("sid"),
-          when(col("april_rel") >= 0, col("april_rel"))
-            .otherwise(when(bothBox, boxRel).otherwise(relExpr))
+          when(col("april_rel") >= 0, col("april_rel")).otherwise(exactRel)
             .as("relation"))
     }
   }
@@ -1122,13 +1098,12 @@ object GeoEngine {
                  dataMeta: Option[SideMeta] = None): DataFrame = {
     val spark = data.sparkSession
     import spark.implicits._
-    // no widen here: the range path's per-row work is plain cover
-    // arithmetic (cheap even on one core — measured +0.4 s pure
-    // repartition cost at sf0.1 with no offsetting win); its expensive
-    // kernel, rasterization, goes through aprilIndex, which widens itself
-    val dIx =
-      if (!useApril || data.toDF().columns.contains("april_all")) data.toDF()
-      else aprilIndex(data.toDF(), grid, aprilOrder)
+    // no widen for the cover arithmetic alone (cheap even on one core —
+    // measured +0.4 s pure repartition cost at sf0.1 with no offsetting
+    // win). With `useApril` the data side IS widened: the broadcast payload
+    // carries the data's A-lists, so `ix` rasterizes every data row (points
+    // included) through aprilIndex, whose widen repartitions it.
+    val dIx = ix(data.toDF(), grid, useApril, aprilOrder, skip = false)
     val windows = queries.map { case (qid, g) =>
       val m = g.mbr
       val a = if (useApril) April.rasterize(g, grid.xMin, grid.yMin,

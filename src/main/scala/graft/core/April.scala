@@ -232,9 +232,6 @@ object April {
     true
   }
 
-  def intervalsEqual(a: Array[Long], b: Array[Long]): Boolean =
-    java.util.Arrays.equals(a, b)
-
   // ---------------------------------------------------------------- verdicts
 
   /** Verdict for a predicate from the two approximations (sound: HIT and

@@ -119,11 +119,6 @@ final case class GridConfig(
     tileId(clamp(fineX(ix)), clamp(fineY(iy)))
   }
 
-  /** Tiles overlapping the ε-expansion of a point (distance-join cover),
-    * mirroring Shape::getOverlappingPartitionOffsets (containers.h:430-463). */
-  def tilesWithinDistance(x: Double, y: Double, d: Double): Array[Long] =
-    fineTiles(MBR(x - d, y - d, x + d, y + d))
-
   /** Min distance from a point to a tile (kNN pruning bound,
     * containers.h:424-428). */
   def distanceToTile(x: Double, y: Double, tile: Long): Double = {

@@ -59,16 +59,6 @@ object HexGrid {
     (lon, lat)
   }
 
-  /** Parent cell at `res-1` (containing the center). */
-  def cellToParent(cell: Long): Long = {
-    val res = resOf(cell)
-    if (res == 0) cell
-    else {
-      val (lon, lat) = cellCenter(cell)
-      latLngToCell(lon, lat, res - 1)
-    }
-  }
-
   /** The 6 boundary vertices (lon/lat) — vector materialization of a cell. */
   def cellBoundary(cell: Long): Array[Double] = {
     val (cx, cy) = cellCenter(cell)

@@ -31,13 +31,6 @@ object Topology {
   val TR_DISJOINT = 0; val TR_INTERSECT = 1; val TR_INSIDE = 2; val TR_CONTAINS = 3
   val TR_COVERED_BY = 4; val TR_COVERS = 5; val TR_EQUAL = 6; val TR_MEET = 7
 
-  def relationName(tr: Int): String = tr match {
-    case TR_DISJOINT => "DISJOINT"; case TR_INTERSECT => "INTERSECT"
-    case TR_INSIDE => "INSIDE"; case TR_CONTAINS => "CONTAINS"
-    case TR_COVERED_BY => "COVERED_BY"; case TR_COVERS => "COVERS"
-    case TR_EQUAL => "EQUAL"; case TR_MEET => "MEET"; case _ => s"?$tr"
-  }
-
   // ---------------------------------------------------------------- predicates
 
   def intersects(a: Geom, b: Geom): Boolean = {

@@ -154,43 +154,4 @@ object Multimodal {
         }
       }.toDF("doc_id", binCol, "resized")
   }
-
-  /** Frame sampling for video-like payloads: every `everyN`-th frame gets
-    * its own feature row. For WAV the "frames" are 1-second windows of the
-    * real decoded audio (per-window features via audioFeatures on the
-    * slice); other payloads keep the deterministic stub shape. */
-  def sampleFrames(spark: SparkSession, media: DataFrame, binCol: String,
-                   everyN: Int = 4, dims: Int = 16): DataFrame = {
-    import spark.implicits._
-    media.select(col("doc_id"), col(binCol).as("bytes"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        MediaCodec.decodeWav(bytes) match {
-          case Some(w) =>
-            // long arithmetic + clamp to the actual sample count: a hostile
-            // header's sampleRate×channels must not overflow Int (the same
-            // hostile-size class the codec bounds checks guard against)
-            val perWin = math.min(
-              w.sampleRate.toLong * w.channels,
-              math.max(w.samples.length.toLong, 1L)).toInt
-            // Long for the ceil-divide numerator too: samples.length near
-            // Int.MaxValue plus (perWin - 1) wraps negative in Int and
-            // would silently collapse nWin to 1, dropping windows
-            val nWin = math.max(1L,
-              (w.samples.length.toLong + perWin - 1) / math.max(perWin, 1)).toInt
-            (0 until nWin by everyN).map { f =>
-              val lo = f * perWin
-              val hi = math.min((f + 1) * perWin, w.samples.length)
-              val slice = java.util.Arrays.copyOfRange(w.samples, lo, hi)
-              (id, f, MediaCodec.audioFeatures(
-                MediaCodec.Wav(w.sampleRate, w.channels, slice), dims))
-            }
-          case None =>
-            val nFrames = 1 + (bytes.length % 32)
-            (0 until nFrames by everyN).map { f =>
-              (id, f, decodeStub(bytes ++ Array(f.toByte), dims))
-            }
-        }
-      }.toDF("doc_id", "frame_idx", "feature")
-  }
 }

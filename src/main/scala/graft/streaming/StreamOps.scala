@@ -27,17 +27,8 @@ object StreamOps {
 
   /** Add fine + coarse tile columns (pure column expressions, codegen). */
   def withTileColumns(df: DataFrame, grid: GridConfig): DataFrame = {
-    val fi = least(greatest(
-      floor((col("x") - lit(grid.xMin)) / lit(grid.fineExtX)).cast("long"),
-      lit(0L)), lit(grid.globalPpd - 1L))
-    val fj = least(greatest(
-      floor((col("y") - lit(grid.yMin)) / lit(grid.fineExtY)).cast("long"),
-      lit(0L)), lit(grid.globalPpd - 1L))
-    val fpc = grid.finePerCoarse.toDouble
-    df.withColumn("tile", fi + fj * grid.globalPpd)
-      .withColumn("coarse_tile",
-        floor(fi / lit(fpc)).cast("long") +
-          floor(fj / lit(fpc)).cast("long") * grid.coarsePpd)
+    val (tile, coarseTile) = graft.GeoEngine.pointTiles(grid, col("x"), col("y"))
+    df.withColumn("tile", tile).withColumn("coarse_tile", coarseTile)
   }
 
   /** A closed user session: contiguous events with gaps < the timeout. */

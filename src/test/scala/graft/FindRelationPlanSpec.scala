@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 
@@ -10,7 +10,8 @@ import graft.core._
  * the SAME plan as useApril=false — no rasterize, no interval re-join.
  * On non-rectangular inputs the topology filter must still run (and agree
  * with the exact path), with all-point sides synthesizing their A-list
- * inline instead of rasterizing.
+ * inline instead of rasterizing — in find-relation and in spatialJoin's
+ * slim plan alike.
  */
 class FindRelationPlanSpec extends AnyFunSuite {
 
@@ -73,6 +74,12 @@ class FindRelationPlanSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  private def triples(df: DataFrame): Set[(Long, Long, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+
+  private def pairs(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("points × diamonds: APRIL topology filter agrees with the exact path") {
     val withApril = GeoEngine.findRelationJoin(points(0, 1500), diamonds(3, 200),
       grid, useApril = true, aprilOrder = 10)
@@ -81,14 +88,52 @@ class FindRelationPlanSpec extends AnyFunSuite {
     assert(plan.contains("april_topo_rel"), "topology filter missing from plan")
     assert(plan.contains("hilbert_cell"), "point A-list not synthesized inline")
     val exact = GeoEngine.findRelationJoin(points(0, 1500), diamonds(3, 200), grid)
-    val a = withApril.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val b = exact.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(a == b)
+    val a = triples(withApril)
+    assert(a == triples(exact))
     // the relation alphabet for point-in-diamond: INSIDE / COVERED_BY / DISJOINT
     val rels = a.map(_._3)
     assert(rels.subsetOf(Set(Topology.TR_INSIDE, Topology.TR_COVERED_BY,
       Topology.TR_DISJOINT)))
     assert(rels.contains(Topology.TR_INSIDE))
     assert(rels.contains(Topology.TR_DISJOINT))
+
+    // diamonds × diamonds: both sides rasterized, both A-lists attached by
+    // id re-join — in find-relation and in the predicate join
+    val dd = GeoEngine.findRelationJoin(diamonds(3, 200), diamonds(4, 200),
+      grid, useApril = true, aprilOrder = 10)
+    val ddPlan = dd.queryExecution.optimizedPlan.toString
+    assert(ddPlan.contains("april_topo_rel"), "topology filter missing from plan")
+    assert(!ddPlan.contains("hilbert_cell"), "polygon A-list synthesized as a point's")
+    val ddRel = triples(dd)
+    assert(ddRel == triples(GeoEngine.findRelationJoin(diamonds(3, 200),
+      diamonds(4, 200), grid)))
+    assert(ddRel.exists(_._3 != Topology.TR_DISJOINT))
+    val ddJoin = pairs(GeoEngine.spatialJoin(diamonds(3, 200), diamonds(4, 200),
+      Predicates.INTERSECTS, grid, useApril = true, aprilOrder = 10))
+    assert(ddJoin == pairs(GeoEngine.spatialJoin(diamonds(3, 200),
+      diamonds(4, 200), Predicates.INTERSECTS, grid)))
+    assert(ddJoin.nonEmpty)
+    assert(ddJoin == ddRel.filter(_._3 != Topology.TR_DISJOINT).map(t => (t._1, t._2)))
+  }
+
+  private def rasterizeCount(df: DataFrame): Int =
+    "april_rasterize".r.findAllIn(df.queryExecution.analyzed.toString).length
+
+  test("slim spatialJoin never rasterizes an all-point side") {
+    import spark.implicits._
+    val idx = GeoEngine.aprilIndex(diamonds(3, 200).toDF(), grid, 10)
+    assert(rasterizeCount(idx) > 0)
+    def join(useApril: Boolean) = GeoEngine.spatialJoin(points(0, 1500),
+      idx.as[GeoRow], Predicates.INTERSECTS, grid, useApril = useApril,
+      aprilOrder = 10)
+    // the stored side's rasterization appears once per use of that side
+    // (candidate emission, payload attach) with or without APRIL; the point
+    // side's A-list is synthesized on the candidate row and adds none — not
+    // even an aprilIndex chain whose rasterize the optimizer prunes (its
+    // widen probe still runs a job)
+    val withApril = join(useApril = true)
+    assert(rasterizeCount(withApril) == rasterizeCount(join(useApril = false)),
+      withApril.queryExecution.analyzed.toString)
+    assert(withApril.queryExecution.optimizedPlan.toString.contains("hilbert_cell"))
   }
 }

@@ -12,7 +12,9 @@ import graft.web.Pages
  *    drop a candidate sub-join);
  *  - the column-only page synthesis is byte-identical to the typed path;
  *  - the widen guard no-ops when the input is already near target
- *    parallelism, and still widens clearly-narrow inputs.
+ *    parallelism, and still widens clearly-narrow inputs;
+ *  - no join-family query generates a method past the JVM's 8000-byte JIT
+ *    ceiling (DontCompileHugeMethods runs such a method interpreted).
  */
 class OptimizationR06Spec extends AnyFunSuite {
 
@@ -63,6 +65,47 @@ class OptimizationR06Spec extends AnyFunSuite {
       "a clearly narrow input must still widen")
     val wide = spark.range(0, 1000, 1, target + 2).toDF()
     assert(GeoEngine.widen(wide).rdd.getNumPartitions == target + 2)
+  }
+
+  test("JIT ceiling: every join-family query's codegen methods stay under 8000 bytes") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+    import org.apache.spark.sql.execution.{QueryExecution, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Aqe extends AdaptiveSparkPlanHelper
+    // every registry entry that calls spatialJoin, spatialJoinAuto,
+    // findRelationJoin, rangeBatch or distanceJoin
+    val joinFamily = Seq("q_pip_join", "q_skew_join", "q_inside_join",
+      "q_equal_join", "q_meet_join", "q_find_relation", "q_contains_join",
+      "q_covers_join", "q_covered_by_join", "q_disjoint_join",
+      "q_pip_join_april", "q_find_relation_april", "q_distance_join",
+      "q_range_poly_april", "q_range_count", "q_range_collect",
+      "q_poly_relations")
+    // the noop write runs in its own QueryExecution: take its final
+    // adaptive plan from the listener (query builds run actions of their
+    // own — metadata, index loads — hence the write-command filter)
+    val writes = new LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.isInstanceOf[V2WriteCommand]) writes.put(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try joinFamily.foreach { q =>
+      writes.clear()
+      SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val qe = writes.poll(60, TimeUnit.SECONDS)
+      assert(qe != null, s"$q: no write execution observed")
+      val stages = Aqe.collect(qe.executedPlan) { case w: WholeStageCodegenExec => w }
+      assert(stages.nonEmpty, s"$q: no whole-stage codegen in ${qe.executedPlan}")
+      stages.foreach { w =>
+        val size = CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize
+        assert(size < 8000,
+          s"$q: codegen stage ${w.codegenStageId} has a $size-byte method")
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("dupGroups small path (limit-probe) matches union-find semantics") {
