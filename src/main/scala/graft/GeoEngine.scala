@@ -355,12 +355,12 @@ object GeoEngine {
       emitF = rm.hasNarrow && sm.hasNarrow,
       emitCNarrow = rm.hasNarrow && sm.hasWide,
       emitCWide = rm.hasWide,
-      grid, maxFineCover, slim, payload)
+      grid, maxFineCover, rowRect, slim, payload)
     val st = mrEmission(sIx, "s", "sid",
       emitF = rm.hasNarrow && sm.hasNarrow,
       emitCNarrow = sm.hasNarrow && rm.hasWide,
       emitCWide = sm.hasWide,
-      grid, maxFineCover, slim, payload)
+      grid, maxFineCover, rowRect, slim, payload)
     if (sweep) {
       val spark = rIx.sparkSession
       import spark.implicits._
@@ -433,20 +433,22 @@ object GeoEngine {
     * schema still materializes and the row joins nothing. */
   private[graft] def lvlTiles(grid: GridConfig, maxFineCover: Int, emitF: Boolean,
       emitCNarrow: Boolean, emitCWide: Boolean, rc: RectCols): Column = {
-    val wide = fineCoverCnt(grid, rc) > maxFineCover
     val emptyA = typedlit(Array.empty[Long])
-    val cCond = (emitCNarrow, emitCWide) match {
-      case (true, true)  => Some(lit(true))
-      case (true, false) => Some(!wide)
-      case (false, true) => Some(wide)
-      case _             => None
-    }
-    Seq(
-      if (emitF) Some(when(!wide, lvlCoverArr(grid, fine = true, rc)).otherwise(emptyA))
-      else None,
-      cCond.map(c => when(c, lvlCoverArr(grid, fine = false, rc)).otherwise(emptyA))
-    ).flatten.reduceOption(concat(_, _))
-      .map(t => when(nanMbr(rc), emptyA).otherwise(t)).getOrElse(emptyA)
+    def covers(fine: Boolean, coarse: Boolean): Column =
+      Seq(fine -> true, coarse -> false).collect {
+        case (true, lvl) => lvlCoverArr(grid, fine = lvl, rc)
+      }.reduceOption(concat(_, _)).getOrElse(emptyA)
+    // the explode runs interpreted (the cover's lambdas keep it out of
+    // whole-stage codegen), where every expression node costs per row: the
+    // wide test is evaluated once, as the pair filter's fine_cover_cnt
+    // kernel (bit-identical to fineCoverCnt, MergedKernelParitySpec)
+    val wide = GeoExprs.fineCoverCount(rc.xmin, rc.ymin, rc.xmax, rc.ymax,
+      grid) > maxFineCover
+    val guarded = when(nanMbr(rc), emptyA)
+    if (!emitF && !emitCNarrow && !emitCWide) emptyA
+    else if (!emitF && emitCNarrow == emitCWide) guarded.otherwise(covers(false, true))
+    else guarded.when(wide, covers(false, emitCWide))
+      .otherwise(covers(emitF, emitCNarrow))
   }
 
   /** One side's join columns in one projection: `tile`, id, gtype and MBR
@@ -459,13 +461,15 @@ object GeoEngine {
     df.select((if (slim) base else base ++ payload(p)): _*)
   }
 
-  /** One side's single-pass multi-level emission for the merged exchange. */
+  /** One side's single-pass multi-level emission for the merged exchange:
+    * the cover of `rc` (the row's own MBR, `rowRect`, or a caller's
+    * expansion of it); the emitted columns keep the row's own MBR. */
   private def mrEmission(df: DataFrame, p: String, idName: String,
       emitF: Boolean, emitCNarrow: Boolean, emitCWide: Boolean,
-      grid: GridConfig, maxFineCover: Int, slim: Boolean,
+      grid: GridConfig, maxFineCover: Int, rc: RectCols, slim: Boolean,
       payload: String => Seq[Column]): DataFrame =
     sideCols(df, explode(
-      lvlTiles(grid, maxFineCover, emitF, emitCNarrow, emitCWide, rowRect)),
+      lvlTiles(grid, maxFineCover, emitF, emitCNarrow, emitCWide, rc)),
       p, idName, slim, payload)
 
   /** The merged exchange's pair filter within one level-tagged key group:
@@ -525,35 +529,34 @@ object GeoEngine {
   }
 
   /**
-   * Candidate pairs for CONTAINMENT predicates (INSIDE/COVERED_BY: r ⊆ s;
-   * CONTAINS/COVERS: s ⊆ r). A contained object's MBR min corner lies inside
-   * the container's MBR, so joining the INNER side's single home cell against
-   * the OUTER side's cell cover finds every containment pair exactly once:
-   * the inner side (at 10¹² rows, usually the probe) ships ONE row per
-   * object through the shuffle — explode factor 1.0 — and no reference-point
-   * dedup is needed. One level-tagged exchange like mrCandidates: a pair
-   * joins at the outer object's level (narrow: fine grid; wide: coarse
-   * grid). Pairs failing closed MBR containment drop before the exact
-   * predicate.
+   * Home-cell candidate pairs: every pair whose INNER object's MBR min
+   * corner lies inside the OUTER object's cover rect `outerRect`. That holds
+   * for CONTAINMENT predicates (INSIDE/COVERED_BY: r ⊆ s; CONTAINS/COVERS:
+   * s ⊆ r; the outer rect is the container's MBR) and for the ε-distance
+   * join (the outer rect is the ε-expanded box around an R point), so
+   * joining the INNER side's single home cell against the OUTER side's cell
+   * cover finds every such pair exactly once: the inner side (at 10¹² rows,
+   * usually the probe) ships ONE row per object through the shuffle —
+   * explode factor 1.0 — and no reference-point dedup is needed. One
+   * level-tagged exchange like mrCandidates: a pair joins at the outer
+   * row's level (narrow cover: fine grid; wide: coarse grid), so
+   * `outerHasWide` / `outerHasNarrow` must be true whenever an outer row of
+   * that level exists. Pairs failing the caller's `pairCond` (over the
+   * sides' own prefixed MBRs) drop before the exact predicate.
    */
   private def containmentCandidates(rIx: DataFrame, sIx: DataFrame,
       grid: GridConfig, broadcastS: Boolean, saltFactor: Int,
       maxFineCover: Int, outerHasWide: Boolean, outerHasNarrow: Boolean,
-      payload: String => Seq[Column], innerIsR: Boolean): DataFrame = {
+      payload: String => Seq[Column], innerIsR: Boolean,
+      outerRect: RectCols, pairCond: Column): DataFrame = {
     val slim = !broadcastS
 
     val (inner0, innerP, innerId) = if (innerIsR) (rIx, "r", "rid") else (sIx, "s", "sid")
     // the emission's NaN guard on the home-cell side: a row with a NaN MBR
     // field joins nothing (Spark orders NaN above every number, so it would
-    // otherwise pass innerInOuter)
+    // otherwise pass a containment pairCond)
     val inner = inner0.where(!nanMbr(rowRect))
     val (outer, outerP, outerId) = if (innerIsR) (sIx, "s", "sid") else (rIx, "r", "rid")
-
-    val innerInOuter =
-      col(innerP + "xmin") >= col(outerP + "xmin") &&
-      col(innerP + "xmax") <= col(outerP + "xmax") &&
-      col(innerP + "ymin") >= col(outerP + "ymin") &&
-      col(innerP + "ymax") <= col(outerP + "ymax")
 
     // merged level-encoded exchange (round 6, guide §2.4 — same key scheme
     // as mrCandidates): the inner side emits its home cell at each level
@@ -575,12 +578,12 @@ object GeoEngine {
     }
     val it = sideCols(inner, innerTile, innerP, innerId, slim, payload)
     val ot = mrEmission(outer, outerP, outerId, emitF = outerHasNarrow,
-      emitCNarrow = false, emitCWide = outerHasWide, grid, maxFineCover, slim,
-      payload)
+      emitCNarrow = false, emitCWide = outerHasWide, grid, maxFineCover,
+      outerRect, slim, payload)
     val (rt, st) = if (innerIsR) (it, ot) else (ot, it)
     mergedJoin(rt, st, grid, broadcastS, saltFactor, maxFineCover,
       saltIdCol = innerId,
-      pairCond = Some(innerInOuter))
+      pairCond = Some(pairCond))
   }
 
   /** Widen a narrow batch input to the session's parallelism. The engine's
@@ -599,8 +602,10 @@ object GeoEngine {
   private[graft] def widen(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
-    // builds the RDD lineage eagerly to read the partition count — plan
-    // compilation only, never launches a job
+    // builds the RDD lineage eagerly to read the partition count. Plan
+    // compilation only for a plan without an exchange; under AQE, building
+    // the RDD of a plan that already holds an exchange runs that shuffle
+    // as a job (e.g. aprilIndex re-widening an already widened side)
     val parts = df.rdd.getNumPartitions
     if (parts >= target) df
     else {
@@ -888,13 +893,16 @@ object GeoEngine {
     val contRinS = pred == Predicates.INSIDE || pred == Predicates.COVERED_BY
     val contSinR = pred == Predicates.CONTAINS || pred == Predicates.COVERS
     val anyNonRect = rm.hasNonRect || sm.hasNonRect
+    val rRC = RectCols.prefixed("r")
+    val sRC = RectCols.prefixed("s")
     val cands =
       if (contRinS || contSinR)
         containmentCandidates(rIx, sIx, grid, broadcastS, saltFactor,
           maxFineCover,
           outerHasWide = if (contRinS) sm.hasWide else rm.hasWide,
           outerHasNarrow = if (contRinS) sm.hasNarrow else rm.hasNarrow,
-          payload, innerIsR = contRinS)
+          payload, innerIsR = contRinS, outerRect = rowRect,
+          pairCond = if (contRinS) mbrIn(rRC, sRC) else mbrIn(sRC, rRC))
       else mrCandidates(rIx, sIx, grid, broadcastS, saltFactor,
         maxFineCover, rm, sm, payload, sweep = sweepOn)
 
@@ -904,8 +912,6 @@ object GeoEngine {
     // coordinate comparison (DE-9IM on axis-aligned closed rectangles) — no
     // UDF, stays in whole-stage codegen. Exact arithmetic (no tolerance);
     // non-degenerate boxes assumed (zero-area rings are rejected at parse).
-    val rRC = RectCols.prefixed("r")
-    val sRC = RectCols.prefixed("s")
     val rectangular = rectangularCond(rRC, sRC)
     val rectExact = rectExactExpr(pred, rRC, sRC)
     // Plan by type presence (never execute the candidate join twice):
@@ -1133,11 +1139,12 @@ object GeoEngine {
 
   /**
    * Batch kNN over point data: ascending (distance, id) per query, exactly
-   * k rows each — reproducing the reference's heap-drain output order
+   * k rows each (all of them, ranked 1..n, when the data holds n < k
+   * points) — reproducing the reference's heap-drain output order
    * (API/containers.cpp:961-972). One pass over the data for the whole
-   * broadcast batch + windowed top-k; map-side partial top-k pruning is a
-   * planned round-2 optimization (the reference likewise scans all tiles
-   * with only a tile lower-bound prune, knn_filter.cpp:27-39).
+   * batch, pruned to the tiles that can hold a neighbor (the reference's
+   * tile lower-bound prune, knn_filter.cpp:27-39), then a windowed top-k
+   * that Spark limits map-side before the exchange (see knnBatchDf).
    */
   def knnBatch(points: Dataset[GeoRow], queries: Seq[(Long, Geom)], k: Int,
                gridOpt: Option[GridConfig] = None): DataFrame = {
@@ -1157,7 +1164,6 @@ object GeoEngine {
   def knnBatchDf(points: Dataset[GeoRow], queries: DataFrame, k: Int,
                  gridOpt: Option[GridConfig] = None): DataFrame = {
     val spark = points.sparkSession
-    import spark.implicits._
     val grid = gridOpt.getOrElse(gridFor(dataspace(points)))
 
     // Phase 1 (one tiny job): per-tile point counts → broadcast map.
@@ -1183,23 +1189,19 @@ object GeoEngine {
         col("qx"), col("qy"), k, grid, bcCounts)))
 
     // Phase 3: tile equi-join (AQE broadcasts a small query side) → exact
-    // distance → bounded heap per query; map-side partial top-k keeps the
-    // shuffle at ≤ k·parts rows per query.
+    // distance → rank per query, ties on id (the reference's heap order).
+    // The rank filter plans as a partial WindowGroupLimit before the
+    // exchange (for k up to spark.sql.optimizer.windowGroupLimitThreshold),
+    // so the shuffle carries ≤ k·parts rows per query.
     val dist = sqrt(
       (col("xmin") - col("qx")) * (col("xmin") - col("qx")) +
       (col("ymin") - col("qy")) * (col("ymin") - col("qy")))
-    val topk = new graft.functions.TopKAggregator(k).toColumn
     points.withColumn("tile", homeTile)
       .join(qTiles, Seq("tile"))
       .select(col("qid"), col("id"), dist.as("dist"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(t => (t._2, t._3))
-      .agg(topk.name("topk"))
-      .toDF("qid", "topk")
-      .select(col("qid"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("qid"), col("pair._1").as("id"), col("pair._2").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk"))
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy("qid").orderBy("dist", "id")))
+      .where(col("rnk") <= k)
   }
 
   /** Tiles that can contain one of the k nearest neighbors of (qx, qy). */
@@ -1261,43 +1263,34 @@ object GeoEngine {
   // --------------------------------------------------------- distance join
 
   /** ε-distance join over point datasets: (rid, sid) with dist <= d.
-    * R explodes to its ε-expanded cell cover; S stays at its home cell —
-    * one shuffle replaces the reference's 3-phase MPI exchange
-    * (src/UniformGrid/dj_filter.cpp).
-    *
-    * The join level adapts to ε: when the ε-box would cover more than
-    * `maxFineCover` fine tiles (a 3° radius covers ~450 of them — a 450×
-    * shuffle amplification), both sides move to the coarse grid, capping
-    * the explode at O(coarse cells) for a few extra cheap distance checks.
-    * Pure column expressions throughout (no UDF in the cover or the test). */
+    * R explodes the cell cover of its ε-expanded box; S stays at its home
+    * cell — one shuffle replaces the reference's 3-phase MPI exchange
+    * (src/UniformGrid/dj_filter.cpp). This is containmentCandidates' plan
+    * with outer = R's ε-box and inner = S's point: a pair within ε has S
+    * inside R's ε-box, so it meets exactly once, at the level of R's box
+    * (an ε-box wider than `maxFineCover` fine tiles — a 3° radius covers
+    * ~480 of them on the world grid — joins at the coarse grid, capping the
+    * explode at O(coarse cells)). The exact distance on the original
+    * coordinates is the pair filter. */
   def distanceJoin(r: Dataset[GeoRow], s: Dataset[GeoRow], d: Double,
                    grid: GridConfig, maxFineCover: Int = MaxFineCover): DataFrame = {
-    val fineBoxCover =
-      (math.floor(2 * d / grid.fineExtX).toLong + 2) *
-      (math.floor(2 * d / grid.fineExtY).toLong + 2)
-    val (extX, extY, ppd) =
-      if (fineBoxCover > maxFineCover)
-        (grid.coarseExtX, grid.coarseExtY, grid.coarsePpd)
-      else (grid.fineExtX, grid.fineExtY, grid.globalPpd)
-    val iMin = clampIdx(col("xmin") - d, extX, grid.xMin, ppd)
-    val iMax = clampIdx(col("xmin") + d, extX, grid.xMin, ppd)
-    val jMin = clampIdx(col("ymin") - d, extY, grid.yMin, ppd)
-    val jMax = clampIdx(col("ymin") + d, extY, grid.yMin, ppd)
-    val pl = lit(ppd.toLong)
-    val cover = flatten(transform(sequence(jMin, jMax),
-      j => transform(sequence(iMin, iMax), i => i + j * pl)))
+    // the level flags, on the driver: a box 2d wide spans at most ⌊2d/ext⌋+2
+    // cells per axis (the ceiling absorbs the rounding of x ± d) and
+    // clamping only shrinks a cover, so no box is wide unless this bound
+    // is. A clamped box at the grid edge, or around a point outside the
+    // grid, can be narrow at any ε, so narrow boxes are always assumed.
+    def cells(ext: Double) = math.ceil(2 * d / ext) + 2
+    val hasWide = cells(grid.fineExtX) * cells(grid.fineExtY) > maxFineCover
+    val epsBox = RectCols(lit(GeomType.BOX), col("xmin") - d, col("ymin") - d,
+      col("xmin") + d, col("ymin") + d)
+    val dx = col("rxmin") - col("sxmin")
+    val dy = col("rymin") - col("symin")
     // widen-before-explode: the ε-box cover explode runs on the scan
     // partitioning (see widen's scaladoc)
-    val rt = widen(r.toDF()).withColumn("tile", explode(cover))
-      .select(col("tile"), col("id").as("rid"),
-        col("xmin").as("rx"), col("ymin").as("ry"))
-    val st = s.toDF().select(
-      (clampIdx(col("xmin"), extX, grid.xMin, ppd) +
-        clampIdx(col("ymin"), extY, grid.yMin, ppd) * pl).as("tile"),
-      col("id").as("sid"), col("xmin").as("sx"), col("ymin").as("sy"))
-    val dist = sqrt(
-      (col("rx") - col("sx")) * (col("rx") - col("sx")) +
-      (col("ry") - col("sy")) * (col("ry") - col("sy")))
-    rt.join(st, Seq("tile")).where(dist <= d).select(col("rid"), col("sid"))
+    containmentCandidates(widen(r.toDF()), s.toDF(), grid, broadcastS = false,
+      saltFactor = 1, maxFineCover, outerHasWide = hasWide,
+      outerHasNarrow = true, _ => Nil, innerIsR = false, outerRect = epsBox,
+      pairCond = sqrt(dx * dx + dy * dy) <= d)
+      .select(col("rid"), col("sid"))
   }
 }

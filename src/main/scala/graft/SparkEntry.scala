@@ -40,8 +40,9 @@ object SparkEntry {
   //    declared present — a flag that is conservatively true at worst adds a
   //    provably-empty sub-join branch; a false flag would DROP a sub-join
   //    that can produce rows, so false is only used where impossible by
-  //    formula (StaticMetaSpec cross-checks every constant against the
-  //    dynamic sideMeta on real inputs).
+  //    formula (OptimizationR06Spec "static SideMeta constants are safe"
+  //    cross-checks every constant against the dynamic sideMeta on real
+  //    inputs).
   //  - diagSegs: LINESTRINGs, spans 0.5°-5.5° → wide and narrow both occur.
   //  - starPoly(part, rad=2.0): x-span 4° ≥ ceil(4/0.4128)=10 fine cells,
   //    y-span 4° ≥ ceil(4/0.2064)=20 → cover ≥ 200 > 16 ⇒ ALWAYS wide.
@@ -296,10 +297,11 @@ object SparkEntry {
       (col("cx") + rad).as("xmax"), (col("cy") + rad).as("ymax")).as[GeoRow]
   }
 
-  /** Test hook (StaticMetaSpec): (input, static, dynamically computed)
-    * SideMeta triples for every static-dispatch constant over the actual
-    * bench inputs at `dir` — the safety contract is: type flags exactly
-    * equal, and dynamic wide/narrow presence implies the static flag. */
+  /** Test hook (OptimizationR06Spec "static SideMeta constants are safe"):
+    * (input, static, dynamically computed) SideMeta triples for every
+    * static-dispatch constant over the actual bench inputs at `dir` — the
+    * safety contract is: type flags exactly equal, and dynamic wide/narrow
+    * presence implies the static flag. */
   private[graft] def staticMetaPairs(s: SparkSession, dir: String):
       Seq[(String, GeoEngine.SideMeta, GeoEngine.SideMeta)] = {
     implicit val sp: SparkSession = s

@@ -181,6 +181,44 @@ class CsvRangeSpec extends AnyFunSuite {
     val fine = res(Int.MaxValue)     // forces the fine grid
     assert(coarse == fine)
     assert(coarse.nonEmpty)
+
+    // edge inputs against brute force: points on and around the grid's
+    // corners, just outside it and far outside it, mixed with interior
+    // points. At cap 200 a 3° box is wide in the interior (~480 fine cells)
+    // but narrow where the grid edge clamps it (a corner box covers 120
+    // cells), so one join holds rows of both levels and the driver-derived
+    // level flags must admit both. NaN coordinates join nothing.
+    def pt(id: Long, x: Double, y: Double) =
+      GeoRow(id, GeomType.POINT, Array(x, y), x, y, x, y)
+    val offs = Seq(-8.0, -1.0, -0.3, 0.0, 0.5, 2.0, 3.5)
+    def edge(base: Long) = (for {
+      ((cx, cy), c) <- Seq((-180.0, -90.0), (-180.0, 90.0), (180.0, -90.0),
+        (180.0, 90.0)).zipWithIndex
+      (ox, i) <- offs.zipWithIndex; (oy, j) <- offs.zipWithIndex
+    } yield pt(base + c * 100 + i * 10 + j, cx - math.signum(cx) * ox,
+      cy - math.signum(cy) * oy))
+    val rEdge = edge(10000L) ++ r.collect() :+ pt(90001L, Double.NaN, 0.0)
+    val sEdge = edge(20000L) ++ s.collect() :+ pt(90002L, 0.0, Double.NaN)
+    def brute(rs: Seq[GeoRow], ss: Seq[GeoRow], d: Double) = (for {
+      a <- rs; b <- ss
+      if math.sqrt((a.xmin - b.xmin) * (a.xmin - b.xmin) +
+        (a.ymin - b.ymin) * (a.ymin - b.ymin)) <= d
+    } yield (a.id, b.id)).toSet
+    def join(rs: Seq[GeoRow], ss: Seq[GeoRow], cap: Int) =
+      GeoEngine.distanceJoin(rs.toDS(), ss.toDS(), 3.0, grid, maxFineCover = cap)
+        .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+    val want = brute(rEdge, sEdge, 3.0)
+    assert(want.exists(p => p._1 < 10400L && p._2 < 20400L))
+    // cap 450 = 15 × 30 cells: only boxes straddling the most cell edges
+    // (up to 16 × 31) are wide there
+    for (cap <- Seq(1, 200, 450, GeoEngine.MaxFineCover, Int.MaxValue))
+      assert(join(rEdge, sEdge, cap) == want, s"maxFineCover = $cap")
+    // an empty side, and a one-row side
+    val one = Seq(pt(7L, -179.5, 89.5))
+    assert(join(Nil, sEdge, 200).isEmpty && join(rEdge, Nil, 200).isEmpty)
+    assert(join(one, sEdge, 200) == brute(one, sEdge, 3.0))
+    assert(join(rEdge, one, 200) == brute(rEdge, one, 3.0))
+    assert(brute(one, sEdge, 3.0).nonEmpty)
   }
 
   test("distributed kNN handles a 10⁴-query batch (no per-query driver loop)") {
@@ -207,18 +245,31 @@ class CsvRangeSpec extends AnyFunSuite {
       val y = (i * 11 % 1700) / 10.0 - 85.0
       GeoRow(i.toLong, GeomType.POINT, Array(x, y), x, y, x, y)
     }
-    val ptsDs = pts.toDS()
     val qs = (0 until 40).map(q => (q.toLong, (q * 19 % 3600) / 10.0 - 180.0,
       (q * 23 % 1700) / 10.0 - 85.0))
-    val got = GeoEngine.knnBatchDf(ptsDs, qs.toDF("qid", "qx", "qy"), 5, Some(grid))
-      .collect().map(r => (r.getLong(0), r.getInt(3), r.getLong(1))).toSet
+    def knn(pts: Seq[GeoRow], qs: Seq[(Long, Double, Double)], k: Int) =
+      GeoEngine.knnBatchDf(pts.toDS(), qs.toDF("qid", "qx", "qy"), k, Some(grid))
+        .collect().map(r => (r.getLong(0), r.getInt(3), r.getLong(1))).toSet
+    val got = knn(pts, qs, 5)
     // brute force oracle with (dist, id) ascending tie-break
-    val want = qs.flatMap { case (qid, qx, qy) =>
-      pts.map(p => (p.id, math.sqrt((p.xmin - qx) * (p.xmin - qx) +
-          (p.ymin - qy) * (p.ymin - qy))))
-        .sortBy(t => (t._2, t._1)).take(5).zipWithIndex
-        .map { case ((id, _), i) => (qid, i + 1, id) }
-    }.toSet
+    def brute(pts: Seq[GeoRow], qs: Seq[(Long, Double, Double)], k: Int) =
+      qs.flatMap { case (qid, qx, qy) =>
+        pts.map(p => (p.id, math.sqrt((p.xmin - qx) * (p.xmin - qx) +
+            (p.ymin - qy) * (p.ymin - qy))))
+          .sortBy(t => (t._2, t._1)).take(k).zipWithIndex
+          .map { case ((id, _), i) => (qid, i + 1, id) }
+      }.toSet
+    val want = brute(pts, qs, 5)
     assert(got == want)
+    // edge inputs: an empty and a one-row side each, and fewer points than
+    // k, where every point is ranked 1..n (a query whose k exceeds the data
+    // scans every ring of the grid, so these use three queries)
+    val q3 = qs.take(3)
+    assert(knn(Nil, qs, 5).isEmpty && knn(pts, Nil, 5).isEmpty)
+    assert(knn(pts, qs.take(1), 5) == brute(pts, qs.take(1), 5))
+    assert(knn(pts.take(1), q3, 5) == brute(pts.take(1), q3, 5))
+    val few = pts.take(3)
+    assert(knn(few, q3, 5) == brute(few, q3, 5))
+    assert(knn(few, q3, 5).map(_._2) == Set(1, 2, 3))
   }
 }

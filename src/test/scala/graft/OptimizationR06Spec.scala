@@ -14,7 +14,8 @@ import graft.web.Pages
  *  - the widen guard no-ops when the input is already near target
  *    parallelism, and still widens clearly-narrow inputs;
  *  - no join-family query generates a method past the JVM's 8000-byte JIT
- *    ceiling (DontCompileHugeMethods runs such a method interpreted).
+ *    ceiling (DontCompileHugeMethods runs such a method interpreted);
+ *  - batch kNN's top-k is limited map-side, before its exchange.
  */
 class OptimizationR06Spec extends AnyFunSuite {
 
@@ -76,13 +77,13 @@ class OptimizationR06Spec extends AnyFunSuite {
     import org.apache.spark.sql.util.QueryExecutionListener
     object Aqe extends AdaptiveSparkPlanHelper
     // every registry entry that calls spatialJoin, spatialJoinAuto,
-    // findRelationJoin, rangeBatch or distanceJoin
+    // findRelationJoin, rangeBatch, distanceJoin or knnBatchDf
     val joinFamily = Seq("q_pip_join", "q_skew_join", "q_inside_join",
       "q_equal_join", "q_meet_join", "q_find_relation", "q_contains_join",
       "q_covers_join", "q_covered_by_join", "q_disjoint_join",
       "q_pip_join_april", "q_find_relation_april", "q_distance_join",
       "q_range_poly_april", "q_range_count", "q_range_collect",
-      "q_poly_relations")
+      "q_poly_relations", "q_knn")
     // the noop write runs in its own QueryExecution: take its final
     // adaptive plan from the listener (query builds run actions of their
     // own — metadata, index loads — hence the write-command filter)
@@ -106,6 +107,25 @@ class OptimizationR06Spec extends AnyFunSuite {
           s"$q: codegen stage ${w.codegenStageId} has a $size-byte method")
       }
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("kNN top-k is a map-side WindowGroupLimit, not a typed aggregation") {
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Aqe extends AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("q_knn")(spark, sfDir)
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan
+    // the per-query rank filter runs partially before the exchange: the
+    // shuffle carries at most k rows per query and input partition
+    val partialBelowExchange = Aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+      .flatMap(e => Aqe.collect(e) {
+        case w: WindowGroupLimitExec if w.mode == Partial => w })
+    assert(partialBelowExchange.nonEmpty, plan.toString)
+    val typed = Seq("ObjectHashAggregate", "AppendColumns", "MapGroups")
+      .filter(n => Aqe.find(plan)(_.nodeName.startsWith(n)).isDefined)
+    assert(typed.isEmpty, s"typed operators $typed in $plan")
   }
 
   test("dupGroups small path (limit-probe) matches union-find semantics") {
