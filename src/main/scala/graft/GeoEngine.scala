@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, Column}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.expressions.Window
 import graft.core._
 import graft.functions.{GeoExprs, GeoKernels}
@@ -123,7 +126,7 @@ object GeoEngine {
   def withTiles2(df: DataFrame, grid: GridConfig): DataFrame =
     df.withColumn("tile", explode(lvlCoverArr(grid, fine = true, rowRect)))
 
-  private[graft] def clampIdx(c: Column, ext: Double, lo: Double, ppd: Int): Column =
+  private def clampIdx(c: Column, ext: Double, lo: Double, ppd: Int): Column =
     least(greatest(floor((c - lit(lo)) / lit(ext)).cast("long"), lit(0L)),
       lit(ppd - 1L))
 
@@ -389,11 +392,13 @@ object GeoEngine {
   private def rowRect: RectCols =
     RectCols(col("gtype"), col("xmin"), col("ymin"), col("xmax"), col("ymax"))
 
-  /** A NaN in any MBR field: the cell formula floors NaN to cell 0, so such
-    * a row would tile (and, for containment, MBR-test) as if it spanned from
-    * the grid edge — it gets no tiles instead and joins nothing. */
+  /** A NaN or null in any MBR field: the cell formula floors NaN to cell 0,
+    * and `greatest` skips a null, clamping it to cell 0 too, so such a row
+    * would tile (and, for containment, MBR-test) as if it spanned from the
+    * grid edge — it gets no tiles instead and joins nothing. */
   private def nanMbr(rc: RectCols): Column =
-    isnan(rc.xmin) || isnan(rc.ymin) || isnan(rc.xmax) || isnan(rc.ymax)
+    Seq(rc.xmin, rc.ymin, rc.xmax, rc.ymax)
+      .map(c => isnan(c) || c.isNull).reduce(_ || _)
 
   /** One grid level's cell extents and cells per dimension. */
   private def levelDims(grid: GridConfig, fine: Boolean): (Double, Double, Int) =
@@ -429,8 +434,8 @@ object GeoEngine {
   /** A row's level-tagged tile array: its fine cover if it is narrow and
     * `emitF`; its coarse cover if it is narrow and `emitCNarrow`, or wide
     * and `emitCWide`. No emission at all (degenerate empty-side metadata,
-    * or a NaN MBR field) is an empty array — it explodes to zero rows, the
-    * schema still materializes and the row joins nothing. */
+    * or a NaN or null MBR field) is an empty array — it explodes to zero
+    * rows, the schema still materializes and the row joins nothing. */
   private[graft] def lvlTiles(grid: GridConfig, maxFineCover: Int, emitF: Boolean,
       emitCNarrow: Boolean, emitCWide: Boolean, rc: RectCols): Column = {
     val emptyA = typedlit(Array.empty[Long])
@@ -552,9 +557,9 @@ object GeoEngine {
     val slim = !broadcastS
 
     val (inner0, innerP, innerId) = if (innerIsR) (rIx, "r", "rid") else (sIx, "s", "sid")
-    // the emission's NaN guard on the home-cell side: a row with a NaN MBR
-    // field joins nothing (Spark orders NaN above every number, so it would
-    // otherwise pass a containment pairCond)
+    // the emission's NaN/null guard on the home-cell side: a row with a NaN
+    // or null MBR field joins nothing (Spark orders NaN above every number,
+    // so it would otherwise pass a containment pairCond)
     val inner = inner0.where(!nanMbr(rowRect))
     val (outer, outerP, outerId) = if (innerIsR) (sIx, "s", "sid") else (rIx, "r", "rid")
 
@@ -590,35 +595,33 @@ object GeoEngine {
     * heavy per-row kernels (rasterize, polygon synthesis, cover explode)
     * run as PROJECTIONS, which inherit the scan's partitioning — a compact
     * parquet input (one file = one partition) would serialize them all on
-    * one core regardless of cluster size (measured: single-task rasterize
-    * over 200k polygons at sf1). Spark cannot know a projection is
-    * expensive; the engine can. No-op on wide (real-scale) or streaming
-    * inputs; on narrow ones the row shuffle it costs is trivial next to
-    * the kernels it parallelizes. Stored (pre-indexed) inputs widen too:
-    * a path-snapshot index's compact files combine into few scan splits,
-    * and skipping widen there serialized the candidate + kernel chain on
-    * ~one task (measured 1.87 s vs 0.71 s on q_find_relation_april at
-    * sf0.1). */
+    * one core (measured: single-task rasterize over 200k polygons at sf1).
+    * Stored inputs widen too: a path-snapshot index's compact files combine
+    * into few scan splits (skipping widen there measured 1.87 s vs 0.71 s
+    * on q_find_relation_april at sf0.1).
+    *
+    * Decided from the planned query, launching no job: a streaming input,
+    * or a plan already holding an exchange (adaptive or not, also inside a
+    * cached relation), keeps its chosen partitioning — under AQE, reading
+    * its partition count would run that exchange. Any other plan is narrow
+    * operators over scans, whose RDD builds without a job; it repartitions
+    * to `defaultParallelism` only below half that many partitions (within
+    * 2× of the target a row shuffle buys a marginal win). */
   private[graft] def widen(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
+    val plan = df.queryExecution.executedPlan
+    if (holdsExchange(plan)) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
-    // builds the RDD lineage eagerly to read the partition count. Plan
-    // compilation only for a plan without an exchange; under AQE, building
-    // the RDD of a plan that already holds an exchange runs that shuffle
-    // as a job (e.g. aprilIndex re-widening an already widened side)
-    val parts = df.rdd.getNumPartitions
-    if (parts >= target) df
-    else {
-      // guard (round 6, VERDICT r5 #6): an input already within 2× of the
-      // target parallelism pays a full row shuffle for a marginal win —
-      // repartition only when clearly narrow, or when the partitions are
-      // data-heavy enough (Catalyst size estimate, no job) that per-core
-      // kernel time dominates the shuffle it costs
-      val bytesPerPart =
-        df.queryExecution.optimizedPlan.stats.sizeInBytes / math.max(parts, 1)
-      if (parts < math.max(target / 2, 1) || bytesPerPart > BigInt(64L << 20))
-        df.repartition(target)
-      else df
+    if (plan.execute().getNumPartitions < math.max(target / 2, 1))
+      df.repartition(target)
+    else df
+  }
+
+  private def holdsExchange(p: QueryPlan[_]): Boolean = p match {
+    case _: Exchange | _: AdaptiveSparkPlanExec => true
+    case _ => (p.children ++ p.innerChildren).exists {
+      case c: QueryPlan[_] => holdsExchange(c)
+      case _ => false
     }
   }
 
@@ -751,47 +754,44 @@ object GeoEngine {
     m.hasRect && !m.hasBox && !m.hasNonRect
 
   /** One side's APRIL-indexed form: `df` itself when APRIL is off, when the
-    * caller `skip`s the side (an all-point side whose A-list `attach`
-    * synthesizes on the candidate row) or when it is pre-indexed (buildIndex);
-    * otherwise `aprilIndex`. */
+    * side holds only points (their payload is synthesized, see payloadCols)
+    * or when it is pre-indexed (buildIndex); otherwise `aprilIndex`. */
   private def ix(df: DataFrame, grid: GridConfig, useApril: Boolean,
-      aprilOrder: Int, skip: Boolean): DataFrame =
-    if (!useApril || skip || df.columns.contains("april_all")) df
+      aprilOrder: Int, m: SideMeta): DataFrame =
+    if (!useApril || allPoints(m) || df.columns.contains("april_all")) df
     else aprilIndex(df, grid, aprilOrder)
 
   /** One side's payload under prefix `p`: ring coords (p+"c") and, with
     * APRIL, the interval lists (p+"_april_all", p+"_april_full"). Broadcast
-    * mode carries it through the tile explode; slim mode `attach`es it. */
-  private def payloadCols(p: String, withApril: Boolean): Seq[Column] = {
-    val geom = Seq(col("coords").as(p + "c"))
-    val april =
-      if (withApril) Seq(col("april_all").as(p + "_april_all"),
-        col("april_full").as(p + "_april_full"))
-      else Nil
-    geom ++ april
-  }
+    * mode carries it through the tile explode; slim mode `attach`es it. An
+    * all-point side's payload is synthesized from its MBR corner (x, y): a
+    * point's coords ARE that corner and its A-list is one Hilbert cell,
+    * bit-identical to the rasterized form — so `ix` never rasterizes it. */
+  private def payloadCols(p: String, points: Boolean, withApril: Boolean,
+      grid: GridConfig, aprilOrder: Int, x: Column = col("xmin"),
+      y: Column = col("ymin")): Seq[Column] =
+    if (points) {
+      val cell = GeoExprs.hilbertCell(x, y, grid.xMin, grid.yMin,
+        grid.xExtent, grid.yExtent, aprilOrder)
+      array(x, y).as(p + "c") +: (if (!withApril) Nil
+        else Seq(array(cell, cell + lit(1L)).as(p + "_april_all"),
+          typedlit(Array.empty[Long]).as(p + "_april_full")))
+    } else col("coords").as(p + "c") +: (if (!withApril) Nil
+      else Seq(col("april_all").as(p + "_april_all"),
+        col("april_full").as(p + "_april_full")))
 
   /** Attach one side's payloadCols to slim (id, gtype, MBR) candidate rows:
     * ONE id re-join per side, the coords and the APRIL interval lists in the
     * same join (no broadcast hint: interval arrays scale with geometry size;
     * AQE converts a genuinely small side at runtime). An all-point side never
-    * re-joins: a point's coords ARE its MBR corner, already on the row, and
-    * its A-list is one Hilbert cell, synthesized inline and bit-identical to
-    * the rasterized form — so `ix` may skip the side's rasterization. */
+    * re-joins: its payload is synthesized from the MBR already on the row. */
   private def attach(c: DataFrame, p: String, idName: String, df: DataFrame,
-      allPoints: Boolean, withApril: Boolean, grid: GridConfig,
+      points: Boolean, withApril: Boolean, grid: GridConfig,
       aprilOrder: Int): DataFrame =
-    if (allPoints) {
-      val c1 = c.withColumn(p + "c", array(col(p + "xmin"), col(p + "ymin")))
-      if (!withApril) c1
-      else {
-        val cell = GeoExprs.hilbertCell(col(p + "xmin"), col(p + "ymin"),
-          grid.xMin, grid.yMin, grid.xExtent, grid.yExtent, aprilOrder)
-        c1.withColumn(p + "_april_all", array(cell, cell + lit(1L)))
-          .withColumn(p + "_april_full", typedlit(Array.empty[Long]))
-      }
-    } else c.join(df.select((col("id").as(idName) +: payloadCols(p, withApril)): _*),
-      Seq(idName))
+    if (points) c.select(col("*") +: payloadCols(p, points, withApril, grid,
+      aprilOrder, col(p + "xmin"), col(p + "ymin")): _*)
+    else c.join(df.select(col("id").as(idName) +:
+      payloadCols(p, points, withApril, grid, aprilOrder): _*), Seq(idName))
 
   /**
    * Predicate spatial join: returns (rid, sid) pairs satisfying `pred`.
@@ -861,10 +861,8 @@ object GeoEngine {
     // explicit Some(flag) overrides the density rule; the sweep needs the
     // slim (shuffle) exchange
     val sweepOn = !broadcastS && sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold))
-    // slim mode attaches an all-point side's A-list inline: never rasterized;
-    // broadcast mode carries both sides' payload through the exchange
-    val rIx = ix(rW, grid, useApril, aprilOrder, skip = !broadcastS && allPoints(rm))
-    val sIx = ix(sW, grid, useApril, aprilOrder, skip = !broadcastS && allPoints(sm))
+    val rIx = ix(rW, grid, useApril, aprilOrder, rm)
+    val sIx = ix(sW, grid, useApril, aprilOrder, sm)
     joinCascade(rIx, sIx, pred, grid, useApril, aprilOrder, broadcastS,
       saltFactor, maxFineCover, rm, sm, sweepOn)
   }
@@ -886,7 +884,9 @@ object GeoEngine {
     // (carrying arrays through a many-tiles explode multiplies shuffle bytes).
     val slim = !broadcastS
     val payload: String => Seq[Column] =
-      if (slim) _ => Nil else payloadCols(_, useApril)
+      if (slim) _ => Nil
+      else p => payloadCols(p, allPoints(if (p == "r") rm else sm), useApril,
+        grid, aprilOrder)
 
     // containment predicates take the home-cell candidate plan (probe side
     // ships one row per object; no dedup); everything else multi-res tiles
@@ -985,8 +985,8 @@ object GeoEngine {
     // sub-plan (rasterize + interval re-joins) is provably dead weight —
     // prune it from the plan.
     val useAprilEff = useApril && anyNonBox
-    val rIx = ix(rW, grid, useAprilEff, aprilOrder, skip = allPoints(rm))
-    val sIx = ix(sW, grid, useAprilEff, aprilOrder, skip = allPoints(sm))
+    val rIx = ix(rW, grid, useAprilEff, aprilOrder, rm)
+    val sIx = ix(sW, grid, useAprilEff, aprilOrder, sm)
     val cands = mrCandidates(rIx, sIx, grid, broadcastS = false,
       saltFactor, maxFineCover, rm, sm, _ => Nil,
       sweep = sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold)))
@@ -1106,10 +1106,13 @@ object GeoEngine {
     import spark.implicits._
     // no widen for the cover arithmetic alone (cheap even on one core —
     // measured +0.4 s pure repartition cost at sf0.1 with no offsetting
-    // win). With `useApril` the data side IS widened: the broadcast payload
-    // carries the data's A-lists, so `ix` rasterizes every data row (points
-    // included) through aprilIndex, whose widen repartitions it.
-    val dIx = ix(data.toDF(), grid, useApril, aprilOrder, skip = false)
+    // win). With `useApril` a data side holding non-point rows IS widened:
+    // the broadcast payload carries its A-lists, so `ix` rasterizes it
+    // through aprilIndex, whose widen repartitions it; an all-point side's
+    // A-lists are synthesized on the row.
+    val dm = dataMeta.getOrElse(sideStats(data.toDF(), grid, maxFineCover,
+      withDensity = false))
+    val dIx = ix(data.toDF(), grid, useApril, aprilOrder, dm)
     val windows = queries.map { case (qid, g) =>
       val m = g.mbr
       val a = if (useApril) April.rasterize(g, grid.xMin, grid.yMin,
@@ -1127,8 +1130,6 @@ object GeoEngine {
     val wm = SideMeta(hasWide = any(wide), hasNarrow = any(!wide(_)),
       hasNonRect = any(!rect(_)), hasNonBox = any(_.gtype != GeomType.BOX),
       hasRect = any(rect), hasBox = any(_.gtype == GeomType.BOX))
-    val dm = dataMeta.getOrElse(sideStats(dIx, grid, maxFineCover,
-      withDensity = false))
     joinCascade(dIx, windows, Predicates.INTERSECTS, grid, useApril,
       aprilOrder, broadcastS = true, saltFactor = 1, maxFineCover, dm, wm,
       sweepOn = false)
@@ -1204,34 +1205,34 @@ object GeoEngine {
       .where(col("rnk") <= k)
   }
 
-  /** Tiles that can contain one of the k nearest neighbors of (qx, qy). */
+  /** Tiles that can contain one of the k nearest neighbors of (qx, qy);
+    * `total` is the histogram's point count. */
   private[graft] def candidateKnnTiles(qx: Double, qy: Double, k: Int,
-      grid: GridConfig, tileCounts: Map[Long, Long]): Seq[Long] = {
+      grid: GridConfig, tileCounts: Map[Long, Long], total: Long): Seq[Long] = {
+    // fewer than k points overall: every non-empty tile holds a neighbor
+    if (total < k) return tileCounts.keys.toSeq
     val ppd = grid.globalPpd
     val hi = math.min(math.max(grid.fineX(qx), 0), ppd - 1)
     val hj = math.min(math.max(grid.fineY(qy), 0), ppd - 1)
-    var cum = 0L
-    var r = 0
-    var found = -1
-    while (found < 0 && r < ppd) {
-      // cells on the Chebyshev ring of radius r
-      var covered = 0L
-      var i = math.max(hi - r, 0)
-      while (i <= math.min(hi + r, ppd - 1)) {
-        var j = math.max(hj - r, 0)
-        while (j <= math.min(hj + r, ppd - 1)) {
-          if (math.max(math.abs(i - hi), math.abs(j - hj)) == r) {
-            covered += tileCounts.getOrElse(grid.tileId(i, j), 0L)
-          }
-          j += 1
-        }
-        i += 1
+    def count(i: Int, j: Int): Long =
+      if (i < 0 || i >= ppd || j < 0 || j >= ppd) 0L
+      else tileCounts.getOrElse(grid.tileId(i, j), 0L)
+    // points on the Chebyshev ring of radius r: its perimeter cells only
+    def ring(r: Int): Long =
+      if (r == 0) count(hi, hj)
+      else {
+        var c = 0L
+        var i = hi - r
+        while (i <= hi + r) { c += count(i, hj - r) + count(i, hj + r); i += 1 }
+        var j = hj - r + 1
+        while (j < hj + r) { c += count(hi - r, j) + count(hi + r, j); j += 1 }
+        c
       }
-      cum += covered
-      if (cum >= k) found = r
-      r += 1
-    }
-    if (found < 0) return tileCounts.keys.toSeq // fewer than k points overall
+    // the rings cover the whole grid by r = ppd - 1
+    var cum = ring(0)
+    var found = 0
+    while (cum < k && found < ppd - 1) { found += 1; cum += ring(found) }
+    if (cum < k) return tileCounts.keys.toSeq // histogram keys off the grid
     // kth distance bound: the farthest corner of the covered (2·found+1) box
     val m = MBR(grid.xMin + (hi - found) * grid.fineExtX,
                 grid.yMin + (hj - found) * grid.fineExtY,

@@ -523,9 +523,10 @@ case class KnnTiles(x: Expression, y: Expression, k: Int,
   override def right: Expression = y
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "knn_tiles"
+  @transient private lazy val total: Long = counts.value.valuesIterator.sum
   def evalTiles(qx: Double, qy: Double): ArrayData =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      graft.GeoEngine.candidateKnnTiles(qx, qy, k, grid, counts.value).toArray)
+      graft.GeoEngine.candidateKnnTiles(qx, qy, k, grid, counts.value, total).toArray)
   override def nullSafeEval(a: Any, b: Any): Any =
     evalTiles(a.asInstanceOf[Double], b.asInstanceOf[Double])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {

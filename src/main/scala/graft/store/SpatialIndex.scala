@@ -1,7 +1,6 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.GeoEngine
 import graft.core.GridConfig
 
@@ -9,17 +8,16 @@ import graft.core.GridConfig
  * Persisted spatial index: the reference's prepare → partition → buildIndex →
  * query-against-the-stored-index lifecycle (API/Hecatoncheir.cpp:509-564;
  * APRIL sidecar files src/APRIL/storage.cpp:7-53), re-expressed as ONE
- * tile-partitioned snapshot carrying geometry + APRIL interval-list columns,
- * with the grid, APRIL order, SideMeta dispatch statistics and a CRC of the
- * index code recorded in the manifest lineage.
+ * snapshot carrying geometry + APRIL interval-list columns, with the grid,
+ * APRIL order, SideMeta dispatch statistics and a CRC of the index code
+ * recorded in the manifest lineage.
  *
  * `build` pays rasterization + the metadata prepass once at ingest;
  * `load`/`ensure` hand repeated queries the pre-indexed table plus its
  * SideMeta so they skip both (the amortization a real deployment gets from
- * the reference's persist=true APRIL files). Rows are clustered by the
- * coarse distribution cell of their MBR min corner — the snapshot analogue
- * of the reference's per-node partition files; a reader scans
- * locality-clustered row groups and parquet min/max prunes on it.
+ * the reference's persist=true APRIL files). Rows are not clustered: no
+ * query filters on a spatial column of the snapshot (the candidate exchange
+ * re-tiles its rows), so a clustering would buy no parquet min/max pruning.
  *
  * The path snapshot is the only stored form: a catalog table bucketed by id
  * (which drops the index-side exchange of the slim join's id re-join)
@@ -34,23 +32,13 @@ object SpatialIndex {
     * form, exactly what a later `load` would see. */
   def build(df: DataFrame, grid: GridConfig, order: Int, root: String,
             table: String, maxFineCover: Int = GeoEngine.MaxFineCover): Loaded = {
-    // two actions read the input (sideMeta scan + snapshot write): cache so
-    // an expensive compute closure evaluates once
-    val cached = df.cache()
+    // two actions read the input (sideMeta scan + snapshot write): widen it
+    // once, then cache, so both passes and the rasterize run in parallel
+    // over at most one exchange (aprilIndex's widen then no-ops) and an
+    // expensive compute closure evaluates once
+    val cached = GeoEngine.widen(df).cache()
     val meta = GeoEngine.sideMeta(cached, grid, maxFineCover)
-    val homeCoarse =
-      GeoEngine.clampIdx(col("xmin"), grid.coarseExtX, grid.xMin, grid.coarsePpd) +
-      GeoEngine.clampIdx(col("ymin"), grid.coarseExtY, grid.yMin, grid.coarsePpd) *
-        lit(grid.coarsePpd.toLong)
-    // repartition BEFORE rasterizing (round 6, guide §2.3): the coarse-cell
-    // clustering shuffle then carries only ids + coords, not the APRIL
-    // interval arrays it used to (which dominate the indexed row), and the
-    // rasterize kernel runs as a projection on the post-shuffle partitions —
-    // parallel without the extra round-robin widen shuffle the old order
-    // needed (aprilIndex's widen sees the repartitioned input and no-ops)
-    val indexed = GeoEngine.aprilIndex(
-      cached.withColumn("home_coarse", homeCoarse)
-        .repartition(col("home_coarse")), grid, order)
+    val indexed = GeoEngine.aprilIndex(cached, grid, order)
     Snapshots.commit(indexed, root, table, lineage = Map(
       "stage" -> "build_index",
       "april_order" -> order.toString,
@@ -106,7 +94,7 @@ object SpatialIndex {
 
   /** CRC32 of the class files that decide the stored bytes: the rasterizer
     * (April, its Hilbert curve and the AprilRasterize expression) and this
-    * object (clustering, lineage). Read once per JVM from the classpath. */
+    * object (columns, lineage). Read once per JVM from the classpath. */
   private lazy val codeCrc: String = {
     val crc = new java.util.zip.CRC32()
     for (c <- Seq(graft.core.April.getClass, graft.core.Hilbert.getClass,

@@ -54,11 +54,12 @@ class CsvRangeSpec extends AnyFunSuite {
   test("rangeBatch polygon windows: APRIL on ≡ APRIL off") {
     import spark.implicits._
     val grid = graft.web.Pages.WorldGrid
+    // one partition, the shape of a compact parquet scan
     val pts = (0 until 3000).map { i =>
       val x = (i * 7 % 2880) / 8.0 - 180.0
       val y = (i * 11 % 1360) / 8.0 - 85.0
       GeoRow(i.toLong, GeomType.POINT, Array(x, y), x, y, x, y)
-    }.toDS()
+    }.toDS().coalesce(1)
     val wins = (0 until 12).map { q =>
       val cx = (q * 29 % 2800) / 8.0 - 175.0
       val cy = (q * 31 % 1280) / 8.0 - 80.0
@@ -66,12 +67,20 @@ class CsvRangeSpec extends AnyFunSuite {
       (q.toLong, Geom(GeomType.POLYGON,
         Array(cx - hw, cy, cx, cy - hh, cx + hw, cy, cx, cy + hh, cx - hw, cy)))
     }
-    def res(useApril: Boolean) =
+    def df(useApril: Boolean) =
       GeoEngine.rangeBatch(pts, wins, grid, useApril = useApril, aprilOrder = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def res(useApril: Boolean) =
+      df(useApril).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val on = res(true); val off = res(false)
     assert(on == off, s"april=on ${on.size} vs off ${off.size}")
     assert(on.nonEmpty)
+    // the all-point side is never rasterized, so never widened for it: its
+    // one-cell A-list is synthesized on the row
+    val optimized = df(true).queryExecution.optimizedPlan.toString
+    assert(optimized.contains("hilbert_cell"), optimized)
+    assert(!optimized.contains("april_rasterize"), optimized)
+    val executed = df(true).queryExecution.executedPlan.toString
+    assert(!executed.contains("RoundRobinPartitioning"), executed)
   }
 
   test("rangeBatch wide windows take the coarse cover (bounded query table)") {
@@ -92,16 +101,16 @@ class CsvRangeSpec extends AnyFunSuite {
           cx - hw, cy + hh, cx - hw, cy - hh),
         cx - hw, cy - hh, cx + hw, cy + hh)
     }.toDS())
-    // one row per MBR field with that field NaN, inside the half-world
-    // window: no path may return them
-    val nanRows = (0 until 4).map { f =>
+    // one row per MBR field with that field NaN, and one with it null,
+    // inside the half-world window: no path may return them
+    def badRows(base: Long) = (0 until 4).map { f =>
       val m = Array(-100.2, 10.1, -100.1, 10.2)
       m(f) = Double.NaN
-      GeoRow(90001L + f, GeomType.BOX,
+      GeoRow(base + f, GeomType.BOX,
         Array(-100.2, 10.1, -100.1, 10.1, -100.1, 10.2, -100.2, 10.2, -100.2, 10.1),
         m(0), m(1), m(2), m(3))
-    }
-    val data = pts.union(nanRows.toDS())
+    }.toDS()
+    val data = pts.union(badRows(90001L)).union(TestRows.nulled(badRows(90011L)))
     // a continent-sized window (half the world), a hemisphere-tall strip,
     // a wide diamond polygon, a handful of 1° boxes (5 × 4 fine cells, just
     // over maxFineCover), and a narrow diamond and a point window that join
@@ -140,8 +149,8 @@ class CsvRangeSpec extends AnyFunSuite {
       val df = GeoEngine.rangeBatch(data, wins, grid, useApril = useApril,
         aprilOrder = 10)
       val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(!got.exists(p => p._2 >= 90001L && p._2 <= 90004L),
-        s"useApril=$useApril kept NaN-MBR rows")
+      assert(!got.exists(p => p._2 >= 90001L && p._2 <= 90014L),
+        s"useApril=$useApril kept NaN- or null-MBR rows")
       assert(got == want, s"useApril=$useApril got ${got.size} want ${want.size}")
       // plan shape: one explode per side (data, and the window table under
       // the broadcast); the half-world window's fine cover is ~380k tiles,
@@ -262,14 +271,12 @@ class CsvRangeSpec extends AnyFunSuite {
     val want = brute(pts, qs, 5)
     assert(got == want)
     // edge inputs: an empty and a one-row side each, and fewer points than
-    // k, where every point is ranked 1..n (a query whose k exceeds the data
-    // scans every ring of the grid, so these use three queries)
-    val q3 = qs.take(3)
+    // k, where every point is ranked 1..n
     assert(knn(Nil, qs, 5).isEmpty && knn(pts, Nil, 5).isEmpty)
     assert(knn(pts, qs.take(1), 5) == brute(pts, qs.take(1), 5))
-    assert(knn(pts.take(1), q3, 5) == brute(pts.take(1), q3, 5))
+    assert(knn(pts.take(1), qs, 5) == brute(pts.take(1), qs, 5))
     val few = pts.take(3)
-    assert(knn(few, q3, 5) == brute(few, q3, 5))
-    assert(knn(few, q3, 5).map(_._2) == Set(1, 2, 3))
+    assert(knn(few, qs, 5) == brute(few, qs, 5))
+    assert(knn(few, qs, 5).map(_._2) == Set(1, 2, 3))
   }
 }

@@ -129,8 +129,7 @@ class FindRelationPlanSpec extends AnyFunSuite {
     // the stored side's rasterization appears once per use of that side
     // (candidate emission, payload attach) with or without APRIL; the point
     // side's A-list is synthesized on the candidate row and adds none — not
-    // even an aprilIndex chain whose rasterize the optimizer prunes (its
-    // widen probe still runs a job)
+    // even an aprilIndex chain whose rasterize the optimizer prunes
     val withApril = join(useApril = true)
     assert(rasterizeCount(withApril) == rasterizeCount(join(useApril = false)),
       withApril.queryExecution.analyzed.toString)

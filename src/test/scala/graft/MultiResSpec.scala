@@ -171,9 +171,9 @@ class MultiResSpec extends AnyFunSuite {
         Array(cx, cy, cx + 0.002, cy, cx + 0.002, cy + 0.002, cx, cy + 0.002, cx, cy),
         cx, cy, cx + 0.002, cy + 0.002)
     }
-    // one row per side and per MBR field with that field NaN, inside the
-    // dense tile: every path (sweep, hash, and INSIDE's home-cell
-    // containment plan) must drop them all
+    // one row per side and per MBR field with that field NaN, and one with
+    // it null, inside the dense tile: every path (sweep, hash, and INSIDE's
+    // home-cell containment plan) must drop them all
     def nanRow(id: Long, field: Int) = {
       val m = Array(10.02, 20.01, 10.03, 20.03)
       m(field) = Double.NaN
@@ -183,9 +183,13 @@ class MultiResSpec extends AnyFunSuite {
     }
     val rNan = (0 until 4).map(f => nanRow(90001L + f, f))
     val sNan = (0 until 4).map(f => nanRow(90011L + f, f))
-    val nanIds = (rNan ++ sNan).map(_.id).toSet
+    val rNull = (0 until 4).map(f => nanRow(90021L + f, f))
+    val sNull = (0 until 4).map(f => nanRow(90031L + f, f))
+    val nanIds = (rNan ++ sNan ++ rNull ++ sNull).map(_.id).toSet
     val r = boxes(31, 400).union(dense(1).toDS()).union(rNan.toDS())
+      .union(TestRows.nulled(rNull.toDS()))
     val s = boxes(32, 400).union(dense(5).toDS()).union(sNan.toDS())
+      .union(TestRows.nulled(sNull.toDS()))
     for (pred <- Seq(Predicates.INTERSECTS, Predicates.MEET, Predicates.INSIDE)) {
       val viaSweep = pairs(GeoEngine.spatialJoin(r, s, pred, grid,
         maxFineCover = 16, sweep = Some(true)))
@@ -194,7 +198,7 @@ class MultiResSpec extends AnyFunSuite {
       assert(viaSweep == viaHash, s"pred=$pred sweep=${viaSweep.size} hash=${viaHash.size}")
       for ((name, got) <- Seq("sweep" -> viaSweep, "hash" -> viaHash))
         assert(!got.exists { case (a, b) => nanIds(a) || nanIds(b) },
-          s"pred=$pred: $name path kept NaN-MBR rows " +
+          s"pred=$pred: $name path kept NaN- or null-MBR rows " +
             got.filter { case (a, b) => nanIds(a) || nanIds(b) })
     }
     // plan shape: narrow and wide rows on both sides still plan ONE

@@ -12,7 +12,8 @@ import graft.web.Pages
  *    drop a candidate sub-join);
  *  - the column-only page synthesis is byte-identical to the typed path;
  *  - the widen guard no-ops when the input is already near target
- *    parallelism, and still widens clearly-narrow inputs;
+ *    parallelism or already holds an exchange, still widens clearly-narrow
+ *    inputs, and never launches a job;
  *  - no join-family query generates a method past the JVM's 8000-byte JIT
  *    ceiling (DontCompileHugeMethods runs such a method interpreted);
  *  - batch kNN's top-k is limited map-side, before its exchange.
@@ -56,16 +57,65 @@ class OptimizationR06Spec extends AnyFunSuite {
     assert(cols.size == 500)
   }
 
+  /** `f`'s result and the number of Spark jobs it launched. A listener
+    * counts job starts between two marked sentinel jobs: the bus delivers
+    * events in order, so once the second sentinel's start arrives every job
+    * launched by `f` has been counted, and none launched before it is. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    import java.util.concurrent.{Semaphore, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val sentinels = new Semaphore(0)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.sentinel") != null)
+          sentinels.release()
+        else jobs.incrementAndGet()
+    }
+    def sentinel(): Unit = {
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.sentinel", null)
+      assert(sentinels.tryAcquire(60, TimeUnit.SECONDS), "listener bus stalled")
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel()
+      jobs.set(0)
+      val out = f
+      sentinel()
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("widen guard: no-op near target parallelism, widens narrow inputs") {
+    import org.apache.spark.sql.DataFrame
     val target = spark.sparkContext.defaultParallelism // 4
+    // widen decides from the planned query alone: no input launches a job
+    def widen(df: DataFrame): DataFrame = {
+      val (out, jobs) = jobsDuring(GeoEngine.widen(df))
+      assert(jobs == 0, s"widen launched $jobs job(s) on ${df.queryExecution.executedPlan}")
+      out
+    }
     val near = spark.range(0, 1000, 1, target / 2).toDF() // half of target
-    assert(GeoEngine.widen(near).rdd.getNumPartitions == target / 2,
+    assert(widen(near).rdd.getNumPartitions == target / 2,
       "an input within 2x of target must not pay a repartition")
     val narrow = spark.range(0, 1000, 1, 1).toDF()
-    assert(GeoEngine.widen(narrow).rdd.getNumPartitions == target,
+    assert(widen(narrow).rdd.getNumPartitions == target,
       "a clearly narrow input must still widen")
     val wide = spark.range(0, 1000, 1, target + 2).toDF()
-    assert(GeoEngine.widen(wide).rdd.getNumPartitions == target + 2)
+    assert(widen(wide).rdd.getNumPartitions == target + 2)
+    // a plan that already holds an exchange keeps its partitioning (under
+    // AQE, reading its partition count would run that shuffle) — also when
+    // the exchange leaves it narrow
+    // (the cached input has its own source: the cache manager would serve
+    // an equal plan from the cache)
+    val cached = spark.range(0, 500, 1, 1).toDF().repartition(1).cache()
+    for (held <- Seq(narrow.repartition(1), narrow.groupBy().count(), cached))
+      assert(widen(held) eq held, held.queryExecution.executedPlan.toString)
+    cached.unpersist()
   }
 
   test("JIT ceiling: every join-family query's codegen methods stay under 8000 bytes") {

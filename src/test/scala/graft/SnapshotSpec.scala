@@ -72,11 +72,11 @@ class SnapshotSpec extends AnyFunSuite {
     assert(Snapshots.load(spark, root, "t").get.count() == 7L)
   }
 
-  test("persisted APRIL index: build → load round-trips data, lists and meta") {
+  private val grid = graft.web.Pages.WorldGrid
+
+  private def diamonds(n: Int) = {
     import spark.implicits._
-    val root = freshRoot()
-    val grid = graft.web.Pages.WorldGrid
-    def diamonds(n: Int) = (0 until n).map { i =>
+    (0 until n).map { i =>
       val cx = (i * 13 % 2800) / 8.0 - 175.0
       val cy = (i * 17 % 1280) / 8.0 - 80.0
       val hw = (i % 40 + 2) / 8.0; val hh = (i % 30 + 2) / 8.0
@@ -84,6 +84,11 @@ class SnapshotSpec extends AnyFunSuite {
         Array(cx - hw, cy, cx, cy - hh, cx + hw, cy, cx, cy + hh, cx - hw, cy),
         cx - hw, cy - hh, cx + hw, cy + hh)
     }.toDS()
+  }
+
+  test("persisted APRIL index: build → load round-trips data, lists and meta") {
+    import spark.implicits._
+    val root = freshRoot()
     def points(n: Int) = (0 until n).map { i =>
       val x = (i * 7 % 2880) / 8.0 - 180.0
       val y = (i * 11 % 1360) / 8.0 - 85.0
@@ -141,6 +146,49 @@ class SnapshotSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0),
         (r.getSeq[Long](1).toList, r.getSeq[Long](2).toList))).toMap
     assert(storedLists == freshLists)
+  }
+
+  test("index build: one exchange feeds the commit, no clustering column") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommand
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every Exchange in `p`, through adaptive plans, query stages and cached
+    // relations (the build caches its widened input)
+    def exchanges(p: SparkPlan): Seq[SparkPlan] = {
+      val below = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case _ => p.children
+      }
+      (if (p.isInstanceOf[Exchange]) Seq(p) else Nil) ++ below.flatMap(exchanges)
+    }
+    val root = freshRoot()
+    val writes = new LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.isInstanceOf[DataWritingCommand] &&
+            qe.logical.toString.contains(root)) writes.put(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // one partition: the shape of a compact single-file parquet input, which
+    // the build widens once, before its metadata pass and the rasterize
+    val (built, commit) = try {
+      val b = graft.store.SpatialIndex.build(diamonds(2000).toDF().coalesce(1),
+        grid, 10, root, "diamonds")
+      (b, writes.poll(60, TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(commit != null, "no commit write observed")
+    val plan = commit.executedPlan
+    assert(exchanges(plan).size == 1, plan.toString)
+    assert(!built.df.columns.contains("home_coarse"))
+    assert(built.df.count() == 2000L)
+    assert(built.meta == GeoEngine.sideMeta(diamonds(2000), grid))
   }
 
   test("GraftJob pipeline: kill/resume covers all five stages incl. index") {
