@@ -120,11 +120,13 @@ object GeoEngine {
   // ----------------------------------------------------------------- tiling
 
   /** Tile explode for any DataFrame carrying (gtype, xmin, ymin, xmax, ymax):
-    * adds `tile` (and keeps every original column). Pure Catalyst
-    * expressions (sequence/transform/flatten) — no UDF, the cover generation
-    * stays inside whole-stage codegen. */
+    * adds `tile`, one row per fine cell of the MBR cover (and keeps every
+    * original column); a row with a NaN or null MBR field gets none. The
+    * `lvl_tiles` codegen expression — no UDF, the cover generation stays
+    * inside whole-stage codegen. */
   def withTiles2(df: DataFrame, grid: GridConfig): DataFrame =
-    df.withColumn("tile", explode(lvlCoverArr(grid, fine = true, rowRect)))
+    df.withColumn("tile", explode(lvlTiles(grid, Int.MaxValue, emitF = true,
+      emitCNarrow = false, emitCWide = false, rowRect)))
 
   private def clampIdx(c: Column, ext: Double, lo: Double, ppd: Int): Column =
     least(greatest(floor((c - lit(lo)) / lit(ext)).cast("long"), lit(0L)),
@@ -140,15 +142,6 @@ object GeoEngine {
     val fpc = grid.finePerCoarse.toDouble
     (fi + fj * grid.globalPpd,
       floor(fi / lit(fpc)).cast("long") + floor(fj / lit(fpc)).cast("long") * grid.coarsePpd)
-  }
-
-  /** Fine-grid cell count of the row's MBR cover (pre-explode). */
-  private def fineCoverCnt(grid: GridConfig, rc: RectCols): Column = {
-    val iMin = clampIdx(rc.xmin, grid.fineExtX, grid.xMin, grid.globalPpd)
-    val iMax = clampIdx(rc.xmax, grid.fineExtX, grid.xMin, grid.globalPpd)
-    val jMin = clampIdx(rc.ymin, grid.fineExtY, grid.yMin, grid.globalPpd)
-    val jMax = clampIdx(rc.ymax, grid.fineExtY, grid.yMin, grid.globalPpd)
-    (iMax - iMin + lit(1L)) * (jMax - jMin + lit(1L))
   }
 
   /** Per-side dispatch metadata (the reference's dataset-metadata /
@@ -180,7 +173,8 @@ object GeoEngine {
     * time always computes the full statistics. */
   private def sideStats(df: DataFrame, grid: GridConfig, maxFineCover: Int,
                         withDensity: Boolean): SideMeta = {
-    val wide = fineCoverCnt(grid, rowRect) > maxFineCover
+    val wide = GeoExprs.fineCoverCount(col("xmin"), col("ymin"), col("xmax"),
+      col("ymax"), grid) > maxFineCover
     val nonRect = col("gtype") === GeomType.LINESTRING ||
       col("gtype") === GeomType.POLYGON
     val nonBox = col("gtype") =!= GeomType.BOX
@@ -394,67 +388,35 @@ object GeoEngine {
 
   /** A NaN or null in any MBR field: the cell formula floors NaN to cell 0,
     * and `greatest` skips a null, clamping it to cell 0 too, so such a row
-    * would tile (and, for containment, MBR-test) as if it spanned from the
-    * grid edge — it gets no tiles instead and joins nothing. */
+    * would home (and MBR-test) as if it sat at the grid edge — the
+    * containment inner side drops it, as `lvl_tiles` gives it no tiles. */
   private def nanMbr(rc: RectCols): Column =
     Seq(rc.xmin, rc.ymin, rc.xmax, rc.ymax)
       .map(c => isnan(c) || c.isNull).reduce(_ || _)
 
-  /** One grid level's cell extents and cells per dimension. */
-  private def levelDims(grid: GridConfig, fine: Boolean): (Double, Double, Int) =
-    if (fine) (grid.fineExtX, grid.fineExtY, grid.globalPpd)
-    else (grid.coarseExtX, grid.coarseExtY, grid.coarsePpd)
-
-  /** Level tag of a cell id: fine ids as-is, coarse ids offset by
-    * LvlOffset. */
-  private def lvlTag(fine: Boolean, cell: Column): Column =
-    if (fine) cell else cell + lit(LvlOffset)
-
-  /** The level-encoded cell holding (x, y). */
+  /** The level-encoded cell holding (x, y): fine ids as-is, coarse ids
+    * offset by LvlOffset. */
   private def cellCol(grid: GridConfig, fine: Boolean, x: Column, y: Column): Column = {
-    val (extX, extY, ppd) = levelDims(grid, fine)
-    lvlTag(fine, clampIdx(x, extX, grid.xMin, ppd) +
-      clampIdx(y, extY, grid.yMin, ppd) * lit(ppd.toLong))
-  }
-
-  /** Level-encoded cover array at one grid level (points: single cell). */
-  private def lvlCoverArr(grid: GridConfig, fine: Boolean, rc: RectCols): Column = {
-    val (extX, extY, ppd) = levelDims(grid, fine)
-    val iMin = clampIdx(rc.xmin, extX, grid.xMin, ppd)
-    val iMax = clampIdx(rc.xmax, extX, grid.xMin, ppd)
-    val jMin = clampIdx(rc.ymin, extY, grid.yMin, ppd)
-    val jMax = clampIdx(rc.ymax, extY, grid.yMin, ppd)
-    val pl = lit(ppd.toLong)
-    val cover = flatten(transform(sequence(jMin, jMax),
-      j => transform(sequence(iMin, iMax), i => lvlTag(fine, i + j * pl))))
-    when(rc.g === GeomType.POINT, array(cellCol(grid, fine, rc.xmin, rc.ymin)))
-      .otherwise(cover)
+    val (extX, extY, ppd) =
+      if (fine) (grid.fineExtX, grid.fineExtY, grid.globalPpd)
+      else (grid.coarseExtX, grid.coarseExtY, grid.coarsePpd)
+    val cell = clampIdx(x, extX, grid.xMin, ppd) +
+      clampIdx(y, extY, grid.yMin, ppd) * lit(ppd.toLong)
+    if (fine) cell else cell + lit(LvlOffset)
   }
 
   /** A row's level-tagged tile array: its fine cover if it is narrow and
     * `emitF`; its coarse cover if it is narrow and `emitCNarrow`, or wide
-    * and `emitCWide`. No emission at all (degenerate empty-side metadata,
-    * or a NaN or null MBR field) is an empty array — it explodes to zero
-    * rows, the schema still materializes and the row joins nothing. */
+    * (more than `maxFineCover` fine cells) and `emitCWide`. A POINT covers
+    * its single cell per level. No emission at all (degenerate empty-side
+    * metadata, or a NaN or null MBR field) is an empty array — it explodes
+    * to zero rows, the schema still materializes and the row joins
+    * nothing. One codegen call (`lvl_tiles`), so the explode's `Generate`
+    * compiles into its whole-stage codegen stage. */
   private[graft] def lvlTiles(grid: GridConfig, maxFineCover: Int, emitF: Boolean,
-      emitCNarrow: Boolean, emitCWide: Boolean, rc: RectCols): Column = {
-    val emptyA = typedlit(Array.empty[Long])
-    def covers(fine: Boolean, coarse: Boolean): Column =
-      Seq(fine -> true, coarse -> false).collect {
-        case (true, lvl) => lvlCoverArr(grid, fine = lvl, rc)
-      }.reduceOption(concat(_, _)).getOrElse(emptyA)
-    // the explode runs interpreted (the cover's lambdas keep it out of
-    // whole-stage codegen), where every expression node costs per row: the
-    // wide test is evaluated once, as the pair filter's fine_cover_cnt
-    // kernel (bit-identical to fineCoverCnt, MergedKernelParitySpec)
-    val wide = GeoExprs.fineCoverCount(rc.xmin, rc.ymin, rc.xmax, rc.ymax,
-      grid) > maxFineCover
-    val guarded = when(nanMbr(rc), emptyA)
-    if (!emitF && !emitCNarrow && !emitCWide) emptyA
-    else if (!emitF && emitCNarrow == emitCWide) guarded.otherwise(covers(false, true))
-    else guarded.when(wide, covers(false, emitCWide))
-      .otherwise(covers(emitF, emitCNarrow))
-  }
+      emitCNarrow: Boolean, emitCWide: Boolean, rc: RectCols): Column =
+    GeoExprs.lvlTiles(rc.g, rc.xmin, rc.ymin, rc.xmax, rc.ymax, grid, LvlOffset,
+      maxFineCover, emitF, emitCNarrow, emitCWide)
 
   /** One side's join columns in one projection: `tile`, id, gtype and MBR
     * under the side's prefix (+ payload columns when not slim). */
@@ -1246,14 +1208,24 @@ object GeoEngine {
     val rCap = math.max(
       math.ceil(bound / grid.fineExtX).toInt,
       math.ceil(bound / grid.fineExtY).toInt) + 1
+    // every non-empty tile of the rCap box within the bound: walk the box's
+    // cells, or the histogram's keys when they are fewer (few, spread-out
+    // points make the box most of the grid)
+    val (iLo, iHi) = (math.max(hi - rCap, 0), math.min(hi + rCap, ppd - 1))
+    val (jLo, jHi) = (math.max(hj - rCap, 0), math.min(hj + rCap, ppd - 1))
+    def near(t: Long) = grid.distanceToTile(qx, qy, t) <= bound
+    if (tileCounts.size.toLong < (iHi - iLo + 1).toLong * (jHi - jLo + 1))
+      return tileCounts.keys.filter { t =>
+        val (i, j) = (t % ppd, t / ppd)
+        t >= 0 && i >= iLo && i <= iHi && j >= jLo && j <= jHi && near(t)
+      }.toSeq
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var i = math.max(hi - rCap, 0)
-    while (i <= math.min(hi + rCap, ppd - 1)) {
-      var j = math.max(hj - rCap, 0)
-      while (j <= math.min(hj + rCap, ppd - 1)) {
+    var i = iLo
+    while (i <= iHi) {
+      var j = jLo
+      while (j <= jHi) {
         val t = grid.tileId(i, j)
-        if (tileCounts.contains(t) && grid.distanceToTile(qx, qy, t) <= bound)
-          out += t
+        if (tileCounts.contains(t) && near(t)) out += t
         j += 1
       }
       i += 1

@@ -2,9 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, QuaternaryExpression, QuinaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ImplicitCastInputTypes, GenericInternalRow, QuaternaryExpression, QuinaryExpression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types._
 import graft.core._
@@ -198,8 +199,8 @@ object GeoKernels {
         clampIdxL(iy, yMin, fineExtY, globalPpd) * globalPpd == tile
   }
 
-  /** Fine-grid cover count of an MBR — scalar twin of
-    * GeoEngine.fineCoverCntP (same clamped-floor arithmetic), for the merged
+  /** Fine-grid cover count of an MBR — scalar twin of the four-clampIdx
+    * Column product (same clamped-floor arithmetic), for the merged
     * join's both-narrow level filter. Same JIT-ceiling motivation as
     * refCellDedup: 4 more inline clampIdx chains per side collapse to one
     * call. */
@@ -211,6 +212,91 @@ object GeoKernels {
     val jMin = clampIdxL(ymin, yMin, fineExtY, globalPpd)
     val jMax = clampIdxL(ymax, yMin, fineExtY, globalPpd)
     (iMax - iMin + 1L) * (jMax - jMin + 1L)
+  }
+
+  /** One grid level's clamped cover of an MBR, level-tagged (cell
+    * i + j·ppd + `tag`), j-major; a range counts down when its bounds are
+    * inverted, as Spark's `sequence` does. A POINT takes the single cell of
+    * its (xmin, ymin). */
+  private def levelCover(point: Boolean, xmin: Double, ymin: Double,
+      xmax: Double, ymax: Double, xMin: Double, yMin: Double,
+      extX: Double, extY: Double, ppd: Int, tag: Long): Array[Long] = {
+    val i0 = clampIdxL(xmin, xMin, extX, ppd)
+    val j0 = clampIdxL(ymin, yMin, extY, ppd)
+    if (point) return Array(i0 + j0 * ppd + tag)
+    val i1 = clampIdxL(xmax, xMin, extX, ppd)
+    val j1 = clampIdxL(ymax, yMin, extY, ppd)
+    val di = if (i1 >= i0) 1L else -1L
+    val dj = if (j1 >= j0) 1L else -1L
+    val ni = (math.abs(i1 - i0) + 1).toInt
+    val nj = (math.abs(j1 - j0) + 1).toInt
+    val out = new Array[Long](ni * nj)
+    var b = 0
+    while (b < nj) {
+      val row = (j0 + b * dj) * ppd + tag
+      var a = 0
+      while (a < ni) { out(b * ni + a) = i0 + a * di + row; a += 1 }
+      b += 1
+    }
+    out
+  }
+
+  /** A row's level-tagged tile cover for the merged exchange (see
+    * GeoEngine.lvlTiles): empty when any MBR field is NaN; a wide row (fine
+    * cover count > `maxFineCover`) emits its coarse cover iff `emitCWide`;
+    * a narrow row its fine cover iff `emitF`, then its coarse cover iff
+    * `emitCNarrow`. Coarse cells carry `lvlOffset`. */
+  def lvlTiles(g: Int, xmin: Double, ymin: Double, xmax: Double, ymax: Double,
+               xMin: Double, yMin: Double, fineExtX: Double, fineExtY: Double,
+               globalPpd: Int, coarseExtX: Double, coarseExtY: Double,
+               coarsePpd: Int, lvlOffset: Long, maxFineCover: Int,
+               emitF: Boolean, emitCNarrow: Boolean,
+               emitCWide: Boolean): ArrayData = {
+    val point = g == GeomType.POINT
+    def fine = levelCover(point, xmin, ymin, xmax, ymax, xMin, yMin,
+      fineExtX, fineExtY, globalPpd, 0L)
+    def coarse = levelCover(point, xmin, ymin, xmax, ymax, xMin, yMin,
+      coarseExtX, coarseExtY, coarsePpd, lvlOffset)
+    val tiles =
+      if (xmin.isNaN || ymin.isNaN || xmax.isNaN || ymax.isNaN) Array.emptyLongArray
+      else if (fineCoverCnt(xmin, ymin, xmax, ymax, xMin, yMin, fineExtX,
+          fineExtY, globalPpd) > maxFineCover)
+        if (emitCWide) coarse else Array.emptyLongArray
+      else if (emitF && emitCNarrow) Array.concat(fine, coarse)
+      else if (emitF) fine
+      else if (emitCNarrow) coarse
+      else Array.emptyLongArray
+    UnsafeArrayData.fromPrimitiveArray(tiles)
+  }
+
+  /** MBR (xmin, ymin, xmax, ymax) of a packed coordinate array
+    * [x0, y0, x1, y1, …]: `array_min` / `array_max` over its even and odd
+    * elements, bit for bit — a trailing odd element is ignored, null
+    * elements are skipped (an axis with none left is null), NaN orders
+    * above every number and the first of equal values is kept. */
+  def coordsMbr(cc: ArrayData): InternalRow = {
+    val out = new Array[Any](4)
+    val n = cc.numElements() / 2
+    var axis = 0
+    while (axis < 2) {
+      var lo = 0.0; var hi = 0.0; var seen = false
+      var v = 0
+      while (v < n) {
+        val e = 2 * v + axis
+        if (!cc.isNullAt(e)) {
+          val d = cc.getDouble(e)
+          if (!seen) { lo = d; hi = d; seen = true }
+          else {
+            if (SQLOrderingUtil.compareDoubles(d, lo) < 0) lo = d
+            if (SQLOrderingUtil.compareDoubles(d, hi) > 0) hi = d
+          }
+        }
+        v += 1
+      }
+      if (seen) { out(axis) = lo; out(axis + 2) = hi }
+      axis += 1
+    }
+    new GenericInternalRow(out)
   }
 
   /** APRIL topology (find-relation) intermediate filter; -1 = unresolved.
@@ -603,6 +689,65 @@ case class FineCoverCount(xmin: Expression, ymin: Expression,
     copy(xmin = a, ymin = b, xmax = c, ymax = d)
 }
 
+/** A row's level-tagged tile cover (GeoKernels.lvlTiles) as ONE codegen
+  * call: the grid, level offset, wide threshold and emit flags ride as
+  * constants. A null MBR field reads as NaN (no tiles); a null gtype as
+  * not a POINT. Any numeric input is cast to the expected type at
+  * analysis, so integer-typed bounds cover as their double values. */
+case class LvlTiles(g: Expression, xmin: Expression, ymin: Expression,
+                    xmax: Expression, ymax: Expression, grid: GridConfig,
+                    lvlOffset: Long, maxFineCover: Int, emitF: Boolean,
+                    emitCNarrow: Boolean, emitCWide: Boolean)
+    extends Expression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] =
+    Seq(IntegerType, DoubleType, DoubleType, DoubleType, DoubleType)
+  override def children: Seq[Expression] = Seq(g, xmin, ymin, xmax, ymax)
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "lvl_tiles"
+  override def eval(input: InternalRow): Any = {
+    val v = children.map(_.eval(input))
+    def d(i: Int) = if (v(i) == null) Double.NaN else v(i).asInstanceOf[Double]
+    GeoKernels.lvlTiles(if (v(0) == null) -1 else v(0).asInstanceOf[Int],
+      d(1), d(2), d(3), d(4), grid.xMin, grid.yMin, grid.fineExtX,
+      grid.fineExtY, grid.globalPpd, grid.coarseExtX, grid.coarseExtY,
+      grid.coarsePpd, lvlOffset, maxFineCover, emitF, emitCNarrow, emitCWide)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cs = children.map(_.genCode(ctx))
+    def arg(i: Int, ifNull: String) = s"${cs(i).isNull} ? $ifNull : ${cs(i).value}"
+    val consts = s"${grid.xMin}D, ${grid.yMin}D, ${grid.fineExtX}D, " +
+      s"${grid.fineExtY}D, ${grid.globalPpd}, ${grid.coarseExtX}D, " +
+      s"${grid.coarseExtY}D, ${grid.coarsePpd}, ${lvlOffset}L, $maxFineCover, " +
+      s"$emitF, $emitCNarrow, $emitCWide"
+    ev.copy(code = code"""
+      ${cs.map(_.code).mkString("\n")}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.GeoKernels.lvlTiles(${arg(0, "-1")},
+          ${(1 to 4).map(arg(_, "Double.NaN")).mkString(", ")}, $consts);""",
+      isNull = FalseLiteral)
+  }
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): LvlTiles =
+    copy(g = newChildren(0), xmin = newChildren(1), ymin = newChildren(2),
+      xmax = newChildren(3), ymax = newChildren(4))
+}
+
+/** MBR of a packed coordinate array as struct(xmin, ymin, xmax, ymax)
+  * (GeoKernels.coordsMbr, codegen). */
+case class CoordsMbr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = StructType(
+    Seq("xmin", "ymin", "xmax", "ymax").map(StructField(_, DoubleType)))
+  override def prettyName: String = "coords_mbr"
+  override def nullSafeEval(c: Any): Any =
+    GeoKernels.coordsMbr(c.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.GeoKernels.coordsMbr($c)")
+  override protected def withNewChildInternal(newChild: Expression): CoordsMbr =
+    copy(child = newChild)
+}
+
 /** Hex cell → boundary polygon WKT (raster→vector materialization, codegen). */
 case class HexCellWkt(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
@@ -673,6 +818,15 @@ object GeoExprs {
                      grid: GridConfig): Column =
     GraftColumnBridge.column(FineCoverCount(e(xmin), e(ymin), e(xmax), e(ymax),
       grid.xMin, grid.yMin, grid.fineExtX, grid.fineExtY, grid.globalPpd))
+
+  def lvlTiles(g: Column, xmin: Column, ymin: Column, xmax: Column, ymax: Column,
+               grid: GridConfig, lvlOffset: Long, maxFineCover: Int,
+               emitF: Boolean, emitCNarrow: Boolean, emitCWide: Boolean): Column =
+    GraftColumnBridge.column(LvlTiles(e(g), e(xmin), e(ymin), e(xmax), e(ymax),
+      grid, lvlOffset, maxFineCover, emitF, emitCNarrow, emitCWide))
+
+  def coordsMbr(coords: Column): Column =
+    GraftColumnBridge.column(CoordsMbr(e(coords)))
 
   def hilbertCell(x: Column, y: Column, xMin: Double, yMin: Double,
                   xExtent: Double, yExtent: Double, order: Int): Column = {

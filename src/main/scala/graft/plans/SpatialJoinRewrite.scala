@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import graft.GeoEngine
 import graft.GeoEngine.RectCols
 import graft.core.Predicates
-import graft.functions.STRefine
+import graft.functions.{GeoExprs, STRefine}
 
 /**
  * Catalyst optimizer rule: a declarative spatial-predicate join —
@@ -106,20 +106,17 @@ case class SpatialJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     def C(e: Expression): Column = GraftColumnBridge.column(e)
 
     // derive gtype + MBR from the predicate's own argument expressions
-    // (coords packed [x0,y0,x1,y1,...]) under a reserved prefix, so user
-    // columns of any name pass through; rows with degenerate coords
-    // (< 1 vertex) are dropped — sequence(1, 0) would count DOWN in Spark
-    // and element_at would fail under ANSI on the empty array. Then the
-    // engine's level-tagged emission with every level on.
+    // (coords packed [x0,y0,x1,y1,...], one codegen `coords_mbr` call) under
+    // a reserved prefix, so user columns of any name pass through; rows
+    // with degenerate coords (< 1 vertex) are dropped. Then the engine's
+    // level-tagged emission with every level on.
     def prep(child: LogicalPlan, p: String, g: Expression, c: Expression): DataFrame = {
       val cc = C(c)
-      val idx = sequence(lit(1), (size(cc) / 2).cast("int"))
-      val xs = transform(idx, i => element_at(cc, i * 2 - 1))
-      val ys = transform(idx, i => element_at(cc, i * 2))
       GraftColumnBridge.ofRows(spark, child).where(size(cc) >= 2)
-        .select(col("*"), C(g).as(p + "g"),
-          array_min(xs).as(p + "xmin"), array_min(ys).as(p + "ymin"),
-          array_max(xs).as(p + "xmax"), array_max(ys).as(p + "ymax"))
+        .select(col("*"), C(g).as(p + "g"), GeoExprs.coordsMbr(cc).as(p + "m"))
+        .select(col("*") +: Seq("xmin", "ymin", "xmax", "ymax")
+          .map(f => col(s"${p}m.$f").as(p + f)): _*)
+        .drop(p + "m")
         .withColumn(p + "tile", explode(GeoEngine.lvlTiles(grid,
           GeoEngine.MaxFineCover, emitF = true, emitCNarrow = true,
           emitCWide = true, RectCols.prefixed(p))))

@@ -1,7 +1,7 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
@@ -44,21 +44,19 @@ object Snapshots {
     val dataDir = snapDir.resolve("data")
 
     // per-partition row metrics via an accumulator, collected in the same
-    // pass that writes the data
+    // pass that writes the data, counted on the internal rows
     val acc = spark.sparkContext.collectionAccumulator[(Int, Long)]("graft.partRows")
-    val counted = df.mapPartitions { it =>
+    val counted = GraftColumnBridge.mapInternalPartitions(df) { (part, it) =>
       var n = 0L
-      val part = org.apache.spark.TaskContext.getPartitionId()
-      val buf = it.map { r => n += 1; r }
-      new Iterator[org.apache.spark.sql.Row] {
+      new Iterator[InternalRow] {
         def hasNext: Boolean = {
-          val h = buf.hasNext
+          val h = it.hasNext
           if (!h) acc.add((part, n))
           h
         }
-        def next(): org.apache.spark.sql.Row = buf.next()
+        def next(): InternalRow = { n += 1; it.next() }
       }
-    }(org.apache.spark.sql.Encoders.row(df.schema))
+    }
 
     counted.write.mode("overwrite").parquet(dataDir.toString)
 

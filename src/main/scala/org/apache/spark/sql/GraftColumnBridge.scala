@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -22,9 +23,16 @@ object GraftColumnBridge {
     * walk the whole history — the classic iterative-caching OOM). The RDD
     * still evaluates through the source frame's cache when one exists;
     * evaluation cost is unchanged, only the plan is cut. */
-  def flattenLineage(df: DataFrame): DataFrame = {
+  def flattenLineage(df: DataFrame): DataFrame =
+    mapInternalPartitions(df)((_, rows) => rows)
+
+  /** `f` over each partition's rows (with the partition index) as
+    * `InternalRow`s, re-rooted like flattenLineage: no encoder round trip
+    * to external `Row`s and back. */
+  def mapInternalPartitions(df: DataFrame)(
+      f: (Int, Iterator[InternalRow]) => Iterator[InternalRow]): DataFrame = {
     val cdf = df.asInstanceOf[classic.DataFrame]
     cdf.sparkSession.internalCreateDataFrame(
-      cdf.queryExecution.toRdd, cdf.schema)
+      cdf.queryExecution.toRdd.mapPartitionsWithIndex(f), cdf.schema)
   }
 }

@@ -279,4 +279,73 @@ class CsvRangeSpec extends AnyFunSuite {
     assert(knn(few, qs, 5) == brute(few, qs, 5))
     assert(knn(few, qs, 5).map(_._2) == Set(1, 2, 3))
   }
+
+  /** `GeoEngine.candidateKnnTiles` as it was before its box pass walked
+    * the histogram's keys: the Chebyshev rings and then every cell of the
+    * bound's (2·rCap+1)² box, cell by cell. */
+  private def cellWalkKnnTiles(qx: Double, qy: Double, k: Int, grid: GridConfig,
+      tileCounts: Map[Long, Long], total: Long): Set[Long] = {
+    if (total < k) return tileCounts.keySet
+    val ppd = grid.globalPpd
+    val hi = math.min(math.max(grid.fineX(qx), 0), ppd - 1)
+    val hj = math.min(math.max(grid.fineY(qy), 0), ppd - 1)
+    def count(i: Int, j: Int): Long =
+      if (i < 0 || i >= ppd || j < 0 || j >= ppd) 0L
+      else tileCounts.getOrElse(grid.tileId(i, j), 0L)
+    def ring(r: Int): Long =
+      if (r == 0) count(hi, hj)
+      else (hi - r to hi + r).map(i => count(i, hj - r) + count(i, hj + r)).sum +
+        (hj - r + 1 until hj + r).map(j => count(hi - r, j) + count(hi + r, j)).sum
+    var cum = ring(0)
+    var found = 0
+    while (cum < k && found < ppd - 1) { found += 1; cum += ring(found) }
+    if (cum < k) return tileCounts.keySet
+    val m = MBR(grid.xMin + (hi - found) * grid.fineExtX,
+                grid.yMin + (hj - found) * grid.fineExtY,
+                grid.xMin + (hi + found + 1) * grid.fineExtX,
+                grid.yMin + (hj + found + 1) * grid.fineExtY)
+    val bound = math.sqrt(Seq(
+      (qx - m.xmin) * (qx - m.xmin) + (qy - m.ymin) * (qy - m.ymin),
+      (qx - m.xmin) * (qx - m.xmin) + (qy - m.ymax) * (qy - m.ymax),
+      (qx - m.xmax) * (qx - m.xmax) + (qy - m.ymin) * (qy - m.ymin),
+      (qx - m.xmax) * (qx - m.xmax) + (qy - m.ymax) * (qy - m.ymax)).max)
+    val rCap = math.max(
+      math.ceil(bound / grid.fineExtX).toInt,
+      math.ceil(bound / grid.fineExtY).toInt) + 1
+    (for {
+      i <- math.max(hi - rCap, 0) to math.min(hi + rCap, ppd - 1)
+      j <- math.max(hj - rCap, 0) to math.min(hj + rCap, ppd - 1)
+      t = grid.tileId(i, j)
+      if tileCounts.contains(t) && grid.distanceToTile(qx, qy, t) <= bound
+    } yield t).toSet
+  }
+
+  test("kNN candidate tiles: walking the histogram's keys returns the cell walk's tiles") {
+    val grid = graft.web.Pages.WorldGrid
+    val ppd = grid.globalPpd
+    val rnd = new scala.util.Random(20261019L)
+    // spread and clustered histograms from 1 to 3,000 keys, a few of them
+    // off the grid (ids ≥ ppd²), under queries on and off the grid
+    for (nKeys <- Seq(1, 3, 5, 12, 40, 300, 3000); clustered <- Seq(false, true)) {
+      val (ci, cj) = (rnd.nextInt(ppd), rnd.nextInt(ppd))
+      val counts = (1 to nKeys).map { n =>
+        val t =
+          if (n % 17 == 0) ppd.toLong * ppd + rnd.nextInt(1000)
+          else if (clustered)
+            grid.tileId(math.min(math.max(ci + rnd.nextInt(21) - 10, 0), ppd - 1),
+              math.min(math.max(cj + rnd.nextInt(21) - 10, 0), ppd - 1))
+          else grid.tileId(rnd.nextInt(ppd), rnd.nextInt(ppd))
+        t -> (1L + rnd.nextInt(4))
+      }.toMap
+      val total = counts.values.sum
+      for (q <- 0 until 30; k <- Seq(1, 5, 20)) {
+        val qx = -200 + rnd.nextDouble() * 400
+        val qy = -100 + rnd.nextDouble() * 200
+        val got = GeoEngine.candidateKnnTiles(qx, qy, k, grid, counts, total)
+        assert(got.size == got.toSet.size, "a tile listed twice")
+        assert(got.toSet == cellWalkKnnTiles(qx, qy, k, grid, counts, total),
+          s"$nKeys keys (clustered $clustered), k $k, query ($qx, $qy)")
+      }
+    }
+  }
 }

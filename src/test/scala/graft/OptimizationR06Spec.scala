@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 import graft.web.Pages
 
@@ -15,10 +17,13 @@ import graft.web.Pages
  *    parallelism or already holds an exchange, still widens clearly-narrow
  *    inputs, and never launches a job;
  *  - no join-family query generates a method past the JVM's 8000-byte JIT
- *    ceiling (DontCompileHugeMethods runs such a method interpreted);
+ *    ceiling (DontCompileHugeMethods runs such a method interpreted), holds
+ *    a lambda expression, or runs a Generate outside whole-stage codegen;
  *  - batch kNN's top-k is limited map-side, before its exchange.
  */
 class OptimizationR06Spec extends AnyFunSuite {
+
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -118,14 +123,13 @@ class OptimizationR06Spec extends AnyFunSuite {
     cached.unpersist()
   }
 
-  test("JIT ceiling: every join-family query's codegen methods stay under 8000 bytes") {
+  /** Every join-family query's executed plan (the AQE final plan), from one
+    * noop write each; shared by the plan gates below. */
+  private lazy val joinFamilyPlans: Seq[(String, SparkPlan)] = {
     import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
-    import org.apache.spark.sql.execution.{QueryExecution, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    object Aqe extends AdaptiveSparkPlanHelper
     // every registry entry that calls spatialJoin, spatialJoinAuto,
     // findRelationJoin, rangeBatch, distanceJoin or knnBatchDf
     val joinFamily = Seq("q_pip_join", "q_skew_join", "q_inside_join",
@@ -144,26 +148,53 @@ class OptimizationR06Spec extends AnyFunSuite {
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try joinFamily.foreach { q =>
+    try joinFamily.map { q =>
       writes.clear()
       SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
       val qe = writes.poll(60, TimeUnit.SECONDS)
       assert(qe != null, s"$q: no write execution observed")
-      val stages = Aqe.collect(qe.executedPlan) { case w: WholeStageCodegenExec => w }
-      assert(stages.nonEmpty, s"$q: no whole-stage codegen in ${qe.executedPlan}")
+      q -> qe.executedPlan
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("JIT ceiling: every join-family query's codegen methods stay under 8000 bytes") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    joinFamilyPlans.foreach { case (q, plan) =>
+      val stages = Aqe.collect(plan) { case w: WholeStageCodegenExec => w }
+      assert(stages.nonEmpty, s"$q: no whole-stage codegen in $plan")
       stages.foreach { w =>
         val size = CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize
         assert(size < 8000,
           s"$q: codegen stage ${w.codegenStageId} has a $size-byte method")
       }
-    } finally spark.listenerManager.unregister(listener)
+    }
+  }
+
+  test("join-family plans hold no lambda and compile every Generate") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter}
+    // a stage's own operators: its subtree down to its InputAdapters
+    def compiled(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(compiled)
+    }
+    joinFamilyPlans.foreach { case (q, plan) =>
+      // a lambda (transform, filter, …) is CodegenFallback: it keeps its
+      // operator out of whole-stage codegen and evaluates per row, per node
+      val lambdas = Aqe.flatMap(plan)(_.expressions.flatMap(
+        _.collect { case h: HigherOrderFunction => h.prettyName }))
+      assert(lambdas.isEmpty, s"$q: lambdas $lambdas in $plan")
+      val inStage = Aqe.collect(plan) { case w: WholeStageCodegenExec => w }
+        .flatMap(w => compiled(w.child))
+      Aqe.collect(plan) { case g: GenerateExec => g }.foreach { g =>
+        assert(inStage.exists(_ eq g), s"$q: interpreted ${g.simpleString(200)}")
+      }
+    }
   }
 
   test("kNN top-k is a map-side WindowGroupLimit, not a typed aggregation") {
     import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    object Aqe extends AdaptiveSparkPlanHelper
     val df = SparkEntry.queries("q_knn")(spark, sfDir)
     assert(df.collect().nonEmpty)
     val plan = df.queryExecution.executedPlan

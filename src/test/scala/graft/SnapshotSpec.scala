@@ -150,23 +150,27 @@ class SnapshotSpec extends AnyFunSuite {
 
   test("index build: one exchange feeds the commit, no clustering column") {
     import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.command.DataWritingCommand
     import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.util.QueryExecutionListener
-    // every Exchange in `p`, through adaptive plans, query stages and cached
-    // relations (the build caches its widened input)
-    def exchanges(p: SparkPlan): Seq[SparkPlan] = {
-      val below = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
-        case _ => p.children
-      }
-      (if (p.isInstanceOf[Exchange]) Seq(p) else Nil) ++ below.flatMap(exchanges)
-    }
+    // the shuffles an RDD's lineage depends on, by id
+    def lineageShuffles(rdd: RDD[_]): Set[Int] = rdd.dependencies.flatMap {
+      case d: ShuffleDependency[_, _, _] => lineageShuffles(d.rdd) + d.shuffleId
+      case d => lineageShuffles(d.rdd)
+    }.toSet
+    // `p` and every operator below it, through adaptive plans, query stages
+    // and cached relations (the build caches its widened input)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => p.children
+    }).flatMap(nodes)
     val root = freshRoot()
     val writes = new LinkedBlockingQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
@@ -185,7 +189,17 @@ class SnapshotSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
     assert(commit != null, "no commit write observed")
     val plan = commit.executedPlan
-    assert(exchanges(plan).size == 1, plan.toString)
+    // every shuffle feeding the commit: its Exchanges, and the shuffles
+    // behind a scanned RDD (the commit counts its rows on the internal RDD)
+    val shuffles = nodes(plan).collect {
+      case _: Exchange => 1
+      case r: RDDScanExec => lineageShuffles(r.rdd).size
+    }.sum
+    assert(shuffles == 1, plan.toString)
+    // the rows are counted without a typed round trip to external Rows
+    val typed = Seq("DeserializeToObject", "SerializeFromObject", "MapPartitions")
+      .filter(n => nodes(plan).exists(_.nodeName.startsWith(n)))
+    assert(typed.isEmpty, s"typed operators $typed in $plan")
     assert(!built.df.columns.contains("home_coarse"))
     assert(built.df.count() == 2000L)
     assert(built.meta == GeoEngine.sideMeta(diamonds(2000), grid))

@@ -91,6 +91,19 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = spark.table("region_tag").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed == batch, s"stream ${streamed.size} vs batch ${batch.size}")
+    // integer-, long- and float-typed region bounds tag as their double values
+    val whole = regions.select(col("region_id"), floor(col("xmin")).as("xmin"),
+      floor(col("ymin")).as("ymin"), ceil(col("xmax")).as("xmax"),
+      ceil(col("ymax")).as("ymax"))
+    def tags(r: org.apache.spark.sql.DataFrame) =
+      StreamOps.regionTag(batchDf, r, grid).select(col("event_id"), col("region_id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def typed(t: String) = whole.select(col("region_id") +:
+      Seq("xmin", "ymin", "xmax", "ymax").map(c => col(c).cast(t).as(c)): _*)
+    val asDouble = tags(typed("double"))
+    assert(asDouble.nonEmpty)
+    for (t <- Seq("int", "long", "float"))
+      assert(tags(typed(t)) == asDouble, s"$t-typed region bounds")
   }
 
   test("sessionize: above-watermark disorder across micro-batches extends, " +
