@@ -121,8 +121,8 @@ object GeoEngine {
 
   /** Tile explode for any DataFrame carrying (gtype, xmin, ymin, xmax, ymax):
     * adds `tile`, one row per fine cell of the MBR cover (and keeps every
-    * original column); a row with a NaN or null MBR field gets none. The
-    * `lvl_tiles` codegen expression — no UDF, the cover generation stays
+    * original column); a row with a NaN or null MBR field gets none. One
+    * codegen `GeoKernels.lvlTiles` call — no UDF, the cover generation stays
     * inside whole-stage codegen. */
   def withTiles2(df: DataFrame, grid: GridConfig): DataFrame =
     df.withColumn("tile", explode(lvlTiles(grid, Int.MaxValue, emitF = true,
@@ -273,9 +273,8 @@ object GeoEngine {
     val out = scala.collection.mutable.ArrayBuffer.empty[CandRow]
     @inline def emit(r: SweepRow, s: SweepRow): Unit =
       if (r.xmax >= s.xmin && r.xmin <= s.xmax &&
-          GeoKernels.refCellDedup(tile, r.xmin, r.ymin, s.xmin, s.ymin,
-            grid.xMin, grid.yMin, grid.fineExtX, grid.fineExtY, grid.globalPpd,
-            grid.coarseExtX, grid.coarseExtY, grid.coarsePpd, LvlOffset))
+          GeoKernels.refCellDedup(tile, r.xmin, r.ymin, s.xmin, s.ymin, grid,
+            LvlOffset))
         out += CandRow(r.id, s.id, r.g, s.g,
           r.xmin, r.ymin, r.xmax, r.ymax, s.xmin, s.ymin, s.xmax, s.ymax)
     def sweep(rs: Array[SweepRow], ss: Array[SweepRow]): Unit = {
@@ -305,8 +304,7 @@ object GeoEngine {
       // coarse cell: a pair joins here only if one member is wide (both-
       // narrow pairs joined at fine) — all r × wide s, then wide r × narrow s
       def isWide(w: SweepRow): Boolean =
-        GeoKernels.fineCoverCnt(w.xmin, w.ymin, w.xmax, w.ymax, grid.xMin,
-          grid.yMin, grid.fineExtX, grid.fineExtY, grid.globalPpd) > maxFineCover
+        GeoKernels.fineCoverCnt(w.xmin, w.ymin, w.xmax, w.ymax, grid) > maxFineCover
       val (sWide, sNarrow) = ss.partition(isWide)
       sweep(rs, sWide)
       sweep(rs.filter(isWide), sNarrow)
@@ -389,7 +387,7 @@ object GeoEngine {
   /** A NaN or null in any MBR field: the cell formula floors NaN to cell 0,
     * and `greatest` skips a null, clamping it to cell 0 too, so such a row
     * would home (and MBR-test) as if it sat at the grid edge — the
-    * containment inner side drops it, as `lvl_tiles` gives it no tiles. */
+    * containment inner side drops it, as `lvlTiles` gives it no tiles. */
   private def nanMbr(rc: RectCols): Column =
     Seq(rc.xmin, rc.ymin, rc.xmax, rc.ymax)
       .map(c => isnan(c) || c.isNull).reduce(_ || _)
@@ -411,8 +409,8 @@ object GeoEngine {
     * its single cell per level. No emission at all (degenerate empty-side
     * metadata, or a NaN or null MBR field) is an empty array — it explodes
     * to zero rows, the schema still materializes and the row joins
-    * nothing. One codegen call (`lvl_tiles`), so the explode's `Generate`
-    * compiles into its whole-stage codegen stage. */
+    * nothing. One codegen call (`GeoKernels.lvlTiles`), so the explode's
+    * `Generate` compiles into its whole-stage codegen stage. */
   private[graft] def lvlTiles(grid: GridConfig, maxFineCover: Int, emitF: Boolean,
       emitCNarrow: Boolean, emitCWide: Boolean, rc: RectCols): Column =
     GeoExprs.lvlTiles(rc.g, rc.xmin, rc.ymin, rc.xmax, rc.ymax, grid, LvlOffset,
@@ -1086,8 +1084,7 @@ object GeoEngine {
     // the windows' dispatch metadata from the driver-side Geoms (no job)
     def any(p: Geom => Boolean) = queries.exists { case (_, g) => p(g) }
     def wide(g: Geom) = GeoKernels.fineCoverCnt(g.mbr.xmin, g.mbr.ymin,
-      g.mbr.xmax, g.mbr.ymax, grid.xMin, grid.yMin, grid.fineExtX,
-      grid.fineExtY, grid.globalPpd) > maxFineCover
+      g.mbr.xmax, g.mbr.ymax, grid) > maxFineCover
     def rect(g: Geom) = g.gtype == GeomType.POINT || g.gtype == GeomType.BOX
     val wm = SideMeta(hasWide = any(wide), hasNarrow = any(!wide(_)),
       hasNonRect = any(!rect(_)), hasNonBox = any(_.gtype != GeomType.BOX),

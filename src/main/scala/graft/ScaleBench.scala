@@ -10,7 +10,7 @@ import graft.web.Pages
  * spatial-join + tile-assignment job at two parallelism levels (N and 4N
  * cores evidences N→4N executors in this sandbox — see BASELINE.md; we use
  * local[2] vs local[8] because the sandbox VM's 32 "cores" stop scaling past
- * ~8-16 threads even for pure codegen arithmetic, measured by ScaleSanity).
+ * ~8-16 threads even for pure codegen arithmetic).
  *
  * Job: over a materialized Common-Crawl-style pages table (deterministic,
  * cached outside the timed window): geotag from url/text → fine-grid tile
@@ -104,8 +104,8 @@ object ScaleBench {
     // OSM-realistic sizes (small features) packed into a 35°×16° region so
     // candidate density is meaningful; APRIL interval lists stay compact.
     // Vertex-heavy stars (24-40 vertices, OSM-like feature complexity),
-    // synthesized by the codegen StarPoly kernel — no per-row UDF even in
-    // the input generator.
+    // synthesized by the codegen GeoKernels.starPoly call — no per-row UDF
+    // even in the input generator.
     def polys(n: Long, rad: Double, salt: Int) = {
       val base = spark.range(n).select(col("id"),
         ((col("id") * (29 + salt) % 3500) / 100.0 - 100.0).as("cx"),

@@ -687,7 +687,7 @@ object SparkEntry {
         .select(col("hexCell").as("hex_cell"),
           graft.functions.GeoExprs.hexCellWkt(col("hexCell")).as("wkt"))),
     // S2-style fallback cell index (north star: "H3 (and S2 fallback)"):
-    // the codegen HilbertCell expression IS the distributed form of
+    // the codegen GeoKernels.pointCell call IS the distributed form of
     // HexGrid.s2LikeCell (parity-tested)
     "q_s2_cells" -> ((s, dir) => {
       docPoints(s, dir).select(col("id"),
@@ -728,10 +728,9 @@ object SparkEntry {
     // --- web-scale layer (synthetic pages; deterministic) ---
     "q_geotag_tiles" -> ((s, dir) => {
       val n = if (dir.contains("0.001")) 2000L else if (dir.contains("0.01")) 20000L else 200000L
-      // column-only (url, text) synthesis: same bytes as Pages.synthesize
-      // (shared kernels, PagesSpec-pinned), but no Page encoder round-trip
-      // and no html/ts/lang work — the tile assignment reads neither
-      Pages.tileAssignments(s, Pages.synthesizeUrlText(s, n))
+      // the tile assignment reads only url and text: column pruning drops
+      // the html/ts/lang kernels from the synthesis
+      Pages.tileAssignments(s, Pages.synthesize(s, n).select("url", "text"))
         .select(col("id"), col("tile"), col("coarseTile").as("coarse_tile"), col("hexCell").as("hex_cell"))
     }),
     "q_media_features" -> ((s, dir) => {
@@ -746,9 +745,8 @@ object SparkEntry {
       // back — WAV/BMP by the pure-JVM codecs, PNG/JPEG by javax.imageio.
       // kind / width / height / frames all come from the real decode.
       // doc_id = fnv64(url) — the url is the ONLY page field this query
-      // reads, so synthesize just that column (identical bytes to the
-      // Pages.synthesize path; PagesSpec pins the kernels)
-      val pages = Pages.synthesizeUrlText(s, n)
+      // reads; column pruning drops the other kernels from the synthesis
+      val pages = Pages.synthesize(s, n).select("url", "text")
         .withColumn("doc_id", graft.functions.GeoExprs.fnv64(col("url")))
       // ONE pass: synthesize bytes, header-parse the metadata, decode the
       // features — no double synthesis, no join (map-side only)

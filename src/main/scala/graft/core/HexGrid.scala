@@ -79,9 +79,9 @@ object HexGrid {
 
   /** S2-style fallback: Hilbert-ordered square cell id at `order` over a
     * [-180,180]×[-90,90] grid. Bit-identical to the codegen
-    * [[graft.functions.HilbertCell]] expression over the same raster
-    * (divide-by-cell-extent form), so the distributed column path and this
-    * scalar API agree exactly — parity-tested. */
+    * `GeoExprs.hilbertCell` (kernel `GeoKernels.pointCell`) over the same
+    * raster (divide-by-cell-extent form), so the distributed column path and
+    * this scalar API agree exactly — parity-tested. */
   def s2LikeCell(lon: Double, lat: Double, order: Int): Long = {
     val n = 1L << order
     val cellW = 360.0 / n

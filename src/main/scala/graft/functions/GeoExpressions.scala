@@ -2,12 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ImplicitCastInputTypes, GenericInternalRow, QuaternaryExpression, QuinaryExpression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, Literal, QuaternaryExpression, QuinaryExpression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.functions.{coalesce, lit}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
 
 /**
@@ -174,7 +176,7 @@ object GeoKernels {
   /** Level-aware reference-cell dedup for the merged multi-resolution
     * exchange: keep the pair only in the cell (at the tile's own level)
     * owning the MBR intersection's min corner — the one rule for both
-    * physical joins (the hash join's MergedRefDedup and the plane sweep's
+    * physical joins (the hash join's `mergedRefDedup` and the plane sweep's
     * GeoEngine.sweepTile). Bit-identical for finite non-null inputs to the
     * Column chain `greatest` + clampIdx (on a NaN corner Spark's `greatest`
     * returns NaN, the scalar max here the other operand; both joins test
@@ -184,13 +186,11 @@ object GeoKernels {
     * 8000-byte JIT ceiling (DontCompileHugeMethods), so the hottest join
     * stage ran INTERPRETED (measured 2.5× on q_find_relation_april). */
   def refCellDedup(tile: Long, axmin: Double, aymin: Double,
-                   bxmin: Double, bymin: Double,
-                   xMin: Double, yMin: Double,
-                   fineExtX: Double, fineExtY: Double, globalPpd: Int,
-                   coarseExtX: Double, coarseExtY: Double, coarsePpd: Int,
+                   bxmin: Double, bymin: Double, grid: GridConfig,
                    lvlOffset: Long): Boolean = {
     val ix = if (axmin >= bxmin) axmin else bxmin
     val iy = if (aymin >= bymin) aymin else bymin
+    import grid._
     if (tile >= lvlOffset)
       clampIdxL(ix, xMin, coarseExtX, coarsePpd) +
         clampIdxL(iy, yMin, coarseExtY, coarsePpd) * coarsePpd + lvlOffset == tile
@@ -205,12 +205,11 @@ object GeoKernels {
     * refCellDedup: 4 more inline clampIdx chains per side collapse to one
     * call. */
   def fineCoverCnt(xmin: Double, ymin: Double, xmax: Double, ymax: Double,
-                   xMin: Double, yMin: Double,
-                   fineExtX: Double, fineExtY: Double, globalPpd: Int): Long = {
-    val iMin = clampIdxL(xmin, xMin, fineExtX, globalPpd)
-    val iMax = clampIdxL(xmax, xMin, fineExtX, globalPpd)
-    val jMin = clampIdxL(ymin, yMin, fineExtY, globalPpd)
-    val jMax = clampIdxL(ymax, yMin, fineExtY, globalPpd)
+                   grid: GridConfig): Long = {
+    val iMin = clampIdxL(xmin, grid.xMin, grid.fineExtX, grid.globalPpd)
+    val iMax = clampIdxL(xmax, grid.xMin, grid.fineExtX, grid.globalPpd)
+    val jMin = clampIdxL(ymin, grid.yMin, grid.fineExtY, grid.globalPpd)
+    val jMax = clampIdxL(ymax, grid.yMin, grid.fineExtY, grid.globalPpd)
     (iMax - iMin + 1L) * (jMax - jMin + 1L)
   }
 
@@ -247,20 +246,17 @@ object GeoKernels {
     * a narrow row its fine cover iff `emitF`, then its coarse cover iff
     * `emitCNarrow`. Coarse cells carry `lvlOffset`. */
   def lvlTiles(g: Int, xmin: Double, ymin: Double, xmax: Double, ymax: Double,
-               xMin: Double, yMin: Double, fineExtX: Double, fineExtY: Double,
-               globalPpd: Int, coarseExtX: Double, coarseExtY: Double,
-               coarsePpd: Int, lvlOffset: Long, maxFineCover: Int,
+               grid: GridConfig, lvlOffset: Long, maxFineCover: Int,
                emitF: Boolean, emitCNarrow: Boolean,
                emitCWide: Boolean): ArrayData = {
     val point = g == GeomType.POINT
-    def fine = levelCover(point, xmin, ymin, xmax, ymax, xMin, yMin,
-      fineExtX, fineExtY, globalPpd, 0L)
-    def coarse = levelCover(point, xmin, ymin, xmax, ymax, xMin, yMin,
-      coarseExtX, coarseExtY, coarsePpd, lvlOffset)
+    def fine = levelCover(point, xmin, ymin, xmax, ymax, grid.xMin, grid.yMin,
+      grid.fineExtX, grid.fineExtY, grid.globalPpd, 0L)
+    def coarse = levelCover(point, xmin, ymin, xmax, ymax, grid.xMin, grid.yMin,
+      grid.coarseExtX, grid.coarseExtY, grid.coarsePpd, lvlOffset)
     val tiles =
       if (xmin.isNaN || ymin.isNaN || xmax.isNaN || ymax.isNaN) Array.emptyLongArray
-      else if (fineCoverCnt(xmin, ymin, xmax, ymax, xMin, yMin, fineExtX,
-          fineExtY, globalPpd) > maxFineCover)
+      else if (fineCoverCnt(xmin, ymin, xmax, ymax, grid) > maxFineCover)
         if (emitCWide) coarse else Array.emptyLongArray
       else if (emitF && emitCNarrow) Array.concat(fine, coarse)
       else if (emitF) fine
@@ -298,6 +294,10 @@ object GeoKernels {
     }
     new GenericInternalRow(out)
   }
+
+  /** Boundary polygon of a hex cell as WKT (raster→vector materialization). */
+  def hexCellWkt(cell: Long): UTF8String =
+    UTF8String.fromString(Wkt.write(HexGrid.cellPolygon(cell)))
 
   /** APRIL topology (find-relation) intermediate filter; -1 = unresolved.
     * See GeoEngine.findRelationJoin for the soundness argument. Zero-copy
@@ -409,29 +409,6 @@ case class AprilTopoRel(ra: Expression, rf: Expression, sa: Expression,
       sf = newChildren(3), mbrCase = newChildren(4))
 }
 
-/** Hilbert cell of a point over the dataspace raster (codegen). */
-case class HilbertCell(x: Expression, y: Expression,
-                       xMin: Double, yMin: Double,
-                       cellW: Double, cellH: Double, n: Long)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def left: Expression = x
-  override def right: Expression = y
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hilbert_cell"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GeoKernels.pointCell(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      xMin, yMin, cellW, cellH, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.GeoKernels.pointCell($a, $b, ${xMin}D, ${yMin}D, " +
-        s"${cellW}D, ${cellH}D, ${n}L)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HilbertCell =
-    copy(x = newLeft, y = newRight)
-}
-
 /** APRIL rasterization at index build: struct(all, full) interval lists. */
 case class AprilRasterize(gtype: Expression, coords: Expression,
                           xMin: Double, yMin: Double,
@@ -470,35 +447,6 @@ case class Fnv64(child: Expression) extends UnaryExpression with ExpectsInputTyp
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.ops.TextOps.fnv64($c.toString())")
   override protected def withNewChildInternal(newChild: Expression): Fnv64 =
-    copy(child = newChild)
-}
-
-/** Deterministic synthetic page url for an id (codegen; delegates to the
-  * same Pages.urlFor kernel the typed `synthesize` path uses, so both paths
-  * are byte-identical by construction). */
-case class PageUrl(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "page_url"
-  override def nullSafeEval(id: Any): Any =
-    graft.web.Pages.urlUtf8(id.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.web.Pages.urlUtf8($c)")
-  override protected def withNewChildInternal(newChild: Expression): PageUrl =
-    copy(child = newChild)
-}
-
-/** Deterministic synthetic page text for an id (codegen; same Pages.textFor
-  * kernel as the typed path). */
-case class PageText(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "page_text"
-  override def nullSafeEval(id: Any): Any =
-    graft.web.Pages.textUtf8(id.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.web.Pages.textUtf8($c)")
-  override protected def withNewChildInternal(newChild: Expression): PageText =
     copy(child = newChild)
 }
 
@@ -624,175 +572,41 @@ case class KnnTiles(x: Expression, y: Expression, k: Int,
     copy(x = newLeft, y = newRight)
 }
 
-/** Merged-exchange reference-cell dedup as ONE compact codegen call.
-  * Bit-identical for finite non-null inputs to the inline Column chain it
-  * replaces (`when(tile >= LvlOffset, coarseRefCell === tile)
-  * .otherwise(fineRefCell === tile)` over clampIdx chains); the point is
-  * BYTECODE SIZE: the inline
-  * form pushed the merged join's generated doConsume past the JVM's
-  * 8000-byte JIT ceiling, de-optimizing the whole stage to interpreted
-  * bytecode (guide §4 — keep the hot path in compiled codegen). */
-case class MergedRefDedup(tile: Expression, axmin: Expression, aymin: Expression,
-                          bxmin: Expression, bymin: Expression,
-                          xMin: Double, yMin: Double,
-                          fineExtX: Double, fineExtY: Double, globalPpd: Int,
-                          coarseExtX: Double, coarseExtY: Double, coarsePpd: Int,
-                          lvlOffset: Long)
-    extends QuinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(LongType, DoubleType, DoubleType, DoubleType, DoubleType)
-  override def children: Seq[Expression] = Seq(tile, axmin, aymin, bxmin, bymin)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "merged_ref_dedup"
-  private def call = "graft.functions.GeoKernels.refCellDedup"
-  private def consts =
-    s"${xMin}D, ${yMin}D, ${fineExtX}D, ${fineExtY}D, $globalPpd, " +
-      s"${coarseExtX}D, ${coarseExtY}D, $coarsePpd, ${lvlOffset}L"
-  override def nullSafeEval(t: Any, a: Any, b: Any, c: Any, d: Any): Any =
-    GeoKernels.refCellDedup(t.asInstanceOf[Long], a.asInstanceOf[Double],
-      b.asInstanceOf[Double], c.asInstanceOf[Double], d.asInstanceOf[Double],
-      xMin, yMin, fineExtX, fineExtY, globalPpd,
-      coarseExtX, coarseExtY, coarsePpd, lvlOffset)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, a, b, c, d) => s"$call($t, $a, $b, $c, $d, $consts)")
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): MergedRefDedup =
-    copy(tile = newChildren(0), axmin = newChildren(1), aymin = newChildren(2),
-      bxmin = newChildren(3), bymin = newChildren(4))
-}
-
-/** Fine-grid cover count of an MBR as one codegen call — scalar twin of the
-  * 4-clampIdx Column chain; same JIT-ceiling motivation as MergedRefDedup. */
-case class FineCoverCount(xmin: Expression, ymin: Expression,
-                          xmax: Expression, ymax: Expression,
-                          xMin: Double, yMin: Double,
-                          fineExtX: Double, fineExtY: Double, globalPpd: Int)
-    extends QuaternaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(DoubleType, DoubleType, DoubleType, DoubleType)
-  override def first: Expression = xmin
-  override def second: Expression = ymin
-  override def third: Expression = xmax
-  override def fourth: Expression = ymax
-  override def dataType: DataType = LongType
-  override def prettyName: String = "fine_cover_cnt"
-  override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    GeoKernels.fineCoverCnt(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      c.asInstanceOf[Double], d.asInstanceOf[Double],
-      xMin, yMin, fineExtX, fineExtY, globalPpd)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"graft.functions.GeoKernels.fineCoverCnt($a, $b, $c, $d, " +
-        s"${xMin}D, ${yMin}D, ${fineExtX}D, ${fineExtY}D, $globalPpd)")
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression, d: Expression): FineCoverCount =
-    copy(xmin = a, ymin = b, xmax = c, ymax = d)
-}
-
-/** A row's level-tagged tile cover (GeoKernels.lvlTiles) as ONE codegen
-  * call: the grid, level offset, wide threshold and emit flags ride as
-  * constants. A null MBR field reads as NaN (no tiles); a null gtype as
-  * not a POINT. Any numeric input is cast to the expected type at
-  * analysis, so integer-typed bounds cover as their double values. */
-case class LvlTiles(g: Expression, xmin: Expression, ymin: Expression,
-                    xmax: Expression, ymax: Expression, grid: GridConfig,
-                    lvlOffset: Long, maxFineCover: Int, emitF: Boolean,
-                    emitCNarrow: Boolean, emitCWide: Boolean)
-    extends Expression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(IntegerType, DoubleType, DoubleType, DoubleType, DoubleType)
-  override def children: Seq[Expression] = Seq(g, xmin, ymin, xmax, ymax)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lvl_tiles"
-  override def eval(input: InternalRow): Any = {
-    val v = children.map(_.eval(input))
-    def d(i: Int) = if (v(i) == null) Double.NaN else v(i).asInstanceOf[Double]
-    GeoKernels.lvlTiles(if (v(0) == null) -1 else v(0).asInstanceOf[Int],
-      d(1), d(2), d(3), d(4), grid.xMin, grid.yMin, grid.fineExtX,
-      grid.fineExtY, grid.globalPpd, grid.coarseExtX, grid.coarseExtY,
-      grid.coarsePpd, lvlOffset, maxFineCover, emitF, emitCNarrow, emitCWide)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cs = children.map(_.genCode(ctx))
-    def arg(i: Int, ifNull: String) = s"${cs(i).isNull} ? $ifNull : ${cs(i).value}"
-    val consts = s"${grid.xMin}D, ${grid.yMin}D, ${grid.fineExtX}D, " +
-      s"${grid.fineExtY}D, ${grid.globalPpd}, ${grid.coarseExtX}D, " +
-      s"${grid.coarseExtY}D, ${grid.coarsePpd}, ${lvlOffset}L, $maxFineCover, " +
-      s"$emitF, $emitCNarrow, $emitCWide"
-    ev.copy(code = code"""
-      ${cs.map(_.code).mkString("\n")}
-      ${CodeGenerator.javaType(dataType)} ${ev.value} =
-        graft.functions.GeoKernels.lvlTiles(${arg(0, "-1")},
-          ${(1 to 4).map(arg(_, "Double.NaN")).mkString(", ")}, $consts);""",
-      isNull = FalseLiteral)
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): LvlTiles =
-    copy(g = newChildren(0), xmin = newChildren(1), ymin = newChildren(2),
-      xmax = newChildren(3), ymax = newChildren(4))
-}
-
-/** MBR of a packed coordinate array as struct(xmin, ymin, xmax, ymax)
-  * (GeoKernels.coordsMbr, codegen). */
-case class CoordsMbr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = StructType(
-    Seq("xmin", "ymin", "xmax", "ymax").map(StructField(_, DoubleType)))
-  override def prettyName: String = "coords_mbr"
-  override def nullSafeEval(c: Any): Any =
-    GeoKernels.coordsMbr(c.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GeoKernels.coordsMbr($c)")
-  override protected def withNewChildInternal(newChild: Expression): CoordsMbr =
-    copy(child = newChild)
-}
-
-/** Hex cell → boundary polygon WKT (raster→vector materialization, codegen). */
-case class HexCellWkt(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "hex_cell_wkt"
-  override def nullSafeEval(c: Any): Any =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      Wkt.write(HexGrid.cellPolygon(c.asInstanceOf[Long])))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.core.Wkt.write(graft.core.HexGrid.cellPolygon($c)))")
-  override protected def withNewChildInternal(newChild: Expression): HexCellWkt =
-    copy(child = newChild)
-}
-
-/** Star-polygon fixture synthesis (codegen): closed ring as array<double>. */
-case class StarPoly(id: Expression, cx: Expression, cy: Expression,
-                    rad: Expression, nBase: Int, nMod: Int,
-                    rBase: Double, rSpan: Double)
-    extends QuaternaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(LongType, DoubleType, DoubleType, DoubleType)
-  override def first: Expression = id
-  override def second: Expression = cx
-  override def third: Expression = cy
-  override def fourth: Expression = rad
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "star_poly"
-  override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    GeoKernels.starPoly(a.asInstanceOf[Long], b.asInstanceOf[Double],
-      c.asInstanceOf[Double], d.asInstanceOf[Double], nBase, nMod, rBase, rSpan)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"graft.functions.GeoKernels.starPoly($a, $b, $c, $d, " +
-        s"$nBase, $nMod, ${rBase}D, ${rSpan}D)")
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression, d: Expression): StarPoly =
-    copy(id = a, cx = b, cy = c, rad = d)
-}
-
-/** Column-level wrappers. */
+/**
+ * Column-level wrappers.
+ *
+ * A kernel is bound through Spark's `StaticInvoke` (`invoke` below): the
+ * generated code calls the object's static forwarder, the interpreted path
+ * calls it by reflection, and `explain` prints
+ * `static_invoke(graft.functions.GeoKernels.<kernel>(…))`. An expression
+ * keeps its own class only where `StaticInvoke` cannot give what it needs:
+ *  - the 14 SQL functions that `GraftExtensions` registers, for their SQL
+ *    names, their analysis-time type errors and their constructor checks
+ *    (`STRefine` is also `SpatialJoinRewrite`'s anchor);
+ *  - `AprilTopoRel` and `AprilRasterize`, which perfbench's
+ *    `engine.april_exprs` counts by class name;
+ *  - `KnnTiles` and `IvfAssign`, which carry a driver-side object.
+ */
 object GeoExprs {
   private def e(c: Column): Expression = GraftColumnBridge.expression(c)
+
+  /** `kernel.fn(args…, consts…)` as one codegen call. Each argument column
+    * is cast to its parameter type at analysis; the constants ride as
+    * literals, a grid as one object literal (its nine fields as nine
+    * literals measured slower to analyze and run). A null argument gives a
+    * null result, so the output is nullable only where an argument is. */
+  private def invoke(kernel: AnyRef, fn: String, dataType: DataType,
+                     args: Seq[(Column, DataType)], consts: Any*): Column = {
+    val lits = consts.map {
+      case grid: GridConfig => Literal.fromObject(grid)
+      case v => Literal(v)
+    }
+    GraftColumnBridge.column(StaticInvoke(kernel.getClass, dataType, fn,
+      args.map(a => e(a._1)) ++ lits, args.map(_._2) ++ lits.map(_.dataType),
+      returnNullable = false))
+  }
+
+  private def doubles(cs: Column*): Seq[(Column, DataType)] = cs.map(_ -> DoubleType)
 
   def stRefine(pred: Int, rg: Column, rc: Column, sg: Column, sc: Column): Column =
     GraftColumnBridge.column(STRefine(pred, e(rg), e(rc), e(sg), e(sc)))
@@ -806,33 +620,41 @@ object GeoExprs {
   def aprilTopoRel(ra: Column, rf: Column, sa: Column, sf: Column, mbrCase: Column): Column =
     GraftColumnBridge.column(AprilTopoRel(e(ra), e(rf), e(sa), e(sf), e(mbrCase)))
 
+  /** GeoKernels.refCellDedup: the merged exchange's reference-cell dedup. */
   def mergedRefDedup(tile: Column, axmin: Column, aymin: Column,
                      bxmin: Column, bymin: Column,
                      grid: GridConfig, lvlOffset: Long): Column =
-    GraftColumnBridge.column(MergedRefDedup(e(tile), e(axmin), e(aymin),
-      e(bxmin), e(bymin), grid.xMin, grid.yMin,
-      grid.fineExtX, grid.fineExtY, grid.globalPpd,
-      grid.coarseExtX, grid.coarseExtY, grid.coarsePpd, lvlOffset))
+    invoke(GeoKernels, "refCellDedup", BooleanType,
+      (tile -> LongType) +: doubles(axmin, aymin, bxmin, bymin), grid, lvlOffset)
 
+  /** GeoKernels.fineCoverCnt: an MBR's fine-grid cover count. */
   def fineCoverCount(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
                      grid: GridConfig): Column =
-    GraftColumnBridge.column(FineCoverCount(e(xmin), e(ymin), e(xmax), e(ymax),
-      grid.xMin, grid.yMin, grid.fineExtX, grid.fineExtY, grid.globalPpd))
+    invoke(GeoKernels, "fineCoverCnt", LongType, doubles(xmin, ymin, xmax, ymax), grid)
 
+  /** GeoKernels.lvlTiles: a row's level-tagged tile cover, never null. A
+    * null MBR field reads as NaN (no tiles), a null gtype as -1 (not a
+    * POINT); numeric bounds of any type cover as their double values. */
   def lvlTiles(g: Column, xmin: Column, ymin: Column, xmax: Column, ymax: Column,
                grid: GridConfig, lvlOffset: Long, maxFineCover: Int,
                emitF: Boolean, emitCNarrow: Boolean, emitCWide: Boolean): Column =
-    GraftColumnBridge.column(LvlTiles(e(g), e(xmin), e(ymin), e(xmax), e(ymax),
-      grid, lvlOffset, maxFineCover, emitF, emitCNarrow, emitCWide))
+    invoke(GeoKernels, "lvlTiles", ArrayType(LongType, containsNull = false),
+      (coalesce(g, lit(-1)) -> IntegerType) +:
+        doubles(Seq(xmin, ymin, xmax, ymax).map(coalesce(_, lit(Double.NaN))): _*),
+      grid, lvlOffset, maxFineCover, emitF, emitCNarrow, emitCWide)
 
+  /** GeoKernels.coordsMbr: struct(xmin, ymin, xmax, ymax) of packed coords. */
   def coordsMbr(coords: Column): Column =
-    GraftColumnBridge.column(CoordsMbr(e(coords)))
+    invoke(GeoKernels, "coordsMbr",
+      StructType(Seq("xmin", "ymin", "xmax", "ymax").map(StructField(_, DoubleType))),
+      Seq(coords -> ArrayType(DoubleType)))
 
+  /** GeoKernels.pointCell: a point's Hilbert cell on the 2^order raster. */
   def hilbertCell(x: Column, y: Column, xMin: Double, yMin: Double,
                   xExtent: Double, yExtent: Double, order: Int): Column = {
     val n = 1L << order
-    GraftColumnBridge.column(HilbertCell(e(x), e(y), xMin, yMin,
-      xExtent / n, yExtent / n, n))
+    invoke(GeoKernels, "pointCell", LongType, doubles(x, y),
+      xMin, yMin, xExtent / n, yExtent / n, n)
   }
 
   def aprilRasterize(gtype: Column, coords: Column, xMin: Double, yMin: Double,
@@ -842,20 +664,34 @@ object GeoExprs {
 
   def fnv64(s: Column): Column = GraftColumnBridge.column(Fnv64(e(s)))
 
-  def pageUrl(id: Column): Column = GraftColumnBridge.column(PageUrl(e(id)))
+  /** Pages.urlUtf8: the synthetic page url of an id. */
+  def pageUrl(id: Column): Column =
+    invoke(graft.web.Pages, "urlUtf8", StringType, Seq(id -> LongType))
 
-  def pageText(id: Column): Column = GraftColumnBridge.column(PageText(e(id)))
+  /** Pages.textUtf8: the synthetic page text of an id. */
+  def pageText(id: Column): Column =
+    invoke(graft.web.Pages, "textUtf8", StringType, Seq(id -> LongType))
 
+  /** Pages.langUtf8: the synthetic page language of an id. */
+  private[graft] def pageLang(id: Column): Column =
+    invoke(graft.web.Pages, "langUtf8", StringType, Seq(id -> LongType))
+
+  /** Pages.warcMillis: the synthetic page crawl time of an id, epoch ms. */
+  private[graft] def pageWarcMillis(id: Column): Column =
+    invoke(graft.web.Pages, "warcMillis", LongType, Seq(id -> LongType))
+
+  /** GeoKernels.starPoly: the star-polygon fixture ring of an id. */
   def starPoly(id: Column, cx: Column, cy: Column, rad: Column,
                nBase: Int, nMod: Int, rBase: Double, rSpan: Double): Column =
-    GraftColumnBridge.column(StarPoly(e(id), e(cx), e(cy), e(rad),
-      nBase, nMod, rBase, rSpan))
+    invoke(GeoKernels, "starPoly", ArrayType(DoubleType, containsNull = false),
+      (id -> LongType) +: doubles(cx, cy, rad), nBase, nMod, rBase, rSpan)
 
   def hexCellOf(x: Column, y: Column, res: Int): Column =
     GraftColumnBridge.column(HexCellOf(e(x), e(y), res))
 
+  /** GeoKernels.hexCellWkt: a hex cell's boundary polygon as WKT. */
   def hexCellWkt(cell: Column): Column =
-    GraftColumnBridge.column(HexCellWkt(e(cell)))
+    invoke(GeoKernels, "hexCellWkt", StringType, Seq(cell -> LongType))
 
   def lshSig(vec: Column, seed: Column, nBits: Int): Column =
     GraftColumnBridge.column(LshSig(e(vec), e(seed), nBits))

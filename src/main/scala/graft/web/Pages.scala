@@ -2,6 +2,7 @@ package graft.web
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
 import graft.functions.GeoExprs
 
@@ -49,43 +50,32 @@ object Pages {
     h
   }
 
-  /** Deterministic url for a page id — the single definition `synthesize`
-    * and the codegen [[graft.functions.PageUrl]] expression both call, so
-    * the two synthesis paths are byte-identical by construction
-    * (PagesSpec asserts it). */
+  /** Deterministic url for a page id. */
   def urlFor(id: Long): String =
     s"https://site-${Math.floorMod(mix(id), 10000L)}.example/page/${id}"
 
-  // UTF8String entry points for the codegen expressions (PageUrl/PageText):
-  // consumers that only need url/text columns skip the typed-map encoder
-  // and the html/timestamp/lang synthesis entirely
-  def urlUtf8(id: Long): org.apache.spark.unsafe.types.UTF8String =
-    org.apache.spark.unsafe.types.UTF8String.fromString(urlFor(id))
-  def textUtf8(id: Long): org.apache.spark.unsafe.types.UTF8String =
-    org.apache.spark.unsafe.types.UTF8String.fromString(textFor(id))
+  // the per-id kernels `synthesize` binds as codegen calls (GeoExprs)
+  def urlUtf8(id: Long): UTF8String = UTF8String.fromString(urlFor(id))
+  def textUtf8(id: Long): UTF8String = UTF8String.fromString(textFor(id))
+  def langUtf8(id: Long): UTF8String =
+    UTF8String.fromString(Langs(Math.floorMod(mix(id + 7), Langs.length.toLong).toInt))
+  def warcMillis(id: Long): Long =
+    1600000000000L + Math.floorMod(mix(id + 3), 100000000L)
 
-  /** Generate `n` synthetic pages, distributed via spark.range. */
+  /** Generate `n` synthetic pages over spark.range, as codegen kernel calls
+    * (no Page object per row): a consumer that selects only some fields
+    * computes only those, since column pruning drops the rest. */
   def synthesize(spark: SparkSession, n: Long): Dataset[Page] = {
     import spark.implicits._
-    spark.range(n).map { id =>
-      val url = urlFor(id)
-      val text = textFor(id)
-      val lang = Langs(Math.floorMod(mix(id + 7), Langs.length.toLong).toInt)
-      val html = s"<html><body>$text</body></html>".getBytes("UTF-8")
-      val ts = new java.sql.Timestamp(1600000000000L + Math.floorMod(mix(id + 3), 100000000L))
-      Page(url, ts, html, text, lang)
-    }
-  }
-
-  /** Column-only synthesis of the (url, text) slice: same bytes as
-    * `synthesize` (shared kernels), but as codegen expressions over
-    * spark.range — no Page object, no encoder ser/de, and no html/ts/lang
-    * work for consumers (geotagging, doc-id derivation) that never read
-    * them. Guide §2.3: don't compute what you throw away. */
-  def synthesizeUrlText(spark: SparkSession, n: Long): DataFrame =
+    val id = col("id")
+    val text = GeoExprs.pageText(id)
     spark.range(n).select(
-      GeoExprs.pageUrl(col("id")).as("url"),
-      GeoExprs.pageText(col("id")).as("text"))
+      GeoExprs.pageUrl(id).as("url"),
+      timestamp_millis(GeoExprs.pageWarcMillis(id)).as("warc_ts"),
+      concat(lit("<html><body>"), text, lit("</body></html>")).cast("binary").as("html"),
+      text.as("text"),
+      GeoExprs.pageLang(id).as("lang")).as[Page]
+  }
 
   /** Deterministic geotag from url+text: FNV64 of the url picks the
     * longitude band, a text fingerprint the latitude — stable per url.

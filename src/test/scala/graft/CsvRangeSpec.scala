@@ -77,7 +77,7 @@ class CsvRangeSpec extends AnyFunSuite {
     // the all-point side is never rasterized, so never widened for it: its
     // one-cell A-list is synthesized on the row
     val optimized = df(true).queryExecution.optimizedPlan.toString
-    assert(optimized.contains("hilbert_cell"), optimized)
+    assert(optimized.contains("GeoKernels.pointCell"), optimized)
     assert(!optimized.contains("april_rasterize"), optimized)
     val executed = df(true).queryExecution.executedPlan.toString
     assert(!executed.contains("RoundRobinPartitioning"), executed)
@@ -133,8 +133,7 @@ class CsvRangeSpec extends AnyFunSuite {
       (201L, Geom.point(p7.xmin, p7.ymin)))
     val wins = wide ++ boxes ++ narrow
     def isWide(g: Geom) = GeoKernels.fineCoverCnt(g.mbr.xmin, g.mbr.ymin,
-      g.mbr.xmax, g.mbr.ymax, grid.xMin, grid.yMin, grid.fineExtX,
-      grid.fineExtY, grid.globalPpd) > GeoEngine.MaxFineCover
+      g.mbr.xmax, g.mbr.ymax, grid) > GeoEngine.MaxFineCover
     assert(wide.forall(w => isWide(w._2)) && narrow.forall(w => !isWide(w._2)))
     // brute-force oracle: the exact predicate over every (window, object)
     val raw = pts.collect()

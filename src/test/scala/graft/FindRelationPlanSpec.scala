@@ -86,7 +86,7 @@ class FindRelationPlanSpec extends AnyFunSuite {
     // the point side must synthesize its A-list inline, not rasterize
     val plan = withApril.queryExecution.optimizedPlan.toString
     assert(plan.contains("april_topo_rel"), "topology filter missing from plan")
-    assert(plan.contains("hilbert_cell"), "point A-list not synthesized inline")
+    assert(plan.contains("GeoKernels.pointCell"), "point A-list not synthesized inline")
     val exact = GeoEngine.findRelationJoin(points(0, 1500), diamonds(3, 200), grid)
     val a = triples(withApril)
     assert(a == triples(exact))
@@ -103,7 +103,7 @@ class FindRelationPlanSpec extends AnyFunSuite {
       grid, useApril = true, aprilOrder = 10)
     val ddPlan = dd.queryExecution.optimizedPlan.toString
     assert(ddPlan.contains("april_topo_rel"), "topology filter missing from plan")
-    assert(!ddPlan.contains("hilbert_cell"), "polygon A-list synthesized as a point's")
+    assert(!ddPlan.contains("GeoKernels.pointCell"), "polygon A-list synthesized as a point's")
     val ddRel = triples(dd)
     assert(ddRel == triples(GeoEngine.findRelationJoin(diamonds(3, 200),
       diamonds(4, 200), grid)))
@@ -133,6 +133,6 @@ class FindRelationPlanSpec extends AnyFunSuite {
     val withApril = join(useApril = true)
     assert(rasterizeCount(withApril) == rasterizeCount(join(useApril = false)),
       withApril.queryExecution.analyzed.toString)
-    assert(withApril.queryExecution.optimizedPlan.toString.contains("hilbert_cell"))
+    assert(withApril.queryExecution.optimizedPlan.toString.contains("GeoKernels.pointCell"))
   }
 }

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{GeomType, GridConfig}
-import graft.functions.GeoExprs
+import graft.core.{GeomType, GridConfig, HexGrid}
+import graft.functions.{GeoExprs, GeoKernels}
 import graft.web.Pages
 
 /**
@@ -18,6 +19,11 @@ import graft.web.Pages
  * (clamping) and degenerate point MBRs. The same holds for the kernels that
  * replaced lambda chains: lvl_tiles vs the tile emission's Column chain, and
  * coords_mbr vs the SQL rewrite's array_min/array_max over transform.
+ *
+ * Each Column binding (a StaticInvoke of its kernel) also equals a direct
+ * call of that kernel, under whole-stage codegen and interpreted, with null
+ * inputs: a null argument gives a null result, except lvl_tiles, which
+ * reads a null MBR field as NaN (no tiles) and a null gtype as -1.
  */
 class MergedKernelParitySpec extends AnyFunSuite {
 
@@ -29,6 +35,45 @@ class MergedKernelParitySpec extends AnyFunSuite {
 
   private val grid: GridConfig = Pages.WorldGrid
   private val LvlOffset = 1L << 40
+
+  /** `body` under whole-stage codegen, then on the interpreted eval path. */
+  private def inModes(body: Map[String, String] => Unit): Unit =
+    Seq(Map.empty[String, String],
+      Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")).foreach { mode =>
+      mode.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body(mode) finally mode.keys.foreach(spark.conf.unset)
+    }
+
+  /** Doubles as raw bits (NaN and -0.0 included), recursively. */
+  private def bits(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case s: scala.collection.Seq[_] => s.map(bits).toList
+    case r: Row => r.toSeq.map(bits).toList
+    case other => other
+  }
+
+  /** `binding` over `df` equals `kernel` on each row's `args`, bit for bit,
+    * in both modes. */
+  private def bindingParity(df: DataFrame, binding: Column, args: String*)(
+      kernel: Row => Any): Unit =
+    inModes { mode =>
+      val out = df.select(args.map(col) :+ binding: _*).collect()
+      assert(out.nonEmpty)
+      out.foreach { r =>
+        assert(bits(r.get(args.size)) == bits(kernel(r)), s"$mode: $r")
+      }
+    }
+
+  /** null if any of the row's first `n` fields is null, else `v`. */
+  private def nullOr(r: Row, n: Int)(v: => Any): Any =
+    if ((0 until n).exists(r.isNullAt)) null else v
+
+  /** `df` plus, for each of `cols` in turn, a few rows with it null. */
+  private def withNulls(df: DataFrame, cols: String*): DataFrame =
+    cols.foldLeft(df) { (acc, c) =>
+      acc.union(df.limit(8).withColumn(c, lit(null).cast(df.schema(c).dataType)))
+    }
 
   /** The pre-round-6 Column formulas, verbatim. */
   private def clampIdx(c: Column, ext: Double, lo: Double, ppd: Int): Column =
@@ -100,6 +145,14 @@ class MergedKernelParitySpec extends AnyFunSuite {
     // both outcomes exercised
     assert(df.where(col("new")).count() > 0)
     assert(df.where(!col("new")).count() > 0)
+    // the binding is the kernel call
+    val args = Seq("tile", "axmin", "aymin", "bxmin", "bymin")
+    bindingParity(withNulls(fixture, args: _*),
+      GeoExprs.mergedRefDedup(col("tile"), col("axmin"), col("aymin"),
+        col("bxmin"), col("bymin"), grid, LvlOffset), args: _*) { r =>
+      nullOr(r, 5)(GeoKernels.refCellDedup(r.getLong(0), r.getDouble(1),
+        r.getDouble(2), r.getDouble(3), r.getDouble(4), grid, LvlOffset))
+    }
   }
 
   /** The Column-chain tile emission `lvl_tiles` replaced (GeoEngine's
@@ -183,22 +236,27 @@ class MergedKernelParitySpec extends AnyFunSuite {
     val df = tileFixture.cache()
     val flags = for (f <- Seq(false, true); cn <- Seq(false, true);
                      cw <- Seq(false, true)) yield (f, cn, cw)
+    def binding(f: Boolean, cn: Boolean, cw: Boolean) = GeoExprs.lvlTiles(
+      col("gtype"), col("xmin"), col("ymin"), col("xmax"), col("ymax"), grid,
+      LvlOffset, 16, f, cn, cw)
     // whole-stage codegen, then the interpreted eval path
-    val modes = Seq(Map.empty[String, String],
-      Map("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-    for (mode <- modes; (f, cn, cw) <- flags) {
-      mode.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val out = df.select(
-          GeoExprs.lvlTiles(col("gtype"), col("xmin"), col("ymin"), col("xmax"),
-            col("ymax"), grid, LvlOffset, 16, f, cn, cw).as("new"),
+    inModes { mode =>
+      for ((f, cn, cw) <- flags) {
+        val out = df.select(binding(f, cn, cw).as("new"),
           lvlTilesOld(16, f, cn, cw).as("old"))
         val diff = out.where(!(col("new") <=> col("old"))).count()
         assert(diff == 0, s"flags ($f, $cn, $cw) $mode: $diff rows disagree")
         if (f || cn || cw) assert(out.where(size(col("new")) > 0).count() > 0)
-      } finally mode.keys.foreach(spark.conf.unset)
+      }
     }
+    // the binding is the kernel call, a null field read as NaN (gtype -1)
+    for ((f, cn, cw) <- flags)
+      bindingParity(df, binding(f, cn, cw), "gtype", "xmin", "ymin", "xmax",
+        "ymax") { r =>
+        def d(i: Int) = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+        GeoKernels.lvlTiles(if (r.isNullAt(0)) -1 else r.getInt(0), d(1), d(2),
+          d(3), d(4), grid, LvlOffset, 16, f, cn, cw).toLongArray().toSeq
+      }
     // a NaN or null field empties the cover; ±Infinity clamps to the edge
     val all = df.select(col("*"), GeoExprs.lvlTiles(col("gtype"), col("xmin"),
       col("ymin"), col("xmax"), col("ymax"), grid, LvlOffset, 16,
@@ -237,19 +295,26 @@ class MergedKernelParitySpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructField("c",
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.DoubleType, containsNull = true))))
-    val df = spark.createDataFrame(
+    val all = spark.createDataFrame(
       java.util.Arrays.asList(coords.map(c => org.apache.spark.sql.Row(c)): _*),
-      schema).where(size(col("c")) >= 2)
+      schema)
+    val df = all.where(size(col("c")) >= 2)
     val out = df.select(col("c") +: old(col("c")) :+
       GeoExprs.coordsMbr(col("c")): _*).collect()
     assert(out.length == coords.size - 3)
     // bit for bit: the raw long bits (NaN and -0.0 included), or both null
-    def bits(v: Any) = Option(v).map(d =>
-      java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
     out.foreach { r =>
       (0 until 4).foreach { k =>
         val (o, n) = (r.get(1 + k), r.getStruct(5).get(k))
         assert(bits(o) == bits(n), s"field $k of ${r.getSeq[Any](0)}: $o vs $n")
+      }
+    }
+    // the binding is the kernel call, on every array (null, empty and
+    // one-element ones included)
+    bindingParity(all, GeoExprs.coordsMbr(col("c")), "c") { r =>
+      nullOr(r, 1) {
+        val m = GeoKernels.coordsMbr(new GenericArrayData(r.getSeq[Any](0).toArray))
+        (0 until 4).map(k => if (m.isNullAt(k)) null else m.getDouble(k))
       }
     }
   }
@@ -262,5 +327,67 @@ class MergedKernelParitySpec extends AnyFunSuite {
     assert(df.where(col("new") =!= col("old")).count() == 0)
     assert(df.where(col("new") > 16).count() > 0) // wide cases exercised
     assert(df.where(col("new") === 1).count() > 0)
+    // the binding is the kernel call
+    val args = Seq("axmin", "aymin", "axmax", "aymax")
+    bindingParity(withNulls(fixture, args: _*), GeoExprs.fineCoverCount(
+        col("axmin"), col("aymin"), col("axmax"), col("aymax"), grid),
+      args: _*) { r =>
+      nullOr(r, 4)(GeoKernels.fineCoverCnt(r.getDouble(0), r.getDouble(1),
+        r.getDouble(2), r.getDouble(3), grid))
+    }
+  }
+
+  test("hilbert_cell, star_poly, page_url, page_text and hex_cell_wkt bindings are their kernels") {
+    import spark.implicits._
+    val specials = Seq[Option[Double]](None, Some(Double.NaN),
+      Some(Double.PositiveInfinity), Some(Double.NegativeInfinity),
+      Some(-500.0), Some(500.0), Some(-180.0), Some(0.0), Some(13.37),
+      Some(89.99))
+    val xy = (for (x <- specials; y <- specials) yield (x, y)).toDF("x", "y")
+    val order = 10
+    val n = 1L << order
+    bindingParity(xy, GeoExprs.hilbertCell(col("x"), col("y"), grid.xMin,
+        grid.yMin, grid.xExtent, grid.yExtent, order), "x", "y") { r =>
+      nullOr(r, 2)(GeoKernels.pointCell(r.getDouble(0), r.getDouble(1),
+        grid.xMin, grid.yMin, grid.xExtent / n, grid.yExtent / n, n))
+    }
+
+    val stars = (Seq[(Option[Long], Option[Double], Option[Double], Option[Double])](
+      (None, Some(1.0), Some(2.0), Some(0.5)), (Some(3L), None, Some(2.0), Some(0.5)),
+      (Some(4L), Some(1.0), None, Some(0.5)), (Some(5L), Some(1.0), Some(2.0), None)) ++
+      (0L until 40L).map(i => (Some(i * 7919L), Some(i - 20.0), Some(i / 3.0),
+        Some(0.1 + i % 5)))).toDF("id", "cx", "cy", "rad")
+    bindingParity(stars, GeoExprs.starPoly(col("id"), col("cx"), col("cy"),
+        col("rad"), 8, 5, 0.6, 0.4), "id", "cx", "cy", "rad") { r =>
+      nullOr(r, 4)(GeoKernels.starPoly(r.getLong(0), r.getDouble(1),
+        r.getDouble(2), r.getDouble(3), 8, 5, 0.6, 0.4).toDoubleArray().toSeq)
+    }
+
+    val ids = (Seq[Option[Long]](None, Some(Long.MinValue), Some(-1L), Some(0L),
+      Some(Long.MaxValue)) ++ (1L to 60L).map(i => Some(i * 104729L))).toDF("id")
+    bindingParity(ids, GeoExprs.pageUrl(col("id")), "id") { r =>
+      nullOr(r, 1)(Pages.urlUtf8(r.getLong(0)).toString)
+    }
+    bindingParity(ids, GeoExprs.pageText(col("id")), "id") { r =>
+      nullOr(r, 1)(Pages.textUtf8(r.getLong(0)).toString)
+    }
+    bindingParity(ids, GeoExprs.pageLang(col("id")), "id") { r =>
+      nullOr(r, 1)(Pages.langUtf8(r.getLong(0)).toString)
+    }
+    bindingParity(ids, GeoExprs.pageWarcMillis(col("id")), "id") { r =>
+      nullOr(r, 1)(Pages.warcMillis(r.getLong(0)))
+    }
+
+    val cells = (None +: (for (x <- Seq(-179.5, -77.03, 0.0, 13.37, 179.5);
+                               y <- Seq(-85.0, 0.0, 38.9, 85.0); res <- Seq(0, 5, 9))
+      yield Some(HexGrid.latLngToCell(x, y, res)))).toDF("cell")
+    bindingParity(cells, GeoExprs.hexCellWkt(col("cell")), "cell") { r =>
+      nullOr(r, 1)(GeoKernels.hexCellWkt(r.getLong(0)).toString)
+    }
+    // a null argument gives a null result, so only a nullable input makes
+    // the binding nullable
+    val nonNull = spark.range(3).select(GeoExprs.pageUrl(col("id")))
+    assert(!nonNull.schema.head.nullable)
+    assert(ids.select(GeoExprs.pageUrl(col("id"))).schema.head.nullable)
   }
 }

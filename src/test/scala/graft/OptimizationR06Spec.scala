@@ -5,20 +5,41 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
-import graft.web.Pages
+import graft.web.{Page, Pages}
+
+/** The typed page synthesis `Pages.synthesize` ran before it became column
+  * kernels: one scalar map per id, verbatim (its private `mix` and `Langs`
+  * copied), the reference the column path is checked against. */
+private object TypedPages {
+  private val Langs = Array("en", "de", "fr", "es", "it")
+  private def mix(v: Long): Long = {
+    var h = v * 0x9e3779b97f4a7c15L
+    h ^= (h >>> 33); h *= 0xff51afd7ed558ccdL; h ^= (h >>> 33)
+    h
+  }
+  def page(id: Long): Page = {
+    val url = Pages.urlFor(id)
+    val text = Pages.textFor(id)
+    val lang = Langs(Math.floorMod(mix(id + 7), Langs.length.toLong).toInt)
+    val html = s"<html><body>$text</body></html>".getBytes("UTF-8")
+    val ts = new java.sql.Timestamp(1600000000000L + Math.floorMod(mix(id + 3), 100000000L))
+    Page(url, ts, html, text, lang)
+  }
+}
 
 /**
  * Round-6 optimization guards:
  *  - static dispatch SideMeta constants are SAFE vs the dynamically computed
  *    metadata on the real bench inputs (a wrong static flag would silently
  *    drop a candidate sub-join);
- *  - the column-only page synthesis is byte-identical to the typed path;
+ *  - the column page synthesis is byte-identical to the former typed path;
  *  - the widen guard no-ops when the input is already near target
  *    parallelism or already holds an exchange, still widens clearly-narrow
  *    inputs, and never launches a job;
  *  - no join-family query generates a method past the JVM's 8000-byte JIT
  *    ceiling (DontCompileHugeMethods runs such a method interpreted), holds
- *    a lambda expression, or runs a Generate outside whole-stage codegen;
+ *    a lambda or any other interpreted (CodegenFallback) expression, or
+ *    runs a Generate outside whole-stage codegen;
  *  - batch kNN's top-k is limited map-side, before its exchange.
  */
 class OptimizationR06Spec extends AnyFunSuite {
@@ -53,13 +74,24 @@ class OptimizationR06Spec extends AnyFunSuite {
   }
 
   test("column-only page synthesis is byte-identical to the typed path") {
-    val typed = Pages.synthesize(spark, 500).toDF()
-      .select("url", "text").collect()
+    def fields(p: Page) =
+      (p.url, p.warc_ts, p.html.toSeq, p.text, p.lang)
+    val want = (0L until 500L).map(id => fields(TypedPages.page(id)))
+    // all five fields, generated code and interpreted
+    for (mode <- Seq(Map.empty[String, String],
+        Map("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))) {
+      mode.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val got = Pages.synthesize(spark, 500).collect().map(fields)
+        assert(got.toSeq.sortBy(_._1) == want.sortBy(_._1), mode)
+      } finally mode.keys.foreach(spark.conf.unset)
+    }
+    // the registry's pruned (url, text) slice
+    val slice = Pages.synthesize(spark, 500).select("url", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    val cols = Pages.synthesizeUrlText(spark, 500).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(cols == typed)
-    assert(cols.size == 500)
+    assert(slice == want.map(f => f._1 -> f._4).toMap)
+    assert(slice.size == 500)
   }
 
   /** `f`'s result and the number of Spark jobs it launched. A listener
@@ -172,6 +204,7 @@ class OptimizationR06Spec extends AnyFunSuite {
 
   test("join-family plans hold no lambda and compile every Generate") {
     import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
     import org.apache.spark.sql.execution.{GenerateExec, InputAdapter}
     // a stage's own operators: its subtree down to its InputAdapters
     def compiled(p: SparkPlan): Seq[SparkPlan] = p match {
@@ -184,6 +217,11 @@ class OptimizationR06Spec extends AnyFunSuite {
       val lambdas = Aqe.flatMap(plan)(_.expressions.flatMap(
         _.collect { case h: HigherOrderFunction => h.prettyName }))
       assert(lambdas.isEmpty, s"$q: lambdas $lambdas in $plan")
+      // nor any other CodegenFallback expression: it is evaluated per row
+      // outside the generated code, whatever operator holds it
+      val interpreted = Aqe.flatMap(plan)(_.expressions.flatMap(
+        _.collect { case c: CodegenFallback => c.prettyName }))
+      assert(interpreted.isEmpty, s"$q: interpreted $interpreted in $plan")
       val inStage = Aqe.collect(plan) { case w: WholeStageCodegenExec => w }
         .flatMap(w => compiled(w.child))
       Aqe.collect(plan) { case g: GenerateExec => g }.foreach { g =>
