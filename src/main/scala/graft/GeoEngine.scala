@@ -312,6 +312,16 @@ object GeoEngine {
     out.iterator
   }
 
+  /** A candidate join's build side. `NoBuild`: both sides shuffle on the
+    * tile key and carry only (tile, id, gtype, MBR); their payloads re-join
+    * by id afterwards (`attach`). `BuildR` / `BuildS`: that side ships
+    * whole to every task with its payload, and the other side's payload
+    * rides its own emission, the probe stream — no re-join at all. */
+  private sealed trait Build
+  private case object NoBuild extends Build
+  private case object BuildR extends Build
+  private case object BuildS extends Build
+
   /**
    * Exactly-once MBR-overlapping candidate pairs via multi-resolution
    * tiling. Objects whose fine-tile cover exceeds `maxFineCover` cells are
@@ -330,32 +340,24 @@ object GeoEngine {
    *   - hash (default): mergedJoin — equi-join on the key, MBR overlap, the
    *     reference-point dedup at the pair's level, and the level filter
    *     dropping coarse-level both-narrow pairs (they joined at fine);
-   *   - sweep (`sweep`, dense data; callers select it only in slim mode):
+   *   - sweep (`sweep`, dense data; callers select it only with `NoBuild`):
    *     one cogroup on the key running sweepTile, which applies the same
    *     dedup and level rule.
    * A pair's levels are fixed functions of its MBRs, so it is emitted
    * exactly once either way.
    *
-   * Output columns: rid, sid, rg, sg, r/s MBRs (+ caller payload columns in
-   * broadcast mode). In slim (shuffle) mode only ids+gtype+MBRs cross the
-   * exchange; geometry/APRIL re-join by id downstream.
+   * Output columns: rid, sid, rg, sg, r/s MBRs (+ caller payload columns
+   * when one side is broadcast). With `NoBuild` only ids+gtype+MBRs cross
+   * the exchange; geometry/APRIL re-join by id downstream.
    */
   private def mrCandidates(rIx: DataFrame, sIx: DataFrame, grid: GridConfig,
-      broadcastS: Boolean, saltFactor: Int, maxFineCover: Int,
+      build: Build, saltFactor: Int, maxFineCover: Int,
       rm: SideMeta, sm: SideMeta,
       payload: String => Seq[Column],
       sweep: Boolean): DataFrame = {
-    val slim = !broadcastS
-    val rt = mrEmission(rIx, "r", "rid",
-      emitF = rm.hasNarrow && sm.hasNarrow,
-      emitCNarrow = rm.hasNarrow && sm.hasWide,
-      emitCWide = rm.hasWide,
-      grid, maxFineCover, rowRect, slim, payload)
-    val st = mrEmission(sIx, "s", "sid",
-      emitF = rm.hasNarrow && sm.hasNarrow,
-      emitCNarrow = sm.hasNarrow && rm.hasWide,
-      emitCWide = sm.hasWide,
-      grid, maxFineCover, rowRect, slim, payload)
+    val slim = build == NoBuild
+    val rt = mrSide(rIx, "r", "rid", rm, sm, grid, maxFineCover, slim, payload)
+    val st = mrSide(sIx, "s", "sid", sm, rm, grid, maxFineCover, slim, payload)
     if (sweep) {
       val spark = rIx.sparkSession
       import spark.implicits._
@@ -368,8 +370,21 @@ object GeoEngine {
           sweepTile(grid, maxFineCover, tile, rs, ss)
         }.toDF()
     } else
-      mergedJoin(rt, st, grid, broadcastS, saltFactor, maxFineCover)
+      mergedJoin(rt, st, grid, build, saltFactor, maxFineCover)
   }
+
+  /** One side's merged-exchange emission against the other side's
+    * metadata: narrow rows emit their fine cover when the other side has
+    * narrow rows, and their coarse cover when it has wide rows; wide rows
+    * emit their coarse cover. */
+  private def mrSide(df: DataFrame, p: String, idName: String, own: SideMeta,
+      other: SideMeta, grid: GridConfig, maxFineCover: Int, slim: Boolean,
+      payload: String => Seq[Column]): DataFrame =
+    mrEmission(df, p, idName,
+      emitF = own.hasNarrow && other.hasNarrow,
+      emitCNarrow = own.hasNarrow && other.hasWide,
+      emitCWide = own.hasWide,
+      grid, maxFineCover, rowRect, slim, payload)
 
   /** Level tag offset for the merged multi-resolution exchange: fine tile
     * ids are < globalPpd² (≤ 872² here), coarse ids get this offset — one
@@ -468,25 +483,29 @@ object GeoEngine {
     * or by `pairCond` instead: containment candidates need neither dedup
     * nor level filter and apply their own containment predicate. */
   private def mergedJoin(rt0: DataFrame, st0: DataFrame, grid: GridConfig,
-      broadcastS: Boolean, saltFactor: Int, maxFineCover: Int,
+      build: Build, saltFactor: Int, maxFineCover: Int,
       saltIdCol: String = "rid",
       pairCond: Option[Column] = None): DataFrame = {
     // the side carrying `saltIdCol` is the probe (stable pmod salt from its
     // id); the other side replicates saltFactor ways — for containment
     // predicates the probe can be either physical side
-    val salted = saltFactor > 1 && !broadcastS
+    val salted = saltFactor > 1 && build == NoBuild
     def pmodSalt(df: DataFrame) =
       df.withColumn("salt", pmod(hash(col(saltIdCol)), lit(saltFactor)))
     def explodeSalt(df: DataFrame) =
       df.withColumn("salt", explode(sequence(lit(0), lit(saltFactor - 1))))
     val rtHasId = rt0.columns.contains(saltIdCol)
-    val rt = if (!salted) rt0 else if (rtHasId) pmodSalt(rt0) else explodeSalt(rt0)
+    val rt1 = if (!salted) rt0 else if (rtHasId) pmodSalt(rt0) else explodeSalt(rt0)
     val st1 = if (!salted) st0 else if (rtHasId) explodeSalt(st0) else pmodSalt(st0)
-    val st = if (broadcastS) broadcast(st1) else st1
+    val rt = if (build == BuildR) broadcast(rt1) else rt1
+    val st = if (build == BuildS) broadcast(st1) else st1
     val keys = if (salted) Seq("tile", "salt") else Seq("tile")
-    // no static join-strategy hint: merge/shuffle_hash/broadcast hints on
-    // this join were all measured equal-or-worse than Catalyst+AQE's own
-    // choice at sf0.1 (OPTIMIZATION_r06.md "measured but rejected")
+    // with `NoBuild`, no static join-strategy hint: merge/shuffle_hash/
+    // broadcast hints on this join were all measured equal-or-worse than
+    // Catalyst+AQE's own choice at sf0.1 (OPTIMIZATION_r06.md "measured but
+    // rejected"); `BuildR` is taken only for an all-point R whose emission
+    // fits Spark's broadcast threshold (tileBuild), and pins R as the build
+    // side so the payloads can skip the re-join
     val cond = pairCond.getOrElse(
       mergedPairCond(col("tile"), RectCols.prefixed("r"), RectCols.prefixed("s"),
         grid, maxFineCover))
@@ -510,11 +529,11 @@ object GeoEngine {
    * sides' own prefixed MBRs) drop before the exact predicate.
    */
   private def containmentCandidates(rIx: DataFrame, sIx: DataFrame,
-      grid: GridConfig, broadcastS: Boolean, saltFactor: Int,
+      grid: GridConfig, build: Build, saltFactor: Int,
       maxFineCover: Int, outerHasWide: Boolean, outerHasNarrow: Boolean,
       payload: String => Seq[Column], innerIsR: Boolean,
       outerRect: RectCols, pairCond: Column): DataFrame = {
-    val slim = !broadcastS
+    val slim = build == NoBuild
 
     val (inner0, innerP, innerId) = if (innerIsR) (rIx, "r", "rid") else (sIx, "s", "sid")
     // the emission's NaN/null guard on the home-cell side: a row with a NaN
@@ -546,7 +565,7 @@ object GeoEngine {
       emitCNarrow = false, emitCWide = outerHasWide, grid, maxFineCover,
       outerRect, slim, payload)
     val (rt, st) = if (innerIsR) (it, ot) else (ot, it)
-    mergedJoin(rt, st, grid, broadcastS, saltFactor, maxFineCover,
+    mergedJoin(rt, st, grid, build, saltFactor, maxFineCover,
       saltIdCol = innerId,
       pairCond = Some(pairCond))
   }
@@ -722,8 +741,10 @@ object GeoEngine {
     else aprilIndex(df, grid, aprilOrder)
 
   /** One side's payload under prefix `p`: ring coords (p+"c") and, with
-    * APRIL, the interval lists (p+"_april_all", p+"_april_full"). Broadcast
-    * mode carries it through the tile explode; slim mode `attach`es it. An
+    * APRIL, the interval lists (p+"_april_all", p+"_april_full"). When a
+    * candidate join broadcasts one side, both sides carry it through their
+    * tile emission — the build side in the broadcast, the other on its
+    * probe stream; with `NoBuild` it is `attach`ed after the join. An
     * all-point side's payload is synthesized from its MBR corner (x, y): a
     * point's coords ARE that corner and its A-list is one Hilbert cell,
     * bit-identical to the rasterized form — so `ix` never rasterizes it. */
@@ -740,11 +761,22 @@ object GeoEngine {
       else Seq(col("april_all").as(p + "_april_all"),
         col("april_full").as(p + "_april_full")))
 
-  /** Attach one side's payloadCols to slim (id, gtype, MBR) candidate rows:
-    * ONE id re-join per side, the coords and the APRIL interval lists in the
-    * same join (no broadcast hint: interval arrays scale with geometry size;
-    * AQE converts a genuinely small side at runtime). An all-point side never
-    * re-joins: its payload is synthesized from the MBR already on the row. */
+  /** Both sides' emitted payload columns by prefix for a join with
+    * `build`: none with `NoBuild` (`attach` re-joins them), else
+    * payloadCols, each synthesized when its side holds only points. */
+  private def sidePayload(build: Build, rm: SideMeta, sm: SideMeta,
+      withApril: Boolean, grid: GridConfig,
+      aprilOrder: Int): String => Seq[Column] =
+    if (build == NoBuild) _ => Nil
+    else p => payloadCols(p, allPoints(if (p == "r") rm else sm), withApril,
+      grid, aprilOrder)
+
+  /** Attach one side's payloadCols to slim (id, gtype, MBR) candidate rows,
+    * which only a `NoBuild` candidate join leaves: ONE id re-join per side,
+    * the coords and the APRIL interval lists in the same join (no broadcast
+    * hint: interval arrays scale with geometry size; AQE converts a
+    * genuinely small side at runtime). An all-point side never re-joins:
+    * its payload is synthesized from the MBR already on the row. */
   private def attach(c: DataFrame, p: String, idName: String, df: DataFrame,
       points: Boolean, withApril: Boolean, grid: GridConfig,
       aprilOrder: Int): DataFrame =
@@ -754,13 +786,44 @@ object GeoEngine {
       payloadCols(p, points, withApril, grid, aprilOrder): _*), Seq(idName))
 
   /**
+   * The tile candidate join's build side, and R's `ix`-indexed form, for a
+   * join whose caller fixed no build side and whose plan is the hash path
+   * (a hot tile selects the sweep first, which shuffles). `BuildR` only for
+   * an unsalted join (a salt asks for the salted shuffle) over an all-point
+   * R whose emission fits Spark's
+   * `spark.sql.autoBroadcastJoinThreshold` (chooseBroadcast on the planned
+   * query, no job): a point emits one tile per level and synthesizes its
+   * payload (payloadCols), so that estimate bounds what the broadcast
+   * carries. Spark's estimate of a wider side's tile explode does not scale
+   * with its cover, so a non-point R keeps `NoBuild`. The hint pins R even
+   * where Catalyst would have broadcast a smaller S. A broadcast R is not
+   * widened: its rows only feed the broadcast's collect, so the round-robin
+   * shuffle would be paid for nothing. Otherwise `NoBuild` over `ix(rW)`.
+   */
+  private def tileBuild(r0: DataFrame, rW: => DataFrame, grid: GridConfig,
+      useApril: Boolean, aprilOrder: Int, maxFineCover: Int, saltFactor: Int,
+      rm: SideMeta, sm: SideMeta): (Build, DataFrame) = {
+    def fits = chooseBroadcast(mrSide(r0, "r", "rid", rm, sm, grid,
+      maxFineCover, slim = false,
+      sidePayload(BuildR, rm, sm, useApril, grid, aprilOrder)),
+      r0.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+    if (saltFactor <= 1 && allPoints(rm) && fits) (BuildR, r0)
+    else (NoBuild, ix(rW, grid, useApril, aprilOrder, rm))
+  }
+
+  /**
    * Predicate spatial join: returns (rid, sid) pairs satisfying `pred`.
    *
-   * Plan: tile-explode both sides → equi-join on tile (Catalyst picks
-   * SHJ/SMJ; pass `broadcastS = true` to force a broadcast of S's exploded
-   * form) → inclusive MBR-overlap (codegen'd column predicate) →
-   * reference-point dedup → optional APRIL verdict → exact refinement for
-   * inconclusive pairs only.
+   * Plan: tile-explode both sides → equi-join on tile (pass
+   * `broadcastS = true` to force a broadcast of S's exploded form; else a
+   * non-containment, unsalted join without a hot tile broadcasts an
+   * all-point R's emission when it fits `spark.sql.autoBroadcastJoinThreshold`,
+   * and Catalyst picks SHJ/SMJ otherwise) → inclusive MBR-overlap
+   * (codegen'd column predicate) → reference-point dedup → optional APRIL
+   * verdict → exact refinement for inconclusive pairs only.
+   *
+   * `saltFactor` > 1 salts the tile key when both sides shuffle: it keeps
+   * R off the broadcast, and a broadcast S ignores it.
    *
    * Disjoint-join caveat intentionally preserved: candidates still come from
    * common tiles only (SURVEY.md §2.4).
@@ -805,8 +868,9 @@ object GeoEngine {
       return out.select(col("rid"), col("sid"))
     }
     // widen-before-explode: the cover explode + MBR/tile math run as
-    // projections on the scan partitioning (see widen's scaladoc)
-    val rW = widen(r.toDF())
+    // projections on the scan partitioning (see widen's scaladoc); R only
+    // once the plan is known to shuffle it (tileBuild)
+    lazy val rW = widen(r.toDF())
     val sW = if (broadcastS) s.toDF() else widen(s.toDF())
     // the density histogram only matters when the sweep decision is open
     // AND the join shuffles AND the predicate takes the tile-exchange plan —
@@ -819,11 +883,16 @@ object GeoEngine {
     val rm = rMeta.getOrElse(sideStats(rW, grid, maxFineCover, needDensity))
     val sm = sMeta.getOrElse(sideStats(sW, grid, maxFineCover, needDensity))
     // explicit Some(flag) overrides the density rule; the sweep needs the
-    // slim (shuffle) exchange
+    // slim (shuffle) exchange, so it is decided before any broadcast
     val sweepOn = !broadcastS && sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold))
-    val rIx = ix(rW, grid, useApril, aprilOrder, rm)
+    val (build, rIx) =
+      if (broadcastS) (BuildS, ix(rW, grid, useApril, aprilOrder, rm))
+      else if (sweepOn || containmentPred)
+        (NoBuild, ix(rW, grid, useApril, aprilOrder, rm))
+      else tileBuild(r.toDF(), rW, grid, useApril, aprilOrder, maxFineCover,
+        saltFactor, rm, sm)
     val sIx = ix(sW, grid, useApril, aprilOrder, sm)
-    joinCascade(rIx, sIx, pred, grid, useApril, aprilOrder, broadcastS,
+    joinCascade(rIx, sIx, pred, grid, useApril, aprilOrder, build,
       saltFactor, maxFineCover, rm, sm, sweepOn)
   }
 
@@ -831,22 +900,23 @@ object GeoEngine {
    * The join cascade shared by spatialJoin and rangeBatch, from prepared
    * (`ix`-indexed) sides on: candidate pairs (containment home cells or
    * mrCandidates), the rectangular column fast path, the payload `attach`
-   * in slim mode, the optional APRIL verdict and the exact refinement for
-   * inconclusive pairs only. Returns (rid, sid).
+   * when no side is broadcast, the optional APRIL verdict and the exact
+   * refinement for inconclusive pairs only. Returns (rid, sid). With a
+   * build side the payloads ride the emissions, so the verdict and the
+   * refinement fold into the candidate join's own condition: each pair is
+   * decided where it is found, with no candidate list in between.
    */
   private def joinCascade(rIx: DataFrame, sIx: DataFrame, pred: Int,
       grid: GridConfig, useApril: Boolean, aprilOrder: Int,
-      broadcastS: Boolean, saltFactor: Int, maxFineCover: Int,
+      build: Build, saltFactor: Int, maxFineCover: Int,
       rm: SideMeta, sm: SideMeta, sweepOn: Boolean): DataFrame = {
-    // In broadcast mode the build side ships whole (one pass, no shuffle), so
-    // payload columns ride along. In shuffle mode only (tile, id, gtype, mbr)
-    // go through the exchange; geometry/APRIL columns re-join by id afterwards
-    // (carrying arrays through a many-tiles explode multiplies shuffle bytes).
-    val slim = !broadcastS
-    val payload: String => Seq[Column] =
-      if (slim) _ => Nil
-      else p => payloadCols(p, allPoints(if (p == "r") rm else sm), useApril,
-        grid, aprilOrder)
+    // With a build side it ships whole (one pass, no shuffle), so payload
+    // columns ride along on both sides. With `NoBuild` only (tile, id, gtype,
+    // mbr) go through the exchange; geometry/APRIL columns re-join by id
+    // afterwards (carrying arrays through a many-tiles explode multiplies
+    // shuffle bytes).
+    val slim = build == NoBuild
+    val payload = sidePayload(build, rm, sm, useApril, grid, aprilOrder)
 
     // containment predicates take the home-cell candidate plan (probe side
     // ships one row per object; no dedup); everything else multi-res tiles
@@ -857,13 +927,13 @@ object GeoEngine {
     val sRC = RectCols.prefixed("s")
     val cands =
       if (contRinS || contSinR)
-        containmentCandidates(rIx, sIx, grid, broadcastS, saltFactor,
+        containmentCandidates(rIx, sIx, grid, build, saltFactor,
           maxFineCover,
           outerHasWide = if (contRinS) sm.hasWide else rm.hasWide,
           outerHasNarrow = if (contRinS) sm.hasNarrow else rm.hasNarrow,
           payload, innerIsR = contRinS, outerRect = rowRect,
           pairCond = if (contRinS) mbrIn(rRC, sRC) else mbrIn(sRC, rRC))
-      else mrCandidates(rIx, sIx, grid, broadcastS, saltFactor,
+      else mrCandidates(rIx, sIx, grid, build, saltFactor,
         maxFineCover, rm, sm, payload, sweep = sweepOn)
 
     def refineExpr: Column =
@@ -889,21 +959,17 @@ object GeoEngine {
         else attach(attach(cands, "r", "rid", rIx, allPoints(rm), useApril,
           grid, aprilOrder), "s", "sid", sIx, allPoints(sm), useApril, grid,
           aprilOrder)
-      val exactPred = when(rectangular, rectExact).otherwise(refineExpr)
-      val refined = if (useApril) {
-        all
-          .withColumn("verdict",
-            when(rectangular,
-              when(rectExact, April.TRUE_HIT).otherwise(April.TRUE_NEGATIVE))
-              .otherwise(GeoExprs.aprilVerdict(pred,
-                col("r_april_all"), col("r_april_full"),
-                col("s_april_all"), col("s_april_full"))))
-          .where(col("verdict") === April.TRUE_HIT ||
-            (col("verdict") === April.INCONCLUSIVE && exactPred))
-      } else {
-        all.where(exactPred)
-      }
-      refined.select(col("rid"), col("sid"))
+      // a non-rectangular pair: with APRIL its verdict decides it unless
+      // inconclusive (null), and only then the exact kernel runs. One
+      // verdict call per pair: a `verdict` column tested twice would be
+      // inlined twice into the filter (or join condition) that reads it.
+      val nonRect =
+        if (!useApril) refineExpr
+        else coalesce(GeoExprs.aprilDecision(GeoExprs.aprilVerdict(pred,
+          col("r_april_all"), col("r_april_full"),
+          col("s_april_all"), col("s_april_full"))), refineExpr)
+      all.where(when(rectangular, rectExact).otherwise(nonRect))
+        .select(col("rid"), col("sid"))
     }
   }
 
@@ -914,9 +980,12 @@ object GeoEngine {
   val AprilOrder = 16
 
   /** Find-relation join: (rid, sid, relation) with the reference's TR codes.
-    * The same filter-and-refine cascade as spatialJoin's slim path: both
-    * sides widened and `ix`-indexed, mrCandidates, one payload `attach` per
-    * side. With `useApril`, the APRIL topology intermediate filter resolves
+    * The same filter-and-refine cascade as spatialJoin's tile path: both
+    * sides `ix`-indexed, the sweep decided first, then an all-point R
+    * broadcast when its emission fits Spark's threshold (tileBuild; the
+    * payloads then ride the emissions), else both sides widened and one
+    * payload `attach` per side after mrCandidates. With `useApril`, the
+    * APRIL topology intermediate filter resolves
     * DISJOINT / CONTAINS / INSIDE / true-hit-INTERSECT pairs from interval
     * algebra alone (the reference's MBR-case-specialized filter,
     * src/APRIL/filter.cpp:189-223); only unresolved pairs reach the exact
@@ -932,11 +1001,10 @@ object GeoEngine {
                        sMeta: Option[SideMeta] = None,
                        sweep: Option[Boolean] = None,
                        hotTileThreshold: Long = 8192L): DataFrame = {
-    val rW = widen(r.toDF())
+    lazy val rW = widen(r.toDF())
     val sW = widen(s.toDF())
-    // find-relation always shuffles (never broadcast), so the density
-    // histogram is consulted exactly like spatialJoin's slim path — a hot
-    // tile pays the same O(k²) hash filter here
+    // the sweep is decided first, from the density histogram, exactly like
+    // spatialJoin's — a hot tile pays the same O(k²) hash filter here
     val needDensity = sweep.isEmpty
     val rm = rMeta.getOrElse(sideStats(rW, grid, maxFineCover, needDensity))
     val sm = sMeta.getOrElse(sideStats(sW, grid, maxFineCover, needDensity))
@@ -945,11 +1013,16 @@ object GeoEngine {
     // sub-plan (rasterize + interval re-joins) is provably dead weight —
     // prune it from the plan.
     val useAprilEff = useApril && anyNonBox
-    val rIx = ix(rW, grid, useAprilEff, aprilOrder, rm)
+    val sweepOn = sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold))
+    val (build, rIx) =
+      if (sweepOn) (NoBuild, ix(rW, grid, useAprilEff, aprilOrder, rm))
+      else tileBuild(r.toDF(), rW, grid, useAprilEff, aprilOrder, maxFineCover,
+        saltFactor, rm, sm)
     val sIx = ix(sW, grid, useAprilEff, aprilOrder, sm)
-    val cands = mrCandidates(rIx, sIx, grid, broadcastS = false,
-      saltFactor, maxFineCover, rm, sm, _ => Nil,
-      sweep = sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold)))
+    val slim = build == NoBuild
+    val cands = mrCandidates(rIx, sIx, grid, build, saltFactor, maxFineCover,
+      rm, sm, sidePayload(build, rm, sm, useAprilEff, grid, aprilOrder),
+      sweep = sweepOn)
 
     // Box×box fast path: the reference's MBR-case routing + per-case refine
     // priority (Topology.findRelation) collapses to pure column arithmetic
@@ -979,9 +1052,11 @@ object GeoEngine {
     if (!anyNonBox)
       return cands.select(col("rid"), col("sid"), boxRel.as("relation"))
 
-    val all = attach(attach(cands, "r", "rid", rIx, allPoints(rm), useAprilEff,
-      grid, aprilOrder), "s", "sid", sIx, allPoints(sm), useAprilEff, grid,
-      aprilOrder)
+    val all =
+      if (!slim) cands
+      else attach(attach(cands, "r", "rid", rIx, allPoints(rm), useAprilEff,
+        grid, aprilOrder), "s", "sid", sIx, allPoints(sm), useAprilEff, grid,
+        aprilOrder)
     val bothBox = rRC.g === GeomType.BOX && sRC.g === GeomType.BOX
     val exactRel = when(bothBox, boxRel).otherwise(
       GeoExprs.stFindRelation(col("rg"), col("rc"), col("sg"), col("sc")))
@@ -1025,11 +1100,12 @@ object GeoEngine {
     s.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(thresholdBytes)
 
   /** spatialJoin with the broadcast/shuffle decision taken from size
-    * estimates instead of a caller flag. APRIL joins never broadcast: in
-    * broadcast mode the payload (coords + interval arrays) rides through
-    * the tile explode, multiplying broadcast bytes per covered tile —
+    * estimates instead of a caller flag. APRIL joins never force S's
+    * broadcast: S's payload (coords + interval arrays) would ride through
+    * its tile explode, multiplying broadcast bytes per covered tile —
     * measured slower than the slim exchange + re-join-by-id even for a
-    * 20k-row S at sf0.1; AQE still converts the small id-keyed re-joins. */
+    * 20k-row S at sf0.1. spatialJoin still broadcasts an all-point R's
+    * emission when it fits Spark's own threshold. */
   def spatialJoinAuto(r: Dataset[GeoRow], s: Dataset[GeoRow], pred: Int,
                       grid: GridConfig, useApril: Boolean = false,
                       saltFactor: Int = 1,
@@ -1090,7 +1166,7 @@ object GeoEngine {
       hasNonRect = any(!rect(_)), hasNonBox = any(_.gtype != GeomType.BOX),
       hasRect = any(rect), hasBox = any(_.gtype == GeomType.BOX))
     joinCascade(dIx, windows, Predicates.INTERSECTS, grid, useApril,
-      aprilOrder, broadcastS = true, saltFactor = 1, maxFineCover, dm, wm,
+      aprilOrder, BuildS, saltFactor = 1, maxFineCover, dm, wm,
       sweepOn = false)
       .select(col("sid").as("qid"), col("rid").as("id"))
   }
@@ -1257,7 +1333,7 @@ object GeoEngine {
     val dy = col("rymin") - col("symin")
     // widen-before-explode: the ε-box cover explode runs on the scan
     // partitioning (see widen's scaladoc)
-    containmentCandidates(widen(r.toDF()), s.toDF(), grid, broadcastS = false,
+    containmentCandidates(widen(r.toDF()), s.toDF(), grid, NoBuild,
       saltFactor = 1, maxFineCover, outerHasWide = hasWide,
       outerHasNarrow = true, _ => Nil, innerIsR = false, outerRect = epsBox,
       pairCond = sqrt(dx * dx + dy * dy) <= d)

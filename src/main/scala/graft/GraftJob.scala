@@ -65,7 +65,7 @@ object GraftJob {
     val tagged = Snapshots.runStage(spark, root, "geotagged",
       Map("stage" -> "geotag", "input" -> "pages", "app" -> version)) {
       // 64-bit ids: hash() is 32-bit Murmur3 (birthday collisions from ~1e5
-      // urls), and spatialJoin's slim-mode re-join-by-id plus snapshot
+      // urls), and spatialJoin's payload re-join-by-id plus snapshot
       // lineage require unique ids — fnv64 keeps them collision-free at the
       // 1e12-row north rule. Codegen expression, not a UDF.
       Pages.geotag(pages)
@@ -114,8 +114,9 @@ object GraftJob {
         col("x").as("xmax"), col("y").as("ymax")).as[GeoRow]
       // queries run against the STORED index: pre-rasterized interval
       // columns + persisted SideMeta (no per-run rasterize / prepass).
-      // APRIL joins take the slim shuffle plan, never broadcast — the
-      // payload arrays would multiply through the tile explode.
+      // APRIL joins never broadcast the index side — its payload arrays
+      // would multiply through the tile explode; the point side is
+      // broadcast when its emission fits Spark's threshold.
       GeoEngine.spatialJoin(pts, index.df.as[GeoRow], Predicates.INTERSECTS,
         grid, useApril = true, aprilOrder = aprilOrder,
         sMeta = Some(index.meta))

@@ -354,10 +354,13 @@ object SparkEntry {
 
   /** Per-SF index root, content-keyed (table file size and modification
     * time) so a regenerated testdata dir invalidates the cache instead of
-    * serving a stale index. */
+    * serving a stale index, and keyed by the index code's CRC so builds of
+    * different code on one machine each keep their own index instead of
+    * rebuilding each other's. */
   private def idxRoot(dir: String): String = {
     val f = new java.io.File(s"$dir/part.parquet")
-    s"/tmp/graft_idx/${new java.io.File(dir).getName}_${f.length}_${f.lastModified}"
+    s"/tmp/graft_idx/${new java.io.File(dir).getName}_${f.length}_${f.lastModified}" +
+      s"_${graft.store.SpatialIndex.codeCrc}"
   }
 
   /** The diamond table's persisted APRIL index (order 10), served from the
@@ -470,10 +473,12 @@ object SparkEntry {
       implicit val sp: SparkSession = s
       import s.implicits._
       val idx = diamondIndex(s, dir)
-      // slim shuffle, NOT broadcast: in broadcast mode the payload (coords +
-      // interval arrays) rides through the tile explode, multiplying the
-      // broadcast bytes per covered tile — measured 1.5x slower than the
-      // slim exchange + re-join-by-id even at sf0.1
+      // no broadcastS: a broadcast S carries its payload (coords + interval
+      // arrays) through the tile explode, multiplying the broadcast bytes
+      // per covered tile — measured 1.5x slower than the slim exchange +
+      // re-join-by-id even at sf0.1. The point side is broadcast instead
+      // when its emission fits Spark's threshold, and the diamonds'
+      // payload rides their own emission.
       GeoEngine.spatialJoin(pointsGeo(orderPoints8(s, dir)),
         idx.df.as[GeoRow], Predicates.INTERSECTS, grid,
         useApril = true, aprilOrder = 10, rMeta = MPoints,

@@ -143,6 +143,14 @@ object GeoKernels {
     case _ => April.INCONCLUSIVE
   }
 
+  /** A pair's APRIL verdict as its accept decision: TRUE_HIT accepts,
+    * TRUE_NEGATIVE rejects and INCONCLUSIVE is null, left to the exact
+    * refinement — so `coalesce(decision, refine)` reads the verdict once. */
+  def aprilDecision(verdict: Int): java.lang.Boolean =
+    if (verdict == April.TRUE_HIT) java.lang.Boolean.TRUE
+    else if (verdict == April.INCONCLUSIVE) null
+    else java.lang.Boolean.FALSE
+
   /** Hilbert cell id of a point — identical math to April.rasterize's POINT
     * case, so an inline-synthesized [cell, cell+1) A-list is bit-identical
     * to the rasterized one. */
@@ -616,6 +624,13 @@ object GeoExprs {
 
   def aprilVerdict(pred: Int, ra: Column, rf: Column, sa: Column, sf: Column): Column =
     GraftColumnBridge.column(AprilVerdict(pred, e(ra), e(rf), e(sa), e(sf)))
+
+  /** GeoKernels.aprilDecision: true, false or (inconclusive) null; a null
+    * verdict gives null. The one binding whose kernel returns null, so its
+    * result is nullable whatever its argument. */
+  def aprilDecision(verdict: Column): Column =
+    GraftColumnBridge.column(StaticInvoke(GeoKernels.getClass, BooleanType,
+      "aprilDecision", Seq(e(verdict)), Seq(IntegerType)))
 
   def aprilTopoRel(ra: Column, rf: Column, sa: Column, sf: Column, mbrCase: Column): Column =
     GraftColumnBridge.column(AprilTopoRel(e(ra), e(rf), e(sa), e(sf), e(mbrCase)))

@@ -95,7 +95,7 @@ object SpatialIndex {
   /** CRC32 of the class files that decide the stored bytes: the rasterizer
     * (April, its Hilbert curve and the AprilRasterize expression) and this
     * object (columns, lineage). Read once per JVM from the classpath. */
-  private lazy val codeCrc: String = {
+  private[graft] lazy val codeCrc: String = {
     val crc = new java.util.zip.CRC32()
     for (c <- Seq(graft.core.April.getClass, graft.core.Hilbert.getClass,
                   classOf[graft.functions.AprilRasterize], getClass)) {

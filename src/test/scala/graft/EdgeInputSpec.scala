@@ -60,6 +60,17 @@ class EdgeInputSpec extends AnyFunSuite {
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** The join modes: (name, broadcastS, spark.sql.autoBroadcastJoinThreshold
+    * or None for the session's). */
+  private val modes = Seq(("broadcast R", false, None),
+    ("broadcast S", true, None), ("shuffle", false, Some("-1")))
+
+  private def withThreshold[T](threshold: Option[String])(f: => T): T =
+    threshold.fold(f) { t =>
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", t)
+      try f finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+
   test("empty and one-row sides: joins, range and kNN ≡ brute force") {
     import spark.implicits._
     val r = mixed(0, 3)
@@ -77,19 +88,24 @@ class EdgeInputSpec extends AnyFunSuite {
     for ((name, (rr, ss)) <- cases) {
       // spatialJoin: candidates are MBR-overlapping pairs (DISJOINT is the
       // documented tile-local variant), decided by the exact kernel
-      for (pred <- preds; broadcast <- Seq(false, true)) {
-        val got = pairs(GeoEngine.spatialJoin(ds(rr), ds(ss), pred, grid,
-          broadcastS = broadcast))
+      // each build side: R when it holds only points and fits the
+      // broadcast threshold, S by `broadcastS`, none with the threshold at -1
+      for (pred <- preds; (mode, broadcast, threshold) <- modes) {
+        val got = withThreshold(threshold)(pairs(GeoEngine.spatialJoin(ds(rr),
+          ds(ss), pred, grid, broadcastS = broadcast)))
         val want = (for (a <- rr; b <- ss if mbrOverlap(a, b) &&
           Topology.evalPredicate(pred, geom(a), geom(b))) yield (a.id, b.id)).toSet
-        assert(got == want, s"$name, predicate $pred, broadcast $broadcast")
-        if (want.nonEmpty) nonEmpty += 1
+        assert(got == want, s"$name, predicate $pred, $mode")
+        if (want.nonEmpty && threshold.isEmpty) nonEmpty += 1
       }
-      val rel = GeoEngine.findRelationJoin(ds(rr), ds(ss), grid).collect()
-        .map(x => (x.getLong(0), x.getLong(1), x.getInt(2))).toSet
-      assert(rel == (for (a <- rr; b <- ss if mbrOverlap(a, b))
-        yield (a.id, b.id, Topology.findRelation(geom(a), geom(b)))).toSet,
-        s"$name: find-relation")
+      for ((mode, _, threshold) <- modes.filter(!_._2)) {
+        val rel = withThreshold(threshold)(GeoEngine.findRelationJoin(ds(rr),
+          ds(ss), grid).collect()).map(x => (x.getLong(0), x.getLong(1),
+          x.getInt(2))).toSet
+        assert(rel == (for (a <- rr; b <- ss if mbrOverlap(a, b))
+          yield (a.id, b.id, Topology.findRelation(geom(a), geom(b)))).toSet,
+          s"$name: find-relation, $mode")
+      }
       // distance join over the rows' MBR corners as points
       def pts(rows: Seq[GeoRow]) = rows.map(a => GeoRow.of(a.id,
         Geom(GeomType.POINT, Array(a.xmin, a.ymin))))

@@ -11,7 +11,7 @@ import graft.core._
  * On non-rectangular inputs the topology filter must still run (and agree
  * with the exact path), with all-point sides synthesizing their A-list
  * inline instead of rasterizing — in find-relation and in spatialJoin's
- * slim plan alike.
+ * slim and broadcast-R plans alike.
  */
 class FindRelationPlanSpec extends AnyFunSuite {
 
@@ -97,8 +97,8 @@ class FindRelationPlanSpec extends AnyFunSuite {
     assert(rels.contains(Topology.TR_INSIDE))
     assert(rels.contains(Topology.TR_DISJOINT))
 
-    // diamonds × diamonds: both sides rasterized, both A-lists attached by
-    // id re-join — in find-relation and in the predicate join
+    // diamonds × diamonds: both sides rasterized, in find-relation and in
+    // the predicate join
     val dd = GeoEngine.findRelationJoin(diamonds(3, 200), diamonds(4, 200),
       grid, useApril = true, aprilOrder = 10)
     val ddPlan = dd.queryExecution.optimizedPlan.toString
@@ -119,20 +119,41 @@ class FindRelationPlanSpec extends AnyFunSuite {
   private def rasterizeCount(df: DataFrame): Int =
     "april_rasterize".r.findAllIn(df.queryExecution.analyzed.toString).length
 
-  test("slim spatialJoin never rasterizes an all-point side") {
+  /** `f` with Spark's broadcast threshold at -1: no tile join broadcasts
+    * R, so spatialJoin takes its slim plan. */
+  private def slimPlan[T](f: => T): T = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try f finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  /** The point side never rasterized, whichever plan the join takes: the
+    * stored side's rasterization appears once per use of that side, with or
+    * without APRIL; the point side's A-list is synthesized on the row and
+    * adds none — not even an aprilIndex chain whose rasterize the optimizer
+    * prunes. Returns that per-join rasterize count. */
+  private def pointSideNeverRasterized(): Int = {
     import spark.implicits._
     val idx = GeoEngine.aprilIndex(diamonds(3, 200).toDF(), grid, 10)
     assert(rasterizeCount(idx) > 0)
     def join(useApril: Boolean) = GeoEngine.spatialJoin(points(0, 1500),
       idx.as[GeoRow], Predicates.INTERSECTS, grid, useApril = useApril,
       aprilOrder = 10)
-    // the stored side's rasterization appears once per use of that side
-    // (candidate emission, payload attach) with or without APRIL; the point
-    // side's A-list is synthesized on the candidate row and adds none — not
-    // even an aprilIndex chain whose rasterize the optimizer prunes
     val withApril = join(useApril = true)
     assert(rasterizeCount(withApril) == rasterizeCount(join(useApril = false)),
       withApril.queryExecution.analyzed.toString)
     assert(withApril.queryExecution.optimizedPlan.toString.contains("GeoKernels.pointCell"))
+    rasterizeCount(withApril)
+  }
+
+  test("slim spatialJoin never rasterizes an all-point side") {
+    // the stored side is used twice: candidate emission and payload attach
+    assert(slimPlan(pointSideNeverRasterized()) == 2 * rasterizeCount(
+      GeoEngine.aprilIndex(diamonds(3, 200).toDF(), grid, 10)))
+  }
+
+  test("broadcast-R spatialJoin never rasterizes an all-point side") {
+    // the stored side is used once: its payload rides its own emission
+    assert(pointSideNeverRasterized() == rasterizeCount(
+      GeoEngine.aprilIndex(diamonds(3, 200).toDF(), grid, 10)))
   }
 }

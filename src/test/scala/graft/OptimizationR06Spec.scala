@@ -40,6 +40,8 @@ private object TypedPages {
  *    ceiling (DontCompileHugeMethods runs such a method interpreted), holds
  *    a lambda or any other interpreted (CodegenFallback) expression, or
  *    runs a Generate outside whole-stage codegen;
+ *  - an APRIL predicate join's generated code calls the verdict kernel
+ *    once per candidate pair;
  *  - batch kNN's top-k is limited map-side, before its exchange.
  */
 class OptimizationR06Spec extends AnyFunSuite {
@@ -227,6 +229,19 @@ class OptimizationR06Spec extends AnyFunSuite {
       Aqe.collect(plan) { case g: GenerateExec => g }.foreach { g =>
         assert(inStage.exists(_ eq g), s"$q: interpreted ${g.simpleString(200)}")
       }
+    }
+  }
+
+  test("APRIL predicate joins call the verdict kernel once per candidate pair") {
+    // the accept test reads one verdict; a verdict column tested twice is
+    // inlined twice into the join condition or filter that reads it, and
+    // the generated code then calls the kernel a second time per pair
+    for (q <- Seq("q_pip_join_april", "q_range_poly_april")) {
+      val plan = joinFamilyPlans.find(_._1 == q).get._2
+      val code = Aqe.collect(plan) { case w: WholeStageCodegenExec => w }
+        .map(_.doCodeGen()._2.body).mkString("\n")
+      val calls = "GeoKernels\\.aprilVerdict\\(".r.findAllIn(code).length
+      assert(calls == 1, s"$q: $calls aprilVerdict calls in its generated code")
     }
   }
 
