@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, Column}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -158,79 +159,85 @@ object GeoEngine {
                             maxHomeTileCnt: Long = 0L,
                             maxCoarseCellCnt: Long = 0L)
 
-  /** One column-pruned pass computing SideMeta (two-stage aggregation: the
-    * per-home-tile partial bounds the shuffle at ≤ ppd² rows). Compute once
-    * at index-build time (the reference's prepare/partition metadata pass)
-    * and pass to spatialJoin/findRelationJoin for repeated queries over the
-    * same data. */
+  /** A side's SideMeta in one job over its rows, with no shuffle: each
+    * partition folds its rows' `sideStatCols` into a SideTally and the
+    * driver merges them. The tally gives the density statistics with the
+    * flags, so every caller gets both. Compute it once per dataset and pass
+    * it to spatialJoin/findRelationJoin for repeated queries over the same
+    * data; a stored index counts it in the pass that writes it
+    * (SpatialIndex.build), so a query over the loaded index runs none. */
   def sideMeta(ds: Dataset[_], grid: GridConfig,
-               maxFineCover: Int = MaxFineCover): SideMeta =
-    sideStats(ds.toDF(), grid, maxFineCover, withDensity = true)
+               maxFineCover: Int = MaxFineCover): SideMeta = {
+    val rows = ds.toDF().select(sideStatCols(grid, maxFineCover): _*)
+      .queryExecution.toRdd
+    SideTally.meta(rows.mapPartitions { it =>
+      val t = new SideTally
+      it.foreach(t.add(_, 0))
+      Iterator.single(t)
+    }.collect().toSeq, grid)
+  }
 
-  /** `withDensity = false` skips the per-home-tile partial (one flat agg, no
-    * exchange) for callers that won't consult maxHomeTileCnt — e.g. a
-    * broadcast join, or a caller that fixed `sweep` explicitly. Index-build
-    * time always computes the full statistics. */
-  private def sideStats(df: DataFrame, grid: GridConfig, maxFineCover: Int,
-                        withDensity: Boolean): SideMeta = {
+  /** The per-row statistics a SideTally folds, over (gtype, xmin, ymin,
+    * xmax, ymax): the row's home fine cell (its MBR's min corner, clamped
+    * like every cell formula), then one flag per SideMeta boolean in field
+    * order — wide (more than `maxFineCover` fine cells), narrow, non-rect,
+    * non-box, rect, box. A null flag sets nothing. */
+  private[graft] def sideStatCols(grid: GridConfig, maxFineCover: Int): Seq[Column] = {
+    val g = col("gtype")
     val wide = GeoExprs.fineCoverCount(col("xmin"), col("ymin"), col("xmax"),
       col("ymax"), grid) > maxFineCover
-    val nonRect = col("gtype") === GeomType.LINESTRING ||
-      col("gtype") === GeomType.POLYGON
-    val nonBox = col("gtype") =!= GeomType.BOX
-    val rect = col("gtype") === GeomType.POINT || col("gtype") === GeomType.BOX
-    val box = col("gtype") === GeomType.BOX
-    if (!withDensity) {
-      def flag0(c: Column) = coalesce(max(when(c, 1).otherwise(0)), lit(0))
-      val row = df.agg(flag0(wide), flag0(!wide), flag0(nonRect), flag0(nonBox),
-        flag0(rect), flag0(box)).head()
-      SideMeta(row.getInt(0) == 1, row.getInt(1) == 1, row.getInt(2) == 1,
-        row.getInt(3) == 1, row.getInt(4) == 1, row.getInt(5) == 1, 0L)
-    } else {
-      def flag(c: Column) = max(when(c, 1).otherwise(0))
-      val home = cellCol(grid, fine = true, col("xmin"), col("ymin"))
-      val grouped = df.groupBy(home.as("t")).agg(
-        count(lit(1)).as("c"), flag(wide).as("w"), flag(!wide).as("na"),
-        flag(nonRect).as("nr"), flag(nonBox).as("nb"), flag(rect).as("re"),
-        flag(box).as("bx"))
-      // coarse-cell histogram derived from the fine partial WHEN the grids
-      // nest (globalPpd an exact multiple of coarsePpd — the reference's
-      // 872 = 8·109 layout): a fine home tile's coarse cell is index
-      // division, and the per-coarse-cell count is a sum over its ≤ fpc²
-      // fine tiles. Costs one extra two-stage agg over the ≤ ppd²-row
-      // partial — NOT a second pass over the data. This is the density
-      // statistic for the COARSE level: a pile-up of wide objects in
-      // one coarse cell takes the O(k²) hash filter unless detected here
-      // (the fine histogram cannot see it — wide objects never join at the
-      // fine level). Non-nested custom grids keep the pre-round-4 behavior:
-      // maxCoarseCellCnt = 0 (coarse auto-sweep never engages; the explicit
-      // sweep flag still works) — a conservative fallback, never an error.
-      // (Non-nested grids also fold out-of-range coarse indices onto other
-      // cells' ids in coarseId — correct, since exact verification follows,
-      // but it inflates coarse-join candidates; the reference layout nests,
-      // and nesting is the supported configuration for performance work.)
-      val nested = grid.globalPpd % grid.coarsePpd == 0
-      val fpc = math.max(grid.globalPpd / grid.coarsePpd, 1)
-      val fi = pmod(col("t"), lit(grid.globalPpd.toLong))
-      val fj = floor(col("t") / lit(grid.globalPpd.toLong))
-      val ct =
-        if (nested)
-          floor(fi / lit(fpc)) + floor(fj / lit(fpc)) * lit(grid.coarsePpd.toLong)
-        else lit(0L)
-      val byCoarse = grouped.groupBy(ct.as("ct")).agg(
-        sum("c").as("cc"), max("c").as("mc"), max("w").as("w"),
-        max("na").as("na"), max("nr").as("nr"), max("nb").as("nb"),
-        max("re").as("re"), max("bx").as("bx"))
-      val coarseCnt =
-        if (nested) coalesce(max("cc"), lit(0L)) else lit(0L)
-      val row = byCoarse.agg(
-        coalesce(max("w"), lit(0)), coalesce(max("na"), lit(0)),
-        coalesce(max("nr"), lit(0)), coalesce(max("nb"), lit(0)),
-        coalesce(max("re"), lit(0)), coalesce(max("bx"), lit(0)),
-        coalesce(max("mc"), lit(0L)), coarseCnt).head()
-      SideMeta(row.getInt(0) == 1, row.getInt(1) == 1, row.getInt(2) == 1,
-        row.getInt(3) == 1, row.getInt(4) == 1, row.getInt(5) == 1,
-        row.getLong(6), row.getLong(7))
+    Seq(cellCol(grid, fine = true, col("xmin"), col("ymin")), wide, !wide,
+      g === GeomType.LINESTRING || g === GeomType.POLYGON, g =!= GeomType.BOX,
+      g === GeomType.POINT || g === GeomType.BOX, g === GeomType.BOX)
+  }
+
+  /** One partition's fold of `sideStatCols`: the rows per home cell and
+    * the flags any row set. The home cell is never null (the clamp's
+    * `greatest` skips a null field, homing it on cell 0). */
+  private[graft] final class SideTally extends Serializable {
+    private val cells = new scala.collection.mutable.LongMap[Long]
+    private var flags = 0
+
+    /** Fold one row whose fields `at` … `at + 6` hold sideStatCols. */
+    def add(row: InternalRow, at: Int): Unit = {
+      val c = row.getLong(at)
+      cells.update(c, cells.getOrElse(c, 0L) + 1L)
+      var i = 0
+      while (i < 6) {
+        if (!row.isNullAt(at + 1 + i) && row.getBoolean(at + 1 + i)) flags |= 1 << i
+        i += 1
+      }
+    }
+  }
+
+  private[graft] object SideTally {
+    /** The SideMeta of a side's partition tallies. The coarse-cell counts
+      * sum the fine histogram when the grids nest (globalPpd an exact
+      * multiple of coarsePpd — the reference's 872 = 8·109 layout), where a
+      * fine cell's coarse cell is index division: the density statistic of
+      * the COARSE level, where a pile-up of wide objects takes the O(k²)
+      * hash filter unless detected here (the fine histogram cannot see it —
+      * wide objects never join at the fine level). A non-nested custom grid
+      * keeps maxCoarseCellCnt = 0 (coarse auto-sweep never engages; the
+      * explicit sweep flag still works), a conservative fallback. */
+    def meta(ts: Seq[SideTally], grid: GridConfig): SideMeta = {
+      val ppd = grid.globalPpd
+      val fpc = grid.finePerCoarse
+      val nested = ppd % grid.coarsePpd == 0
+      val fine = new scala.collection.mutable.LongMap[Long]
+      val coarse = new scala.collection.mutable.LongMap[Long]
+      def bump(m: scala.collection.mutable.LongMap[Long], c: Long, n: Long) =
+        m.update(c, m.getOrElse(c, 0L) + n)
+      for (t <- ts) t.cells.foreachEntry(bump(fine, _, _))
+      if (nested) fine.foreachEntry { (c, n) =>
+        bump(coarse, (c % ppd) / fpc + (c / ppd) / fpc * grid.coarsePpd, n)
+      }
+      def hottest(m: scala.collection.mutable.LongMap[Long]) =
+        m.valuesIterator.foldLeft(0L)(math.max)
+      val flags = ts.foldLeft(0)(_ | _.flags)
+      def bit(i: Int) = (flags & (1 << i)) != 0
+      SideMeta(bit(0), bit(1), bit(2), bit(3), bit(4), bit(5), hottest(fine),
+        if (nested) hottest(coarse) else 0L)
     }
   }
 
@@ -842,21 +849,21 @@ object GeoEngine {
     // (same coordinate multiset → same min/max extremes), so the candidate
     // set IS the equi-join on the four MBR doubles — no tile explode, no
     // shuffle amplification, no reference-point dedup. Catalyst normalizes
-    // -0.0/NaN join keys; AQE picks broadcast vs shuffle. Rectangular pairs
-    // are decided by the join itself (a POINT and a non-degenerate BOX can
-    // never share an MBR); non-rectangular pairs reach exact refinement.
+    // -0.0/NaN join keys, so NaN keys would pair: a row with a NaN or null
+    // MBR field is dropped first, as every tile path drops it. AQE picks
+    // broadcast vs shuffle. Rectangular pairs are decided by the join
+    // itself (a POINT and a non-degenerate BOX can never share an MBR);
+    // non-rectangular pairs reach exact refinement.
     if (pred == Predicates.EQUAL) {
-      val rm0 = rMeta.getOrElse(sideStats(r.toDF(), grid, maxFineCover,
-        withDensity = false))
-      val sm0 = sMeta.getOrElse(sideStats(s.toDF(), grid, maxFineCover,
-        withDensity = false))
+      val rm0 = rMeta.getOrElse(sideMeta(r, grid, maxFineCover))
+      val sm0 = sMeta.getOrElse(sideMeta(s, grid, maxFineCover))
       val anyNonRect0 = rm0.hasNonRect || sm0.hasNonRect
       def side0(df: DataFrame, p: String, idName: String) = {
         val base = Seq(col("id").as(idName), col("gtype").as(p + "g"),
           col("xmin").as(p + "k1"), col("ymin").as(p + "k2"),
           col("xmax").as(p + "k3"), col("ymax").as(p + "k4"))
-        df.select((if (anyNonRect0) base :+ col("coords").as(p + "c")
-                   else base): _*)
+        df.where(!nanMbr(rowRect)).select((if (anyNonRect0)
+          base :+ col("coords").as(p + "c") else base): _*)
       }
       val joined = side0(r.toDF(), "r", "rid").join(side0(s.toDF(), "s", "sid"),
         col("rk1") === col("sk1") && col("rk2") === col("sk2") &&
@@ -872,16 +879,12 @@ object GeoEngine {
     // once the plan is known to shuffle it (tileBuild)
     lazy val rW = widen(r.toDF())
     val sW = if (broadcastS) s.toDF() else widen(s.toDF())
-    // the density histogram only matters when the sweep decision is open
-    // AND the join shuffles AND the predicate takes the tile-exchange plan —
-    // broadcast joins, explicit sweep flags, and containment predicates
-    // (home-cell candidates, no sweep path) get the cheap flat prepass
+    // containment predicates take home-cell candidates: no sweep path
     val containmentPred = pred == Predicates.INSIDE ||
       pred == Predicates.COVERED_BY || pred == Predicates.CONTAINS ||
       pred == Predicates.COVERS
-    val needDensity = !broadcastS && sweep.isEmpty && !containmentPred
-    val rm = rMeta.getOrElse(sideStats(rW, grid, maxFineCover, needDensity))
-    val sm = sMeta.getOrElse(sideStats(sW, grid, maxFineCover, needDensity))
+    val rm = rMeta.getOrElse(sideMeta(r, grid, maxFineCover))
+    val sm = sMeta.getOrElse(sideMeta(s, grid, maxFineCover))
     // explicit Some(flag) overrides the density rule; the sweep needs the
     // slim (shuffle) exchange, so it is decided before any broadcast
     val sweepOn = !broadcastS && sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold))
@@ -1005,9 +1008,8 @@ object GeoEngine {
     val sW = widen(s.toDF())
     // the sweep is decided first, from the density histogram, exactly like
     // spatialJoin's — a hot tile pays the same O(k²) hash filter here
-    val needDensity = sweep.isEmpty
-    val rm = rMeta.getOrElse(sideStats(rW, grid, maxFineCover, needDensity))
-    val sm = sMeta.getOrElse(sideStats(sW, grid, maxFineCover, needDensity))
+    val rm = rMeta.getOrElse(sideMeta(r, grid, maxFineCover))
+    val sm = sMeta.getOrElse(sideMeta(s, grid, maxFineCover))
     val anyNonBox = rm.hasNonBox || sm.hasNonBox
     // All-box workloads: the pure-column boxRel IS exact, so the whole APRIL
     // sub-plan (rasterize + interval re-joins) is provably dead weight —
@@ -1146,8 +1148,7 @@ object GeoEngine {
     // the broadcast payload carries its A-lists, so `ix` rasterizes it
     // through aprilIndex, whose widen repartitions it; an all-point side's
     // A-lists are synthesized on the row.
-    val dm = dataMeta.getOrElse(sideStats(data.toDF(), grid, maxFineCover,
-      withDensity = false))
+    val dm = dataMeta.getOrElse(sideMeta(data, grid, maxFineCover))
     val dIx = ix(data.toDF(), grid, useApril, aprilOrder, dm)
     val windows = queries.map { case (qid, g) =>
       val m = g.mbr

@@ -80,9 +80,10 @@ object GraftJob {
       GeoEngine.tileAssignments(tagged, grid, hexRes = 7).toDF()
     }
 
-    // stage 4: the reference's buildIndex lifecycle — rasterize + metadata
-    // prepass once, commit as a path snapshot. A restarted run (same
-    // params) loads instead of rebuilding, a param change forces a rebuild.
+    // stage 4: the reference's buildIndex lifecycle — rasterize once and
+    // commit as a path snapshot, its SideMeta counted by the write. A
+    // restarted run (same params) loads instead of rebuilding, a param
+    // change forces a rebuild.
     // SpatialIndex.ensure IS the stage's resume logic (it validates grid /
     // order / maxFineCover against the manifest lineage), so no runStage
     // wrapper.

@@ -26,8 +26,8 @@ object SparkEntry {
   // ---- static dispatch metadata (round 6) ---------------------------------
   //
   // Every spatialJoin/findRelationJoin/rangeBatch without caller-provided
-  // SideMeta runs an EAGER metadata prepass per side (one or two extra Spark
-  // jobs per query execution — pure fixed overhead on every bench iteration).
+  // SideMeta runs an EAGER metadata prepass per side (one extra Spark job
+  // per side per query execution — pure fixed overhead on every bench iteration).
   // The reference computes dataset metadata once at ingest; these constants
   // are the same knowledge derived a priori from the geometry FORMULAS, so
   // they hold at every scale factor (the formulas only vary the key range,

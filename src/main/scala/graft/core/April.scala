@@ -25,8 +25,6 @@ object April {
 
   final case class Approx(all: Array[Long], full: Array[Long])
 
-  val emptyApprox: Approx = Approx(Array.empty, Array.empty)
-
   /**
    * Rasterize a geometry into (ALL, FULL) Hilbert interval lists.
    *

@@ -47,11 +47,6 @@ final case class GridConfig(
   @inline def tileId(i: Int, j: Int): Long = i.toLong + j.toLong * globalPpd
   @inline def tileI(tile: Long): Int = (tile % globalPpd).toInt
   @inline def tileJ(tile: Long): Int = (tile / globalPpd).toInt
-  @inline def coarseId(i: Int, j: Int): Long = i.toLong + j.toLong * coarsePpd
-
-  /** Coarse tile id covering the fine tile. */
-  @inline def coarseOfFine(tile: Long): Long =
-    coarseId(tileI(tile) / finePerCoarse, tileJ(tile) / finePerCoarse)
 
   /** MBR of a fine tile (for kNN lower bounds / interior-tile shortcuts). */
   def tileMbr(tile: Long): MBR = {

@@ -17,7 +17,6 @@ package graft.core
 object HexGrid {
 
   private val Offset = 1L << 28
-  val MaxRes = 20
 
   /** Hex circumradius (center→vertex) at a resolution, in degrees. */
   def size(res: Int): Double = 45.0 / (1L << res)

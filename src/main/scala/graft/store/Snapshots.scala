@@ -1,7 +1,9 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
@@ -18,12 +20,17 @@ import java.nio.charset.StandardCharsets
  * Layout:
  *   <root>/<table>/snap-<id>/data/part-*.parquet    (the data)
  *   <root>/<table>/snap-<id>/MANIFEST.json          (lineage + metrics)
+ *   <root>/<table>/snap-<id>/SCHEMA.json            (the data's schema)
  *   <root>/<table>/LATEST                           (atomic pointer, rename-commit)
  *
- * Commit protocol: write data to the snapshot dir, write MANIFEST, then
- * atomically rename a temp pointer onto LATEST. A crash at any earlier point
- * leaves LATEST pointing at the previous snapshot — uncommitted snapshot
- * dirs are simply ignored (and can be GC'd).
+ * Commit protocol: write data to the snapshot dir, write MANIFEST and
+ * SCHEMA, then atomically rename a temp pointer onto LATEST. A crash at any
+ * earlier point leaves LATEST pointing at the previous snapshot —
+ * uncommitted snapshot dirs are simply ignored (and can be GC'd). SCHEMA
+ * holds the data's schema as written (StructType JSON); a load passes it to
+ * the reader, which makes every field nullable as inference does, so the
+ * load runs no inference job. A snapshot written without one loads by
+ * inference.
  */
 object Snapshots {
 
@@ -35,7 +42,18 @@ object Snapshots {
   /** Commit a DataFrame as the next snapshot of `table`. One pass over the
     * data: per-partition row counts are collected while writing. */
   def commit(df: DataFrame, root: String, table: String,
-             lineage: Map[String, String] = Map.empty): Manifest = {
+             lineage: Map[String, String] = Map.empty): Manifest =
+    commitFolding[Unit](df, root, table, Nil, () => ())((_, _, _) => ())(
+      _ => lineage)
+
+  /** `commit` that also folds `cols`, evaluated per row in the same pass and
+    * not written, into one `zero()` per partition: `add(acc, row, at)` sees
+    * each row with `cols` in its fields from `at` on. `lineage` receives the
+    * folds, one per partition index, before the manifest is written. */
+  private[graft] def commitFolding[A](df: DataFrame, root: String,
+      table: String, cols: Seq[Column], zero: () => A)(
+      add: (A, InternalRow, Int) => Unit)(
+      lineage: Seq[A] => Map[String, String]): Manifest = {
     val spark = df.sparkSession
     val tableDir = Paths.get(root, table)
     Files.createDirectories(tableDir)
@@ -43,31 +61,41 @@ object Snapshots {
     val snapDir = tableDir.resolve(f"snap-$snapId%05d")
     val dataDir = snapDir.resolve("data")
 
-    // per-partition row metrics via an accumulator, collected in the same
-    // pass that writes the data, counted on the internal rows
-    val acc = spark.sparkContext.collectionAccumulator[(Int, Long)]("graft.partRows")
-    val counted = GraftColumnBridge.mapInternalPartitions(df) { (part, it) =>
+    // per-partition row metrics (and folds) via an accumulator, collected
+    // in the same pass that writes the data, counted on the internal rows
+    val at = df.schema.length
+    val foldNames = cols.indices.map(i => s"__graft_fold$i")
+    val withCols =
+      df.select(col("*") +: cols.zip(foldNames).map { case (c, n) => c.as(n) }: _*)
+    val acc = spark.sparkContext.collectionAccumulator[(Int, Long, A)]("graft.partRows")
+    val counted = GraftColumnBridge.mapInternalPartitions(withCols) { (part, it) =>
       var n = 0L
+      val a = zero()
       new Iterator[InternalRow] {
         def hasNext: Boolean = {
           val h = it.hasNext
-          if (!h) acc.add((part, n))
+          if (!h) acc.add((part, n, a))
           h
         }
-        def next(): InternalRow = { n += 1; it.next() }
+        def next(): InternalRow = {
+          val row = it.next()
+          n += 1
+          add(a, row, at)
+          row
+        }
       }
     }
+    val data = counted.drop(foldNames: _*)
+    data.write.mode("overwrite").parquet(dataDir.toString)
 
-    counted.write.mode("overwrite").parquet(dataDir.toString)
-
-    val parts = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala
-      .toSeq.map(t => PartitionMetric(t._1, t._2))
-      .groupBy(_.partition)
-      .map { case (p, ms) => PartitionMetric(p, ms.map(_.rows).max) }
-      .toSeq.sortBy(_.partition)
-    val manifest = Manifest(table, snapId, System.currentTimeMillis(), lineage,
-      parts, parts.map(_.rows).sum)
+    // a retried task reports its partition again: keep one report each
+    val perPart = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala
+      .toSeq.groupBy(_._1).values.map(_.maxBy(_._2)).toSeq.sortBy(_._1)
+    val parts = perPart.map(t => PartitionMetric(t._1, t._2))
+    val manifest = Manifest(table, snapId, System.currentTimeMillis(),
+      lineage(perPart.map(_._3)), parts, parts.map(_.rows).sum)
     Files.writeString(snapDir.resolve("MANIFEST.json"), manifestJson(manifest))
+    Files.writeString(snapDir.resolve(SchemaFile), data.schema.json)
 
     // atomic pointer swap
     val tmp = tableDir.resolve(s".LATEST.tmp.$snapId")
@@ -77,16 +105,25 @@ object Snapshots {
     manifest
   }
 
+  private val SchemaFile = "SCHEMA.json"
+
   /** Id of the last committed snapshot, if any. */
   def latestId(root: String, table: String): Option[Long] = {
     val p = Paths.get(root, table, "LATEST")
     if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
   }
 
-  /** Load the latest committed snapshot of `table`. */
+  /** Load the latest committed snapshot of `table`, with its stored schema
+    * (no job); a snapshot without one infers it. */
   def load(spark: SparkSession, root: String, table: String): Option[DataFrame] =
     latestId(root, table).map { id =>
-      spark.read.parquet(Paths.get(root, table, f"snap-$id%05d", "data").toString)
+      val snapDir = Paths.get(root, table, f"snap-$id%05d")
+      val schema = snapDir.resolve(SchemaFile)
+      val reader =
+        if (!Files.exists(schema)) spark.read
+        else spark.read.schema(
+          DataType.fromJson(Files.readString(schema)).asInstanceOf[StructType])
+      reader.parquet(snapDir.resolve("data").toString)
     }
 
   /** Read the manifest of the latest snapshot. */

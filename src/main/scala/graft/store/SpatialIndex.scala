@@ -12,10 +12,12 @@ import graft.core.GridConfig
  * APRIL order, SideMeta dispatch statistics and a CRC of the index code
  * recorded in the manifest lineage.
  *
- * `build` pays rasterization + the metadata prepass once at ingest;
- * `load`/`ensure` hand repeated queries the pre-indexed table plus its
- * SideMeta so they skip both (the amortization a real deployment gets from
- * the reference's persist=true APRIL files). Rows are not clustered: no
+ * `build` pays rasterization once at ingest, in the one pass that writes
+ * the snapshot and counts its SideMeta (the reference counts a dataset's
+ * metadata in the scan that partitions it); `load`/`ensure` hand repeated
+ * queries the pre-indexed table plus its SideMeta so they skip both (the
+ * amortization a real deployment gets from the reference's persist=true
+ * APRIL files), and run no job. Rows are not clustered: no
  * query filters on a spatial column of the snapshot (the candidate exchange
  * re-tiles its rows), so a clustering would buy no parquet min/max pruning.
  *
@@ -29,24 +31,22 @@ object SpatialIndex {
   final case class Loaded(df: DataFrame, meta: GeoEngine.SideMeta)
 
   /** Build and commit the index snapshot; returns the loaded (committed)
-    * form, exactly what a later `load` would see. */
+    * form, exactly what a later `load` would see. One read of the input:
+    * the write folds each row's `GeoEngine.sideStatCols` into the SideMeta
+    * recorded in the lineage. */
   def build(df: DataFrame, grid: GridConfig, order: Int, root: String,
             table: String, maxFineCover: Int = GeoEngine.MaxFineCover): Loaded = {
-    // two actions read the input (sideMeta scan + snapshot write): widen it
-    // once, then cache, so both passes and the rasterize run in parallel
-    // over at most one exchange (aprilIndex's widen then no-ops) and an
-    // expensive compute closure evaluates once
-    val cached = GeoEngine.widen(df).cache()
-    val meta = GeoEngine.sideMeta(cached, grid, maxFineCover)
-    val indexed = GeoEngine.aprilIndex(cached, grid, order)
-    Snapshots.commit(indexed, root, table, lineage = Map(
-      "stage" -> "build_index",
-      "april_order" -> order.toString,
-      "grid" -> gridStr(grid),
-      "max_fine_cover" -> maxFineCover.toString,
-      "side_meta" -> metaStr(meta),
-      "code" -> codeCrc))
-    cached.unpersist()
+    Snapshots.commitFolding(GeoEngine.aprilIndex(df, grid, order), root, table,
+      GeoEngine.sideStatCols(grid, maxFineCover), () => new GeoEngine.SideTally)(
+      (t, row, at) => t.add(row, at)) { tallies =>
+      Map(
+        "stage" -> "build_index",
+        "april_order" -> order.toString,
+        "grid" -> gridStr(grid),
+        "max_fine_cover" -> maxFineCover.toString,
+        "side_meta" -> metaStr(GeoEngine.SideTally.meta(tallies, grid)),
+        "code" -> codeCrc)
+    }
     load(df.sparkSession, root, table)
       .getOrElse(sys.error(s"index commit for $table did not become visible"))
   }

@@ -130,9 +130,8 @@ class BuildSideSpec extends AnyFunSuite {
           pairs(df)
         }
         assert(got == want, s"$ctx pred=$pred: broadcast ${got.size} slim ${want.size}")
-        if (pred != Predicates.EQUAL)
-          assert(!got.exists { case (a, b) => badIds(a) || badIds(b) },
-            s"$ctx pred=$pred kept NaN- or null-MBR rows")
+        assert(!got.exists { case (a, b) => badIds(a) || badIds(b) },
+          s"$ctx pred=$pred kept NaN- or null-MBR rows")
         if (pred == Predicates.INTERSECTS) assert(got.nonEmpty, ctx)
       }
       def rel = GeoEngine.findRelationJoin(r, shapeS, grid, useApril = useApril,

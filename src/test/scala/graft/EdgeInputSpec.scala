@@ -146,4 +146,30 @@ class EdgeInputSpec extends AnyFunSuite {
     // no queries at all
     assert(GeoEngine.knnBatchDf(ds(points), qdf.limit(0), 3, Some(grid)).isEmpty)
   }
+
+  test("NaN and null MBR rows on both sides: EQUAL ⊆ INTERSECTS and ≡ brute force") {
+    val shared = mixed(0, 3)
+    // each bad row keeps its geometry, with one MBR field NaN; its twin in
+    // S is the same row, so an equi-join that paired NaN keys would match
+    // them, where every tile plan drops both
+    def bad(base: Long): Seq[GeoRow] = shared.take(8).zipWithIndex.map { case (a, i) =>
+      val m = Array(a.xmin, a.ymin, a.xmax, a.ymax)
+      m(i % 4) = Double.NaN
+      GeoRow(base + i, a.gtype, a.coords, m(0), m(1), m(2), m(3))
+    }
+    val rRows = shared ++ bad(5000L)
+    val sRows = shared.map(a => a.copy(id = a.id + 1000L)) ++ bad(6000L)
+    val r = ds(rRows).union(TestRows.nulled(ds(bad(5100L))))
+    val s = ds(sRows).union(TestRows.nulled(ds(bad(6100L))))
+    val want = (for (a <- rRows; b <- sRows if mbrOverlap(a, b) &&
+      Topology.evalPredicate(Predicates.EQUAL, geom(a), geom(b)))
+      yield (a.id, b.id)).toSet
+    assert(want.size == shared.size, "every clean row equals its twin")
+    for ((mode, _, threshold) <- modes.filter(!_._2)) withThreshold(threshold) {
+      val equal = pairs(GeoEngine.spatialJoin(r, s, Predicates.EQUAL, grid))
+      val intersects = pairs(GeoEngine.spatialJoin(r, s, Predicates.INTERSECTS, grid))
+      assert(equal == want, s"$mode: EQUAL ${equal -- want} extra, ${want -- equal} missing")
+      assert(equal.subsetOf(intersects), s"$mode: EQUAL ⊄ INTERSECTS")
+    }
+  }
 }

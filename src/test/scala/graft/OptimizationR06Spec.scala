@@ -96,46 +96,13 @@ class OptimizationR06Spec extends AnyFunSuite {
     assert(slice.size == 500)
   }
 
-  /** `f`'s result and the number of Spark jobs it launched. A listener
-    * counts job starts between two marked sentinel jobs: the bus delivers
-    * events in order, so once the second sentinel's start arrives every job
-    * launched by `f` has been counted, and none launched before it is. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    import java.util.concurrent.{Semaphore, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val sentinels = new Semaphore(0)
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.sentinel") != null)
-          sentinels.release()
-        else jobs.incrementAndGet()
-    }
-    def sentinel(): Unit = {
-      sc.setLocalProperty("graft.sentinel", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.sentinel", null)
-      assert(sentinels.tryAcquire(60, TimeUnit.SECONDS), "listener bus stalled")
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel()
-      jobs.set(0)
-      val out = f
-      sentinel()
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("widen guard: no-op near target parallelism, widens narrow inputs") {
     import org.apache.spark.sql.DataFrame
     val target = spark.sparkContext.defaultParallelism // 4
     // widen decides from the planned query alone: no input launches a job
     def widen(df: DataFrame): DataFrame = {
-      val (out, jobs) = jobsDuring(GeoEngine.widen(df))
-      assert(jobs == 0, s"widen launched $jobs job(s) on ${df.queryExecution.executedPlan}")
+      val (out, jobs) = TestRows.jobsDuring(spark)(GeoEngine.widen(df))
+      assert(jobs.isEmpty, s"widen launched $jobs on ${df.queryExecution.executedPlan}")
       out
     }
     val near = spark.range(0, 1000, 1, target / 2).toDF() // half of target

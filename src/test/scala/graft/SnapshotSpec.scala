@@ -72,6 +72,32 @@ class SnapshotSpec extends AnyFunSuite {
     assert(Snapshots.load(spark, root, "t").get.count() == 7L)
   }
 
+  test("load reads the stored schema and runs no job; a schema-less snapshot infers") {
+    val root = freshRoot()
+    // non-nullable fields and elements: the write keeps them, a parquet
+    // read returns every field, element and value nullable
+    val df = spark.range(0, 50, 1, 2).select(col("id"),
+      array(col("id"), lit(1L)).as("arr"),
+      map(lit("k"), col("id")).as("m"),
+      struct(col("id").as("a"), array(lit(2.0)).as("b")).as("st"))
+    assert(!df.schema("arr").nullable)
+    Snapshots.commit(df, root, "t", Map.empty)
+    val dataDir = java.nio.file.Paths.get(root, "t", "snap-00001", "data").toString
+    val inferred = spark.read.parquet(dataDir).schema
+    assert(inferred("arr").nullable && inferred("arr").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, true))
+    val (loaded, jobs) = TestRows.jobsDuring(spark)(Snapshots.load(spark, root, "t").get)
+    assert(jobs.isEmpty, s"load launched $jobs")
+    assert(loaded.schema == inferred)
+    assert(loaded.collect().toSet == spark.read.parquet(dataDir).collect().toSet)
+    // a snapshot written without a schema file loads by inference
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(root, "t", "snap-00001", "SCHEMA.json"))
+    val old = Snapshots.load(spark, root, "t").get
+    assert(old.schema == inferred)
+    assert(old.count() == 50L)
+  }
+
   private val grid = graft.web.Pages.WorldGrid
 
   private def diamonds(n: Int) = {
@@ -164,7 +190,7 @@ class SnapshotSpec extends AnyFunSuite {
       case d => lineageShuffles(d.rdd)
     }.toSet
     // `p` and every operator below it, through adaptive plans, query stages
-    // and cached relations (the build caches its widened input)
+    // and cached relations
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec => Seq(q.plan)
@@ -181,14 +207,28 @@ class SnapshotSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     // one partition: the shape of a compact single-file parquet input, which
-    // the build widens once, before its metadata pass and the rasterize
-    val (built, commit) = try {
+    // the build widens once, before the rasterize and the write that counts
+    // its metadata
+    val ((built, commit), jobs) = try TestRows.jobsDuring(spark) {
       val b = graft.store.SpatialIndex.build(diamonds(2000).toDF().coalesce(1),
         grid, 10, root, "diamonds")
       (b, writes.poll(60, TimeUnit.SECONDS))
     } finally spark.listenerManager.unregister(listener)
     assert(commit != null, "no commit write observed")
+    // two jobs, the exchange's map stage and the write: no metadata
+    // aggregation, no inference on the load
+    assert(jobs.size == 2 && jobs.count(_.startsWith("parquet at Snapshots.scala")) == 1,
+      s"jobs beyond the commit's: $jobs")
     val plan = commit.executedPlan
+    // no cached relation: none in the plan, none persisted behind its RDDs
+    def persisted(rdd: RDD[_]): Boolean =
+      rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+        rdd.dependencies.exists(d => persisted(d.rdd))
+    assert(!nodes(plan).exists {
+      case _: InMemoryTableScanExec => true
+      case r: RDDScanExec => persisted(r.rdd)
+      case _ => false
+    }, s"the build caches its input: $plan")
     // every shuffle feeding the commit: its Exchanges, and the shuffles
     // behind a scanned RDD (the commit counts its rows on the internal RDD)
     val shuffles = nodes(plan).collect {
