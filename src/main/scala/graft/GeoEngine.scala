@@ -167,14 +167,19 @@ object GeoEngine {
     * data; a stored index counts it in the pass that writes it
     * (SpatialIndex.build), so a query over the loaded index runs none. */
   def sideMeta(ds: Dataset[_], grid: GridConfig,
-               maxFineCover: Int = MaxFineCover): SideMeta = {
+               maxFineCover: Int = MaxFineCover): SideMeta =
+    SideTally.meta(tallies(ds, grid, maxFineCover), grid)
+
+  /** A side's per-partition SideTallies, in one job with no shuffle. */
+  private def tallies(ds: Dataset[_], grid: GridConfig,
+      maxFineCover: Int): Seq[SideTally] = {
     val rows = ds.toDF().select(sideStatCols(grid, maxFineCover): _*)
       .queryExecution.toRdd
-    SideTally.meta(rows.mapPartitions { it =>
+    rows.mapPartitions { it =>
       val t = new SideTally
       it.foreach(t.add(_, 0))
       Iterator.single(t)
-    }.collect().toSeq, grid)
+    }.collect().toSeq
   }
 
   /** The per-row statistics a SideTally folds, over (gtype, xmin, ymin,
@@ -224,11 +229,8 @@ object GeoEngine {
       val ppd = grid.globalPpd
       val fpc = grid.finePerCoarse
       val nested = ppd % grid.coarsePpd == 0
-      val fine = new scala.collection.mutable.LongMap[Long]
+      val fine = cells(ts)
       val coarse = new scala.collection.mutable.LongMap[Long]
-      def bump(m: scala.collection.mutable.LongMap[Long], c: Long, n: Long) =
-        m.update(c, m.getOrElse(c, 0L) + n)
-      for (t <- ts) t.cells.foreachEntry(bump(fine, _, _))
       if (nested) fine.foreachEntry { (c, n) =>
         bump(coarse, (c % ppd) / fpc + (c / ppd) / fpc * grid.coarsePpd, n)
       }
@@ -239,6 +241,16 @@ object GeoEngine {
       SideMeta(bit(0), bit(1), bit(2), bit(3), bit(4), bit(5), hottest(fine),
         if (nested) hottest(coarse) else 0L)
     }
+
+    /** The side's rows per home fine cell: the tallies' histograms summed. */
+    def cells(ts: Seq[SideTally]): scala.collection.mutable.LongMap[Long] = {
+      val fine = new scala.collection.mutable.LongMap[Long]
+      for (t <- ts) t.cells.foreachEntry(bump(fine, _, _))
+      fine
+    }
+
+    private def bump(m: scala.collection.mutable.LongMap[Long], c: Long,
+        n: Long): Unit = m.update(c, m.getOrElse(c, 0L) + n)
   }
 
   /** One side's exploded row for the in-tile plane sweep. */
@@ -358,8 +370,7 @@ object GeoEngine {
    * the exchange; geometry/APRIL re-join by id downstream.
    */
   private def mrCandidates(rIx: DataFrame, sIx: DataFrame, grid: GridConfig,
-      build: Build, saltFactor: Int, maxFineCover: Int,
-      rm: SideMeta, sm: SideMeta,
+      build: Build, maxFineCover: Int, rm: SideMeta, sm: SideMeta,
       payload: String => Seq[Column],
       sweep: Boolean): DataFrame = {
     val slim = build == NoBuild
@@ -377,7 +388,7 @@ object GeoEngine {
           sweepTile(grid, maxFineCover, tile, rs, ss)
         }.toDF()
     } else
-      mergedJoin(rt, st, grid, build, saltFactor, maxFineCover)
+      mergedJoin(rt, st, grid, build, maxFineCover)
   }
 
   /** One side's merged-exchange emission against the other side's
@@ -438,15 +449,18 @@ object GeoEngine {
     GeoExprs.lvlTiles(rc.g, rc.xmin, rc.ymin, rc.xmax, rc.ymax, grid, LvlOffset,
       maxFineCover, emitF, emitCNarrow, emitCWide)
 
+  /** One side's id, gtype and MBR under the side's prefix. */
+  private def idMbrCols(p: String, idName: String): Seq[Column] =
+    Seq(col("id").as(idName), col("gtype").as(p + "g"),
+      col("xmin").as(p + "xmin"), col("ymin").as(p + "ymin"),
+      col("xmax").as(p + "xmax"), col("ymax").as(p + "ymax"))
+
   /** One side's join columns in one projection: `tile`, id, gtype and MBR
     * under the side's prefix (+ payload columns when not slim). */
   private def sideCols(df: DataFrame, tile: Column, p: String, idName: String,
-      slim: Boolean, payload: String => Seq[Column]): DataFrame = {
-    val base = Seq(tile.as("tile"), col("id").as(idName), col("gtype").as(p + "g"),
-      col("xmin").as(p + "xmin"), col("ymin").as(p + "ymin"),
-      col("xmax").as(p + "xmax"), col("ymax").as(p + "ymax"))
-    df.select((if (slim) base else base ++ payload(p)): _*)
-  }
+      slim: Boolean, payload: String => Seq[Column]): DataFrame =
+    df.select((tile.as("tile") +: idMbrCols(p, idName)) ++
+      (if (slim) Nil else payload(p)): _*)
 
   /** One side's single-pass multi-level emission for the merged exchange:
     * the cover of `rc` (the row's own MBR, `rowRect`, or a caller's
@@ -490,23 +504,10 @@ object GeoEngine {
     * or by `pairCond` instead: containment candidates need neither dedup
     * nor level filter and apply their own containment predicate. */
   private def mergedJoin(rt0: DataFrame, st0: DataFrame, grid: GridConfig,
-      build: Build, saltFactor: Int, maxFineCover: Int,
-      saltIdCol: String = "rid",
+      build: Build, maxFineCover: Int,
       pairCond: Option[Column] = None): DataFrame = {
-    // the side carrying `saltIdCol` is the probe (stable pmod salt from its
-    // id); the other side replicates saltFactor ways — for containment
-    // predicates the probe can be either physical side
-    val salted = saltFactor > 1 && build == NoBuild
-    def pmodSalt(df: DataFrame) =
-      df.withColumn("salt", pmod(hash(col(saltIdCol)), lit(saltFactor)))
-    def explodeSalt(df: DataFrame) =
-      df.withColumn("salt", explode(sequence(lit(0), lit(saltFactor - 1))))
-    val rtHasId = rt0.columns.contains(saltIdCol)
-    val rt1 = if (!salted) rt0 else if (rtHasId) pmodSalt(rt0) else explodeSalt(rt0)
-    val st1 = if (!salted) st0 else if (rtHasId) explodeSalt(st0) else pmodSalt(st0)
-    val rt = if (build == BuildR) broadcast(rt1) else rt1
-    val st = if (build == BuildS) broadcast(st1) else st1
-    val keys = if (salted) Seq("tile", "salt") else Seq("tile")
+    val rt = if (build == BuildR) broadcast(rt0) else rt0
+    val st = if (build == BuildS) broadcast(st0) else st0
     // with `NoBuild`, no static join-strategy hint: merge/shuffle_hash/
     // broadcast hints on this join were all measured equal-or-worse than
     // Catalyst+AQE's own choice at sf0.1 (OPTIMIZATION_r06.md "measured but
@@ -516,7 +517,7 @@ object GeoEngine {
     val cond = pairCond.getOrElse(
       mergedPairCond(col("tile"), RectCols.prefixed("r"), RectCols.prefixed("s"),
         grid, maxFineCover))
-    rt.join(st, keys).where(cond).drop("tile", "salt")
+    rt.join(st, Seq("tile")).where(cond).drop("tile")
   }
 
   /**
@@ -536,7 +537,7 @@ object GeoEngine {
    * sides' own prefixed MBRs) drop before the exact predicate.
    */
   private def containmentCandidates(rIx: DataFrame, sIx: DataFrame,
-      grid: GridConfig, build: Build, saltFactor: Int,
+      grid: GridConfig, build: Build,
       maxFineCover: Int, outerHasWide: Boolean, outerHasNarrow: Boolean,
       payload: String => Seq[Column], innerIsR: Boolean,
       outerRect: RectCols, pairCond: Column): DataFrame = {
@@ -572,9 +573,7 @@ object GeoEngine {
       emitCNarrow = false, emitCWide = outerHasWide, grid, maxFineCover,
       outerRect, slim, payload)
     val (rt, st) = if (innerIsR) (it, ot) else (ot, it)
-    mergedJoin(rt, st, grid, build, saltFactor, maxFineCover,
-      saltIdCol = innerId,
-      pairCond = Some(pairCond))
+    mergedJoin(rt, st, grid, build, maxFineCover, pairCond = Some(pairCond))
   }
 
   /** Widen a narrow batch input to the session's parallelism. The engine's
@@ -720,15 +719,17 @@ object GeoEngine {
 
   // ------------------------------------------------------------------ joins
 
+  /** Default `hotTileThreshold`: the measured crossover (ScaleBench hot-tile
+    * micro-bench: 8k-object tile ≈ break-even, 30k-object tile sweep wins
+    * >2×; O(k²) vs O(k·window) diverges fast past it). */
+  val HotTileThreshold = 8192L
+
   /** Density-driven sweep selection (the reference always sweeps,
     * intersection_join_filter.cpp:363-489; here the codegen hash path wins
     * at ordinary density, so the sweep engages only when the dispatch
     * prepass proves a hot tile). Hot means a fine home tile holds more than
     * `hotTileThreshold` objects, or — when either side has wide rows, which
-    * the fine histogram cannot see — a coarse cell does. The default
-    * threshold is the measured crossover on this hardware (ScaleBench
-    * hot-tile micro-bench: 8k-object tile ≈ break-even, 30k-object tile
-    * sweep wins >2×; O(k²) vs O(k·window) diverges fast past it). */
+    * the fine histogram cannot see — a coarse cell does. */
   private def hotSweep(rm: SideMeta, sm: SideMeta,
       hotTileThreshold: Long): Boolean =
     math.max(rm.maxHomeTileCnt, sm.maxHomeTileCnt) > hotTileThreshold ||
@@ -796,8 +797,7 @@ object GeoEngine {
    * The tile candidate join's build side, and R's `ix`-indexed form, for a
    * join whose caller fixed no build side and whose plan is the hash path
    * (a hot tile selects the sweep first, which shuffles). `BuildR` only for
-   * an unsalted join (a salt asks for the salted shuffle) over an all-point
-   * R whose emission fits Spark's
+   * an all-point R whose emission fits Spark's
    * `spark.sql.autoBroadcastJoinThreshold` (chooseBroadcast on the planned
    * query, no job): a point emits one tile per level and synthesizes its
    * payload (payloadCols), so that estimate bounds what the broadcast
@@ -808,227 +808,150 @@ object GeoEngine {
    * shuffle would be paid for nothing. Otherwise `NoBuild` over `ix(rW)`.
    */
   private def tileBuild(r0: DataFrame, rW: => DataFrame, grid: GridConfig,
-      useApril: Boolean, aprilOrder: Int, maxFineCover: Int, saltFactor: Int,
+      useApril: Boolean, aprilOrder: Int, maxFineCover: Int,
       rm: SideMeta, sm: SideMeta): (Build, DataFrame) = {
     def fits = chooseBroadcast(mrSide(r0, "r", "rid", rm, sm, grid,
       maxFineCover, slim = false,
       sidePayload(BuildR, rm, sm, useApril, grid, aprilOrder)),
       r0.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
-    if (saltFactor <= 1 && allPoints(rm) && fits) (BuildR, r0)
+    if (allPoints(rm) && fits) (BuildR, r0)
     else (NoBuild, ix(rW, grid, useApril, aprilOrder, rm))
   }
 
-  /**
-   * Predicate spatial join: returns (rid, sid) pairs satisfying `pred`.
-   *
-   * Plan: tile-explode both sides → equi-join on tile (pass
-   * `broadcastS = true` to force a broadcast of S's exploded form; else a
-   * non-containment, unsalted join without a hot tile broadcasts an
-   * all-point R's emission when it fits `spark.sql.autoBroadcastJoinThreshold`,
-   * and Catalyst picks SHJ/SMJ otherwise) → inclusive MBR-overlap
-   * (codegen'd column predicate) → reference-point dedup → optional APRIL
-   * verdict → exact refinement for inconclusive pairs only.
-   *
-   * `saltFactor` > 1 salts the tile key when both sides shuffle: it keeps
-   * R off the broadcast, and a broadcast S ignores it.
-   *
-   * Disjoint-join caveat intentionally preserved: candidates still come from
-   * common tiles only (SURVEY.md §2.4).
-   */
-  def spatialJoin(r: Dataset[GeoRow], s: Dataset[GeoRow], pred: Int,
-                  grid: GridConfig, useApril: Boolean = false,
-                  broadcastS: Boolean = false,
-                  saltFactor: Int = 1,
-                  aprilOrder: Int = AprilOrder,
-                  maxFineCover: Int = MaxFineCover,
-                  rMeta: Option[SideMeta] = None,
-                  sMeta: Option[SideMeta] = None,
-                  sweep: Option[Boolean] = None,
-                  hotTileThreshold: Long = 8192L): DataFrame = {
-    // EQUAL fast plan: point-set-equal geometries have bit-identical MBRs
-    // (same coordinate multiset → same min/max extremes), so the candidate
-    // set IS the equi-join on the four MBR doubles — no tile explode, no
-    // shuffle amplification, no reference-point dedup. Catalyst normalizes
-    // -0.0/NaN join keys, so NaN keys would pair: a row with a NaN or null
-    // MBR field is dropped first, as every tile path drops it. AQE picks
-    // broadcast vs shuffle. Rectangular pairs are decided by the join
-    // itself (a POINT and a non-degenerate BOX can never share an MBR);
-    // non-rectangular pairs reach exact refinement.
-    if (pred == Predicates.EQUAL) {
-      val rm0 = rMeta.getOrElse(sideMeta(r, grid, maxFineCover))
-      val sm0 = sMeta.getOrElse(sideMeta(s, grid, maxFineCover))
-      val anyNonRect0 = rm0.hasNonRect || sm0.hasNonRect
-      def side0(df: DataFrame, p: String, idName: String) = {
-        val base = Seq(col("id").as(idName), col("gtype").as(p + "g"),
-          col("xmin").as(p + "k1"), col("ymin").as(p + "k2"),
-          col("xmax").as(p + "k3"), col("ymax").as(p + "k4"))
-        df.where(!nanMbr(rowRect)).select((if (anyNonRect0)
-          base :+ col("coords").as(p + "c") else base): _*)
-      }
-      val joined = side0(r.toDF(), "r", "rid").join(side0(s.toDF(), "s", "sid"),
-        col("rk1") === col("sk1") && col("rk2") === col("sk2") &&
-        col("rk3") === col("sk3") && col("rk4") === col("sk4"))
-      val out =
-        if (!anyNonRect0) joined
-        else joined.where(rectangularCond(RectCols.prefixed("r"), RectCols.prefixed("s")) ||
-          GeoExprs.stRefine(pred, col("rg"), col("rc"), col("sg"), col("sc")))
-      return out.select(col("rid"), col("sid"))
-    }
-    // widen-before-explode: the cover explode + MBR/tile math run as
-    // projections on the scan partitioning (see widen's scaladoc); R only
-    // once the plan is known to shuffle it (tileBuild)
-    lazy val rW = widen(r.toDF())
-    val sW = if (broadcastS) s.toDF() else widen(s.toDF())
-    // containment predicates take home-cell candidates: no sweep path
-    val containmentPred = pred == Predicates.INSIDE ||
-      pred == Predicates.COVERED_BY || pred == Predicates.CONTAINS ||
-      pred == Predicates.COVERS
-    val rm = rMeta.getOrElse(sideMeta(r, grid, maxFineCover))
-    val sm = sMeta.getOrElse(sideMeta(s, grid, maxFineCover))
-    // explicit Some(flag) overrides the density rule; the sweep needs the
-    // slim (shuffle) exchange, so it is decided before any broadcast
-    val sweepOn = !broadcastS && sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold))
-    val (build, rIx) =
-      if (broadcastS) (BuildS, ix(rW, grid, useApril, aprilOrder, rm))
-      else if (sweepOn || containmentPred)
-        (NoBuild, ix(rW, grid, useApril, aprilOrder, rm))
-      else tileBuild(r.toDF(), rW, grid, useApril, aprilOrder, maxFineCover,
-        saltFactor, rm, sm)
-    val sIx = ix(sW, grid, useApril, aprilOrder, sm)
-    joinCascade(rIx, sIx, pred, grid, useApril, aprilOrder, build,
-      saltFactor, maxFineCover, rm, sm, sweepOn)
+  /** EQUAL's candidates: point-set-equal geometries have bit-identical
+    * MBRs, so the candidates ARE the equi-join on the four MBR doubles (no
+    * explode, no dedup; AQE picks broadcast vs shuffle). Catalyst normalizes
+    * NaN join keys as equal, so NaN/null MBR rows are dropped first, as on
+    * every tile path. Nothing explodes, so the coords ride the sides. */
+  private def equalCandidates(r: DataFrame, s: DataFrame,
+      withCoords: Boolean): DataFrame = {
+    def side(df: DataFrame, p: String, idName: String) =
+      df.where(!nanMbr(rowRect)).select(idMbrCols(p, idName) ++
+        (if (withCoords) Seq(col("coords").as(p + "c")) else Nil): _*)
+    side(r, "r", "rid").join(side(s, "s", "sid"),
+      mbrEqual(RectCols.prefixed("r"), RectCols.prefixed("s")))
   }
 
-  /**
-   * The join cascade shared by spatialJoin and rangeBatch, from prepared
-   * (`ix`-indexed) sides on: candidate pairs (containment home cells or
-   * mrCandidates), the rectangular column fast path, the payload `attach`
-   * when no side is broadcast, the optional APRIL verdict and the exact
-   * refinement for inconclusive pairs only. Returns (rid, sid). With a
-   * build side the payloads ride the emissions, so the verdict and the
-   * refinement fold into the candidate join's own condition: each pair is
-   * decided where it is found, with no candidate list in between.
-   */
-  private def joinCascade(rIx: DataFrame, sIx: DataFrame, pred: Int,
-      grid: GridConfig, useApril: Boolean, aprilOrder: Int,
-      build: Build, saltFactor: Int, maxFineCover: Int,
-      rm: SideMeta, sm: SideMeta, sweepOn: Boolean): DataFrame = {
-    // With a build side it ships whole (one pass, no shuffle), so payload
-    // columns ride along on both sides. With `NoBuild` only (tile, id, gtype,
-    // mbr) go through the exchange; geometry/APRIL columns re-join by id
-    // afterwards (carrying arrays through a many-tiles explode multiplies
-    // shuffle bytes).
-    val slim = build == NoBuild
-    val payload = sidePayload(build, rm, sm, useApril, grid, aprilOrder)
+  /** A join output's per-pair decision, the cascade's last step. */
+  private sealed trait Decision
+  /** A predicate's accept test; the output is (rid, sid). */
+  private final case class Accept(pred: Int) extends Decision
+  /** Find-relation's relation code; the output is (rid, sid, relation). */
+  private case object Relate extends Decision
 
-    // containment predicates take the home-cell candidate plan (probe side
-    // ships one row per object; no dedup); everything else multi-res tiles
+  /**
+   * The one filter-and-refine cascade behind every join output (the
+   * reference's MBR filter → APRIL filter → refinement; find-relation
+   * differs only in the per-pair decision, SURVEY §2.4–2.6): both SideMetas
+   * (the caller's, or a tally job each); the payload the decision reads
+   * (coords only when a side holds non-rectangular rows, or non-box rows for
+   * find-relation, whose APRIL is pruned on boxes; EQUAL ignores APRIL);
+   * the candidate source — EQUAL's equi-join, else sides widened (R lazily,
+   * once known to shuffle, and not with `widenR = false`; S unless
+   * broadcast), the sweep decided (hotSweep, never with a broadcast S), the
+   * build side chosen (`broadcastS`; `NoBuild` for the sweep and
+   * containment; else tileBuild), each side `ix`-indexed, and the home-cell
+   * (containment) or tile exchange; with `NoBuild` one `attach` per side;
+   * then the decision. With a build side the payloads ride the emissions,
+   * so the decision folds into the candidate join's own condition.
+   */
+  private def cascade(r: DataFrame, s: DataFrame, decision: Decision,
+      grid: GridConfig, useApril: Boolean, aprilOrder: Int, maxFineCover: Int,
+      rMeta: Option[SideMeta], sMeta: Option[SideMeta],
+      broadcastS: Boolean = false, widenR: Boolean = true,
+      sweep: Option[Boolean] = None,
+      hotTileThreshold: Long = HotTileThreshold): DataFrame = {
+    val rm = rMeta.getOrElse(sideMeta(r, grid, maxFineCover))
+    val sm = sMeta.getOrElse(sideMeta(s, grid, maxFineCover))
+    // find-relation's candidates are INTERSECTS's: every MBR-overlapping pair
+    val (pred, withPayload, april) = decision match {
+      case Accept(p) => (p, rm.hasNonRect || sm.hasNonRect,
+        useApril && p != Predicates.EQUAL)
+      case Relate =>
+        val anyNonBox = rm.hasNonBox || sm.hasNonBox
+        (Predicates.INTERSECTS, anyNonBox, useApril && anyNonBox)
+    }
     val contRinS = pred == Predicates.INSIDE || pred == Predicates.COVERED_BY
     val contSinR = pred == Predicates.CONTAINS || pred == Predicates.COVERS
-    val anyNonRect = rm.hasNonRect || sm.hasNonRect
     val rRC = RectCols.prefixed("r")
     val sRC = RectCols.prefixed("s")
-    val cands =
-      if (contRinS || contSinR)
-        containmentCandidates(rIx, sIx, grid, build, saltFactor,
-          maxFineCover,
-          outerHasWide = if (contRinS) sm.hasWide else rm.hasWide,
-          outerHasNarrow = if (contRinS) sm.hasNarrow else rm.hasNarrow,
-          payload, innerIsR = contRinS, outerRect = rowRect,
-          pairCond = if (contRinS) mbrIn(rRC, sRC) else mbrIn(sRC, rRC))
-      else mrCandidates(rIx, sIx, grid, build, saltFactor,
-        maxFineCover, rm, sm, payload, sweep = sweepOn)
 
-    def refineExpr: Column =
-      GeoExprs.stRefine(pred, col("rg"), col("rc"), col("sg"), col("sc"))
-    // Rectangular fast path: for POINT/BOX pairs every predicate is a pure
-    // coordinate comparison (DE-9IM on axis-aligned closed rectangles) — no
-    // UDF, stays in whole-stage codegen. Exact arithmetic (no tolerance);
-    // non-degenerate boxes assumed (zero-area rings are rejected at parse).
-    val rectangular = rectangularCond(rRC, sRC)
-    val rectExact = rectExactExpr(pred, rRC, sRC)
-    // Plan by type presence (never execute the candidate join twice):
-    //   - all-rectangular workload (POINT/BOX only, the dispatch prepass
-    //     proves it): pure column plan — no geometry payload touched at all;
-    //   - otherwise: ONE pass with geometry (+APRIL) attached to every
-    //     candidate and a per-row CASE between the rectangular column fast
-    //     path and the codegen kernel. Rect-only or poly-only inputs each
-    //     take exactly one branch of the CASE; nothing runs twice.
-    if (!anyNonRect) {
-      cands.where(rectangular && rectExact).select(col("rid"), col("sid"))
-    } else {
-      val all =
-        if (!slim) cands
-        else attach(attach(cands, "r", "rid", rIx, allPoints(rm), useApril,
-          grid, aprilOrder), "s", "sid", sIx, allPoints(sm), useApril, grid,
+    val all =
+      if (pred == Predicates.EQUAL) equalCandidates(r, s, withPayload)
+      else {
+        // widen-before-explode: the cover explode + MBR/tile math run as
+        // projections on the scan partitioning (see widen's scaladoc)
+        lazy val rW = if (widenR) widen(r) else r
+        val sW = if (broadcastS) s else widen(s)
+        // explicit Some(flag) overrides the density rule; the sweep needs
+        // the slim (shuffle) exchange, so it is decided before any broadcast
+        val sweepOn = !broadcastS &&
+          sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold))
+        val (build, rIx) =
+          if (broadcastS) (BuildS, ix(rW, grid, april, aprilOrder, rm))
+          else if (sweepOn || contRinS || contSinR)
+            (NoBuild, ix(rW, grid, april, aprilOrder, rm))
+          else tileBuild(r, rW, grid, april, aprilOrder, maxFineCover, rm, sm)
+        val sIx = ix(sW, grid, april, aprilOrder, sm)
+        val payload = sidePayload(build, rm, sm, april, grid, aprilOrder)
+        val cands =
+          if (contRinS || contSinR)
+            containmentCandidates(rIx, sIx, grid, build, maxFineCover,
+              outerHasWide = if (contRinS) sm.hasWide else rm.hasWide,
+              outerHasNarrow = if (contRinS) sm.hasNarrow else rm.hasNarrow,
+              payload, innerIsR = contRinS, outerRect = rowRect,
+              pairCond = if (contRinS) mbrIn(rRC, sRC) else mbrIn(sRC, rRC))
+          else mrCandidates(rIx, sIx, grid, build, maxFineCover, rm, sm,
+            payload, sweep = sweepOn)
+        if (!withPayload || build != NoBuild) cands
+        else attach(attach(cands, "r", "rid", rIx, allPoints(rm), april,
+          grid, aprilOrder), "s", "sid", sIx, allPoints(sm), april, grid,
           aprilOrder)
-      // a non-rectangular pair: with APRIL its verdict decides it unless
-      // inconclusive (null), and only then the exact kernel runs. One
-      // verdict call per pair: a `verdict` column tested twice would be
-      // inlined twice into the filter (or join condition) that reads it.
-      val nonRect =
-        if (!useApril) refineExpr
-        else coalesce(GeoExprs.aprilDecision(GeoExprs.aprilVerdict(pred,
-          col("r_april_all"), col("r_april_full"),
-          col("s_april_all"), col("s_april_full"))), refineExpr)
-      all.where(when(rectangular, rectExact).otherwise(nonRect))
-        .select(col("rid"), col("sid"))
+      }
+    decision match {
+      case Accept(_) => accept(all, pred, withPayload, april)
+      case Relate => relate(all, withPayload, april)
     }
   }
 
-  /** APRIL Hilbert order N (config_cluster.ini [APRIL] N=16). Per-pair
-    * rasterization at query time like the reference's range path; dataset
-    * joins should pre-rasterize at index-build — see aprilIndexed overloads
-    * in later rounds. */
-  val AprilOrder = 16
+  /**
+   * A predicate's accept test. POINT/BOX pairs take the rectangular column
+   * fast path (exact DE-9IM on closed rectangles, in codegen; EQUAL's
+   * equi-join already decided them). An all-rectangular workload reads no
+   * payload; otherwise one per-row CASE picks the fast path or, for a
+   * non-rectangular pair, the APRIL verdict (when on) and the exact kernel
+   * only if it is inconclusive — one verdict call per pair, since a column
+   * tested twice would be inlined twice into the join condition.
+   */
+  private def accept(all: DataFrame, pred: Int, withPayload: Boolean,
+      april: Boolean): DataFrame = {
+    val rRC = RectCols.prefixed("r")
+    val sRC = RectCols.prefixed("s")
+    val rectangular = rectangularCond(rRC, sRC)
+    val rectExact =
+      if (pred == Predicates.EQUAL) lit(true) else rectExactExpr(pred, rRC, sRC)
+    val keep =
+      if (!withPayload) rectangular && rectExact
+      else {
+        val refine =
+          GeoExprs.stRefine(pred, col("rg"), col("rc"), col("sg"), col("sc"))
+        val nonRect =
+          if (!april) refine
+          else coalesce(GeoExprs.aprilDecision(GeoExprs.aprilVerdict(pred,
+            col("r_april_all"), col("r_april_full"),
+            col("s_april_all"), col("s_april_full"))), refine)
+        when(rectangular, rectExact).otherwise(nonRect)
+      }
+    all.where(keep).select(col("rid"), col("sid"))
+  }
 
-  /** Find-relation join: (rid, sid, relation) with the reference's TR codes.
-    * The same filter-and-refine cascade as spatialJoin's tile path: both
-    * sides `ix`-indexed, the sweep decided first, then an all-point R
-    * broadcast when its emission fits Spark's threshold (tileBuild; the
-    * payloads then ride the emissions), else both sides widened and one
-    * payload `attach` per side after mrCandidates. With `useApril`, the
-    * APRIL topology intermediate filter resolves
-    * DISJOINT / CONTAINS / INSIDE / true-hit-INTERSECT pairs from interval
-    * algebra alone (the reference's MBR-case-specialized filter,
-    * src/APRIL/filter.cpp:189-223); only unresolved pairs reach the exact
-    * DE-9IM refinement. On an all-box workload the request is ignored: the
-    * column fast path is exact, so the APRIL sub-plan would be pure overhead
-    * (SideMeta proves it, plan prunes it). */
-  def findRelationJoin(r: Dataset[GeoRow], s: Dataset[GeoRow],
-                       grid: GridConfig, useApril: Boolean = false,
-                       aprilOrder: Int = AprilOrder,
-                       saltFactor: Int = 1,
-                       maxFineCover: Int = MaxFineCover,
-                       rMeta: Option[SideMeta] = None,
-                       sMeta: Option[SideMeta] = None,
-                       sweep: Option[Boolean] = None,
-                       hotTileThreshold: Long = 8192L): DataFrame = {
-    lazy val rW = widen(r.toDF())
-    val sW = widen(s.toDF())
-    // the sweep is decided first, from the density histogram, exactly like
-    // spatialJoin's — a hot tile pays the same O(k²) hash filter here
-    val rm = rMeta.getOrElse(sideMeta(r, grid, maxFineCover))
-    val sm = sMeta.getOrElse(sideMeta(s, grid, maxFineCover))
-    val anyNonBox = rm.hasNonBox || sm.hasNonBox
-    // All-box workloads: the pure-column boxRel IS exact, so the whole APRIL
-    // sub-plan (rasterize + interval re-joins) is provably dead weight —
-    // prune it from the plan.
-    val useAprilEff = useApril && anyNonBox
-    val sweepOn = sweep.getOrElse(hotSweep(rm, sm, hotTileThreshold))
-    val (build, rIx) =
-      if (sweepOn) (NoBuild, ix(rW, grid, useAprilEff, aprilOrder, rm))
-      else tileBuild(r.toDF(), rW, grid, useAprilEff, aprilOrder, maxFineCover,
-        saltFactor, rm, sm)
-    val sIx = ix(sW, grid, useAprilEff, aprilOrder, sm)
-    val slim = build == NoBuild
-    val cands = mrCandidates(rIx, sIx, grid, build, saltFactor, maxFineCover,
-      rm, sm, sidePayload(build, rm, sm, useAprilEff, grid, aprilOrder),
-      sweep = sweepOn)
-
-    // Box×box fast path: the reference's MBR-case routing + per-case refine
-    // priority (Topology.findRelation) collapses to pure column arithmetic
-    // when geometry == MBR — no coords join, no UDF, stays in codegen.
+  /** Find-relation's relation code. Box×box pairs take `boxRel`, the
+    * reference's MBR-case routing (Topology.findRelation) as column
+    * arithmetic; with APRIL the topology filter (src/APRIL/filter.cpp:
+    * 189-223) resolves what it can from interval algebra, and only the rest
+    * reaches the exact DE-9IM kernel. */
+  private def relate(all: DataFrame, withPayload: Boolean,
+      april: Boolean): DataFrame = {
     val rRC = RectCols.prefixed("r")
     val sRC = RectCols.prefixed("s")
     val eps = 1e-8
@@ -1051,18 +974,13 @@ object GeoEngine {
         // MBR_INTERSECT routing: boundary-only contact ⇔ a facing edge
         .when(mbrFacingEdge(rRC, sRC), Topology.TR_MEET)
         .otherwise(Topology.TR_INTERSECT)
-    if (!anyNonBox)
-      return cands.select(col("rid"), col("sid"), boxRel.as("relation"))
+    if (!withPayload)
+      return all.select(col("rid"), col("sid"), boxRel.as("relation"))
 
-    val all =
-      if (!slim) cands
-      else attach(attach(cands, "r", "rid", rIx, allPoints(rm), useAprilEff,
-        grid, aprilOrder), "s", "sid", sIx, allPoints(sm), useAprilEff, grid,
-        aprilOrder)
     val bothBox = rRC.g === GeomType.BOX && sRC.g === GeomType.BOX
     val exactRel = when(bothBox, boxRel).otherwise(
       GeoExprs.stFindRelation(col("rg"), col("rc"), col("sg"), col("sc")))
-    if (!useAprilEff)
+    if (!april)
       all.select(col("rid"), col("sid"), exactRel.as("relation"))
     else {
       // APRIL topology filter: -1 = unresolved (refine). Sound resolutions:
@@ -1093,6 +1011,57 @@ object GeoEngine {
   }
 
   /**
+   * Predicate spatial join: (rid, sid) pairs satisfying `pred`, through the
+   * one cascade. Plan: tile-explode both sides → equi-join on tile
+   * (`broadcastS = true` broadcasts S's emission; else a non-containment
+   * join without a hot tile broadcasts an all-point R's emission when it
+   * fits `spark.sql.autoBroadcastJoinThreshold`) → MBR overlap →
+   * reference-point dedup → optional APRIL verdict → exact refinement.
+   * Containment predicates take the home-cell exchange; EQUAL the MBR
+   * equi-join (`useApril`, `broadcastS` and the sweep do not apply). A hot
+   * tile the statistics show (`hotTileThreshold`, or `sweep` to force
+   * either way) takes the in-tile plane sweep. Disjoint-join caveat: the
+   * candidates come from common tiles only (SURVEY.md §2.4).
+   */
+  def spatialJoin(r: Dataset[GeoRow], s: Dataset[GeoRow], pred: Int,
+                  grid: GridConfig, useApril: Boolean = false,
+                  broadcastS: Boolean = false,
+                  aprilOrder: Int = AprilOrder,
+                  maxFineCover: Int = MaxFineCover,
+                  rMeta: Option[SideMeta] = None,
+                  sMeta: Option[SideMeta] = None,
+                  sweep: Option[Boolean] = None,
+                  hotTileThreshold: Long = HotTileThreshold): DataFrame =
+    cascade(r.toDF(), s.toDF(), Accept(pred), grid, useApril, aprilOrder,
+      maxFineCover, rMeta, sMeta, broadcastS = broadcastS, sweep = sweep,
+      hotTileThreshold = hotTileThreshold)
+
+  /** APRIL Hilbert order N (config_cluster.ini [APRIL] N=16). A dataset
+    * without stored interval lists is rasterized at query time (`ix`); a
+    * stored index (SpatialIndex, `aprilIndex` persisted) carries its own
+    * order's lists and is read as is. */
+  val AprilOrder = 16
+
+  /** Find-relation join: (rid, sid, relation) with the reference's TR codes,
+    * through the one cascade (see `cascade`): the same candidates, build
+    * side, sweep and payload as spatialJoin's INTERSECTS, with the relation
+    * code as the per-pair decision (see `relate`). On an all-box workload
+    * the `useApril` request is ignored: the column fast path is exact, so
+    * the APRIL sub-plan would be pure overhead (SideMeta proves it, the
+    * plan prunes it). */
+  def findRelationJoin(r: Dataset[GeoRow], s: Dataset[GeoRow],
+                       grid: GridConfig, useApril: Boolean = false,
+                       aprilOrder: Int = AprilOrder,
+                       maxFineCover: Int = MaxFineCover,
+                       rMeta: Option[SideMeta] = None,
+                       sMeta: Option[SideMeta] = None,
+                       sweep: Option[Boolean] = None,
+                       hotTileThreshold: Long = HotTileThreshold): DataFrame =
+    cascade(r.toDF(), s.toDF(), Relate, grid, useApril, aprilOrder,
+      maxFineCover, rMeta, sMeta, sweep = sweep,
+      hotTileThreshold = hotTileThreshold)
+
+  /**
    * Size-based join-strategy chooser (the BaseIndex::evaluateQuery dispatch
    * analogue, containers.h:1999-2048): broadcast S when Catalyst's size
    * estimate of its pre-explode footprint fits comfortably on every
@@ -1106,28 +1075,28 @@ object GeoEngine {
     * broadcast: S's payload (coords + interval arrays) would ride through
     * its tile explode, multiplying broadcast bytes per covered tile —
     * measured slower than the slim exchange + re-join-by-id even for a
-    * 20k-row S at sf0.1. spatialJoin still broadcasts an all-point R's
-    * emission when it fits Spark's own threshold. */
+    * 20k-row S at sf0.1. Without a broadcast S the cascade still
+    * broadcasts an all-point R's emission when it fits Spark's own
+    * threshold. */
   def spatialJoinAuto(r: Dataset[GeoRow], s: Dataset[GeoRow], pred: Int,
                       grid: GridConfig, useApril: Boolean = false,
-                      saltFactor: Int = 1,
                       aprilOrder: Int = AprilOrder,
                       maxFineCover: Int = MaxFineCover,
                       rMeta: Option[SideMeta] = None,
                       sMeta: Option[SideMeta] = None): DataFrame =
-    spatialJoin(r, s, pred, grid, useApril,
-      broadcastS = !useApril && chooseBroadcast(s), saltFactor, aprilOrder,
-      maxFineCover, rMeta = rMeta, sMeta = sMeta)
+    cascade(r.toDF(), s.toDF(), Accept(pred), grid, useApril, aprilOrder,
+      maxFineCover, rMeta, sMeta,
+      broadcastS = !useApril && chooseBroadcast(s))
 
   // ---------------------------------------------------------- range queries
 
   /** Batch range query: (queryId, id) for every data object intersecting the
     * query window. The reference broadcasts the query table and joins it
     * with the data (SURVEY §2.8); here that is a spatial join of the data
-    * (r) against a broadcast window table (s), through the same
-    * mrCandidates exchange and refine cascade as spatialJoin: windows and
-    * data objects wider than `maxFineCover` fine cells join at the coarse
-    * grid, so a continent-sized window ships O(coarse cells) rows.
+    * (r) against a broadcast window table (s) through the one cascade:
+    * windows and data objects wider than `maxFineCover` fine cells join at
+    * the coarse grid, so a continent-sized window ships O(coarse cells)
+    * rows.
     *
     * `useApril`: the reference's on-the-fly window APRIL
     * (src/APRIL/filter.cpp:236-246) — each window is rasterized ONCE on the
@@ -1142,14 +1111,6 @@ object GeoEngine {
                  dataMeta: Option[SideMeta] = None): DataFrame = {
     val spark = data.sparkSession
     import spark.implicits._
-    // no widen for the cover arithmetic alone (cheap even on one core —
-    // measured +0.4 s pure repartition cost at sf0.1 with no offsetting
-    // win). With `useApril` a data side holding non-point rows IS widened:
-    // the broadcast payload carries its A-lists, so `ix` rasterizes it
-    // through aprilIndex, whose widen repartitions it; an all-point side's
-    // A-lists are synthesized on the row.
-    val dm = dataMeta.getOrElse(sideMeta(data, grid, maxFineCover))
-    val dIx = ix(data.toDF(), grid, useApril, aprilOrder, dm)
     val windows = queries.map { case (qid, g) =>
       val m = g.mbr
       val a = if (useApril) April.rasterize(g, grid.xMin, grid.yMin,
@@ -1166,9 +1127,15 @@ object GeoEngine {
     val wm = SideMeta(hasWide = any(wide), hasNarrow = any(!wide(_)),
       hasNonRect = any(!rect(_)), hasNonBox = any(_.gtype != GeomType.BOX),
       hasRect = any(rect), hasBox = any(_.gtype == GeomType.BOX))
-    joinCascade(dIx, windows, Predicates.INTERSECTS, grid, useApril,
-      aprilOrder, BuildS, saltFactor = 1, maxFineCover, dm, wm,
-      sweepOn = false)
+    // no widen for the cover arithmetic alone (cheap even on one core —
+    // measured +0.4 s pure repartition cost at sf0.1 with no offsetting
+    // win). With `useApril` a data side holding non-point rows IS widened:
+    // the broadcast payload carries its A-lists, so `ix` rasterizes it
+    // through aprilIndex, whose widen repartitions it; an all-point side's
+    // A-lists are synthesized on the row.
+    cascade(data.toDF(), windows, Accept(Predicates.INTERSECTS), grid,
+      useApril, aprilOrder, maxFineCover, dataMeta, Some(wm),
+      broadcastS = true, widenR = false)
       .select(col("sid").as("qid"), col("rid").as("id"))
   }
 
@@ -1203,15 +1170,14 @@ object GeoEngine {
     val spark = points.sparkSession
     val grid = gridOpt.getOrElse(gridFor(dataspace(points)))
 
-    // Phase 1 (one tiny job): per-tile point counts → broadcast map.
-    // Home tile is the pure-column tile math (codegen) — identical to
-    // grid.fineTileOfPoint (floor-then-clamp commutes with clamp-then-floor
-    // on the clamped range).
+    // Phase 1 (one shuffle-free job): per-tile point counts → broadcast
+    // map — the home fine-cell histogram of the side's SideTally fold, the
+    // same cell column as the join below. Home tile is the pure-column tile
+    // math (codegen) — identical to grid.fineTileOfPoint (floor-then-clamp
+    // commutes with clamp-then-floor on the clamped range).
     val homeTile = cellCol(grid, fine = true, col("xmin"), col("ymin"))
-    val tileCounts: Map[Long, Long] = points
-      .select(homeTile.as("tile"))
-      .groupBy("tile").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val tileCounts: Map[Long, Long] =
+      SideTally.cells(tallies(points, grid, MaxFineCover)).toMap
     val bcCounts = spark.sparkContext.broadcast(tileCounts)
 
     // Phase 2 (distributed): per query, expand rings from the home tile
@@ -1335,7 +1301,7 @@ object GeoEngine {
     // widen-before-explode: the ε-box cover explode runs on the scan
     // partitioning (see widen's scaladoc)
     containmentCandidates(widen(r.toDF()), s.toDF(), grid, NoBuild,
-      saltFactor = 1, maxFineCover, outerHasWide = hasWide,
+      maxFineCover, outerHasWide = hasWide,
       outerHasNarrow = true, _ => Nil, innerIsR = false, outerRect = epsBox,
       pairCond = sqrt(dx * dx + dy * dy) <= d)
       .select(col("rid"), col("sid"))

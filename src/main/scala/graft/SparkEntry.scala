@@ -49,10 +49,10 @@ object SparkEntry {
   //  - starPoly(customer, rad=0.4): x-span 0.8° ≤ floor(0.8/0.4128)+2 = 3
   //    cells, y ≤ floor(0.8/0.2064)+2 = 5 → cover ≤ 15 ≤ 16 ⇒ NEVER wide.
   //
-  // maxHomeTileCnt stays 0: the density-driven sweep auto-selection is a
-  // physical-plan choice (result-identical by property test); none of these
-  // inputs crosses the 8192 hot-tile threshold at the driver's scales, so
-  // plans are unchanged — only the prepass jobs disappear.
+  // maxHomeTileCnt stays 0, so the density rule never selects the sweep
+  // here. Only q_skew_join's hot tile crosses GeoEngine.HotTileThreshold, at
+  // sf1 (40 k points in one fine tile; 4 k at sf0.1); its all-point R is
+  // broadcast while its emission fits, so that tile never crosses an exchange.
   private val MPoints = Some(GeoEngine.SideMeta(hasWide = false,
     hasNarrow = true, hasNonRect = false, hasNonBox = true,
     hasRect = true, hasBox = false))
@@ -403,16 +403,18 @@ object SparkEntry {
         boxesGeo(partBoxes(s, dir)), Predicates.INTERSECTS, grid,
         rMeta = MPoints, sMeta = MBoxes)
     }),
-    // 80% of the points share ONE fine tile (worst-case key skew): the
-    // salted shuffle path fans the hot tile across 8 sub-keys so no single
-    // task owns 80% of the join. Result-identity of salting is
-    // property-tested in sbt; this entry puts it under the driver's
-    // DuckDB oracle gate and in the bench set.
+    // 80% of the points share ONE fine tile (worst-case key skew). The
+    // all-point R's emission fits the broadcast threshold, so the join
+    // broadcasts it and the hot tile never crosses an exchange (a point R
+    // too large to broadcast shuffles; a hot tile its statistics show takes
+    // the in-tile sweep). MultiResSpec checks all three plans against brute
+    // force on this shape; this entry puts it under the DuckDB oracle gate
+    // (tools/oracle_check.py) and in the bench set.
     "q_skew_join" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       GeoEngine.spatialJoin(pointsGeo(skewPoints(s, dir)),
         boxesGeo(partBoxes(s, dir)), Predicates.INTERSECTS, grid,
-        saltFactor = 8, rMeta = MPoints, sMeta = MBoxes)
+        rMeta = MPoints, sMeta = MBoxes)
     }),
     "q_inside_join" -> ((s, dir) => {
       implicit val sp: SparkSession = s

@@ -18,8 +18,8 @@ import graft.core._
  * exactly what the slim plan (forced with the threshold at -1) returns:
  * every predicate and find-relation, APRIL on and off, NaN and null MBR rows
  * on both sides. It must also scan S once, never widen R and keep no id
- * re-join. A polygon R and a salted join keep the slim plan at any
- * threshold.
+ * re-join. A polygon R keeps the slim plan at any threshold, and a point
+ * R whose statistics show a hot tile takes the in-tile sweep.
  */
 class BuildSideSpec extends AnyFunSuite {
 
@@ -144,9 +144,14 @@ class BuildSideSpec extends AnyFunSuite {
       assert(got.exists(_._3 != Topology.TR_DISJOINT), ctx)
       assert(!got.exists { case (a, b, _) => badIds(a) || badIds(b) }, ctx)
     }
-    // a caller's salt asks for the salted shuffle, which a broadcast skips
-    assert(!buildsR(GeoEngine.spatialJoin(pointR, shapeS,
-      Predicates.INTERSECTS, grid, saltFactor = 4)))
+    // a hot tile the statistics show above `hotTileThreshold` takes the
+    // in-tile sweep, which shuffles both sides: R is not broadcast
+    val hot = GeoEngine.sideMeta(pointR, grid).maxHomeTileCnt
+    val swept = GeoEngine.spatialJoin(pointR, shapeS, Predicates.INTERSECTS,
+      grid, hotTileThreshold = hot - 1)
+    assert(swept.queryExecution.executedPlan.toString.contains("CoGroup"),
+      swept.queryExecution.executedPlan)
+    assert(!buildsR(swept))
   }
 
   test("broadcast R: S scanned once, R never widened, no id re-join") {

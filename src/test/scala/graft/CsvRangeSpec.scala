@@ -269,6 +269,11 @@ class CsvRangeSpec extends AnyFunSuite {
       }.toSet
     val want = brute(pts, qs, 5)
     assert(got == want)
+    // building the query runs one job, with no shuffle: the SideTally fold
+    // whose home-cell histogram prunes the tiles
+    val (_, jobs) = TestRows.jobsDuring(spark)(GeoEngine.knnBatchDf(pts.toDS(),
+      qs.toDF("qid", "qx", "qy"), 5, Some(grid)))
+    assert(jobs.size == 1, jobs)
     // edge inputs: an empty and a one-row side each, and fewer points than
     // k, where every point is ranked 1..n
     assert(knn(Nil, qs, 5).isEmpty && knn(pts, Nil, 5).isEmpty)

@@ -149,14 +149,55 @@ class MultiResSpec extends AnyFunSuite {
     assert(bc.nonEmpty)
   }
 
-  test("salted multi-res join ≡ unsalted") {
-    val r = boxes(9, 300)
-    val s = boxes(10, 150)
-    val salted = pairs(GeoEngine.spatialJoin(r, s, Predicates.INTERSECTS, grid,
-      saltFactor = 4, maxFineCover = 16))
-    val plain = pairs(GeoEngine.spatialJoin(r, s, Predicates.INTERSECTS, grid,
-      maxFineCover = 16))
-    assert(salted == plain)
+  test("hot-tile point R ≡ brute force: broadcast R, slim shuffle and sweep") {
+    import spark.implicits._
+    // q_skew_join's shape: 80 % of the points in one fine tile (about
+    // 0.01° square at (10, 20)), the rest spread over the world, against
+    // world-spread boxes plus boxes over the hot tile
+    val pts = (0 until 2000).map { i =>
+      val (x, y) =
+        if (i % 5 != 0) (i % 97 / 10000.0 + 10.0, i % 89 / 10000.0 + 20.0)
+        else ((i * 37 % 3600) / 10.0 - 180.0, (i * 53 % 1700) / 10.0 - 85.0)
+      GeoRow(i.toLong, GeomType.POINT, Array(x, y), x, y, x, y)
+    }
+    val hotBoxes = (0 until 6).map { i =>
+      val (x0, y0) = (9.99 + i * 0.003, 19.995 + i * 0.002)
+      val (x1, y1) = (x0 + 0.004 + i * 0.001, y0 + 0.005)
+      GeoRow(5000L + i, GeomType.BOX,
+        Array(x0, y0, x1, y0, x1, y1, x0, y1, x0, y0), x0, y0, x1, y1)
+    }
+    val r = pts.toDS()
+    val s = boxes(13, 300).union(hotBoxes.toDS())
+    val want = (for {
+      a <- pts; b <- s.collect()
+      if Topology.intersects(Geom(a.gtype, a.coords), Geom(b.gtype, b.coords))
+    } yield (a.id, b.id)).toSet
+    assert(want.count(_._2 >= 5000L) > 1000, s"fixture broken: ${want.size}")
+    val rm = GeoEngine.sideMeta(r, grid)
+    assert(rm.maxHomeTileCnt >= 1600, s"fixture broken: $rm")
+    def join(hotTileThreshold: Long) = GeoEngine.spatialJoin(r, s,
+      Predicates.INTERSECTS, grid, rMeta = Some(rm), hotTileThreshold = hotTileThreshold)
+    def plan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
+    // BuildR: the default threshold keeps the hash path, and the all-point
+    // R's emission fits Spark's broadcast threshold
+    val buildR = join(GeoEngine.HotTileThreshold)
+    assert(plan(buildR).contains("BuildLeft") && !plan(buildR).contains("CoGroup"),
+      plan(buildR))
+    assert(pairs(buildR) == want, "BuildR")
+    // NoBuild: no side fits a broadcast, both shuffle on the tile key
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val noBuild = join(GeoEngine.HotTileThreshold)
+      assert(!plan(noBuild).contains("Broadcast") && !plan(noBuild).contains("CoGroup"),
+        plan(noBuild))
+      assert(pairs(noBuild) == want, "NoBuild")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    // the sweep: a threshold below the hot tile's count, on the real SideMeta
+    val swept = join(rm.maxHomeTileCnt - 1)
+    assert(plan(swept).contains("CoGroup") && !plan(swept).contains("BuildLeft"),
+      plan(swept))
+    assert(pairs(swept) == want, "sweep")
   }
 
   test("plane-sweep physical path ≡ hash-join path (incl. a dense hot tile)") {
